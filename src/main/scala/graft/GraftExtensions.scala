@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{IntegerType, StringType}
 
 import graft.functions._
 
@@ -31,19 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def intLit(e: Expression, fn: String, pos: Int): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: argument ${pos + 1} must be an INTEGER literal, got $other")
-  }
-
-  private def strLit(e: Expression, fn: String, pos: Int): String = e match {
-    case Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-      v.toString
-    case other => throw new IllegalArgumentException(
-      s"$fn: argument ${pos + 1} must be a STRING literal, got $other")
-  }
-
   /** Registration combinator: arity-checked builder + ExpressionInfo.
     * A wrong argument count raises a named, counted error instead of
     * the builder's raw IndexOutOfBounds. */
@@ -56,74 +42,17 @@ object GraftExtensions {
       build(es)
     })
 
-  /** (sql name, info, builder) for every exposed kernel. */
+  /** (sql name, info, builder) for every exposed kernel: the
+    * [[KernelTable]] rows with a SQL form, then the aggregates. */
   val registrations: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(
-      fn("graft_simhash64", classOf[SimHash64], 1)(es => SimHash64(es.head)),
-      fn("graft_deflate_len", classOf[DeflateLen], 1)(es => DeflateLen(es.head)),
-      fn("graft_unicode_normalize", classOf[UnicodeNormalize], 2)(
-        es => UnicodeNormalize(es.head,
-          strLit(es(1), "graft_unicode_normalize", 1))),
-      fn("graft_phash64", classOf[PHash64], 1)(es => PHash64(es.head)),
-      fn("graft_charset_decode", classOf[CharsetDecode], 1)(
-        es => CharsetDecode(es.head)),
-      fn("graft_charset_decode_hint", classOf[CharsetDecodeHint], 2)(
-        es => CharsetDecodeHint(es.head, es(1))),
-      fn("graft_mojibake_fix", classOf[MojibakeFix], 1)(
-        es => MojibakeFix(es.head)),
-      fn("graft_confusable_fold", classOf[ConfusableFold], 1)(
-        es => ConfusableFold(es.head)),
-      fn("graft_http_response", classOf[HttpResponse], 1)(
-        es => HttpResponse(es.head)),
-      fn("graft_sentence_split", classOf[SentenceSplit], 1)(
-        es => SentenceSplit(es.head)),
-      fn("graft_main_content", classOf[MainContent], 1)(
-        es => MainContent(es.head, 25, 0.33)),
-      fn("graft_robots_rules", classOf[RobotsRules], 2)(
-        es => RobotsRules(es.head, strLit(es(1), "graft_robots_rules", 1))),
-      fn("graft_robots_crawl_delay", classOf[RobotsCrawlDelay], 2)(
-        es => RobotsCrawlDelay(es.head,
-          strLit(es(1), "graft_robots_crawl_delay", 1))),
-      fn("graft_percent_normalize", classOf[PercentNormalize], 1)(
-        es => PercentNormalize(es.head)),
-      fn("graft_resolve_ref", classOf[ResolveRef], 2)(
-        es => ResolveRef(es.head, es(1))),
-      fn("graft_registered_domain", classOf[RegisteredDomain], 1)(
-        es => RegisteredDomain(es.head, graft.ops.Urls.MultiPartSuffixes,
-          graft.ops.Urls.ThreePartSuffixes,
-          graft.ops.Urls.WildcardSuffixBases,
-          graft.ops.Urls.SuffixExceptions)),
-      fn("graft_sitemap_entries", classOf[SitemapEntries], 1)(
-        es => SitemapEntries(es.head)),
-      fn("graft_word_gram_hashes", classOf[WordGramHashes], 2)(
-        es => WordGramHashes(es.head, intLit(es(1), "graft_word_gram_hashes", 1))),
-      fn("graft_char_ngram_hashes", classOf[CharNgramHashes], 2)(
-        es => CharNgramHashes(es.head, intLit(es(1), "graft_char_ngram_hashes", 1))),
-      fn("graft_char_grams", classOf[CharGrams], 2)(
-        es => CharGrams(es.head, intLit(es(1), "graft_char_grams", 1))),
-      fn("graft_minhash_sig", classOf[MinHashSig], 2)(
-        es => MinHashSig(es.head, intLit(es(1), "graft_minhash_sig", 1))),
-      fn("graft_jaccard", classOf[JaccardSim], 2)(
-        es => JaccardSim(es.head, es(1))),
-      fn("graft_containment", classOf[ContainmentSim], 2)(
-        es => ContainmentSim(es.head, es(1))),
-      fn("graft_cosine", classOf[CosineSim], 2)(
-        es => CosineSim(es.head, es(1))),
-      fn("graft_quantize_q8", classOf[QuantizeQ8], 1)(
-        es => QuantizeQ8(es.head)),
-      fn("graft_cosine_q8", classOf[CosineSimQ8], 2)(
-        es => CosineSimQ8(es.head, es(1))),
-      fn("graft_winnow", classOf[WinnowFingerprints], 3)(
-        es => WinnowFingerprints(es.head, intLit(es(1), "graft_winnow", 1),
-          intLit(es(2), "graft_winnow", 2))),
-      fn("graft_rolling_hash", classOf[RollingHash], 1)(
-        es => RollingHash(es.head)),
-      fn("graft_text_stats", classOf[TextStatsCounts], 1)(
-        es => TextStatsCounts(es.head)),
-      fn("graft_lang_marker_counts", classOf[LangMarkerCounts], 1)(
-        es => LangMarkerCounts(es.head)),
-      fn("graft_repetition_stats", classOf[RepetitionStats], 1)(
-        es => RepetitionStats(es.head)),
+    KernelTable.all.flatMap(k => k.sql.map { s =>
+      fn(s.name, classOf[KernelCall], k.arity + s.lits.size) { es =>
+        val lits = s.lits.zipWithIndex.map { case (parse, i) =>
+          parse(es(k.arity + i), s.name, k.arity + i)
+        }
+        k.call(es.take(k.arity), lits ++ s.fixed())
+      }
+    }) ++ Seq(
       // aggregates: the analyzer wraps a bare AggregateFunction from a
       // registry builder in its AggregateExpression
       fn("graft_count_by_value", classOf[CountByValue], 1)(
@@ -137,7 +66,7 @@ object GraftExtensions {
       // (as the set fold does) when set semantics are wanted
       fn("graft_bounded_collect", classOf[BoundedCollect], 4)(
         es => BoundedCollect(es.head, es(1),
-          intLit(es(2), "graft_bounded_collect", 2),
+          SqlForm.intLit(es(2), "graft_bounded_collect", 2),
           es(3) match {
             case Literal(b: Boolean, _) => b
             case other => throw new IllegalArgumentException(

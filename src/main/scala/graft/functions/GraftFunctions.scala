@@ -1,24 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Imperative kernels behind the custom Catalyst expressions below.
+/** Imperative kernels behind the [[KernelTable]] rows.
   *
   * These are the hot inner loops of the dedup/similarity operators
   * (SimHash voting, MinHash signatures, Jaccard, cosine). As
   * higher-order Column functions they evaluate interpreted — one
   * closure call and boxed allocation per element per lambda level;
   * fused into a single static method they run 10-50x faster AND stay
-  * inside whole-stage codegen (the expressions emit a direct static
-  * call via doGenCode). Hashing is Spark's own XXH64 so values remain
-  * stable across the engine.
+  * inside whole-stage codegen (each row's call becomes a direct
+  * static call via `StaticInvoke`). Hashing is Spark's own XXH64 so
+  * values remain stable across the engine.
   */
 object Kernels {
 
@@ -452,37 +449,6 @@ object Kernels {
     new GenericArrayData(out)
   }
 
-  /** Gopher-style repetition signals (Rae et al. 2021, "Scaling
-    * Language Models: ... Gopher", table A1 — the repetition family of
-    * quality filters) in ONE pass over the document:
-    *
-    *  - dup_line_frac: fraction of lines (split on \n, exact match)
-    *    that are repeat occurrences of an earlier line.
-    *  - dup_line_char_frac: fraction of line characters (codepoints,
-    *    newlines excluded) inside those repeat occurrences.
-    *  - top2_char_frac: the largest character mass any single word
-    *    2-gram accounts for — count × gram length (incl. inner
-    *    spaces) over the normalized text length — capped at 1.0
-    *    (overlapping occurrences can exceed the text length; the
-    *    "mass" form is deterministic under count ties where the
-    *    argmax-by-count form is not).
-    *  - dup5_char_frac: character mass of repeat occurrences of word
-    *    5-grams — Σ (count−1) × gram length — over the normalized
-    *    text length, capped at 1.0.
-    *
-    * Tokens/normalized text match [[wordGramHashes]] (lowercase ROOT,
-    * SQL space-trim, split \s+ keeping trailing empties; normalized
-    * length = tokens joined by single spaces). Zero denominators
-    * (empty text, fewer than n tokens) yield 0.0, not null. */
-  /** BPE token count under a learned merge list — the fused kernel
-    * twin of [[graft.ops.Bpe.applySymbols]]'s per-word fold (which,
-    * interpreted, nests one `aggregate` lambda PER MERGE per word —
-    * measured 30s+ over sf0.1 at 12 merges; fused it is one linear
-    * pass per merge). Per whitespace word of the trim+lowercased
-    * text: start from characters, apply merges in rank order, each a
-    * greedy left-to-right non-overlapping pair merge (the reference
-    * scan — identical output to the fold's last-symbol rule). Empty
-    * words contribute nothing. `merges` flattened [a0,b0,a1,b1,…]. */
   /** One greedy left-to-right merge-fold pass over a symbol sequence
     * under a batch of symbol-disjoint rules — the fused form of
     * [[graft.ops.Bpe.mergeOnce]]/[[graft.ops.Bpe.mergeBatch]]'s
@@ -491,9 +457,10 @@ object Kernels {
     * OUTPUT's last symbol equals some a_i and the current input symbol
     * equals b_i, replace the last with a_i+b_i (a fresh product never
     * re-merges, since products never equal a left operand for
-    * non-empty b_i), else append. `rules` flattened [a0,b0,a1,b1,…];
-    * null elements never match and append unchanged, like the lambda's
-    * null-propagating equality. */
+    * non-empty b_i), else append. `rules` flattened [a0,b0,a1,b1,…]
+    * (even length, no null: [[GraftFunctions.mergeFold]] checks it
+    * once per call); null SYMBOLS never match and append unchanged,
+    * like the lambda's null-propagating equality. */
   def mergeFold(syms: ArrayData, rules: Array[UTF8String]): ArrayData = {
     val n = syms.numElements()
     val out = new Array[Any](n)
@@ -522,6 +489,17 @@ object Kernels {
       java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], m))
   }
 
+  /** BPE token count under a learned merge list — the fused kernel
+    * twin of [[graft.ops.Bpe.applySymbols]]'s per-word fold (which,
+    * interpreted, nests one `aggregate` lambda PER MERGE per word —
+    * measured 30s+ over sf0.1 at 12 merges; fused it is one linear
+    * pass per merge). Per whitespace word of the trim+lowercased
+    * text: start from characters, apply merges in rank order, each a
+    * greedy left-to-right non-overlapping pair merge (the reference
+    * scan — identical output to the fold's last-symbol rule). Empty
+    * words contribute nothing. `merges` flattened [a0,b0,a1,b1,…]
+    * (even length, no null: [[GraftFunctions.bpeCount]] checks it
+    * once per call). */
   def bpeTokenCount(s: UTF8String, merges: Array[String]): Long = {
     val words = s.trim.toLowerCase.toString.split("\\s+")
     var total = 0L
@@ -551,6 +529,28 @@ object Kernels {
     total
   }
 
+  /** Gopher-style repetition signals (Rae et al. 2021, "Scaling
+    * Language Models: ... Gopher", table A1 — the repetition family of
+    * quality filters) in ONE pass over the document:
+    *
+    *  - dup_line_frac: fraction of lines (split on \n, exact match)
+    *    that are repeat occurrences of an earlier line.
+    *  - dup_line_char_frac: fraction of line characters (codepoints,
+    *    newlines excluded) inside those repeat occurrences.
+    *  - top2_char_frac: the largest character mass any single word
+    *    2-gram accounts for — count × gram length (incl. inner
+    *    spaces) over the normalized text length — capped at 1.0
+    *    (overlapping occurrences can exceed the text length; the
+    *    "mass" form is deterministic under count ties where the
+    *    argmax-by-count form is not).
+    *  - dup5_char_frac: character mass of repeat occurrences of word
+    *    5-grams — Σ (count−1) × gram length — over the normalized
+    *    text length, capped at 1.0.
+    *
+    * Tokens/normalized text match [[wordGramHashes]] (lowercase ROOT,
+    * SQL space-trim, split \s+ keeping trailing empties; normalized
+    * length = tokens joined by single spaces). Zero denominators
+    * (empty text, fewer than n tokens) yield 0.0, not null. */
   def repetitionStats(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val str = s.toString
     val lines = str.split("\n", -1)
@@ -1480,7 +1480,7 @@ object Kernels {
     (cur, rounds)
   }
 
-  def mojibakeFix(s: UTF8String): Any = {
+  def mojibakeFix(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val (fixed, rounds) = mojibakeFixStr(s.toString)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](UTF8String.fromString(fixed), rounds))
@@ -1571,7 +1571,7 @@ object Kernels {
     *     — exactly the hint column [[charsetDecodeHint]] consumes;
     *   - a `Content-Encoding: gzip` body is inflated (corrupt gzip
     *     keeps the raw bytes — the downstream decode quarantines). */
-  def httpResponse(b: Array[Byte]): Any = {
+  def httpResponse(b: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
     def row(status: Int, ct: String, hint: String, enc: String,
         nh: Int, body: Array[Byte]) =
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -2173,12 +2173,13 @@ object Kernels {
 }
 
 /** Hashed suffix tables for [[Kernels.registeredDomainStr]] — built
-  * once per plan from the caller's suffix seqs (the public-suffix
+  * once per Column call from the caller's suffix seqs (the public-suffix
   * snapshot by default) and shipped as one codegen reference object,
   * the O(1)-lookup equivalent of the Column formulation's four InSet
-  * literals. */
-final class SuffixTables(twoLabelSeq: Seq[String], threeLabelSeq: Seq[String],
-    wildcardBases: Seq[String], exceptions: Seq[String]) extends Serializable {
+  * literals. Equal seqs make equal tables, so two calls on the same
+  * host are semantically equal. */
+final case class SuffixTables(twoLabelSeq: Seq[String], threeLabelSeq: Seq[String],
+    wildcardBases: Seq[String], exceptions: Seq[String]) {
   private def hs(xs: Seq[String]): java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](math.max(xs.size * 2, 8))
     xs.foreach(s.add); s
@@ -2191,915 +2192,91 @@ final class SuffixTables(twoLabelSeq: Seq[String], threeLabelSeq: Seq[String],
   val exc3: java.util.HashSet[String] = hs(exceptions.filter(_.count(_ == '.') == 2))
 }
 
-/** host STRING → registered domain under the public-suffix algorithm
-  * ([[Kernels.registeredDomainStr]]'s contract; suffix sets ride in
-  * the expression as data). */
-case class RegisteredDomain(child: Expression, twoLabel: Seq[String],
-    threeLabel: Seq[String], wildcardBases: Seq[String],
-    exceptions: Seq[String]) extends UnaryExpression {
-  @transient private lazy val tables =
-    new SuffixTables(twoLabel, threeLabel, wildcardBases, exceptions)
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"registered_domain needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.registeredDomain(input.asInstanceOf[UTF8String], tables)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tRef = ctx.addReferenceObj("suffixTables", tables,
-      classOf[SuffixTables].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.registeredDomain($c, $tRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): RegisteredDomain =
-    copy(child = newChild)
-}
 
-/** payload BINARY → (status INT, content_type STRING, charset_hint
-  * STRING, content_encoding STRING, n_headers INT, body BINARY):
-  * HTTP/1.x response parse ([[Kernels.httpResponse]]'s contract). */
-case class HttpResponse(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("status", IntegerType, nullable = false),
-    StructField("content_type", StringType, nullable = false),
-    StructField("charset_hint", StringType, nullable = false),
-    StructField("content_encoding", StringType, nullable = false),
-    StructField("n_headers", IntegerType, nullable = false),
-    StructField("body", BinaryType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"http_response needs BINARY, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.httpResponse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.httpResponse($c)")
-  override protected def withNewChildInternal(newChild: Expression): HttpResponse =
-    copy(child = newChild)
-}
-
-/** text STRING → ARRAY<STRING>: rule-based sentence segmentation
-  * ([[Kernels.sentenceSplitStr]]'s contract). */
-case class SentenceSplit(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sentence_split needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.sentenceSplit(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.sentenceSplit($c)")
-  override protected def withNewChildInternal(newChild: Expression): SentenceSplit =
-    copy(child = newChild)
-}
-
-/** text STRING → (text STRING, rounds INT): windows-1252/latin-1
-  * mojibake repair ([[Kernels.mojibakeFixStr]]'s contract). */
-case class MojibakeFix(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("text", StringType, nullable = false),
-    StructField("rounds", IntegerType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mojibake_fix needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.mojibakeFix(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.mojibakeFix($c)")
-  override protected def withNewChildInternal(newChild: Expression): MojibakeFix =
-    copy(child = newChild)
-}
-
-/** text STRING → 64-bit SimHash fingerprint. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"simhash64 needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.simhash64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** text STRING × form → Unicode-normalized STRING (NFC|NFD|NFKC|NFKD). */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"unicode_normalize needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.unicodeNormalize(input.asInstanceOf[UTF8String], form)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fRef = ctx.addReferenceObj("normForm", form, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.unicodeNormalize($c, $fRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): UnicodeNormalize =
-    copy(child = newChild)
-}
-
-/** text STRING × pattern set → STRUCT(n_hits, n_matched): total
-  * Aho-Corasick occurrence count and distinct patterns matched. */
-case class BlocklistStats(child: Expression, patterns: Array[String])
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_hits", LongType, nullable = false),
-    StructField("n_matched", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"blocklist_stats needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.blocklistStats(input.asInstanceOf[UTF8String], patterns)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("blockPatterns", patterns, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.blocklistStats($c, $pRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BlocklistStats =
-    copy(child = newChild)
-}
-
-/** text STRING → raw-DEFLATE byte length (zlib level 6). */
-case class DeflateLen(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"deflate_len needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.deflateLen(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.deflateLen($c)")
-  override protected def withNewChildInternal(newChild: Expression): DeflateLen =
-    copy(child = newChild)
-}
-
-/** html STRING × (minChars, maxLinkDensity) → STRUCT(main_text,
-  * n_blocks, n_content_blocks, content_chars, boiler_chars): fused
-  * main-content extraction ([[Kernels.mainContent]]'s contract). */
-case class MainContent(child: Expression, minChars: Int,
-    maxLinkDensity: Double) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("main_text", StringType, nullable = false),
-    StructField("n_blocks", LongType, nullable = false),
-    StructField("n_content_blocks", LongType, nullable = false),
-    StructField("content_chars", LongType, nullable = false),
-    StructField("boiler_chars", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"main_content needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.mainContent(input.asInstanceOf[UTF8String], minChars, maxLinkDensity)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.mainContent($c, $minChars, ${maxLinkDensity}D)")
-  override protected def withNewChildInternal(newChild: Expression): MainContent =
-    copy(child = newChild)
-}
-
-/** robots.txt STRING × agent → ARRAY<STRUCT(pattern, allow, rank,
-  * like)>: the crawler's applicable rule group, percent-normalized
-  * and LIKE-compiled ([[Kernels.robotsRules]]). */
-case class RobotsRules(child: Expression, agent: String)
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pattern", StringType, nullable = false),
-    StructField("allow", BooleanType, nullable = false),
-    StructField("rank", IntegerType, nullable = false),
-    StructField("like", StringType, nullable = false))),
-    containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"robots_rules needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.robotsRules(input.asInstanceOf[UTF8String], agent)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("robotsAgent", agent, "java.lang.String")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.robotsRules($c, $aRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): RobotsRules =
-    copy(child = newChild)
-}
-
-/** sitemap BINARY (optionally gzipped) → ARRAY<STRUCT(kind, loc,
-  * lastmod)>: sitemaps.org document parse
-  * ([[Kernels.sitemapEntries]]'s contract). */
-case class SitemapEntries(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("loc", StringType, nullable = false),
-    StructField("lastmod", StringType, nullable = true))),
-    containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"sitemap_entries needs BINARY, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.sitemapEntries(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.sitemapEntries($c)")
-  override protected def withNewChildInternal(newChild: Expression): SitemapEntries =
-    copy(child = newChild)
-}
-
-/** text STRING × n → ARRAY<STRING>: all overlapping character
-  * n-grams ([[Kernels.charGrams]]'s contract — normalization stays
-  * outside). */
-case class CharGrams(child: Expression, n: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"char_grams needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.charGrams(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charGrams($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): CharGrams =
-    copy(child = newChild)
-}
-
-/** text STRING × k → ARRAY<STRING>: word k-shingles, duplicates kept
-  * ([[Kernels.wordShingles]]'s contract). */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"word_shingles needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.wordShingles(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.wordShingles($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
-/** text STRING × n → ARRAY<STRING>: distinct char n-grams of the
-  * whitespace-normalized lowercase text
-  * ([[Kernels.charNgramsDistinct]]'s contract). */
-case class CharNgramsDistinct(child: Expression, n: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"char_ngrams_distinct needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.charNgramsDistinct(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charNgramsDistinct($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): CharNgramsDistinct =
-    copy(child = newChild)
-}
-
-/** text STRING × n → ARRAY<STRING>: positional word n-grams, grams
-  * lowercased after the join ([[Kernels.wordGramsLower]]'s
-  * contract). */
-case class WordGramsLower(child: Expression, n: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"word_grams_lower needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.wordGramsLower(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.wordGramsLower($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordGramsLower =
-    copy(child = newChild)
-}
-
-/** path STRING → STRING: canonical percent-encoding for RFC 9309
-  * matching ([[Kernels.percentNormalizeStr]]'s contract). */
-case class PercentNormalize(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"percent_normalize needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.percentNormalize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.percentNormalize($c)")
-  override protected def withNewChildInternal(newChild: Expression): PercentNormalize =
-    copy(child = newChild)
-}
-
-/** (base STRING, ref STRING) → STRING: RFC 3986 §5.2 relative-
-  * reference resolution ([[Kernels.resolveRefStr]]'s contract) —
-  * fused so a per-anchor resolution inside an array transform stays
-  * one call in the generated code. */
-case class ResolveRef(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"resolve_ref needs (STRING, STRING), got $l / $r")
-    }
-  override protected def nullSafeEval(base: Any, ref: Any): Any =
-    Kernels.resolveRef(base.asInstanceOf[UTF8String],
-      ref.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r) =>
-      s"graft.functions.Kernels.resolveRef($b, $r)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ResolveRef =
-    copy(left = newLeft, right = newRight)
-}
-
-/** robots.txt STRING × agent → DOUBLE: the crawler's effective
-  * Crawl-delay, -1.0 when the applicable group(s) carry no valid
-  * directive ([[Kernels.robotsCrawlDelay]]'s contract). */
-case class RobotsCrawlDelay(child: Expression, agent: String)
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"robots_crawl_delay needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.robotsCrawlDelay(input.asInstanceOf[UTF8String], agent)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("robotsAgent", agent, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.robotsCrawlDelay($c, $aRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): RobotsCrawlDelay =
-    copy(child = newChild)
-}
-
-/** payload BINARY → STRUCT(charset, text, n_bytes): charset sniff +
-  * decode (BOM dispatch, strict UTF-8 validation, windows-1252
-  * fallback — [[Kernels.charsetDecode]]'s contract). */
-case class CharsetDecode(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("charset", StringType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"charset_decode needs BINARY, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.charsetDecode(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charsetDecode($c)")
-  override protected def withNewChildInternal(newChild: Expression): CharsetDecode =
-    copy(child = newChild)
-}
-
-/** payload BINARY × declared-charset STRING → STRUCT(charset, text,
-  * n_bytes): charset decode with a declared hint — strong sniff
-  * evidence wins, a validated hint is trusted, anything else falls
-  * to the structural sniff ([[Kernels.charsetDecodeHint]]'s
-  * contract; pass '' for "no declaration", not NULL). */
-case class CharsetDecodeHint(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("charset", StringType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"charset_decode_hint needs (BINARY, STRING), got $l / $r")
-    }
-  override protected def nullSafeEval(payload: Any, hint: Any): Any =
-    Kernels.charsetDecodeHint(payload.asInstanceOf[Array[Byte]],
-      hint.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, h) =>
-      s"graft.functions.Kernels.charsetDecodeHint($p, $h)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharsetDecodeHint =
-    copy(left = newLeft, right = newRight)
-}
-
-/** media BINARY → 64-bit block-mean perceptual hash. */
-case class PHash64(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"phash64 needs BINARY, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.phash64(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.phash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): PHash64 =
-    copy(child = newChild)
-}
-
-/** text STRING → ARRAY<BIGINT> of distinct char-n-gram hashes. */
-/** ARRAY<FLOAT> → ARRAY<TINYINT> int8 scalar quantization (SQ8). */
-case class QuantizeQ8(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"quantize_q8 needs ARRAY<FLOAT>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.quantizeQ8(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.quantizeQ8($c)")
-  override protected def withNewChildInternal(newChild: Expression): QuantizeQ8 =
-    copy(child = newChild)
-}
-
-/** text STRING → ARRAY<BIGINT> winnowing fingerprints (k-gram window w). */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"winnow_fp needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.winnowFingerprints(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnowFingerprints($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
-}
-
-case class CharNgramHashes(child: Expression, n: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"char_ngram_hashes needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.charNgramHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.charNgramHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): CharNgramHashes =
-    copy(child = newChild)
-}
-
-/** text STRING → STRUCT of the four Gopher repetition fractions. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("dup_line_frac", DoubleType, nullable = false),
-    StructField("dup_line_char_frac", DoubleType, nullable = false),
-    StructField("top2_char_frac", DoubleType, nullable = false),
-    StructField("dup5_char_frac", DoubleType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"repetition_stats needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.repetitionStats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.repetitionStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
-    copy(child = newChild)
-}
-
-/** text STRING → ARRAY<BIGINT> distinct word-n-gram XXH64 hashes. */
-case class WordGramHashes(child: Expression, n: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"word_gram_hashes needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.wordGramHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.wordGramHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordGramHashes =
-    copy(child = newChild)
-}
-
-/** elems ARRAY<STRING|BIGINT> → ARRAY<BIGINT> MinHash signature of
-  * `numHashes` components. */
-case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  private def isStr: Boolean = child.dataType match {
-    case ArrayType(StringType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) | ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"minhash_sig needs ARRAY<STRING|BIGINT>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (isStr) Kernels.minhashSigStr(arr, numHashes) else Kernels.minhashSigLong(arr, numHashes)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isStr) "minhashSigStr" else "minhashSigLong"
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.$fn($c, $numHashes)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** text STRING → BIGINT polynomial rolling-hash fingerprint. */
-case class RollingHash(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"rolling_hash needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.rollingFingerprint(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.rollingFingerprint($c)")
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
-/** text STRING → STRUCT of the six fused text_stats counters. */
-case class TextStatsCounts(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_bpeish", LongType, nullable = false),
-    StructField("n_alpha", LongType, nullable = false),
-    StructField("len", LongType, nullable = false),
-    StructField("n_stop", LongType, nullable = false),
-    StructField("n_nonws", LongType, nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"text_stats needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.textStatsCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.textStatsCounts($c)")
-  override protected def withNewChildInternal(newChild: Expression): TextStatsCounts =
-    copy(child = newChild)
-}
-
-/** text STRING → ARRAY<BIGINT>: marker-token hits per language. */
-case class LangMarkerCounts(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"lang_marker_counts needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.langMarkerCounts(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.langMarkerCounts($c)")
-  override protected def withNewChildInternal(newChild: Expression): LangMarkerCounts =
-    copy(child = newChild)
-}
-
-/** vec ARRAY<FLOAT> → ARRAY<BIGINT>: sign-LSH bucket per hash table. */
-case class LshBuckets(child: Expression, planes: Int, dims: Int, tables: Int)
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"lsh_buckets needs ARRAY<FLOAT>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.lshBuckets(input.asInstanceOf[ArrayData], planes, dims, tables)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.lshBuckets($c, $planes, $dims, $tables)")
-  override protected def withNewChildInternal(newChild: Expression): LshBuckets =
-    copy(child = newChild)
-}
-
-/** STRING → BPE token count under a fixed learned merge list (rides
-  * into generated code as a reference object). */
-/** text STRING → STRING: confusable codepoints folded onto their
-  * ASCII skeletons ([[Kernels.confusableFold]]) — the homoglyph-spam
-  * normalizer dedup composes under. */
-case class ConfusableFold(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"confusable_fold needs STRING, got ${child.dataType}")
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.confusableFold(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.confusableFold($c)")
-  override protected def withNewChildInternal(newChild: Expression): ConfusableFold =
-    copy(child = newChild)
-}
-
-/** vec ARRAY<FLOAT> → ARRAY<DOUBLE>: fused centered k×d projection
-  * (the PCA/whitening map); model state rides as two reference
-  * arrays, one mat-vec per row in the scan. */
-case class ProjectCentered(child: Expression, mean: Array[Double],
-    mat: Array[Double], k: Int, d: Int) extends UnaryExpression {
-  require(mean.length == d && mat.length == k * d,
-    s"project_centered: mean/mat shapes must be d=$d / k*d=${k * d}")
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"project_centered needs ARRAY<FLOAT>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.projectCentered(input.asInstanceOf[ArrayData], mean, mat, k, d)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mRef = ctx.addReferenceObj("pcaMean", mean, "double[]")
-    val wRef = ctx.addReferenceObj("pcaMat", mat, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.projectCentered($c, $mRef, $wRef, $k, $d)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): ProjectCentered =
-    copy(child = newChild)
-}
-
-/** (key STRING, id BIGINT) → INT: bucket index against ascending
-  * literal (cutKey, cutId) cut points (count of cuts <= (key, id),
-  * binary search) — sample-balanced, order-preserving partition
-  * assignment for distributed ranking. The id tiebreak lets cuts
-  * split runs of identical keys, so no key skew can funnel. */
-case class RangeBucket(left: Expression, right: Expression,
-    cutKeys: Array[String], cutIds: Array[Long])
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  @transient private lazy val cutU8: Array[UTF8String] =
-    cutKeys.map(UTF8String.fromString)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(s"range_bucket needs (STRING, BIGINT), got ($l, $r)")
-    }
-  override protected def nullSafeEval(key: Any, id: Any): Any =
-    Kernels.rangeBucket(key.asInstanceOf[UTF8String],
-      id.asInstanceOf[Long], cutU8, cutIds)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("rankCutKeys", cutU8,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val iRef = ctx.addReferenceObj("rankCutIds", cutIds, "long[]")
-    defineCodeGen(ctx, ev, (k, i) =>
-      s"graft.functions.Kernels.rangeBucket($k, $i, $kRef, $iRef)")
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RangeBucket =
-    copy(left = newLeft, right = newRight)
-}
-
-/** ARRAY<STRING> → ARRAY<STRING>: one greedy merge-fold pass under a
-  * batch of rules ([[Kernels.mergeFold]]) — replaces the per-round
-  * interpreted `aggregate` lambda of the BPE trainers with one codegen
-  * node. The rule batch rides a reference object, so every training
-  * round generates IDENTICAL code and hits the codegen cache instead
-  * of re-compiling a fresh lambda tree per merge. */
-case class MergeFold(child: Expression, rules: Array[String])
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = child.dataType
-  @transient private lazy val rulesU8: Array[UTF8String] =
-    rules.map(UTF8String.fromString)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"merge_fold needs ARRAY<STRING>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.mergeFold(input.asInstanceOf[ArrayData], rulesU8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rRef = ctx.addReferenceObj("bpeMergeRules", rulesU8,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.mergeFold($c, $rRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): MergeFold =
-    copy(child = newChild)
-}
-
-case class BpeCount(child: Expression, merges: Array[String])
-    extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"bpe_count needs STRING, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.bpeTokenCount(input.asInstanceOf[UTF8String], merges)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mRef = ctx.addReferenceObj("bpeMerges", merges, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.bpeTokenCount($c, $mRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeCount =
-    copy(child = newChild)
-}
-
-/** (ARRAY<BIGINT>, ARRAY<BIGINT>) → fraction of equal components. */
-case class SigMatch(left: Expression, right: Expression) extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(s"sig_match needs ARRAY<BIGINT>, got $l / $r")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.sigMatchFraction(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.sigMatchFraction($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SigMatch =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (ARRAY<BIGINT>, ARRAY<BIGINT>) → exact containment |A∩B|/min(|A|,|B|). */
-case class ContainmentSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(s"containment needs ARRAY<BIGINT>, got $l / $r")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.containmentLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) => s"graft.functions.Kernels.containmentLong($l, $r)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ContainmentSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (ARRAY, ARRAY) → exact Jaccard with set semantics. */
-case class JaccardSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  private def isStr: Boolean = left.dataType match {
-    case ArrayType(StringType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(s"jaccard needs matching ARRAY<STRING|BIGINT>, got $l / $r")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (isStr) Kernels.jaccardStr(x, y) else Kernels.jaccardLong(x, y)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isStr) "jaccardStr" else "jaccardLong"
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.$fn($a, $b)")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (ARRAY<FLOAT|DOUBLE>, same) → cosine similarity in double. */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(s"cosine needs matching ARRAY<FLOAT|DOUBLE>, got $l / $r")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (isFloat) Kernels.cosineFloat(x, y) else Kernels.cosineDouble(x, y)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isFloat) "cosineFloat" else "cosineDouble"
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.$fn($a, $b)")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (ARRAY<TINYINT>, ARRAY<TINYINT>) → cosine similarity in double —
-  * the int8-native scoring kernel of the stored-SQ8 ANN path. */
-case class CosineSimQ8(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(ByteType, _), ArrayType(ByteType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(s"cosine_q8 needs ARRAY<TINYINT>, got $l / $r")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.cosineQ8(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.cosineQ8($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSimQ8 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Column-level entry points for the custom expressions. */
+/** Column-level entry points for the kernels. Each is one call into
+  * its [[KernelTable]] row, which also drives the SQL registry and
+  * the kernel spec. Adding a kernel takes one [[Kernels]] method and
+  * one [[KernelTable]] row (plus a facade line here to expose it). */
 object GraftFunctions {
+  private val K = KernelTable
   private def e(c: Column): Expression = GraftColumnBridge.expression(c)
-  def simhash64(text: Column): Column = GraftColumnBridge.column(SimHash64(e(text)))
-  def deflateLen(text: Column): Column = GraftColumnBridge.column(DeflateLen(e(text)))
+
+  /** A BPE rule list flattened [a0,b0,a1,b1,…] — checked once here,
+    * so the per-row loops can index pairs without bounds or null
+    * checks. */
+  private def ruleList(fn: String, rules: Array[String]): Array[String] = {
+    if (rules.length % 2 != 0) throw new IllegalArgumentException(
+      s"$fn: rule list must hold (a, b) pairs, got odd length ${rules.length}")
+    val i = rules.indexOf(null)
+    if (i >= 0) throw new IllegalArgumentException(
+      s"$fn: rule list holds a null symbol at index $i")
+    rules
+  }
+
+  def simhash64(text: Column): Column = K.simhash64(text)
+  def deflateLen(text: Column): Column = K.deflateLen(text)
   def blocklistStats(text: Column, patterns: Array[String]): Column =
-    GraftColumnBridge.column(BlocklistStats(e(text), patterns))
+    K.blocklistStats(text, patterns)
   def unicodeNormalize(text: Column, form: String = "NFC"): Column =
-    GraftColumnBridge.column(UnicodeNormalize(e(text), form))
-  def phash64(media: Column): Column = GraftColumnBridge.column(PHash64(e(media)))
-  def charsetDecode(payload: Column): Column =
-    GraftColumnBridge.column(CharsetDecode(e(payload)))
+    K.unicodeNormalize(text, form)
+  def phash64(media: Column): Column = K.phash64(media)
+  def charsetDecode(payload: Column): Column = K.charsetDecode(payload)
   def charsetDecodeHint(payload: Column, hint: Column): Column =
-    GraftColumnBridge.column(CharsetDecodeHint(e(payload), e(hint)))
-  def mojibakeFix(text: Column): Column =
-    GraftColumnBridge.column(MojibakeFix(e(text)))
-  def httpResponse(payload: Column): Column =
-    GraftColumnBridge.column(HttpResponse(e(payload)))
-  def sentenceSplit(text: Column): Column =
-    GraftColumnBridge.column(SentenceSplit(e(text)))
+    K.charsetDecodeHint(payload, hint)
+  def mojibakeFix(text: Column): Column = K.mojibakeFix(text)
+  def httpResponse(payload: Column): Column = K.httpResponse(payload)
+  def sentenceSplit(text: Column): Column = K.sentenceSplit(text)
   def mainContent(html: Column, minChars: Int = 25,
       maxLinkDensity: Double = 0.33): Column =
-    GraftColumnBridge.column(MainContent(e(html), minChars, maxLinkDensity))
+    K.mainContent(html, minChars, maxLinkDensity)
   def robotsRules(robotsTxt: Column, agent: String): Column =
-    GraftColumnBridge.column(RobotsRules(e(robotsTxt), agent))
+    K.robotsRules(robotsTxt, agent)
   def robotsCrawlDelay(robotsTxt: Column, agent: String): Column =
-    GraftColumnBridge.column(RobotsCrawlDelay(e(robotsTxt), agent))
-  def percentNormalize(path: Column): Column =
-    GraftColumnBridge.column(PercentNormalize(e(path)))
-  def resolveRef(base: Column, ref: Column): Column =
-    GraftColumnBridge.column(ResolveRef(e(base), e(ref)))
+    K.robotsCrawlDelay(robotsTxt, agent)
+  def percentNormalize(path: Column): Column = K.percentNormalize(path)
+  def resolveRef(base: Column, ref: Column): Column = K.resolveRef(base, ref)
   def registeredDomain(host: Column, twoLabel: Seq[String],
       threeLabel: Seq[String], wildcardBases: Seq[String],
       exceptions: Seq[String]): Column =
-    GraftColumnBridge.column(RegisteredDomain(e(host), twoLabel,
-      threeLabel, wildcardBases, exceptions))
-  def sitemapEntries(body: Column): Column =
-    GraftColumnBridge.column(SitemapEntries(e(body)))
-  def charNgramHashes(text: Column, n: Int): Column =
-    GraftColumnBridge.column(CharNgramHashes(e(text), n))
-  def charGrams(text: Column, n: Int): Column =
-    GraftColumnBridge.column(CharGrams(e(text), n))
-  def wordShingles(text: Column, k: Int): Column =
-    GraftColumnBridge.column(WordShingles(e(text), k))
+    K.registeredDomain(host,
+      new SuffixTables(twoLabel, threeLabel, wildcardBases, exceptions))
+  def sitemapEntries(body: Column): Column = K.sitemapEntries(body)
+  def charNgramHashes(text: Column, n: Int): Column = K.charNgramHashes(text, n)
+  def charGrams(text: Column, n: Int): Column = K.charGrams(text, n)
+  def wordShingles(text: Column, k: Int): Column = K.wordShingles(text, k)
   def charNgramsDistinct(text: Column, n: Int): Column =
-    GraftColumnBridge.column(CharNgramsDistinct(e(text), n))
-  def wordGramsLower(text: Column, n: Int): Column =
-    GraftColumnBridge.column(WordGramsLower(e(text), n))
-  def wordGramHashes(text: Column, n: Int): Column =
-    GraftColumnBridge.column(WordGramHashes(e(text), n))
-  def repetitionStats(text: Column): Column =
-    GraftColumnBridge.column(RepetitionStats(e(text)))
+    K.charNgramsDistinct(text, n)
+  def wordGramsLower(text: Column, n: Int): Column = K.wordGramsLower(text, n)
+  def wordGramHashes(text: Column, n: Int): Column = K.wordGramHashes(text, n)
+  def repetitionStats(text: Column): Column = K.repetitionStats(text)
   def minhashSig(elems: Column, numHashes: Int): Column =
-    GraftColumnBridge.column(MinHashSig(e(elems), numHashes))
-  def jaccardSim(a: Column, b: Column): Column =
-    GraftColumnBridge.column(JaccardSim(e(a), e(b)))
-  def containmentSim(a: Column, b: Column): Column =
-    GraftColumnBridge.column(ContainmentSim(e(a), e(b)))
-  def sigMatch(a: Column, b: Column): Column =
-    GraftColumnBridge.column(SigMatch(e(a), e(b)))
+    K.minhashSig(elems, numHashes)
+  def jaccardSim(a: Column, b: Column): Column = K.jaccardSim(a, b)
+  def containmentSim(a: Column, b: Column): Column = K.containmentSim(a, b)
+  def sigMatch(a: Column, b: Column): Column = K.sigMatch(a, b)
   def lshBuckets(vec: Column, planes: Int, dims: Int, tables: Int): Column =
-    GraftColumnBridge.column(LshBuckets(e(vec), planes, dims, tables))
-  def rollingHash(text: Column): Column =
-    GraftColumnBridge.column(RollingHash(e(text)))
-  def winnowFp(text: Column, k: Int, w: Int): Column =
-    GraftColumnBridge.column(WinnowFingerprints(e(text), k, w))
-  def quantizeQ8(vec: Column): Column =
-    GraftColumnBridge.column(QuantizeQ8(e(vec)))
-  def cosineSim(a: Column, b: Column): Column =
-    GraftColumnBridge.column(CosineSim(e(a), e(b)))
-  def cosineSimQ8(a: Column, b: Column): Column =
-    GraftColumnBridge.column(CosineSimQ8(e(a), e(b)))
-  def textStatsCounts(text: Column): Column =
-    GraftColumnBridge.column(TextStatsCounts(e(text)))
+    K.lshBuckets(vec, planes, dims, tables)
+  def rollingHash(text: Column): Column = K.rollingHash(text)
+  def winnowFp(text: Column, k: Int, w: Int): Column = K.winnowFp(text, k, w)
+  def quantizeQ8(vec: Column): Column = K.quantizeQ8(vec)
+  def cosineSim(a: Column, b: Column): Column = K.cosineSim(a, b)
+  def cosineSimQ8(a: Column, b: Column): Column = K.cosineSimQ8(a, b)
+  def textStatsCounts(text: Column): Column = K.textStatsCounts(text)
   def bpeCount(text: Column, merges: Array[String]): Column =
-    GraftColumnBridge.column(BpeCount(e(text), merges))
+    K.bpeCount(text, ruleList("bpe_count", merges))
   def mergeFold(syms: Column, rules: Array[String]): Column =
-    GraftColumnBridge.column(MergeFold(e(syms), rules))
+    K.mergeFold(syms, ruleList("merge_fold", rules).map(UTF8String.fromString))
   def rangeBucket(key: Column, id: Column, cutKeys: Array[String],
       cutIds: Array[Long]): Column =
-    GraftColumnBridge.column(RangeBucket(e(key), e(id), cutKeys, cutIds))
+    K.rangeBucket(key, id, cutKeys.map(UTF8String.fromString), cutIds)
   def projectCentered(vec: Column, mean: Array[Double],
-      mat: Array[Double], k: Int, d: Int): Column =
-    GraftColumnBridge.column(ProjectCentered(e(vec), mean, mat, k, d))
-  def confusableFold(text: Column): Column =
-    GraftColumnBridge.column(ConfusableFold(e(text)))
-  def langMarkerCounts(text: Column): Column =
-    GraftColumnBridge.column(LangMarkerCounts(e(text)))
+      mat: Array[Double], k: Int, d: Int): Column = {
+    require(mean.length == d && mat.length == k * d,
+      s"project_centered: mean/mat shapes must be d=$d / k*d=${k * d}")
+    K.projectCentered(vec, mean, mat, k, d)
+  }
+  def confusableFold(text: Column): Column = K.confusableFold(text)
+  def langMarkerCounts(text: Column): Column = K.langMarkerCounts(text)
   /** Aggregate: k best (score desc, id asc) rows with an O(k) buffer. */
   def topK(score: Column, id: Column, k: Int): Column =
     GraftColumnBridge.column(TopKByScore(e(score), e(id), k).toAggregateExpression())

@@ -1,12 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types._
 
 /** Product-quantization kernels (public: Jégou, Douze, Schmid 2011,
   * "Product Quantization for Nearest Neighbor Search"): a vector is
@@ -19,8 +14,8 @@ import org.apache.spark.sql.types._
   * lookups — the classic ADC (asymmetric distance computation) scan.
   *
   * The codebook rides into generated code as a codegen reference
-  * object (a plain double[], laid out [(s·ks + c)·ds + d]), so all
-  * three expressions stay inside whole-stage codegen with zero
+  * object (a plain double[], laid out [(s·ks + c)·ds + d]), so every
+  * kernel call stays inside whole-stage codegen with zero
   * per-row allocation beyond their output arrays.
   */
 object PqKernels {
@@ -152,132 +147,20 @@ object PqKernels {
   }
 }
 
-/** ARRAY<FLOAT> → ARRAY<TINYINT>: the m PQ codes of a vector. */
-case class PqEncode(child: Expression, codebook: Array[Double], m: Int,
-    ks: Int, ds: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_encode needs ARRAY<FLOAT>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.pqEncode(input.asInstanceOf[ArrayData], codebook, m, ks, ds)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqcb", codebook, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PqKernels.pqEncode($c, $cbRef, $m, $ks, $ds)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-}
-
-/** ARRAY<FLOAT> (query) → ARRAY<DOUBLE>: the m·ks ADC dot table. */
-case class PqLut(child: Expression, codebook: Array[Double], m: Int,
-    ks: Int, ds: Int) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_lut needs ARRAY<FLOAT>, got $t")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    PqKernels.pqLut(input.asInstanceOf[ArrayData], codebook, m, ks, ds)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqcb", codebook, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PqKernels.pqLut($c, $cbRef, $m, $ks, $ds)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqLut =
-    copy(child = newChild)
-}
-
-/** (lut ARRAY<DOUBLE>, codes ARRAY<TINYINT>, qnorm DOUBLE) → the ADC
-  * approximate cosine. */
-case class PqAdcCosine(first: Expression, second: Expression,
-    third: Expression, norms2: Array[Double], ks: Int)
-    extends TernaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(ByteType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"pq_adc needs (ARRAY<DOUBLE>, ARRAY<TINYINT>, DOUBLE), got $a / $b / $c")
-    }
-  override protected def nullSafeEval(lut: Any, codes: Any, qn: Any): Any =
-    PqKernels.pqAdcCosine(lut.asInstanceOf[ArrayData],
-      codes.asInstanceOf[ArrayData], qn.asInstanceOf[Double], norms2, ks)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val n2Ref = ctx.addReferenceObj("pqn2", norms2, "double[]")
-    defineCodeGen(ctx, ev, (l, c, q) =>
-      s"graft.functions.PqKernels.pqAdcCosine($l, $c, $q, $n2Ref, $ks)")
-  }
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): PqAdcCosine =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** (lut ARRAY<DOUBLE>, codes ARRAY<TINYINT>) → Σ LUT lookups. */
-case class PqAdcDot(left: Expression, right: Expression, ks: Int)
-    extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(ByteType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"pq_adc_dot needs (ARRAY<DOUBLE>, ARRAY<TINYINT>), got $a / $b")
-    }
-  override protected def nullSafeEval(lut: Any, codes: Any): Any =
-    PqKernels.pqAdcDot(lut.asInstanceOf[ArrayData],
-      codes.asInstanceOf[ArrayData], ks)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, c) =>
-      s"graft.functions.PqKernels.pqAdcDot($l, $c, $ks)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): PqAdcDot = copy(left = newLeft, right = newRight)
-}
-
-/** (codes ARRAY<TINYINT>, centroid ARRAY<DOUBLE>) → ‖centroid+r̂‖. */
-case class PqReconNorm(left: Expression, right: Expression,
-    codebook: Array[Double], ks: Int, ds: Int) extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ByteType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"pq_recon_norm needs (ARRAY<TINYINT>, ARRAY<DOUBLE>), got $a / $b")
-    }
-  override protected def nullSafeEval(codes: Any, centroid: Any): Any =
-    PqKernels.pqReconNorm(codes.asInstanceOf[ArrayData],
-      centroid.asInstanceOf[ArrayData], codebook, ks, ds)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqcb", codebook, "double[]")
-    defineCodeGen(ctx, ev, (c, ce) =>
-      s"graft.functions.PqKernels.pqReconNorm($c, $ce, $cbRef, $ks, $ds)")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): PqReconNorm =
-    copy(left = newLeft, right = newRight)
-}
-
+/** Column-level entry points for the PQ kernels — one call each into
+  * its [[KernelTable]] row. */
 object PqFunctions {
-  private def e(c: Column): Expression = GraftColumnBridge.expression(c)
+  private val K = KernelTable
   def pqEncode(vec: Column, cb: Array[Double], m: Int, ks: Int, ds: Int): Column =
-    GraftColumnBridge.column(PqEncode(e(vec), cb, m, ks, ds))
+    K.pqEncode(vec, cb, m, ks, ds)
   def pqLut(q: Column, cb: Array[Double], m: Int, ks: Int, ds: Int): Column =
-    GraftColumnBridge.column(PqLut(e(q), cb, m, ks, ds))
+    K.pqLut(q, cb, m, ks, ds)
   def pqAdcCosine(lut: Column, codes: Column, qnorm: Column,
       norms2: Array[Double], ks: Int): Column =
-    GraftColumnBridge.column(PqAdcCosine(e(lut), e(codes), e(qnorm), norms2, ks))
+    K.pqAdcCosine(lut, codes, qnorm, norms2, ks)
   def pqAdcDot(lut: Column, codes: Column, ks: Int): Column =
-    GraftColumnBridge.column(PqAdcDot(e(lut), e(codes), ks))
+    K.pqAdcDot(lut, codes, ks)
   def pqReconNorm(codes: Column, centroid: Column, cb: Array[Double],
       ks: Int, ds: Int): Column =
-    GraftColumnBridge.column(PqReconNorm(e(codes), e(centroid), cb, ks, ds))
+    K.pqReconNorm(codes, centroid, cb, ks, ds)
 }

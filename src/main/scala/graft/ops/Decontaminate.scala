@@ -28,7 +28,7 @@ object Decontaminate {
   /** One row per distinct word n-gram hash (`gh`) in the corpus.
     * Tokenization matches [[Dedup.shingles]] (lowercased whitespace
     * tokens; texts shorter than n yield one whole-text gram); hashing
-    * is the fused one-pass kernel [[graft.functions.WordGramHashes]]
+    * is the fused one-pass kernel [[graft.functions.GraftFunctions.wordGramHashes]]
     * — no gram-string arrays materialize. */
   def trainGrams(train: DataFrame, text: Column, n: Int): DataFrame =
     gramStream(train, text, n).distinct()

@@ -93,13 +93,13 @@ object Dedup {
 
   /** MinHash signature: for each of `numHashes` seeded hash functions,
     * the minimum XXH64 over the element set — a custom codegen
-    * expression ([[graft.functions.MinHashSig]]): one fused loop per
+    * expression ([[graft.functions.GraftFunctions.minhashSig]]): one fused loop per
     * row instead of numHashes × |elems| interpreted lambda calls. */
   def minhashSignature(sh: Column, numHashes: Int): Column =
     graft.functions.GraftFunctions.minhashSig(sh, numHashes)
 
   /** Exact Jaccard similarity of two array columns (set semantics),
-    * as a custom codegen expression ([[graft.functions.JaccardSim]]). */
+    * as a custom codegen expression ([[graft.functions.GraftFunctions.jaccardSim]]). */
   def jaccard(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.jaccardSim(a, b)
 
@@ -551,7 +551,7 @@ object Dedup {
 
   /** 64-bit SimHash fingerprint: per-token hash votes on each bit,
     * sign of the vote sum becomes the bit — a custom codegen
-    * expression ([[graft.functions.SimHash64]]): the 64×tokens vote
+    * expression ([[graft.functions.GraftFunctions.simhash64]]): the 64×tokens vote
     * loop runs fused instead of as nested interpreted lambdas. */
   def simhash(text: Column): Column =
     graft.functions.GraftFunctions.simhash64(text)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -45,12 +46,25 @@ object Graph {
     * session and pins become RELIABLE checkpoints (written to that
     * fault-tolerant dir, surviving executor loss) — same values, same
     * downstream plan shape, strictly slower on a single box, which is
-    * why it is off by default and off in the bench. */
+    * why it is off by default and off in the bench. A SparkContext
+    * already checkpointing elsewhere fails the pin with both paths
+    * named: the context has one checkpoint dir, and silently writing
+    * to the other one would ignore the setting. */
   private def pin(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption("spark.graft.checkpoint.dir") match {
       case Some(d) =>
         val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
+        sc.getCheckpointDir match {
+          case None => sc.setCheckpointDir(d)
+          case Some(cur) =>
+            // the context checkpoints into a fresh subdir of the dir
+            // it was given
+            val want = new Path(d)
+            val wantQ = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+            if (new Path(cur).getParent != wantQ) throw new IllegalStateException(
+              s"spark.graft.checkpoint.dir is $wantQ, but the SparkContext " +
+              s"already checkpoints to $cur")
+        }
         df.checkpoint(true)
       case None => df.localCheckpoint(true)
     }

@@ -18,7 +18,7 @@ object Similarity {
 
   /** Cosine similarity of two ARRAY<FLOAT|DOUBLE> columns, computed in
     * double — a custom codegen expression
-    * ([[graft.functions.CosineSim]]) accumulating in index order
+    * ([[graft.functions.GraftFunctions.cosineSim]]) accumulating in index order
     * (bit-identical to the higher-order formulation it replaced). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
@@ -57,7 +57,7 @@ object Similarity {
       .select(col("query_id"), col("e.vec_id").as("vec_id"), col("e.score").as("score"))
 
   /** Random-hyperplane LSH buckets for all hash tables at once — the
-    * [[graft.functions.LshBuckets]] codegen expression (one fused pass
+    * [[graft.functions.GraftFunctions.lshBuckets]] codegen expression (one fused pass
     * per vector; deterministic splitmix64 plane weights, no RNG
     * state). Output: ARRAY<BIGINT>, one bucket per table. */
   def lshBuckets(emb: Column, planes: Int, dims: Int, tables: Int): Column =
@@ -525,7 +525,7 @@ object Similarity {
     * path without a stored corpus (strictly more work per row than
     * [[bruteForceTopK]]; the bandwidth win needs [[buildQ8Corpus]] +
     * [[q8TopKStored]]). Scoring is the int8-native kernel
-    * ([[graft.functions.CosineSimQ8]]) — long-exact integer
+    * ([[graft.functions.GraftFunctions.cosineSimQ8]]) — long-exact integer
     * accumulation, bit-identical to the cast-to-float formulation the
     * DedupSpec bounds were proven against. */
   def q8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -611,7 +611,7 @@ object Similarity {
       case "kmeans" =>
         // joint Lloyd over ALL m subspaces at once: init = the
         // deterministic firstk medoid codebook, then maxIter rounds of
-        // [assign every sample vector with the fused PqEncode kernel →
+        // [assign every sample vector with the fused pqEncode kernel →
         // one (s, code, dim) mean aggregation → collect the m·ks·ds
         // cell means (tiny by construction)]. One Spark job per round
         // for every subspace TOGETHER — m sequential per-subspace

@@ -269,7 +269,7 @@ object TextOps {
   }
 
   /** Fused [[langId]]: marker-hit counts from one tokenization pass
-    * ([[graft.functions.LangMarkerCounts]]); the argmax/tie/und logic
+    * ([[graft.functions.GraftFunctions.langMarkerCounts]]); the argmax/tie/und logic
     * stays the identical Column expression, so results match the
     * per-language filter formulation exactly. */
   def langIdFused(text: Column): Column = {
@@ -285,7 +285,7 @@ object TextOps {
   }
 
   /** Fused [[qualityScore]]: every input ratio comes from the single
-    * [[graft.functions.TextStatsCounts]] pass; the score arithmetic is
+    * [[graft.functions.GraftFunctions.textStatsCounts]] pass; the score arithmetic is
     * written term-for-term like the unfused version (same double
     * association order), so values are bit-identical. */
   def qualityScoreFused(text: Column): Column = {
@@ -300,7 +300,7 @@ object TextOps {
   }
 
   /** The full text_stats feature row from ONE fused pass over the text
-    * ([[graft.functions.TextStatsCounts]] emits the six counters in a
+    * ([[graft.functions.GraftFunctions.textStatsCounts]] emits the six counters in a
     * single codegen kernel instead of six regex passes); the ratio
     * arithmetic and rounding stay Column expressions, so values are
     * bit-identical to the per-feature functions above. */
@@ -319,7 +319,7 @@ object TextOps {
   }
 
   /** Gopher repetition filter columns (Rae et al. 2021, table A1) from
-    * ONE fused pass ([[graft.functions.RepetitionStats]]): duplicate
+    * ONE fused pass ([[graft.functions.GraftFunctions.repetitionStats]]): duplicate
     * line / duplicate line character fractions, top word-2-gram
     * character mass, duplicate word-5-gram character mass — the
     * boilerplate/spam signals the length+ratio family above can't see.

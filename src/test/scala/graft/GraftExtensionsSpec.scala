@@ -19,29 +19,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     s
   }
 
-  test("every registered function resolves through spark.sql") {
-    import spark.implicits._
-    Seq(("a b c d", "b c d e")).toDF("x", "y").createOrReplaceTempView("t")
-    val r = spark.sql("""
-      SELECT graft_simhash64(x) AS sh,
-             graft_word_gram_hashes(x, 2) AS wg,
-             graft_char_ngram_hashes(x, 3) AS cg,
-             graft_minhash_sig(graft_word_gram_hashes(x, 1), 8) AS mh,
-             graft_jaccard(split(x, ' '), split(y, ' ')) AS j,
-             graft_containment(graft_word_gram_hashes(x, 1),
-                               graft_word_gram_hashes(y, 1)) AS c,
-             graft_rolling_hash(x) AS rh,
-             graft_text_stats(x).n_tokens AS nt,
-             graft_repetition_stats(x).dup_line_frac AS dl,
-             graft_winnow(x, 2, 2) AS w,
-             graft_phash64(cast(x AS BINARY)) AS ph
-      FROM t""").head()
-    assert(r.getDouble(4) === 0.6) // |{b,c,d}| / |{a,b,c,d,e}|
-    assert(r.getLong(7) === 4L)
-    assert(r.getDouble(8) === 0.0)
-    assert(r.getSeq[Long](1).length === 3) // distinct 2-grams of 4 tokens
-  }
-
   test("count_by_value aggregate resolves through SQL and counts per value") {
     import spark.implicits._
     Seq(("g", 1.0), ("g", 2.0), ("g", 1.0), ("h", 3.0))

@@ -227,4 +227,28 @@ class BpeSpec extends AnyFunSuite {
       .as[Seq[String]].head()
     assert(kern === seqRef)
   }
+
+  test("odd-length rule lists fail where the kernel call is built, naming the function") {
+    val odd = Array("a", "b", "c")
+    val fold = intercept[IllegalArgumentException] {
+      graft.functions.GraftFunctions.mergeFold(col("syms"), odd)
+    }
+    assert(fold.getMessage.contains("merge_fold") && fold.getMessage.contains("odd length 3"))
+    val count = intercept[IllegalArgumentException] {
+      graft.functions.GraftFunctions.bpeCount(col("text"), odd)
+    }
+    assert(count.getMessage.contains("bpe_count") && count.getMessage.contains("odd length 3"))
+  }
+
+  test("rule lists holding a null symbol fail where the kernel call is built, naming the function") {
+    val withNull = Array("a", "b", null, "d")
+    val fold = intercept[IllegalArgumentException] {
+      graft.functions.GraftFunctions.mergeFold(col("syms"), withNull)
+    }
+    assert(fold.getMessage.contains("merge_fold") && fold.getMessage.contains("index 2"))
+    val count = intercept[IllegalArgumentException] {
+      graft.functions.GraftFunctions.bpeCount(col("text"), withNull)
+    }
+    assert(count.getMessage.contains("bpe_count") && count.getMessage.contains("index 2"))
+  }
 }

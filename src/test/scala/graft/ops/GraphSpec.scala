@@ -220,4 +220,26 @@ class GraphSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("fixpoint"))
   }
+
+  test("pin refuses a checkpoint dir that conflicts with the SparkContext's") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    assume(sc.getCheckpointDir.isEmpty, "another suite set a checkpoint dir")
+    val base = java.nio.file.Files.createTempDirectory("graft-pin")
+    val (ctxDir, confDir) = (base.resolve("ctx"), base.resolve("conf"))
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
+    try {
+      sc.setCheckpointDir(ctxDir.toString)
+      spark.conf.set("spark.graft.checkpoint.dir", confDir.toString)
+      val e = intercept[IllegalStateException](Graph.kCore(edges, k = 2))
+      assert(e.getMessage.contains(confDir.toString), e.getMessage)
+      assert(e.getMessage.contains(ctxDir.toString), e.getMessage)
+      // the configured dir itself is accepted, and pins into it
+      spark.conf.set("spark.graft.checkpoint.dir", ctxDir.toString)
+      assert(Graph.kCore(edges, k = 2).count() === 3L)
+    } finally {
+      spark.conf.unset("spark.graft.checkpoint.dir")
+      sc.setCheckpointDir(null)
+    }
+  }
 }

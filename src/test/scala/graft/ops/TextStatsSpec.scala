@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parity proof for the fused single-pass text_stats kernel
-  * ([[graft.functions.TextStatsCounts]]) against the original
+  * ([[graft.functions.GraftFunctions.textStatsCounts]]) against the original
   * six-regex-pass formulation: whitespace/trim/split-limit semantics,
   * Unicode, empty strings, and the real documents corpus. */
 class TextStatsSpec extends AnyFunSuite {
