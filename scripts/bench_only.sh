@@ -4,12 +4,9 @@
 set -u
 Q="$1"
 WR="${2:-3}"
-# SPARK_GRAFT_BENCH_TSV set => skips the ~4s calibration probe (debug runs
-# don't need cross-day normalization; the committed pair still measures it)
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_ONLY="$Q" \
 SPARK_GRAFT_WARM_RUNS="$WR" \
-SPARK_GRAFT_BENCH_TSV=/tmp/bench_only.tsv \
 SPARK_GRAFT_BENCH_OUT=/tmp/bench_only.json \
 exec "$(dirname "$0")/run_main.sh" graft.Bench

@@ -1,16 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s.{JArray, JDouble, JInt, JNothing, JNull, JObject, JString, JValue}
+import java.io.File
 import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 object Bench {
 
   /** (name, (cold, warm, warm-run gc ms)) — None = the run threw. */
-  private type Res = (String, (Option[Double], Option[Double], Long))
+  private[graft] type Res = (String, (Option[Double], Option[Double], Long))
+
+  /** A drop-ledger row: (name, engagement count, last detail). */
+  private[graft] type LedgerRow = (String, Long, String)
 
   def main(args: Array[String]): Unit = {
-    val fork = sys.env.get("SPARK_GRAFT_BENCH_FORK")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ > 0)
+    val fork = Harness.positive(sys.env.get("SPARK_GRAFT_BENCH_FORK"), 0)
     // SPARK_GRAFT_BENCH_FORK=K batches the bench across FRESH JVMs of
     // K queries each — the structural fix for position contamination:
     // the r10/r11 measurements showed per-query times inflating 2-4x
@@ -21,88 +25,42 @@ object Bench {
     // K-1 queries before any measurement. Children run with FORK
     // cleared from their environment, so they take the inline path;
     // SPARK_GRAFT_ONLY composes (the parent subsets, then batches).
-    if (fork.isDefined) runForked(fork.get)
+    if (fork > 0) runForked(fork)
     else runInline()
+  }
+
+  /** The SPARK_GRAFT_ONLY subset in registration order, or shuffled
+    * deterministically by SPARK_GRAFT_BENCH_SEED=N: re-running with
+    * different seeds separates operator regressions from position
+    * artifacts. Unset = stable order, comparable across rounds. Fork
+    * children get the order through SPARK_GRAFT_ONLY, without the seed. */
+  private def queryNames(): Seq[String] = {
+    val names = SparkEntry.queries.keys.toSeq
+      .filter(n => Harness.only.forall(_.contains(n)))
+    sys.env.get("SPARK_GRAFT_BENCH_SEED").fold(names) { seed =>
+      new scala.util.Random(scala.util.Try(seed.trim.toLong).getOrElse(0L)).shuffle(names)
+    }
   }
 
   // ------------------------------------------------------------- inline
 
   private def runInline(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // fork children (TSV sidecar set) skip the calibration probe —
-    // the parent measured it once for the committed artifact; the
-    // driver's single-session run pays it once here (before the main
-    // session exists: the probe owns its own short-lived session)
-    val calib = if (sys.env.contains("SPARK_GRAFT_BENCH_TSV")) None
-                else Some(calibrationProbe())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // make shuffle/RDD cleanup SYNCHRONOUS on the cleaner thread: when
-      // the hygiene GC below reaps a dead shuffle, its file deletion
-      // completes inside the hygiene window instead of being queued and
-      // racing the next TIMED run (measured r6: span_dup_spans warm 25.8s
-      // vs cold 2.8s purely from cleanup landing mid-measurement)
-      .config("spark.cleaner.referenceTracking.blocking", "true")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      // the app-status stores keep LIVE references to every past
-      // execution's job/stage/task metadata (default: 1000 SQL
-      // executions) — ~450 runs in, that's unreclaimable heap the
-      // per-query GC cannot touch, and late queries pay for it in GC
-      // pressure (r7: span_scrub_clean warm 2.7s isolated vs 10.9s at
-      // position ~135). Keep only a handful.
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "20")
-      .config("spark.ui.retainedTasks", "200")
-      .config("spark.worker.ui.retainedExecutors", "4")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
-    def gcMs(): Long = gcBeans.map(_.getCollectionTime).sum
-    // storage hygiene: operators persist/localCheckpoint intermediates and
-    // release the REFERENCES eagerly, but blocks are only reaped by
-    // ContextCleaner when the driver GCs — which a 128 GiB heap almost
-    // never does on its own. r6 lesson: this must run before EVERY timed
-    // run (incl. between the cold and warm runs of one query), not just
-    // between queries — otherwise the warm run allocates into a heap full
-    // of the cold run's dead checkpoint/shuffle state and the first
-    // natural GC triggers cleanup DURING the measurement (4-9x blowups).
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-      // second pass reaps objects whose finalization the first GC queued;
-      // with blocking cleanup above, shuffle-file deletion for everything
-      // reaped here finishes before this returns
-      System.gc()
-    }
+    // a subset run (fork children, scripts/bench_only.sh) skips the
+    // calibration probe — the forked parent measured it once for the
+    // committed artifact; a full run pays it once here (before the
+    // main session exists: the probe owns its own short-lived session)
+    val calib = if (Harness.only.isDefined) None else Some(calibrationProbe())
+    val spark = Harness.session(hygiene = true)
     var failed = List.empty[String]
-    // warm the JVM/codegen/parquet-reader paths so the first measured
-    // query isn't charged ~6s of one-time infrastructure cost; a
-    // failure here is a real regression, not ignorable noise
-    try {
-      spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-      SparkEntry.events(spark, sfDir).limit(10).write.format("noop").mode("overwrite").save()
-    } catch { case e: Throwable =>
+    // a warmup failure is a real regression, not ignorable noise
+    try Harness.warmup(spark, sfDir)
+    catch { case e: Throwable =>
       System.err.println("[bench] warmup FAILED")
       e.printStackTrace()
       failed ::= "warmup"
     }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val warmRuns = sys.env.getOrElse("SPARK_GRAFT_WARM_RUNS", "2").toInt
-    // optional deterministic order shuffle (SPARK_GRAFT_BENCH_SEED=N):
-    // re-running with different seeds separates operator regressions
-    // from position artifacts. Unset = stable registration order,
-    // comparable across rounds.
-    val selected0 = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    val selected = sys.env.get("SPARK_GRAFT_BENCH_SEED") match {
-      case Some(seed) if only.isEmpty =>
-        val r = new scala.util.Random(scala.util.Try(seed.trim.toLong).getOrElse(0L))
-        r.shuffle(selected0.toSeq)
-      case _ => selected0.toSeq
-    }
+    val warmRuns = Harness.warmRuns
     // Each query runs 1 cold + N warm times. The cold run carries the
     // one-time whole-stage-codegen/Janino compile + classload cost
     // (~0.3-2.5s per novel plan — measured to dwarf actual sf0.1
@@ -110,23 +68,17 @@ object Bench {
     // steady-state number that predicts 100 TB throughput where compile
     // time amortizes to zero (min, not mean: any GC/cleanup contamination
     // is strictly additive noise, so the min is the cleanest observation).
-    val results: Seq[Res] = selected.map { case (name, fn) =>
-      // noop sink materializes EVERY column — .count() would let
-      // Catalyst prune projection-only queries down to nothing and
-      // record fictional times
-      def once(): (Option[Double], Long) = {
-        hygiene()
-        val g0 = gcMs()
-        val t0 = System.nanoTime()
+    val results: Seq[Res] = queryNames().map { name =>
+      val fn = SparkEntry.queries(name)
+      def once(): (Option[Double], Long) =
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (Some((System.nanoTime() - t0) / 1e9), gcMs() - g0)
+          val (sec, gc) = Harness.noopRun(spark)(fn(spark, sfDir))
+          (Some(sec), gc)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED:")
           e.printStackTrace()
-          (None, gcMs() - g0)
+          (None, 0L)
         }
-      }
       val (cold, coldGc) = once()
       val warms = if (cold.isDefined) Seq.fill(warmRuns)(once()) else Seq.empty
       val warm = if (warms.nonEmpty && warms.forall(_._1.isDefined)) Some(warms.flatMap(_._1).min) else None
@@ -136,35 +88,20 @@ object Bench {
       if (warm.isEmpty) failed ::= name
       else System.err.println(f"[bench] $name%-28s cold ${cold.get}%8.2fs  warm ${warm.get}%8.2fs  (warm gc ${warmGc}ms, cold gc ${coldGc}ms)")
       // stdout-parseable per-query row (r16 verdict item 2): the driver's
-      // stdout capture is a bounded TAIL, so the single ~10KB per-query
-      // map line never reached it past ~200 queries. One compact line per
-      // query as it finishes means ANY tail length carries the most
-      // recent queries, and a full capture carries all of them; the
-      // one-JSON-line summary contract is untouched (still printed last).
-      println(queryLine(name, cold, warm, warmGc))
+      // stdout capture is a bounded TAIL, so one compact line per query
+      // as it finishes means ANY tail length carries the most recent
+      // queries, and a full capture carries all of them
+      println(Harness.json(queryLine(name, cold, warm, warmGc)))
       name -> ((cold, warm, warmGc))
     }
-    val ledger = graft.ops.Ledger.summary()
-    // child-mode sidecar for the forked orchestrator: one TSV row per
-    // query plus #LEDGER rows — parseable without a JSON reader
-    sys.env.get("SPARK_GRAFT_BENCH_TSV").foreach { p =>
-      def n(o: Option[Double]) = o.map(_.toString).getOrElse("error")
-      val lines = results.map { case (name, (c, w, g)) =>
-        s"$name\t${n(c)}\t${n(w)}\t$g"
-      } ++ ledger.map { case (nm, c, d) =>
-        s"#LEDGER\t$nm\t$c\t${d.replace("\t", " ").replace("\n", " ")}"
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-        lines.mkString("", "\n", "\n"))
-    }
-    emit(results, failed.reverse, ledger, sfDir, warmRuns, forked = None,
-      calibration = calib)
+    writeArtifact(artifact(results, failed.reverse, graft.ops.Ledger.summary(),
+      sfDir, warmRuns, forked = None, calibration = calib))
     spark.stop()
-    // print the summary once more AFTER spark.stop() so no shutdown
-    // logging can land between it and process exit: with the build's
-    // StdoutOutput strategy this line reaches the driver's tail-capture
-    // verbatim as the final line of output
-    println(summaryLine(results, failed.reverse, sfDir, warmRuns))
+    // the one-JSON-line summary contract: printed AFTER spark.stop() so
+    // no shutdown logging can land between it and process exit — with
+    // the build's StdoutOutput strategy this line reaches a tail-capture
+    // of the log verbatim as the final line of output
+    println(Harness.json(summaryLine(results, failed.reverse, sfDir, warmRuns)))
     System.out.flush()
     // a query that throws must fail the bench loudly, never report a
     // healthy-looking near-zero time
@@ -173,12 +110,6 @@ object Bench {
 
   // ------------------------------------------------------------- forked
 
-  /** Orchestrate the bench as fresh-JVM children of `k` queries each:
-    * same classpath and JVM flags as this process (Java 17 needs the
-    * --add-opens set), SPARK_GRAFT_ONLY carries each batch, children
-    * report through the TSV sidecar, child stdout is swallowed (the
-    * parent owns the one-JSON-line contract; child stderr — the
-    * per-query progress — inherits). */
   /** Quiet-machine guard for the COMMITTED-pair protocol (r13 verdict
     * item 7): r12's +9.1% pair drift cost a round of doubt and
     * root-caused to ambient machine load, so the forked bench now
@@ -224,19 +155,14 @@ object Bench {
     }
     val scalarS = (System.nanoTime() - t0) / 1e9
     if (acc == 42L) System.err.println("[bench] calibration sentinel") // defeat DCE
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus = 8)
     // min of two runs: the first carries the one-time codegen compile
     // (variable), the min is the steady-state machinery floor
     val sparkS = (0 until 2).map { _ =>
       val t1 = System.nanoTime()
-      spark.range(0, 20000000L, 1, 8)
+      Harness.noop(spark.range(0, 20000000L, 1, 8)
         .selectExpr("id % 97 AS k", "id AS v")
-        .groupBy("k").count().orderBy("k")
-        .write.format("noop").mode("overwrite").save()
+        .groupBy("k").count().orderBy("k"))
       (System.nanoTime() - t1) / 1e9
     }.min
     spark.stop()
@@ -244,9 +170,15 @@ object Bench {
     (scalarS, sparkS)
   }
 
+  /** Orchestrate the bench as fresh-JVM children of `k` queries each:
+    * same classpath and JVM flags as this process (Java 17 needs the
+    * --add-opens set), SPARK_GRAFT_ONLY carries each batch, each child
+    * reports through its JSON artifact (SPARK_GRAFT_BENCH_OUT), child
+    * stdout is swallowed (the parent owns the one-JSON-line contract;
+    * child stderr — the per-query progress — inherits). */
   private def runForked(k: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmRuns = sys.env.getOrElse("SPARK_GRAFT_WARM_RUNS", "2").toInt
+    val warmRuns = Harness.warmRuns
     val ambient = loadAvg()
     val threshold = loadMax
     if (threshold > 0 && ambient > threshold) {
@@ -256,194 +188,141 @@ object Bench {
       sys.exit(3)
     }
     val calib = calibrationProbe()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val names0 = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(_.contains(n)))
-    val names = sys.env.get("SPARK_GRAFT_BENCH_SEED") match {
-      case Some(seed) =>
-        val r = new scala.util.Random(scala.util.Try(seed.trim.toLong).getOrElse(0L))
-        r.shuffle(names0)
-      case None => names0
-    }
+    val names = queryNames()
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
     val cp = System.getProperty("java.class.path")
-    val results = scala.collection.mutable.ArrayBuffer[Res]()
-    val ledger = scala.collection.mutable.LinkedHashMap[String, (Long, String)]()
-    var failed = List.empty[String]
     val batches = names.grouped(k).toSeq
-    for ((batch, i) <- batches.zipWithIndex) {
-      val tsv = java.io.File.createTempFile(s"graft_bench_$i", ".tsv")
-      val log = java.io.File.createTempFile(s"graft_bench_$i", ".log")
+    val children = for ((batch, i) <- batches.zipWithIndex) yield {
+      val log = File.createTempFile(s"graft_bench_$i", ".log")
+      val out = new File(log.getPath + ".json")
       val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
       val pb = new ProcessBuilder(cmd)
       val env = pb.environment()
       env.put("SPARK_GRAFT_ONLY", batch.mkString(","))
-      env.put("SPARK_GRAFT_BENCH_TSV", tsv.getAbsolutePath)
-      env.put("SPARK_GRAFT_BENCH_OUT", log.getAbsolutePath + ".json")
+      env.put("SPARK_GRAFT_BENCH_OUT", out.getPath)
       env.remove("SPARK_GRAFT_BENCH_FORK")
       env.remove("SPARK_GRAFT_BENCH_SEED") // order already applied here
       pb.redirectOutput(log) // child's own JSON lines must not reach stdout
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       System.err.println(s"[bench] fork ${i + 1}/${batches.size}: ${batch.size} queries")
       val rc = pb.start().waitFor()
-      val seen = scala.collection.mutable.Set[String]()
-      val f = tsv
-      if (f.exists()) {
-        for (line <- java.nio.file.Files.readAllLines(f.toPath).asScala) {
-          val parts = line.split("\t", -1)
-          if (parts.length >= 4 && parts(0) == "#LEDGER") {
-            val (nm, c, d) = (parts(1), parts(2).toLong, parts(3))
-            val prev = ledger.get(nm).map(_._1).getOrElse(0L)
-            ledger(nm) = (prev + c, d)
-          } else if (parts.length >= 4) {
-            val name = parts(0)
-            seen += name
-            def d(s: String) = if (s == "error") None else Some(s.toDouble)
-            val r = (d(parts(1)), d(parts(2)), parts(3).toLong)
-            if (r._2.isEmpty) failed ::= name
-            println(queryLine(name, r._1, r._2, r._3))
-            results += (name -> r)
-          }
-        }
-      }
-      // a child that died before writing rows (OOM, JVM crash) must
-      // surface every unreported query as an error, never silently
-      for (name <- batch if !seen.contains(name)) {
-        failed ::= name
-        results += (name -> ((None, None, 0L)))
-      }
-      if (rc != 0)
-        System.err.println(s"[bench] fork ${i + 1} exited rc=$rc")
-      tsv.delete()
+      // a child that died before writing its artifact (OOM, JVM crash)
+      // reports every query of its batch as an error, never silently
+      val art = scala.util.Try(Harness.parseJson(Files.readString(out.toPath)))
+        .getOrElse(JNothing)
+      val rows = childResults(batch, art)
+      rows.foreach { case (n, (c, w, g)) => println(Harness.json(queryLine(n, c, w, g))) }
+      if (rc == 0) { log.delete(); out.delete() }
+      else System.err.println(s"[bench] fork ${i + 1} exited rc=$rc; kept $log and $out")
+      (rows, art)
     }
+    val results = children.flatMap(_._1)
+    val failed = results.collect { case (n, (_, None, _)) => n }
     // post-run ambient sample: the pre-flight guard cannot see an
     // intruder arriving MID-run (the §17.7 drift rerun measured 1.11×
     // uniform with a clean pre-flight), so the artifact records the
     // loadavg bracket [start, end]. Not a gate — end-of-run loadavg
     // includes our own just-exited fork batches, so it is recorded
     // for attribution, never compared against the threshold.
-    emit(results.toSeq, failed.reverse, ledger.map { case (n, (c, d)) => (n, c, d) }.toSeq,
+    writeArtifact(artifact(results, failed, mergedLedger(children.map(_._2)),
       sfDir, warmRuns, forked = Some(k), ambientLoad = Some(ambient),
-      ambientLoadEnd = Some(loadAvg()), calibration = Some(calib))
-    println(summaryLine(results.toSeq, failed.reverse, sfDir, warmRuns))
+      ambientLoadEnd = Some(loadAvg()), calibration = Some(calib)))
+    println(Harness.json(summaryLine(results, failed, sfDir, warmRuns)))
     System.out.flush()
     if (failed.nonEmpty) sys.exit(1)
   }
 
+  /** One fork child's rows, in batch order, read back from its
+    * artifact; a query the artifact does not report is an error. */
+  private[graft] def childResults(batch: Seq[String], art: JValue): Seq[Res] = {
+    def sec(section: String, name: String) =
+      Some(art \ section \ name).collect { case JDouble(v) => v }
+    batch.map { name =>
+      val gc = Some(art \ "gc_ms" \ name).collect { case JInt(v) => v.toLong }
+      name -> ((sec("cold_queries", name), sec("queries", name), gc.getOrElse(0L)))
+    }
+  }
+
+  /** The fork children's ledgers merged by name: counts summed, the
+    * last detail taken from the latest child that reported the name. */
+  private[graft] def mergedLedger(arts: Seq[JValue]): Seq[LedgerRow] = {
+    val merged = scala.collection.mutable.LinkedHashMap[String, (Long, String)]()
+    for {
+      art <- arts
+      row <- (art \ "ledger").children
+      (JString(name), JInt(count), JString(last)) <-
+        Seq((row \ "name", row \ "count", row \ "last"))
+    } merged(name) = (merged.get(name).fold(0L)(_._1) + count.toLong, last)
+    merged.map { case (n, (c, d)) => (n, c, d) }.toSeq
+  }
+
   // --------------------------------------------------------------- emit
 
-  private def jEsc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def summaryLine(results: Seq[Res], failed: Seq[String],
-      sfDir: String, warmRuns: Int): String = {
+      sfDir: String, warmRuns: Int): JObject = {
     val warmTotal = results.flatMap(_._2._2).sum
-    val coldTotal = results.flatMap(_._2._1).sum
-    val errJson = failed.map(jEsc).mkString("[", ",", "]")
-    s"""{"metric":"summary","value":$warmTotal,"warm_total":$warmTotal,"cold_total":$coldTotal,"unit":"sec","n_queries":${results.size},"warm_runs":$warmRuns,"errors":$errJson,"sf":"$sfDir"}"""
+    JObject("metric" -> JString("summary"), "value" -> JDouble(warmTotal),
+      "warm_total" -> JDouble(warmTotal), "cold_total" -> JDouble(results.flatMap(_._2._1).sum),
+      "unit" -> JString("sec"), "n_queries" -> JInt(results.size), "warm_runs" -> JInt(warmRuns),
+      "errors" -> JArray(failed.map(JString(_)).toList), "sf" -> JString(sfDir))
   }
 
   /** Compact single-query stdout row — 3-decimal seconds keep 264 of
     * these lines cheap while preserving millisecond resolution. */
-  private def queryLine(name: String, cold: Option[Double],
-      warm: Option[Double], gcMs: Long): String = {
-    def n(o: Option[Double]) = o.map(v =>
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-      .getOrElse("\"error\"")
-    s"""{"metric":"query","name":${jEsc(name)},"cold":${n(cold)},"warm":${n(warm)},"gc_ms":$gcMs}"""
+  private[graft] def queryLine(name: String, cold: Option[Double],
+      warm: Option[Double], gcMs: Long): JObject = {
+    def n(o: Option[Double]) = o.fold[JValue](JString("error"))(Harness.num(_, 3))
+    JObject("metric" -> JString("query"), "name" -> JString(name),
+      "cold" -> n(cold), "warm" -> n(warm), "gc_ms" -> JInt(gcMs))
   }
 
-  private def emit(results: Seq[Res], failed: Seq[String],
-      ledger: Seq[(String, Long, String)], sfDir: String, warmRuns: Int,
+  /** The full run record: the summary, the run conditions, the order
+    * the queries ran in (seeded runs shuffle it; position effects are
+    * measurable only if the artifact records position), full-precision
+    * warm/cold seconds, gc ms and the drop ledger. */
+  private[graft] def artifact(results: Seq[Res], failed: Seq[String],
+      ledger: Seq[LedgerRow], sfDir: String, warmRuns: Int,
       forked: Option[Int], ambientLoad: Option[Double] = None,
       ambientLoadEnd: Option[Double] = None,
-      calibration: Option[(Double, Double)] = None): Unit = {
-    def json(sel: ((Option[Double], Option[Double], Long)) => Option[Double]) =
-      results.map {
-        case (k, t) => sel(t) match {
-          case Some(v) => jEsc(k) + ":" + v
-          case None    => jEsc(k) + ":\"error\""
-        }
-      }.mkString("{", ",", "}")
-    val gcJson = results.map { case (k, t) => jEsc(k) + ":" + t._3 }.mkString("{", ",", "}")
-    val warmTotal = results.flatMap(_._2._2).sum
-    val coldTotal = results.flatMap(_._2._1).sum
-    val errJson = failed.map(jEsc).mkString("[", ",", "]")
-    // engaged-cap summary: every df-cap / bucket-cap / scrub / budget
-    // engagement across the whole bench, by name with exact counts —
-    // the committed artifact records WHAT was bounded, so a capped
-    // run can never silently read as a full run
-    val ledgerJson = ledger.map { case (n, c, d) =>
-      s"""{"name":${jEsc(n)},"count":$c,"last":${jEsc(d)}}"""
-    }.mkString("[", ",", "]")
-    // the short headline line brackets the long per-query line: capture
-    // tooling may keep either the head or the TAIL of the log (the
-    // round-4 artifact lost its totals to tail-capture), so the primary
-    // metrics (warm total = the 100 TB-predictive number) print BOTH
-    // before and after the line most likely to be truncated
-    val summary = summaryLine(results, failed, sfDir, warmRuns)
-    // Locale.ROOT: under a comma-decimal default locale f"%.2f" would
-    // emit "4,00" and corrupt the committed JSON (r14 advisor finding)
-    def jNum2(l: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(l))
-    val calibJson = calibration.map { case (sc, sp) =>
-      s"""{"scalar_s":${jNum2(sc)},"spark_s":${jNum2(sp)}}"""
-    }.getOrElse("null")
-    println(summary)
-    // stdout copy of the per-query map, SLIMMED (r16 verdict item 2): the
-    // full-precision line with cold/gc/ledger maps grew past 10KB at 264
-    // queries and outran the driver's tail capture. Stdout now carries
-    // warm seconds only, rounded to 3 decimals (~7KB); the full-precision
-    // cold/gc/ledger maps live in the file artifact below and in the
-    // per-query "metric":"query" lines printed as each query finished.
-    val warmRounded = results.map { case (k, t) => t._2 match {
-      case Some(v) => jEsc(k) + ":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      case None    => jEsc(k) + ":\"error\""
-    }}.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$warmTotal,"unit":"sec","cold_total":$coldTotal,"errors":$errJson,"calibration":$calibJson,"queries":$warmRounded,"sf":"$sfDir"}""")
-    // the per-query map outgrew the driver's stdout tail capture at
-    // ~200 queries (BENCH_r10 lost it to truncation), so the full
-    // artifact ALSO writes to a repo-side file the round can commit —
-    // same shape as the stdout line, plus the order the queries ran
-    // in (seeded runs shuffle it; position effects are measurable
-    // only if the artifact records position) and the fork batch size
-    // (fresh-JVM batches make the numbers position-independent)
-    // r16 verdict item 2: the old guard redirected UNFORKED runs (the
-    // driver's own single-session bench) to a ".unforked.json" sidecar
-    // whenever the committed file was fork-tagged — which meant the
-    // driver could never refresh the repo-side per-query artifact it
-    // reads, and PERF had no per-query data for two rounds. The guard is
-    // gone: every run writes the requested path (git history protects the
-    // committed fork-pair artifacts; restore with `git checkout` after
-    // debug runs instead of silently redirecting the driver's output).
-    // The "fork" tag in the artifact still distinguishes the protocols.
-    val requested = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
-    val outPath = {
-      val p = java.nio.file.Paths.get(requested)
-      val existingForked =
-        try java.nio.file.Files.exists(p) &&
-          """"fork"\s*:\s*\d""".r
-            .findFirstIn(java.nio.file.Files.readString(p)).isDefined
-        catch { case _: Exception => false }
-      if (existingForked && forked.isEmpty)
-        System.err.println(s"[bench] overwriting fork-tagged $requested " +
-          "with an unforked run (git restores the committed pair)")
-      requested
-    }
-    val orderJson = results.map(r => jEsc(r._1)).mkString("[", ",", "]")
-    val seedJson = sys.env.get("SPARK_GRAFT_BENCH_SEED")
-      .map(s => jEsc(s.trim)).getOrElse("null")
-    val forkJson = forked.map(_.toString).getOrElse("null")
-    val loadJson = ambientLoad.filter(_ >= 0).map(jNum2).getOrElse("null")
-    val loadEndJson = ambientLoadEnd.filter(_ >= 0).map(jNum2).getOrElse("null")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-      s"""{"summary":$summary,"seed":$seedJson,"fork":$forkJson,"ambient_load":$loadJson,"ambient_load_end":$loadEndJson,"calibration":$calibJson,"order":$orderJson,"queries":${json(_._2)},"cold_queries":${json(_._1)},"gc_ms":$gcJson,"ledger":$ledgerJson}""" + "\n")
+      calibration: Option[(Double, Double)] = None): JObject = {
+    def secs(sel: ((Option[Double], Option[Double], Long)) => Option[Double]) =
+      JObject(results.map { case (k, t) =>
+        k -> sel(t).fold[JValue](JString("error"))(JDouble(_)) }.toList)
+    def load(l: Option[Double]) = l.filter(_ >= 0).fold[JValue](JNull)(Harness.num(_, 2))
+    JObject("summary" -> summaryLine(results, failed, sfDir, warmRuns),
+      "seed" -> sys.env.get("SPARK_GRAFT_BENCH_SEED").fold[JValue](JNull)(s => JString(s.trim)),
+      "fork" -> forked.fold[JValue](JNull)(JInt(_)),
+      "ambient_load" -> load(ambientLoad), "ambient_load_end" -> load(ambientLoadEnd),
+      "calibration" -> calibration.fold[JValue](JNull) { case (sc, sp) =>
+        JObject("scalar_s" -> Harness.num(sc, 2), "spark_s" -> Harness.num(sp, 2)) },
+      "order" -> JArray(results.map(r => JString(r._1)).toList),
+      "queries" -> secs(_._2), "cold_queries" -> secs(_._1),
+      "gc_ms" -> JObject(results.map { case (k, t) => k -> JInt(t._3) }.toList),
+      // engaged-cap summary: every df-cap / bucket-cap / scrub / budget
+      // engagement across the whole bench, by name with exact counts —
+      // the committed artifact records WHAT was bounded, so a capped
+      // run can never silently read as a full run
+      "ledger" -> Harness.ledgerSummaryJson(ledger))
+  }
+
+  /** Writes [[artifact]] to SPARK_GRAFT_BENCH_OUT (default
+    * `BENCH_QUERIES.json`): the per-query record the stdout tail cannot
+    * hold. Every run writes the requested path — git history protects
+    * the committed fork-pair artifacts (restore with `git checkout`
+    * after debug runs); the "fork" tag distinguishes the protocols. */
+  private def writeArtifact(art: JObject): Unit = {
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
+    val p = Paths.get(outPath)
+    val existingForked =
+      try Files.exists(p) &&
+        """"fork"\s*:\s*\d""".r.findFirstIn(Files.readString(p)).isDefined
+      catch { case _: Exception => false }
+    if (existingForked && art \ "fork" == JNull)
+      System.err.println(s"[bench] overwriting fork-tagged $outPath " +
+        "with an unforked run (git restores the committed pair)")
+    try Files.writeString(p, Harness.json(art) + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: $e")
     }

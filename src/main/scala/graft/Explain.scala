@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan auditor: prints the formatted physical plan of selected
   * SparkEntry queries (all when no args). Usage:
   *   sbt "runMain graft.Explain q1_pricing_summary ts_count_minute"
@@ -12,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     for (name <- wanted; fn <- SparkEntry.queries.get(name)) {

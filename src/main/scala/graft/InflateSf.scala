@@ -19,17 +19,19 @@ import org.apache.spark.sql.types._
   */
 object InflateSf {
 
-  /** Word-perturbed document replicas: ~25% of words (md5-selected per
-    * (doc, position)) become unique tokens, so replicas are NOT
-    * near-dups of their base — the dedup funnels' answer volume stays
-    * linear, like the scale corpus but without its pathologies. */
-  def inflateDocuments(spark: SparkSession, baseDir: String,
-      mult: Int): DataFrame = {
+  /** Word-perturbed document replicas (doc_id, text, lang, source) and
+    * the base document count: replica `rep` of base doc `d` gets id
+    * `rep*baseN + d`, and ~25% of its words (md5-selected per (doc,
+    * position)) become unique 7-char tokens, so replicas are NOT
+    * near-dups of their base and share almost no 3-word shingle — the
+    * dedup funnels' answer volume stays linear. */
+  def documentReplicas(spark: SparkSession, baseDir: String,
+      mult: Int): (DataFrame, Long) = {
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
       .select("doc_id", "text", "lang", "source")
     val baseN = base.count()
     val idStr = col("doc_id").cast("string")
-    base.crossJoin(broadcast(spark.range(mult).toDF("__rep")))
+    val replicas = base.crossJoin(broadcast(spark.range(mult).toDF("__rep")))
       .select((col("__rep") * baseN + col("doc_id")).as("doc_id"),
         col("text"), col("lang"), col("source"))
       .withColumn("text", array_join(
@@ -41,8 +43,14 @@ object InflateSf {
             concat_ws("#", idStr, lit("r"), i.cast("string"))), 1, 6)))
             .otherwise(w)
         }), " "))
-      .withColumn("n_chars", length(col("text")).cast("long"))
+    (replicas, baseN)
   }
+
+  /** The clean inflated corpus: [[documentReplicas]] with `n_chars`. */
+  def inflateDocuments(spark: SparkSession, baseDir: String,
+      mult: Int): DataFrame =
+    documentReplicas(spark, baseDir, mult)._1
+      .withColumn("n_chars", length(col("text")).cast("long"))
 
   /** Embedding replicas: each dimension rescaled ±10% (md5-selected
     * per (vec, dim)) — replicas stay in the base vector's cosine
@@ -105,15 +113,8 @@ object InflateSf {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/root/repo/target/sf1")
-    val mult = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_SF1_MULT", "10").trim.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val mult = Harness.positive(sys.env.get("SPARK_GRAFT_SF1_MULT"), 10)
+    val spark = Harness.session()
     materialize(spark, baseDir, outDir, mult)
     System.err.println(s"[inflate] $outDir ready (mult=$mult)")
     spark.stop()

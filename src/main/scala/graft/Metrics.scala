@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JBool, JInt, JNull, JObject, JString, JValue}
 import graft.ops._
 
 /** Quality-metrics harness: measures every recall floor / error bound
@@ -36,20 +37,12 @@ object Metrics {
       detail: String) {
     def pass: Boolean =
       floor.forall(value >= _) && ceiling.forall(value <= _)
-    private def j(o: Option[Double]): String =
-      o.map(v => f"$v%.6f").getOrElse("null")
-    // Escape the free-text fields — a quote/backslash/control char in
-    // `detail` must not produce unparseable METRICS.json.
-    private def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def json: String =
-      f"""{"name":"${esc(name)}","kind":"${esc(kind)}","value":$value%.6f,""" +
-      s""""floor":${j(floor)},"ceiling":${j(ceiling)},"n":$n,""" +
-      s""""pass":$pass,"detail":"${esc(detail)}"}"""
+    def json: JObject = JObject(
+      "name" -> JString(name), "kind" -> JString(kind),
+      "value" -> Harness.num(value, 6),
+      "floor" -> floor.fold[JValue](JNull)(Harness.num(_, 6)),
+      "ceiling" -> ceiling.fold[JValue](JNull)(Harness.num(_, 6)),
+      "n" -> JInt(n), "pass" -> JBool(pass), "detail" -> JString(detail))
   }
 
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
@@ -634,19 +627,14 @@ object Metrics {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_METRICS_OUT",
       "/root/repo/METRICS.json")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val rows = compute(spark, dir)
     rows.foreach(r => System.err.println(
       f"[metrics] ${r.name}%-32s ${r.kind}%-14s ${r.value}%10.4f  pass=${r.pass}"))
-    val json =
-      s"""{"harness":"graft.Metrics","sf_dir":"$dir",""" +
-      s""""all_pass":${rows.forall(_.pass)},""" +
-      s""""metrics":[${rows.map(_.json).mkString(",")}]}"""
+    val json = Harness.json(JObject(
+      "harness" -> JString("graft.Metrics"), "sf_dir" -> JString(dir),
+      "all_pass" -> JBool(rows.forall(_.pass)),
+      "metrics" -> JArray(rows.map(_.json).toList)))
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       json.getBytes("UTF-8"))
     println(json)

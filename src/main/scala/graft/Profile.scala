@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import scala.collection.mutable
-
 /** Per-job profiler for the bench queries: runs each named query once
   * (same noop-sink methodology as [[Bench]]) with a listener that
   * prints every Spark job's wall time, stage count and task count —
@@ -13,52 +9,26 @@ import scala.collection.mutable
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    case class Job(id: Int, t0: Long, var t1: Long = 0L,
-      var stages: Int = 0, var tasks: Int = 0, desc: String)
-    val jobs = mutable.LinkedHashMap[Int, Job]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          val sites = e.stageInfos.map(s => s"${s.name}").distinct
-            .mkString(" | ")
-          jobs(e.jobId) = Job(e.jobId, System.nanoTime(),
-            stages = e.stageInfos.size,
-            tasks = e.stageInfos.map(_.numTasks).sum,
-            desc = sites)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized {
-          jobs.get(e.jobId).foreach(_.t1 = System.nanoTime())
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // warm the machinery like Bench does
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    SparkEntry.events(spark, sfDir).limit(10).write.format("noop").mode("overwrite").save()
+    val spark = Harness.session()
+    val listener = new Harness.RunListener(spark)
+    Harness.warmup(spark, sfDir)
     for (name <- args) {
       val fn = SparkEntry.queries(name)
       // one untimed run to populate memo stores, then the profiled run
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      jobs.synchronized(jobs.clear())
+      Harness.noop(fn(spark, sfDir))
+      listener.drain()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Harness.noop(fn(spark, sfDir))
       val total = (System.nanoTime() - t0) / 1e9
       println(f"==== $name total ${total}%.2fs ====")
-      val snap = jobs.synchronized(jobs.values.toList)
+      val (jobs, _) = listener.drain()
       var acc = 0.0
-      for (j <- snap) {
-        val d = if (j.t1 == 0) Double.NaN else (j.t1 - j.t0) / 1e9
+      for (j <- jobs) {
+        val d = j.sec
         acc += (if (d.isNaN) 0 else d)
         println(f"  job ${j.id}%4d ${d}%7.3fs stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(90)}")
       }
-      println(f"  [sum of jobs ${acc}%.2fs over ${snap.size} jobs; gaps = driver/planning time]")
+      println(f"  [sum of jobs ${acc}%.2fs over ${jobs.size} jobs; gaps = driver/planning time]")
     }
     spark.stop()
   }

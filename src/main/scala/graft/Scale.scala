@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JBool, JDouble, JInt, JObject, JString}
+import graft.Harness.StageRow
 import graft.ops._
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 /** Scale-stress harness: measures the engine's heaviest funnels at
   * several corpus multiples of sf0.1 and writes `SCALING.json` with
@@ -54,29 +53,6 @@ import scala.jdk.CollectionConverters._
   */
 object Scale {
 
-  final case class StageRow(id: Int, srRecords: Long, srBytes: Long,
-      swRecords: Long, swBytes: Long, spillBytes: Long)
-
-  /** Aggregated per-stage shuffle metrics, drained between queries. */
-  final class StageMetricsListener extends SparkListener {
-    private val q = new ConcurrentLinkedQueue[StageRow]()
-    override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-      val m = ev.stageInfo.taskMetrics
-      if (m != null) q.add(StageRow(ev.stageInfo.stageId,
-        m.shuffleReadMetrics.recordsRead, m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.recordsWritten,
-        m.shuffleWriteMetrics.bytesWritten,
-        m.memoryBytesSpilled + m.diskBytesSpilled))
-    }
-    /** Stage-completion events post asynchronously on the listener
-      * bus; a short settle keeps the last stages of a finished job
-      * from leaking into the NEXT query's snapshot. */
-    def drain(): Seq[StageRow] = {
-      Thread.sleep(400)
-      Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
-    }
-  }
-
   /** 38 fixed boilerplate words appended to every 10th doc. */
   val boilerplate: String =
     "subscribe newsletter terms conditions privacy policy all rights " +
@@ -93,33 +69,15 @@ object Scale {
   }
 
   /** Deterministic inflation of `baseDir/documents.parquet` by
-    * `mult`: replica `rep` of base doc `d` gets id `rep*baseN + d`
-    * (the id space stays dense, so [[Graph.linkGraph]]'s modulus
-    * graph inflates with it) and a word-perturbed text; pathologies
-    * 1 and 2 are layered on top. Pure column expressions — no UDF,
-    * no rand(), fully re-derivable by any engine with md5. */
+    * `mult`: [[InflateSf.documentReplicas]] (replica `rep` of base doc
+    * `d` gets id `rep*baseN + d` — the id space stays dense, so
+    * [[Graph.linkGraph]]'s modulus graph inflates with it — and a
+    * word-perturbed text) with pathologies 1 and 2 and the twin pairs
+    * layered on top. Pure column expressions — no UDF, no rand(), fully
+    * re-derivable by any engine with md5. */
   def inflateDocuments(spark: SparkSession, baseDir: String,
       mult: Int): DataFrame = {
-    val base = spark.read.parquet(s"$baseDir/documents.parquet")
-      .select("doc_id", "text", "lang", "source")
-    val baseN = base.count()
-    val replicated = base
-      .crossJoin(broadcast(spark.range(mult).toDF("__rep")))
-      .select((col("__rep") * baseN + col("doc_id")).as("doc_id"),
-        col("text"), col("lang"), col("source"))
-    val idStr = col("doc_id").cast("string")
-    // replace each word whose (doc,position) md5 lands in the low
-    // quarter with a unique 7-char token — breaks ~25% of words, so
-    // two replicas of one base doc share almost no 3-word shingle
-    val mutated = replicated.withColumn("text", array_join(
-      transform(split(col("text"), " "), (w, i) => {
-        val sel = conv(substring(md5(
-          concat_ws("#", idStr, lit("w"), i.cast("string"))), 1, 4),
-          16, 10).cast("long")
-        when(sel % 4 === 0, concat(lit("w"), substring(md5(
-          concat_ws("#", idStr, lit("r"), i.cast("string"))), 1, 6)))
-          .otherwise(w)
-      }), " "))
+    val (mutated, baseN) = InflateSf.documentReplicas(spark, baseDir, mult)
     val withBoiler = mutated.withColumn("text",
       when(pmod(col("doc_id"), lit(10)) === 0,
         concat(col("text"), lit(" " + boilerplate)))
@@ -627,75 +585,67 @@ object Scale {
       "distinct folded texts - same shape/exponent class as " +
       "dedup_exact plus the fold's linear scan cost."))
 
-  private def jStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** One funnel at one mult: the fastest warm run's seconds and stages,
+    * the ledger entries of all its runs, and its answer volume. */
+  final case class Run(sec: Double, stages: Seq[StageRow],
+      ledger: Seq[(String, String)], rowsOut: Long) {
+    def shuffleReadRows: Long = stages.map(_.srRecords).sum
+    def shuffleWriteRows: Long = stages.map(_.swRecords).sum
+    def shuffleWriteBytes: Long = stages.map(_.swBytes).sum
+    def spillBytes: Long = stages.map(_.spillBytes).sum
 
-  private def jNum(v: Double): String =
-    if (v.isNaN || v.isInfinite) "null" else f"$v%.4f"
+    def json: JObject = JObject("sec" -> Harness.num(sec, 4),
+      "shuffle_read_rows" -> JInt(shuffleReadRows), "shuffle_write_rows" -> JInt(shuffleWriteRows),
+      "shuffle_write_bytes" -> JInt(shuffleWriteBytes), "spill_bytes" -> JInt(spillBytes),
+      "rows_out" -> JInt(rowsOut),
+      "top_stages" -> JArray(stages.sortBy(s => -math.max(s.swBytes, s.spillBytes)).take(5)
+        .map(s => longs(Seq(s.id, s.srRecords, s.swRecords, s.swBytes, s.spillBytes))).toList),
+      "ledger" -> JArray(ledger.map { case (n, d) =>
+        JObject("name" -> JString(n), "detail" -> JString(d)) }.toList))
+  }
+
+  private def longs(xs: Seq[Long]): JArray = JArray(xs.map(JInt(_)).toList)
+
+  /** The root-cause note of each measured funnel that has one. */
+  private[graft] def notesJson(names: Seq[String],
+      notes: Map[String, String] = FunnelNotes): JObject =
+    JObject(names.flatMap(n => notes.get(n).map(v => n -> JString(v))).toList)
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mults = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULTS", "4,16,64")
       .split(",").map(_.trim.toInt).toSeq
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT",
       "/root/repo/SCALING.json")
     val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_WORK",
       "/root/repo/target/scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // parsed ONCE, validated: a non-numeric override falls back to the
-    // default instead of crashing the harness mid-sweep
-    val warmRuns = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_WARM", "2").trim.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking", "true")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "20")
-      .config("spark.ui.retainedTasks", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new StageMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val warmRuns = Harness.warmRuns
+    val spark = Harness.session(hygiene = true)
+    val listener = new Harness.RunListener(spark)
     val baseN = spark.read.parquet(s"$baseDir/documents.parquet").count()
-
-    def hygiene(): Unit = {
-      spark.catalog.clearCache(); System.gc(); System.gc()
-    }
 
     // corpus generation (cached on disk; deterministic, so reuse is safe)
     val dirs = mults.map { m =>
       val dir = s"$workDir/m$m"
       if (!new java.io.File(s"$dir/documents.parquet/_SUCCESS").exists()) {
         System.err.println(s"[scale] generating corpus mult=$m …")
-        inflateDocuments(spark, baseDir, m).repartition(cpus.toInt)
+        inflateDocuments(spark, baseDir, m).repartition(Harness.cpus)
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       }
       m -> dir
     }
 
-    val sel = funnels(spark).filter { case (n, _) => only.forall(_.contains(n)) }
-    // per mult: query -> (warmSec, stages)
+    val sel = funnels(spark).filter { case (n, _) => Harness.only.forall(_.contains(n)) }
+    // per mult: query -> its fastest warm run
     val points = dirs.map { case (m, dir) =>
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val nDocs = docs.count()
       System.err.println(s"[scale] ===== mult=$m docs=$nDocs =====")
       val qres = sel.map { case (name, fn) =>
-        def once(): (Double, Seq[Scale.StageRow]) = {
-          hygiene(); listener.drain()
-          val t0 = System.nanoTime()
-          fn(docs).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          (sec, listener.drain())
+        def once(): (Double, Seq[StageRow]) = {
+          listener.drain()
+          val (sec, _) = Harness.noopRun(spark)(fn(docs))
+          (sec, listener.drain()._2)
         }
         val ledgerMark = Ledger.mark()
         once() // cold: codegen/classload; discard. Kept as the NOOP
@@ -708,28 +658,23 @@ object Scale {
         // item 1): it goes into the artifact so a super-linear
         // shuffle exponent is checkable against measured answer
         // growth instead of asserted in prose.
-        val rowsOut = { hygiene(); listener.drain(); fn(docs).count() }
+        val rowsOut = { Harness.hygiene(spark); fn(docs).count() }
         // warm = MIN of N runs (default 2): the same contamination
         // argument as Bench (SURVEY §13.1) — GC/JIT noise is strictly
         // additive, and a single warm sample measured up to 4× off on
         // the shuffle-heaviest funnels. Stage metrics come from the
         // fastest run so rows/bytes and seconds describe one run.
-        val (sec, stages) =
-          Seq.fill(math.max(1, warmRuns))(once()).minBy(_._1)
-        val ledger = Ledger.since(ledgerMark)
-        val sr = stages.map(_.srRecords).sum
-        val sw = stages.map(_.swRecords).sum
-        val swb = stages.map(_.swBytes).sum
-        val spill = stages.map(_.spillBytes).sum
+        val (sec, stages) = Seq.fill(warmRuns)(once()).minBy(_._1)
+        val run = Run(sec, stages, Ledger.since(ledgerMark), rowsOut)
         val topSpill = stages.filter(_.spillBytes > 0)
           .sortBy(-_.spillBytes).take(3)
           .map(s => s"${s.id}:${s.spillBytes / 1000000}MB").mkString(",")
         System.err.println(f"[scale] m=$m%-3d $name%-26s ${sec}%8.2fs  " +
-          f"shufW ${sw}%,12d rows ${swb / 1e6}%9.1f MB  spill ${spill / 1e6}%6.1f MB" +
-          f"  out ${rowsOut}%,d" +
+          f"shufW ${run.shuffleWriteRows}%,12d rows ${run.shuffleWriteBytes / 1e6}%9.1f MB" +
+          f"  spill ${run.spillBytes / 1e6}%6.1f MB  out ${rowsOut}%,d" +
           (if (topSpill.nonEmpty) s"  [spill $topSpill]" else "") +
-          (if (ledger.nonEmpty) s"  ledger ${ledger.size}" else ""))
-        name -> ((sec, sr, sw, swb, spill, stages, ledger, rowsOut))
+          (if (run.ledger.nonEmpty) s"  ledger ${run.ledger.size}" else ""))
+        name -> run
       }
       (m, nDocs, qres)
     }
@@ -793,72 +738,27 @@ object Scale {
 
     // log-log exponents between first and last scale point
     val names = sel.map(_._1)
+    def series(name: String): Seq[Run] = points.map(_._3.find(_._1 == name).get._2)
+    def exp(v1: Double, vN: Double): Double =
+      if (v1 > 0 && vN > 0) math.log(vN / v1) / math.log(mults.last.toDouble / mults.head)
+      else Double.NaN
     val fits = names.map { name =>
-      val series = points.map { case (m, _, qr) =>
-        (m.toDouble, qr.find(_._1 == name).get._2)
-      }
-      val (m1, v1) = series.head; val (mN, vN) = series.last
-      val tExp = math.log(vN._1 / v1._1) / math.log(mN / m1)
-      val sExp =
-        if (v1._3 > 0 && vN._3 > 0)
-          math.log(vN._3.toDouble / v1._3) / math.log(mN / m1)
-        else Double.NaN
+      val (r1, rN) = (series(name).head, series(name).last)
       // answer-volume exponent over the same span: the number a
       // super-linear shuffle exponent is judged against
-      val aExp =
-        if (v1._8 > 0 && vN._8 > 0)
-          math.log(vN._8.toDouble / v1._8) / math.log(mN / m1)
-        else Double.NaN
-      name -> ((tExp, sExp, aExp))
+      name -> ((exp(r1.sec, rN.sec),
+        exp(r1.shuffleWriteRows.toDouble, rN.shuffleWriteRows.toDouble),
+        exp(r1.rowsOut.toDouble, rN.rowsOut.toDouble)))
     }
 
-    def qJson(t: (Double, Long, Long, Long, Long, Seq[Scale.StageRow],
-        Seq[(String, String)], Long)): String = {
-      val top = t._6.sortBy(s => -math.max(s.swBytes, s.spillBytes)).take(5)
-        .map(s =>
-          s"[${s.id},${s.srRecords},${s.swRecords},${s.swBytes},${s.spillBytes}]")
-      val led = t._7.map { case (n, d) =>
-        s"""{"name":${jStr(n)},"detail":${jStr(d)}}""" }
-      s"""{"sec":${jNum(t._1)},"shuffle_read_rows":${t._2},""" +
-      s""""shuffle_write_rows":${t._3},"shuffle_write_bytes":${t._4},""" +
-      s""""spill_bytes":${t._5},"rows_out":${t._8},""" +
-      s""""top_stages":[${top.mkString(",")}],""" +
-      s""""ledger":[${led.mkString(",")}]}"""
-    }
-    val pointsJson = points.map { case (m, nDocs, qr) =>
-      val qs = qr.map { case (n, t) => s""""$n":${qJson(t)}""" }
-      s"""{"mult":$m,"docs":$nDocs,"queries":{${qs.mkString(",")}}}"""
-    }.mkString("[", ",", "]")
-    val fitsJson = fits.map { case (n, (te, se, ae)) =>
-      val secs = points.map(p => jNum(p._3.find(_._1 == n).get._2._1))
-      val rows = points.map(p => p._3.find(_._1 == n).get._2._8.toString)
-      s""""$n":{"time_exp":${jNum(te)},"shuffle_exp":${jNum(se)},""" +
-      s""""answer_exp":${jNum(ae)},""" +
-      s""""shuffle_ceiling":${jNum(MaxShuffleExp.getOrElse(n, DefaultShuffleExp))},""" +
-      s""""rows_out":[${rows.mkString(",")}],""" +
-      s""""secs":[${secs.mkString(",")}]}"""
-    }.mkString("{", ",", "}")
-    val notesJson = names.flatMap(n => FunnelNotes.get(n).map(v =>
-      s""""$n":${jStr(v)}""")).mkString("{", ",", "}")
-    val pathJson =
-      s"""{"clone_flood":{"clones":$nClones,"naive_pairs":${nClones * (nClones - 1) / 2},""" +
-      s""""pairs_emitted_within_flood":$clonePairs,"cap_engaged":${clonePairs < nClones}},""" +
-      s""""hot_gram":{"boilerplate_docs":$boilerDocs,"docs_with_span_detected":$boilerDocsHit},""" +
-      s""""stopword_postings":{"df_cap":$DfCap,"hash_buckets_dropped":$bucketsDropped,""" +
-      s""""hash_buckets_total":$bucketsTotal},""" +
-      s""""hub_node":{"in_degree_share":0.25,"hub_is_top_ranked":$hubIsTop},""" +
-      s""""snm_prefix_skew":{"docs":$snmSkewN,"skew_share":0.9,""" +
-      s""""pairs":$snmSkewPairs,"sec":${jNum(snmSkewSec)},"rank_buckets":256,""" +
-      s""""max_rank_bucket_share":${jNum(snmMaxShare)},""" +
-      s""""balanced":${snmMaxShare < 0.05}}}"""
     // ---- self-consistency gate: refuse to commit an artifact whose
     // numbers contradict its own notes (spill budgets, claimed
     // exponents). The rejected artifact is still written (to
     // `<out>.rejected`) so the evidence of the violation survives.
     val spillViolations = points.flatMap { case (m, _, qr) =>
       qr.collect {
-        case (n, t) if t._5 > SpillBudgets.getOrElse(n, DefaultSpillBudget) =>
-          f"$n@m$m: spilled ${t._5 / 1e9}%.1f GB > budget"
+        case (n, r) if r.spillBytes > SpillBudgets.getOrElse(n, DefaultSpillBudget) =>
+          f"$n@m$m: spilled ${r.spillBytes / 1e9}%.1f GB > budget"
       }
     }
     val expViolations = fits.collect {
@@ -872,20 +772,39 @@ object Scale {
           f"${MaxShuffleExp.getOrElse(n, DefaultShuffleExp)}%.2f"
     }
     val violations = spillViolations ++ expViolations ++ shufViolations
-    val violJson = violations.map(jStr).mkString("[", ",", "]")
-    val budgetJson = sel.map { case (n, _) =>
-      s"""${jStr(n)}:${SpillBudgets.getOrElse(n, DefaultSpillBudget)}"""
-    }.mkString("{", ",", "}")
-    val ledgerJson = Ledger.summary().map { case (n, c, d) =>
-      s"""{"name":${jStr(n)},"count":$c,"last":${jStr(d)}}"""
-    }.mkString("[", ",", "]")
-    val out =
-      s"""{"harness":"graft.Scale","base_sf_dir":"$baseDir","base_docs":$baseN,""" +
-      s""""mults":[${mults.mkString(",")}],"bucket_cap":$BucketCap,"df_cap":$DfCap,""" +
-      s""""warm_runs":$warmRuns,"points":$pointsJson,"fits":$fitsJson,""" +
-      s""""notes":$notesJson,"pathologies":$pathJson,""" +
-      s""""spill_budgets":$budgetJson,"violations":$violJson,""" +
-      s""""ledger":$ledgerJson}"""
+
+    def n4(v: Double) = Harness.num(v, 4)
+    val out = Harness.json(JObject("harness" -> JString("graft.Scale"),
+      "base_sf_dir" -> JString(baseDir), "base_docs" -> JInt(baseN),
+      "mults" -> longs(mults.map(_.toLong)), "bucket_cap" -> JInt(BucketCap),
+      "df_cap" -> JInt(DfCap), "warm_runs" -> JInt(warmRuns),
+      "points" -> JArray(points.map { case (m, nDocs, qr) =>
+        JObject("mult" -> JInt(m), "docs" -> JInt(nDocs),
+          "queries" -> JObject(qr.map { case (n, r) => n -> r.json }.toList))
+      }.toList),
+      "fits" -> JObject(fits.map { case (n, (te, se, ae)) =>
+        n -> JObject("time_exp" -> n4(te), "shuffle_exp" -> n4(se), "answer_exp" -> n4(ae),
+          "shuffle_ceiling" -> n4(MaxShuffleExp.getOrElse(n, DefaultShuffleExp)),
+          "rows_out" -> longs(series(n).map(_.rowsOut)),
+          "secs" -> JArray(series(n).map(r => n4(r.sec)).toList))
+      }.toList),
+      "notes" -> notesJson(names),
+      "pathologies" -> JObject(
+        "clone_flood" -> JObject("clones" -> JInt(nClones),
+          "naive_pairs" -> JInt(nClones * (nClones - 1) / 2),
+          "pairs_emitted_within_flood" -> JInt(clonePairs), "cap_engaged" -> JBool(clonePairs < nClones)),
+        "hot_gram" -> JObject("boilerplate_docs" -> JInt(boilerDocs),
+          "docs_with_span_detected" -> JInt(boilerDocsHit)),
+        "stopword_postings" -> JObject("df_cap" -> JInt(DfCap),
+          "hash_buckets_dropped" -> JInt(bucketsDropped), "hash_buckets_total" -> JInt(bucketsTotal)),
+        "hub_node" -> JObject("in_degree_share" -> JDouble(0.25), "hub_is_top_ranked" -> JBool(hubIsTop)),
+        "snm_prefix_skew" -> JObject("docs" -> JInt(snmSkewN), "skew_share" -> JDouble(0.9),
+          "pairs" -> JInt(snmSkewPairs), "sec" -> n4(snmSkewSec), "rank_buckets" -> JInt(256),
+          "max_rank_bucket_share" -> n4(snmMaxShare), "balanced" -> JBool(snmMaxShare < 0.05))),
+      "spill_budgets" -> JObject(sel.map { case (n, _) =>
+        n -> JInt(BigInt(SpillBudgets.getOrElse(n, DefaultSpillBudget))) }.toList),
+      "violations" -> JArray(violations.map(JString(_)).toList),
+      "ledger" -> Harness.ledgerSummaryJson(Ledger.summary())))
     val target =
       if (violations.isEmpty) outPath
       else {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,23 +24,25 @@ class StreamingSpec extends AnyFunSuite {
   val T0 = 500000L * 3600L
 
   /** State-store metrics (max memory bytes, max rows) from a query's
-    * progress reports. `processAllAvailable` guarantees the batches
-    * COMMITTED, but the progress array is appended by the stream
-    * thread after the commit — under heavy machine load a read
-    * immediately after processAllAvailable can observe it before the
-    * last report lands (the r16 driver verify saw this suite flake
-    * once in a loaded 14-minute run). Poll briefly instead of
-    * crashing on an empty/stale snapshot. */
+    * progress reports, once the report of its last committed batch is
+    * visible. `processAllAvailable` guarantees the batches COMMITTED,
+    * but the stream thread appends each progress report after the
+    * commit — under heavy machine load a read right after
+    * processAllAvailable can see batch 1's report and not the last
+    * one's. Poll for the last committed batch id instead. */
   private def stateMetrics(q: org.apache.spark.sql.streaming.StreamingQuery): (Long, Long) = {
+    val last = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.commitLog
+      .getLatestBatchId().getOrElse(fail("no committed batch"))
     var tries = 0
     while (tries < 100) {
-      val ops = q.recentProgress.flatMap(_.stateOperators)
-      if (ops.nonEmpty)
+      val progress = q.recentProgress
+      val ops = progress.flatMap(_.stateOperators)
+      if (progress.exists(_.batchId == last) && ops.nonEmpty)
         return (ops.map(_.memoryUsedBytes).max, ops.map(_.numRowsTotal).max)
       Thread.sleep(50)
       tries += 1
     }
-    fail("no state-operator progress visible after 5s")
+    fail(s"no state-operator progress for committed batch $last visible after 5s")
   }
 
   val minuteHour: Map[String, IntervalSpec] = Map(
