@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 object Bench {
 
-  /** (name, (cold, warm, warm-run gc ms)) — None = the run threw. */
-  private[graft] type Res = (String, (Option[Double], Option[Double], Long))
+  /** (name, (cold, warm, warm-run gc ms, warm-run codegen compiles)) —
+    * None = the run threw. */
+  private[graft] type Res = (String, (Option[Double], Option[Double], Long, Long))
 
   /** A drop-ledger row: (name, engagement count, last detail). */
   private[graft] type LedgerRow = (String, Long, String)
@@ -70,29 +71,31 @@ object Bench {
     // is strictly additive noise, so the min is the cleanest observation).
     val results: Seq[Res] = queryNames().map { name =>
       val fn = SparkEntry.queries(name)
-      def once(): (Option[Double], Long) =
+      def once(): (Option[Double], Long, Long) =
         try {
-          val (sec, gc) = Harness.noopRun(spark)(fn(spark, sfDir))
-          (Some(sec), gc)
+          val (sec, gc, compiles) = Harness.noopRun(spark)(fn(spark, sfDir))
+          (Some(sec), gc, compiles)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED:")
           e.printStackTrace()
-          (None, 0L)
+          (None, 0L, 0L)
         }
-      val (cold, coldGc) = once()
+      val (cold, coldGc, _) = once()
       val warms = if (cold.isDefined) Seq.fill(warmRuns)(once()) else Seq.empty
       val warm = if (warms.nonEmpty && warms.forall(_._1.isDefined)) Some(warms.flatMap(_._1).min) else None
-      // gc_ms of the MIN warm run — contamination indicator for the
-      // number actually reported
-      val warmGc = if (warm.isDefined) warms.minBy(_._1.get)._2 else 0L
+      // gc ms and codegen compiles of the MIN warm run — contamination
+      // indicators for the number actually reported (a warm run that
+      // still compiles pays codegen on every call)
+      val (warmGc, warmCompiles) =
+        if (warm.isDefined) { val w = warms.minBy(_._1.get); (w._2, w._3) } else (0L, 0L)
       if (warm.isEmpty) failed ::= name
-      else System.err.println(f"[bench] $name%-28s cold ${cold.get}%8.2fs  warm ${warm.get}%8.2fs  (warm gc ${warmGc}ms, cold gc ${coldGc}ms)")
+      else System.err.println(f"[bench] $name%-28s cold ${cold.get}%8.2fs  warm ${warm.get}%8.2fs  (warm gc ${warmGc}ms, cold gc ${coldGc}ms, warm compiles $warmCompiles)")
       // stdout-parseable per-query row (r16 verdict item 2): the driver's
       // stdout capture is a bounded TAIL, so one compact line per query
       // as it finishes means ANY tail length carries the most recent
       // queries, and a full capture carries all of them
-      println(Harness.json(queryLine(name, cold, warm, warmGc)))
-      name -> ((cold, warm, warmGc))
+      println(Harness.json(queryLine(name, cold, warm, warmGc, warmCompiles)))
+      name -> ((cold, warm, warmGc, warmCompiles))
     }
     writeArtifact(artifact(results, failed.reverse, graft.ops.Ledger.summary(),
       sfDir, warmRuns, forked = None, calibration = calib))
@@ -213,13 +216,13 @@ object Bench {
       val art = scala.util.Try(Harness.parseJson(Files.readString(out.toPath)))
         .getOrElse(JNothing)
       val rows = childResults(batch, art)
-      rows.foreach { case (n, (c, w, g)) => println(Harness.json(queryLine(n, c, w, g))) }
+      rows.foreach { case (n, (c, w, g, k)) => println(Harness.json(queryLine(n, c, w, g, k))) }
       if (rc == 0) { log.delete(); out.delete() }
       else System.err.println(s"[bench] fork ${i + 1} exited rc=$rc; kept $log and $out")
       (rows, art)
     }
     val results = children.flatMap(_._1)
-    val failed = results.collect { case (n, (_, None, _)) => n }
+    val failed = results.collect { case (n, (_, None, _, _)) => n }
     // post-run ambient sample: the pre-flight guard cannot see an
     // intruder arriving MID-run (the §17.7 drift rerun measured 1.11×
     // uniform with a clean pre-flight), so the artifact records the
@@ -239,9 +242,11 @@ object Bench {
   private[graft] def childResults(batch: Seq[String], art: JValue): Seq[Res] = {
     def sec(section: String, name: String) =
       Some(art \ section \ name).collect { case JDouble(v) => v }
+    def count(section: String, name: String) =
+      Some(art \ section \ name).collect { case JInt(v) => v.toLong }.getOrElse(0L)
     batch.map { name =>
-      val gc = Some(art \ "gc_ms" \ name).collect { case JInt(v) => v.toLong }
-      name -> ((sec("cold_queries", name), sec("queries", name), gc.getOrElse(0L)))
+      name -> ((sec("cold_queries", name), sec("queries", name),
+        count("gc_ms", name), count("warm_compiles", name)))
     }
   }
 
@@ -272,22 +277,24 @@ object Bench {
   /** Compact single-query stdout row — 3-decimal seconds keep 264 of
     * these lines cheap while preserving millisecond resolution. */
   private[graft] def queryLine(name: String, cold: Option[Double],
-      warm: Option[Double], gcMs: Long): JObject = {
+      warm: Option[Double], gcMs: Long, warmCompiles: Long): JObject = {
     def n(o: Option[Double]) = o.fold[JValue](JString("error"))(Harness.num(_, 3))
     JObject("metric" -> JString("query"), "name" -> JString(name),
-      "cold" -> n(cold), "warm" -> n(warm), "gc_ms" -> JInt(gcMs))
+      "cold" -> n(cold), "warm" -> n(warm), "gc_ms" -> JInt(gcMs),
+      "warm_compiles" -> JInt(warmCompiles))
   }
 
   /** The full run record: the summary, the run conditions, the order
     * the queries ran in (seeded runs shuffle it; position effects are
     * measurable only if the artifact records position), full-precision
-    * warm/cold seconds, gc ms and the drop ledger. */
+    * warm/cold seconds, gc ms, warm-run codegen compiles and the drop
+    * ledger. */
   private[graft] def artifact(results: Seq[Res], failed: Seq[String],
       ledger: Seq[LedgerRow], sfDir: String, warmRuns: Int,
       forked: Option[Int], ambientLoad: Option[Double] = None,
       ambientLoadEnd: Option[Double] = None,
       calibration: Option[(Double, Double)] = None): JObject = {
-    def secs(sel: ((Option[Double], Option[Double], Long)) => Option[Double]) =
+    def secs(sel: ((Option[Double], Option[Double], Long, Long)) => Option[Double]) =
       JObject(results.map { case (k, t) =>
         k -> sel(t).fold[JValue](JString("error"))(JDouble(_)) }.toList)
     def load(l: Option[Double]) = l.filter(_ >= 0).fold[JValue](JNull)(Harness.num(_, 2))
@@ -300,6 +307,7 @@ object Bench {
       "order" -> JArray(results.map(r => JString(r._1)).toList),
       "queries" -> secs(_._2), "cold_queries" -> secs(_._1),
       "gc_ms" -> JObject(results.map { case (k, t) => k -> JInt(t._3) }.toList),
+      "warm_compiles" -> JObject(results.map { case (k, t) => k -> JInt(t._4) }.toList),
       // engaged-cap summary: every df-cap / bucket-cap / scrub / budget
       // engagement across the whole bench, by name with exact counts —
       // the committed artifact records WHAT was bounded, so a capped

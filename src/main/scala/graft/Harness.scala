@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.json4s.{JArray, JDecimal, JInt, JNull, JObject, JString, JValue}
@@ -50,19 +51,17 @@ object Harness {
     "spark.worker.ui.retainedExecutors" -> "4")
 
   /** The local session every main runs in: `local[cpus]` with as many
-    * shuffle partitions, UTC session time, no UI, Spark logging at
-    * WARN; `hygiene` adds the configs for back-to-back timed runs. */
-  def session(cpus: Int = Harness.cpus, hygiene: Boolean = false): SparkSession = {
-    val spark = SparkSession.builder()
+    * shuffle partitions, UTC session time, no UI; `hygiene` adds the
+    * configs for back-to-back timed runs. Spark logs at WARN from JVM
+    * start (`log4j2.properties` on the classpath), start-up included. */
+  def session(cpus: Int = Harness.cpus, hygiene: Boolean = false): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(if (hygiene) HygieneConf else Map.empty[String, String])
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   private val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
 
@@ -86,15 +85,20 @@ object Harness {
     * to nothing and record fictional times. */
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
+  /** Codegen compiles of this JVM so far: each is a codegen cache miss
+    * (a plan whose generated source no earlier plan produced). */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One timed run: hygiene, then `build` written to the noop sink.
-    * Returns the seconds and the collector ms of the timed region,
-    * which includes building the DataFrame. */
-  def noopRun(spark: SparkSession)(build: => DataFrame): (Double, Long) = {
+    * Returns the seconds, the collector ms and the codegen compiles of
+    * the timed region, which includes building the DataFrame. */
+  def noopRun(spark: SparkSession)(build: => DataFrame): (Double, Long, Long) = {
     hygiene(spark)
     val g0 = gcMs()
+    val c0 = compiles()
     val t0 = System.nanoTime()
     noop(build)
-    ((System.nanoTime() - t0) / 1e9, gcMs() - g0)
+    ((System.nanoTime() - t0) / 1e9, gcMs() - g0, compiles() - c0)
   }
 
   /** Warms the JVM, codegen and parquet-reader paths so the first

@@ -644,7 +644,7 @@ object Scale {
       val qres = sel.map { case (name, fn) =>
         def once(): (Double, Seq[StageRow]) = {
           listener.drain()
-          val (sec, _) = Harness.noopRun(spark)(fn(docs))
+          val (sec, _, _) = Harness.noopRun(spark)(fn(docs))
           (sec, listener.drain()._2)
         }
         val ledgerMark = Ledger.mark()

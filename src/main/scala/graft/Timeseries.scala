@@ -6,6 +6,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
 
+import graft.functions.ReferenceConstant
 import graft.model._
 import graft.time._
 
@@ -71,8 +72,10 @@ object ReadHooks { val none: ReadHooks = ReadHooks() }
   * condense → collapse — still shuffle-keyed on bucket ids at every
   * stage (partial-agg friendly, no driver loops).
   *
-  * At scale the log is parquet partitioned by `interval` — reads prune
-  * to one partition and push name/i_time filters to the scan.
+  * At scale the log is parquet partitioned by `interval` (optionally
+  * also by `__day`) — reads prune to one partition and push the name
+  * filter to the scan. The per-call bucket bounds are checked in a
+  * Filter that compiles once for every time range (see [[query]]).
   */
 class Timeseries(
     val spark: SparkSession,
@@ -375,10 +378,17 @@ class Timeseries(
     * §3.2-3.3): filter → [fetch hook] → cast → agg-at-output-granularity
     * → dense-axis fill → transforms → time keys.
     *
-    * Plan shape at scale: one parquet scan with interval+name+i_time
-    * pushed down, one shuffle for the agg (two or three bucket-keyed
-    * shuffles on the staged/hook path), broadcast join against the tiny
-    * bucket axis. `dense` controls empty-bucket fill of coarse-shaped
+    * Plan shape at scale: one parquet scan pruned to the interval (and
+    * `__day`) partitions with the name filter pushed down, one shuffle
+    * for the agg (two or three bucket-keyed shuffles on the
+    * staged/hook path), broadcast join against the tiny bucket axis,
+    * and a sort in one partition. Every per-call bucket bound — the
+    * i_time filter, the axis, the collapse key — is a
+    * [[ReferenceConstant]], so each read shape compiles once whatever
+    * its time range. The i_time check therefore runs in a Filter after
+    * the scan, not as a pushed filter; that costs nothing while store
+    * files are unsorted, since each file's i_time statistics span the
+    * whole file. `dense` controls empty-bucket fill of coarse-shaped
     * output: get/iterate always fill; series fills only coarse
     * intervals (fine+condense stays sparse, sql_backend.py:236-247). */
   private def query(names: Seq[String], interval: String, sp: IntervalSpec,
@@ -387,42 +397,8 @@ class Timeseries(
 
     val fine = !sp.coarse && !condense
     val multi = names.size > 1
-    val snapshot = log
-    // on a day-subpartitioned store, derive the (exact, implied by the
-    // i_time range — fromBucket is monotone) __day bounds driver-side
-    // so directory-level partition pruning fires for range reads
-    val pred = col("interval") === interval &&
-      col("name").isin(names: _*) &&
-      col("i_time").between(b0, b1)
-    val filtered = hooks.fetch(
-      if (snapshot.columns.contains(DayCol))
-        snapshot.filter(pred && col(DayCol).between(dayOf(sp, b0), dayOf(sp, b1)))
-      else snapshot.filter(pred))
-
-    // composite merge order (join-then-condense, _join_results
-    // timeseries.py:727-745 running BEFORE the condense pass :599-606,
-    // :693-704): resolution bucket, then series-list position, then
-    // arrival (sql_backend.py:268,312). Verified against the
-    // reference's own goldens (series_helper.py:238-251): a joined
-    // condensed read interleaves series WITHIN each resolution bucket.
-    val nameIdx =
-      if (!multi) lit(1L)
-      else coalesce(array_position(lit(names.toArray), col("name")), lit(0L))
-    val rawValue = if (hooks.processRow.isEmpty) readFunc(col("value")) else col("value")
-    val prepared = filtered.select(
-      col("i_time"), col("r_time"), nameIdx.as("name_idx"),
-      struct(col("i_time"), col("r_time"), nameIdx.as("name_idx"), col("seq")).as("ord"),
-      rawValue.as("value"))
-
-    // ---- aggregation to output granularity --------------------------
     // `agged` holds (i_time [, r_time], value); collapse handled below.
-    val agged: DataFrame =
-      if (!hooks.staged && !collapse) {
-        val groupCols = if (fine) Seq("i_time", "r_time") else Seq("i_time")
-        seriesType.aggregate(prepared, groupCols)
-      } else {
-        stagedAgg(prepared, sp, names, condense = condense, hooks = hooks)
-      }
+    val agged = aggregated(names, interval, sp, b0, b1, condense, collapse, hooks)
 
     // dense fill: coarse-shaped output shows every bucket in range when
     // `dense` (G6); fine output keeps sparsity. With custom hooks the
@@ -436,20 +412,20 @@ class Timeseries(
         // reference keys/spans the collapsed row off rval.keys(): dense
         // coarse output → b0..b1; sparse fine output → extant bounds
         // (timeseries.py:706-713)
+        val (lo, hi) = (ReferenceConstant.long(b0), ReferenceConstant.long(b1))
         val (keyCol, spanCol) =
           if (sp.coarse)
-            (lit(b0), TimeColumns.spanSeconds(lit(b0), lit(b1), sp.step))
+            (lo, TimeColumns.spanSeconds(lo, hi, sp.step))
           else
-            (coalesce(col("__k0"), lit(b0)),
+            (coalesce(col("__k0"), lo),
               coalesce(TimeColumns.spanSeconds(col("__k0"), col("__k1"), sp.step),
-                TimeColumns.spanSeconds(lit(b0), lit(b1), sp.step)))
+                TimeColumns.spanSeconds(lo, hi, sp.step)))
         (merged.select(keyCol.as("i_time"), col("value"), spanCol.as("__step")),
           col("__step"))
       } else if (fine) {
         (agged, TimeColumns.stepSize(col("r_time"), sp.resolution.getOrElse(sp.step)))
       } else if (dense) {
-        val axis = TimeColumns.axis(spark, sp.iCalc, sp.iCalc.fromBucket(b0), sp.iCalc.fromBucket(b1))
-          .filter(col("i_time").between(b0, b1))
+        val axis = TimeColumns.axis(spark, sp.iCalc, b0, b1)
         // axis is the preserved side, so the broadcast (build) side must
         // be the aggregated result — bounded by #buckets × #names, small
         // by construction for any per-stat read
@@ -480,22 +456,66 @@ class Timeseries(
               .getOrElse(col("value")).as(tname)
         }
         if (transform.single) filled.select(
-          (groupColsOut(fine, collapse).map(col) :+ outs.head.as("value")): _*)
-        else filled.select((groupColsOut(fine, collapse).map(col) ++ outs): _*)
+          (groupColsOut(fine).map(col) :+ outs.head.as("value")): _*)
+        else filled.select((groupColsOut(fine).map(col) ++ outs): _*)
       }
 
-    // bucket ids → epoch-second keys, time-ordered
-    val withTimes =
-      if (fine)
-        transformed
-          .withColumn("i_time", TimeColumns.fromBucket(col("i_time"), sp.step))
-          .withColumn("r_time", TimeColumns.fromBucket(col("r_time"), sp.resolution.getOrElse(sp.step)))
-          .orderBy("i_time", "r_time")
-      else
-        transformed
-          .withColumn("i_time", TimeColumns.fromBucket(col("i_time"), sp.step))
-          .orderBy("i_time")
-    withTimes.drop("__step")
+    // bucket ids → epoch-second keys, time-ordered in one partition:
+    // the result is bounded by the bucket axis × names (the bound the
+    // broadcast above relies on), too small to pay for a range
+    // exchange and the sampling job that plans it
+    val withTimes = transformed.coalesce(1)
+      .withColumn("i_time", TimeColumns.fromBucket(col("i_time"), sp.step))
+    val keyed =
+      if (fine) withTimes.withColumn("r_time",
+        TimeColumns.fromBucket(col("r_time"), sp.resolution.getOrElse(sp.step)))
+      else withTimes
+    keyed.orderBy(groupColsOut(fine).map(col): _*).drop("__step")
+  }
+
+  /** The log rows of one read — pruned to the interval (and `__day`)
+    * partitions, name filter pushed to the scan, i_time checked against
+    * per-call bounds that compile once, then the fetch hook — aggregated
+    * to the read's output granularity: (i_time [, r_time], value), or
+    * the staged plan's shape for hook-bearing and collapsing reads. */
+  private def aggregated(names: Seq[String], interval: String, sp: IntervalSpec,
+      b0: Long, b1: Long, condense: Boolean, collapse: Boolean,
+      hooks: ReadHooks): DataFrame = {
+    val multi = names.size > 1
+    val snapshot = log
+    val pred = col("interval") === interval &&
+      col("name").isin(names: _*) &&
+      col("i_time").between(ReferenceConstant.long(b0), ReferenceConstant.long(b1))
+    // on a day-subpartitioned store, derive the (exact, implied by the
+    // i_time range — fromBucket is monotone) __day bounds driver-side
+    // so directory-level partition pruning fires for range reads; as
+    // partition filters they never reach generated code
+    val filtered = hooks.fetch(
+      if (snapshot.columns.contains(DayCol))
+        snapshot.filter(pred && col(DayCol).between(dayOf(sp, b0), dayOf(sp, b1)))
+      else snapshot.filter(pred))
+
+    // composite merge order (join-then-condense, _join_results
+    // timeseries.py:727-745 running BEFORE the condense pass :599-606,
+    // :693-704): resolution bucket, then series-list position, then
+    // arrival (sql_backend.py:268,312). Verified against the
+    // reference's own goldens (series_helper.py:238-251): a joined
+    // condensed read interleaves series WITHIN each resolution bucket.
+    val nameIdx =
+      if (!multi) lit(1L)
+      else coalesce(array_position(lit(names.toArray), col("name")), lit(0L))
+    val rawValue = if (hooks.processRow.isEmpty) readFunc(col("value")) else col("value")
+    val prepared = filtered.select(
+      col("i_time"), col("r_time"), nameIdx.as("name_idx"),
+      struct(col("i_time"), col("r_time"), nameIdx.as("name_idx"), col("seq")).as("ord"),
+      rawValue.as("value"))
+
+    if (!hooks.staged && !collapse) {
+      val groupCols = if (!sp.coarse && !condense) Seq("i_time", "r_time") else Seq("i_time")
+      seriesType.aggregate(prepared, groupCols)
+    } else {
+      stagedAgg(prepared, sp, names, condense = condense, hooks = hooks)
+    }
   }
 
   /** Staged aggregation for hook-bearing (or fine-collapse) reads:
@@ -566,7 +586,7 @@ class Timeseries(
     F.array_sort(entries, (l, r) =>
       when(l(key) < r(key), lit(-1)).when(l(key) > r(key), lit(1)).otherwise(lit(0)))
 
-  private def groupColsOut(fine: Boolean, collapse: Boolean): Seq[String] =
+  private def groupColsOut(fine: Boolean): Seq[String] =
     if (fine) Seq("i_time", "r_time") else Seq("i_time")
 
   // ---- metadata / retention ------------------------------------------
@@ -762,32 +782,16 @@ class Timeseries(
       end: Double, hooks: ReadHooks = ReadHooks.none): DataFrame = {
     val sp = spec(interval)
     val (b0, b1) = (sp.iCalc.toBucket(start), sp.iCalc.toBucket(end))
-    // mirror query()'s read path exactly — same fetch hook, same
-    // processRow guard (values are already processed at insert, so
-    // readFunc must NOT re-apply), same staged aggregation for
-    // hook-bearing reads — so a hook-configured Timeseries sees the
-    // SAME values here as through series()/anomalies()
-    val pred = col("interval") === interval && col("name") === name &&
-      col("i_time").between(b0, b1)
-    val snapshot = log
-    val filtered = hooks.fetch(
-      if (snapshot.columns.contains(DayCol))
-        snapshot.filter(pred && col(DayCol).between(dayOf(sp, b0), dayOf(sp, b1)))
-      else snapshot.filter(pred))
-    val rawValue =
-      if (hooks.processRow.isEmpty) readFunc(col("value")) else col("value")
-    val prepared = filtered.select(
-      col("i_time"), col("r_time"), lit(1L).as("name_idx"),
-      struct(col("i_time"), col("r_time"), lit(1L).as("name_idx"),
-        col("seq")).as("ord"),
-      rawValue.as("value"))
-    val agged =
-      if (!hooks.staged) seriesType.aggregate(prepared, Seq("i_time"))
-      else stagedAgg(prepared, sp, Seq(name), condense = true, hooks = hooks)
-    val axis = TimeColumns.axis(spark, sp.iCalc,
-      sp.iCalc.fromBucket(b0), sp.iCalc.fromBucket(b1))
-      .filter(col("i_time").between(b0, b1))
-    val grid = axis.join(broadcast(agged), Seq("i_time"), "left")
+    // query()'s own read path — same filter, fetch hook, processRow
+    // guard (values are already processed at insert, so readFunc must
+    // NOT re-apply) and staged aggregation for hook-bearing reads — so
+    // a hook-configured Timeseries sees the SAME values here as
+    // through series()/anomalies(); the result is bounded by the
+    // axis, so it is windowed and sorted in one partition
+    val agged = aggregated(Seq(name), interval, sp, b0, b1,
+      condense = true, collapse = false, hooks = hooks)
+    val grid = TimeColumns.axis(spark, sp.iCalc, b0, b1)
+      .join(broadcast(agged), Seq("i_time"), "left").coalesce(1)
     graft.ops.Features.interpolateLinear(grid, Seq.empty, "i_time", col("value"))
       .withColumn("i_time", TimeColumns.fromBucket(col("i_time"), sp.step))
       .orderBy("i_time")

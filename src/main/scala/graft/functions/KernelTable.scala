@@ -63,37 +63,53 @@ final class Kernel private[functions] (
 object Kernel {
   /** A constant parameter as an argument of the static call.
     * Primitives inline into the generated code as literals; objects
-    * (strings, arrays, lookup tables) are [[KernelConstant]]s. */
+    * (strings, arrays, lookup tables) are [[ReferenceConstant]]s. */
   def constant(v: Any): Expression = v match {
     case i: Int => Literal(i)
     case d: Double => Literal(d)
-    case r: AnyRef => KernelConstant(r)
+    case r: AnyRef => ReferenceConstant(r)
   }
 }
 
-/** An object constant of a kernel call. It rides as a codegen
-  * reference object, so the generated code — and the codegen cache
-  * entry — is the same whatever its value (every BPE merge round
-  * reuses one compile). Unlike an object-typed `Literal`, it compares
-  * by value, arrays element-wise, so two calls with equal parameters
-  * are semantically equal: a `GROUP BY` on a call matches the same
-  * call in the select list, and subexpression elimination and
-  * exchange reuse see them as one. */
-case class KernelConstant(value: AnyRef) extends LeafExpression {
-  override def dataType: DataType = ObjectType(value.getClass)
+/** A constant that rides as a codegen reference object, so the
+  * generated code — and the codegen cache entry — is the same whatever
+  * its value. Kernel calls pass their object parameters this way
+  * (every BPE merge round reuses one compile), and kairos reads their
+  * per-call bucket bounds ([[ReferenceConstant.long]]): whole-stage
+  * codegen inlines a `long` literal into the Java source, so each new
+  * time range would compile new classes. Unlike a `Literal`, it is
+  * not folded, and it compares by value, arrays element-wise, so two
+  * calls with equal parameters are semantically equal: a `GROUP BY`
+  * on a call matches the same call in the select list, and
+  * subexpression elimination and exchange reuse see them as one. */
+case class ReferenceConstant(value: Any, dataType: DataType) extends LeafExpression {
   override def nullable: Boolean = false
   override def eval(input: InternalRow): Any = value
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    ExprCode.forNonNullValue(JavaCode.global(
-      ctx.addReferenceObj("kernelConst", value, CodeGenerator.javaType(dataType)),
-      dataType))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("refConst", value, CodeGenerator.boxedType(dataType))
+    val code =
+      if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${CodeGenerator.javaType(dataType)}Value()"
+      else ref
+    ExprCode.forNonNullValue(JavaCode.expression(code, dataType))
+  }
   override def equals(other: Any): Boolean = other match {
-    case KernelConstant(v) => java.util.Objects.deepEquals(value, v)
+    case ReferenceConstant(v, t) => t == dataType && java.util.Objects.deepEquals(value, v)
     case _ => false
   }
-  private lazy val valueHash = java.util.Arrays.deepHashCode(Array(value))
+  private lazy val valueHash = java.util.Arrays.deepHashCode(Array[AnyRef](value.asInstanceOf[AnyRef]))
   override def hashCode(): Int = valueHash
-  override def toString: String = s"const:${value.getClass.getSimpleName}"
+  override def toString: String = dataType match {
+    case _: ObjectType => s"const:${value.getClass.getSimpleName}"
+    case _ => s"const:$value"
+  }
+}
+
+object ReferenceConstant {
+  /** An object constant, typed by its class. */
+  def apply(value: AnyRef): ReferenceConstant = ReferenceConstant(value, ObjectType(value.getClass))
+
+  /** A `long` value as a column that compiles the same for every value. */
+  def long(v: Long): Column = GraftColumnBridge.column(ReferenceConstant(Long.box(v), LongType))
 }
 
 /** SQL form of a kernel: its `graft_*` name, one parser per trailing

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.ReferenceConstant
+
 /** Column-level twins of [[BucketCalc]]: everything stays inside
   * whole-stage codegen (built-in expressions only, no UDFs).
   *
@@ -108,15 +110,20 @@ object TimeColumns {
       bucketDate(b, u).cast(TimestampType)
   }
 
-  /** Dense bucket-id axis covering [startTs, endTs] (epoch seconds).
-    * Relative steps stay fully distributed (spark.range); Gregorian
-    * walks driver-side (bounded by calendar size) — both ends are tiny
-    * relative to data and always broadcast. Column: `i_time`. */
-  def axis(spark: SparkSession, calc: BucketCalc, startTs: Long, endTs: Long): DataFrame = calc match {
-    case RelativeTime(step) =>
-      spark.range(startTs / step, endTs / step + 1).toDF("i_time")
+  /** Dense bucket-id axis b0..b1 (empty when b1 < b0), column
+    * `i_time`. Relative ids are consecutive: one row exploded into the
+    * range, its bounds [[ReferenceConstant]]s, so every range reuses
+    * one compiled plan. Gregorian ids are not: the calendar walk runs
+    * driver-side (bounded by calendar size). Both are tiny relative to
+    * data and always the broadcast join's preserved side. */
+  def axis(spark: SparkSession, calc: BucketCalc, b0: Long, b1: Long): DataFrame = calc match {
+    case RelativeTime(_) if b0 <= b1 =>
+      spark.range(0, 1, 1, 1).select(
+        explode(sequence(ReferenceConstant.long(b0), ReferenceConstant.long(b1))).as("i_time"))
+    case RelativeTime(_) =>
+      spark.range(0).toDF("i_time")
     case g: GregorianTime =>
       import spark.implicits._
-      g.buckets(startTs, endTs).toDF("i_time")
+      g.buckets(g.fromBucket(b0), g.fromBucket(b1)).filter(b => b >= b0 && b <= b1).toDF("i_time")
   }
 }

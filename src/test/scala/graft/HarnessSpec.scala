@@ -24,26 +24,28 @@ class HarnessSpec extends AnyFunSuite {
   private def roundTrip(v: JValue): JValue = Harness.parseJson(Harness.json(v))
 
   test("a Bench query row reads back, seconds at 3 decimals") {
-    val row = roundTrip(Bench.queryLine(nasty, Some(1.23456), None, 7L))
+    val row = roundTrip(Bench.queryLine(nasty, Some(1.23456), None, 7L, 3L))
     assert(row \ "name" === JString(nasty))
     assert(row \ "cold" === JDouble(1.235))
     assert(row \ "warm" === JString("error"))
     assert(row \ "gc_ms" === JInt(7))
-    assert(Harness.json(Bench.queryLine("q", Some(0.0005), Some(2.0), 0L)) ===
-      """{"metric":"query","name":"q","cold":0.001,"warm":2.000,"gc_ms":0}""")
+    assert(row \ "warm_compiles" === JInt(3))
+    assert(Harness.json(Bench.queryLine("q", Some(0.0005), Some(2.0), 0L, 0L)) ===
+      """{"metric":"query","name":"q","cold":0.001,"warm":2.000,"gc_ms":0,"warm_compiles":0}""")
   }
 
   test("the Bench artifact reads back with its keys in order") {
-    val art = roundTrip(Bench.artifact(Seq(nasty -> ((Some(1.5), Some(0.25), 3L))),
+    val art = roundTrip(Bench.artifact(Seq(nasty -> ((Some(1.5), Some(0.25), 3L, 4L))),
       Seq(nasty), Seq((nasty, 2L, nasty)), nasty, 2, forked = None,
       calibration = Some((3.456, Double.NaN))))
     val JObject(fields) = art: @unchecked
     assert(fields.map(_._1) === List("summary", "seed", "fork", "ambient_load",
       "ambient_load_end", "calibration", "order", "queries", "cold_queries",
-      "gc_ms", "ledger"))
+      "gc_ms", "warm_compiles", "ledger"))
     assert(art \ "summary" \ "sf" === JString(nasty))
     assert(art \ "summary" \ "errors" === JArray(List(JString(nasty))))
     assert(art \ "queries" \ nasty === JDouble(0.25))
+    assert(art \ "warm_compiles" \ nasty === JInt(4))
     assert(art \ "calibration" === JObject("scalar_s" -> JDouble(3.46), "spark_s" -> JNull))
     assert(art \ "ledger" === JArray(List(JObject("name" -> JString(nasty),
       "count" -> JInt(2), "last" -> JString(nasty)))))
@@ -83,27 +85,37 @@ class HarnessSpec extends AnyFunSuite {
     roundTrip(Bench.artifact(results, Nil, ledger, "sf", 2, forked = None))
 
   test("the fork merge sums ledger counts across child artifacts") {
-    val a = child(Seq("q1" -> ((Some(1.0), Some(0.5), 1L))),
+    val a = child(Seq("q1" -> ((Some(1.0), Some(0.5), 1L, 0L))),
       Seq(("cap", 2L, "first"), ("scrub", 1L, "s")))
-    val b = child(Seq("q2" -> ((Some(1.0), Some(0.5), 1L))), Seq(("cap", 3L, "latest")))
+    val b = child(Seq("q2" -> ((Some(1.0), Some(0.5), 1L, 0L))), Seq(("cap", 3L, "latest")))
     assert(Bench.mergedLedger(Seq(a, JNothing, b)) ===
       Seq(("cap", 5L, "latest"), ("scrub", 1L, "s")))
   }
 
   test("the fork merge reports a query its child did not record as an error") {
-    val art = child(Seq("q1" -> ((Some(1.25), Some(0.5), 4L))), Nil)
+    val art = child(Seq("q1" -> ((Some(1.25), Some(0.5), 4L, 2L))), Nil)
     assert(Bench.childResults(Seq("q1", "q2"), art) ===
-      Seq("q1" -> ((Some(1.25), Some(0.5), 4L)), "q2" -> ((None, None, 0L))))
+      Seq("q1" -> ((Some(1.25), Some(0.5), 4L, 2L)), "q2" -> ((None, None, 0L, 0L))))
     // a child that died before writing its artifact
-    assert(Bench.childResults(Seq("q1"), JNothing) === Seq("q1" -> ((None, None, 0L))))
-    val errored = Harness.json(Bench.queryLine("q2", None, None, 0L))
-    assert(errored === """{"metric":"query","name":"q2","cold":"error","warm":"error","gc_ms":0}""")
+    assert(Bench.childResults(Seq("q1"), JNothing) === Seq("q1" -> ((None, None, 0L, 0L))))
+    val errored = Harness.json(Bench.queryLine("q2", None, None, 0L, 0L))
+    assert(errored ===
+      """{"metric":"query","name":"q2","cold":"error","warm":"error","gc_ms":0,"warm_compiles":0}""")
   }
 
   test("a malformed warm-runs value falls back to 2") {
     for (v <- Seq(None, Some(""), Some("two"), Some("0"), Some("-1"), Some("2.5")))
       assert(Harness.positive(v, 2) === 2, v)
     assert(Harness.positive(Some(" 3 "), 2) === 3)
+  }
+
+  test("a noop run counts its codegen compiles: 0 for a repeated plan, 1+ for a new literal") {
+    // a long literal is inlined into the generated Java source
+    def plan(k: Long) = spark.range(0, 100, 1, 1).select((col("id") * lit(k)).as("v"))
+    val k = System.nanoTime()
+    Harness.noopRun(spark)(plan(k))
+    assert(Harness.noopRun(spark)(plan(k))._3 === 0L)
+    assert(Harness.noopRun(spark)(plan(k + 1))._3 >= 1L)
   }
 
   test("the listener drains a finished action's job and stages without sleeping") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
@@ -204,11 +204,63 @@ class HooksSpec extends AnyFunSuite {
     assert(dirs.toSet === Set("interval=minute", "interval=hour"))
     val reader = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
     val plan = reader.get(Seq("p"), "minute", Td(10)).queryExecution.executedPlan.toString
-    // partition pruning on interval; name + i_time pushed to the scan
+    // partition pruning on interval; name pushed to the scan (i_time is
+    // checked in a Filter that compiles once, see the next test)
     assert(plan.contains("PartitionFilters") && plan.contains("interval"), plan.take(2000))
     assert(plan.contains("PushedFilters") && plan.contains("EqualTo(name,p)"), plan.take(2000))
     // and the read round-trips
     assert(reader.get(Seq("p"), "minute", Td(10)).collect().head.getDouble(1) === 1.0)
+  }
+
+  test("every kairos read shape compiles once and sorts without a range exchange") {
+    // six stats, one event each every 20 minutes over ~2.75 days: every
+    // read below finds data, so adaptive execution keeps one plan shape
+    val events = for (i <- 0 until 200; j <- 0 until 6) yield (s"s$j", i * 1200L + j * 60L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_compile_once").toString
+    def store(intervals: Map[String, IntervalSpec], path: String, days: Boolean) = {
+      val w = new Timeseries(spark, CountT, intervals)
+      for ((n, t) <- events) w.insert(n, 1.0, Td(t))
+      w.save(path, subpartitionDays = Some(days))
+      new Timeseries(spark, CountT, intervals).load(path)
+    }
+    val daily = Map("daily" -> IntervalSpec(TimeStep("daily")))
+    val flat = store(minuteHour, s"$dir/flat", days = false)
+    val byDay = store(minuteHour, s"$dir/day", days = true)
+    val greg = store(daily, s"$dir/daily", days = false)
+    // read k of each shape: new bounds and new names for every k
+    def shapes(r: Timeseries): Seq[(String, Int => DataFrame)] = Seq(
+      "coarse get" -> (k => r.get(Seq(s"s$k"), "minute", Td(k * 1260L))),
+      "condensed get" -> (k => r.get(Seq(s"s$k"), "hour", Td(k * 7200L), condense = true)),
+      "fine series" -> (k => r.series(Seq(s"s$k"), "hour", start = Some(Td(k * 3600L)),
+        steps = Some(3 + k))),
+      "condensed multi-name series" -> (k => r.series(Seq(s"s$k", s"s${k + 3}"), "hour",
+        start = Some(Td(k * 3600L)), steps = Some(4 + k), condense = true)),
+      "collapse" -> (k => r.series(Seq(s"s$k"), "hour", start = Some(Td(k * 3600L)),
+        steps = Some(5 + k), collapse = true)),
+      "interpolate" -> (k => r.interpolate(s"s$k", "minute", Td(k * 600L), Td(k * 600L + 3600))))
+    val reads = shapes(flat).map { case (n, f) => (n, f, false) } ++
+      shapes(byDay).map { case (n, f) => (s"$n (__day store)", f, true) } :+
+      (("gregorian series", (k: Int) => greg.series(Seq(s"s$k"), "daily",
+        start = Some(Td(k * 86400L)), steps = Some(2)), false))
+    for ((name, read, days) <- reads) {
+      assert(read(0).collect().nonEmpty, name) // warm-up: compiles the shape
+      for (k <- Seq(1, 2)) {
+        val c0 = Harness.compiles()
+        val df = read(k)
+        assert(df.collect().nonEmpty, s"$name, read $k")
+        assert(Harness.compiles() - c0 === 0L, s"$name, read $k compiled new classes")
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("rangepartitioning"), s"$name: $plan")
+        val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
+          .map(_.group(1)).mkString(" ")
+        assert(partFilters.contains("interval"), s"$name: $plan")
+        if (days) assert(partFilters.contains("__day"), s"$name: $plan")
+        val name0 = if (name.contains("multi-name")) "In(name," else "EqualTo(name,"
+        assert(plan.contains("PushedFilters") && plan.contains(name0), s"$name: $plan")
+      }
+    }
+    // an inverted range reads no buckets (the axis must not count down)
+    assert(flat.interpolate("s0", "minute", Td(3600), Td(0)).collect().isEmpty)
   }
 
   test("approx_count_distinct tracks exact set cardinality within its rsd") {
