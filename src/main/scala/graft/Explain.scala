@@ -1,6 +1,7 @@
 package graft
 /** Plan auditor: prints the formatted physical plan of selected
-  * SparkEntry queries (all when no args). Usage:
+  * SparkEntry queries (all when no args), each headed by the Spark
+  * jobs its construction ran (eager fits, persists, collects). Usage:
   *   sbt "runMain graft.Explain q1_pricing_summary ts_count_minute"
   * Inspect for: PushedFilters reaching the parquet scan, pruned
   * ReadSchema, partial HashAggregate before the exchange, broadcast on
@@ -13,11 +14,19 @@ object Explain {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
+    val listener = new Harness.RunListener(spark)
     val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     for (name <- wanted; fn <- SparkEntry.queries.get(name)) {
       println(s"\n================ $name ================")
-      try fn(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
+      try {
+        listener.drain()
+        val df = fn(spark, sfDir)
+        val (jobs, _) = listener.drain()
+        println(s"[explain] construction ran ${jobs.size} Spark jobs, " +
+          s"${jobs.map(_.stages).sum} stages, ${jobs.map(_.tasks).sum} tasks")
+        jobs.foreach(j => println(s"[explain]   job: ${j.stages} stages, ${j.tasks} tasks, ${j.desc}"))
+        df.explain("formatted")
+      } catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
     }
     spark.stop()
   }

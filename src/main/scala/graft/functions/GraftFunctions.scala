@@ -494,8 +494,10 @@ object Kernels {
     * interpreted, nests one `aggregate` lambda PER MERGE per word —
     * measured 30s+ over sf0.1 at 12 merges; fused it is one linear
     * pass per merge). Per whitespace word of the trim+lowercased
-    * text: start from characters, apply merges in rank order, each a
-    * greedy left-to-right non-overlapping pair merge (the reference
+    * text: start from code points (the trainer's `split(word, "")`
+    * seed; a UTF-16 split would cut a non-BMP character in two), apply
+    * merges in rank order, each a greedy left-to-right
+    * non-overlapping pair merge (the reference
     * scan — identical output to the fold's last-symbol rule). Empty
     * words contribute nothing. `merges` flattened [a0,b0,a1,b1,…]
     * (even length, no null: [[GraftFunctions.bpeCount]] checks it
@@ -507,7 +509,7 @@ object Kernels {
     while (wi < words.length) {
       val w = words(wi)
       if (w.nonEmpty) {
-        var syms = w.split("")
+        var syms = w.codePoints.toArray.map(cp => new String(Character.toChars(cp)))
         var m = 0
         while (m < merges.length && syms.length > 1) {
           val a = merges(m); val b = merges(m + 1)

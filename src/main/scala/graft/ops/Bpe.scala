@@ -1,21 +1,35 @@
 package graft.ops
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding vocabulary training over the corpus (Sennrich,
   * Haddow & Birch 2016 — the public BPE recipe behind most LLM
   * tokenizers): start from characters, repeatedly merge the most
-  * frequent adjacent symbol pair. The trainer is the canonical
-  * distributed shape — pair statistics are ONE map-side-combined
-  * aggregate per merge over the DISTINCT-WORD table (corpus-scale
-  * text reduces to vocabulary-scale state after [[wordCounts]]; at
-  * 100 TB the word table is millions of rows, not billions of
-  * tokens), and only the single argmax row ever reaches the driver.
-  * Merge application is a per-row left-to-right fold (higher-order
-  * `aggregate`), so no UDF and no driver data movement.
+  * frequent adjacent symbol pair.
+  *
+  * Work split. The only corpus-scale work is ONE distributed pass,
+  * [[wordCounts]] + [[seedSymbols]]: corpus text reduces to the
+  * distinct-word table (at 100 TB millions of rows, not billions of
+  * tokens), each word split into Spark's code-point symbols. One
+  * collect brings that table to the driver, and every merge round
+  * then runs in memory ([[trainBatched]]), the shape of Sennrich's
+  * `learn_bpe.py`, the HF tokenizers and SentencePiece trainers, and
+  * Spark MLlib's own vocabulary-scale collects (`Word2Vec.learnVocab`,
+  * `CountVectorizer`). A merge round is pure driver work, so a k-merge
+  * fit runs a fixed number of Spark jobs instead of three per merge.
+  *
+  * Driver-memory contract: the driver holds the distinct-word table —
+  * distinct words × their symbols — plus one count per distinct
+  * adjacent pair and an inverted pair → words index of the same size.
+  * That is vocabulary-scale state, never corpus-scale; a table too
+  * large for the driver fails the collect with Spark's named
+  * `spark.driver.maxResultSize` error.
   *
   * Simplification vs the paper: no end-of-word marker symbol — merges
   * never cross word boundaries here because pairs are only formed
@@ -31,7 +45,8 @@ object Bpe {
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("wcount"))
 
-  /** Character seed: each word as its symbol sequence. */
+  /** Character seed: each word as its symbol sequence (Spark's
+    * `split(word, "")`, one symbol per code point). */
   def seedSymbols(words: DataFrame): DataFrame =
     words.select(split(col("word"), "").as("syms"), col("wcount"))
 
@@ -66,83 +81,59 @@ object Bpe {
 
   case class Merge(rank: Int, a: String, b: String, freq: Long)
 
-  /** Learn `numMerges` merges. Per merge: one aggregate over the
-    * cached word-symbol table, one single-row collect (argmax with
-    * the deterministic tie order freq desc, a asc, b asc), one fold
-    * pass rewriting the table (localCheckpoint keeps the plan flat —
-    * at cluster scale swap for a reliable checkpoint dir). Stops
-    * early when no adjacent pair is left. */
-  def train(docs: DataFrame, text: Column, numMerges: Int): Seq[Merge] = {
-    var words = seedSymbols(wordCounts(docs, text)).localCheckpoint(true)
-    val out = ArrayBuffer.empty[Merge]
-    var r = 1
-    var done = false
-    while (r <= numMerges && !done) {
-      val top = pairCounts(words)
-        .orderBy(col("freq").desc, col("a"), col("b")).limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b, f) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += Merge(r, a, b, f)
-        val next = words
-          .select(mergeOnce(col("syms"), a, b).as("syms"), col("wcount"))
-          .localCheckpoint(true)
-        words.unpersist()
-        words = next
-        r += 1
-      }
-    }
-    words.unpersist()
-    out.toSeq
-  }
+  /** Learn `numMerges` merges by strict BPE: each round merges the
+    * single most frequent pair, ties broken freq desc, then a, then b
+    * in Spark's string order (UTF-8 bytes, i.e. code points). Stops
+    * early when no adjacent pair is left. This is [[trainBatched]]
+    * with one merge per round: one distributed word-table pass, then
+    * every round on the driver. */
+  def train(docs: DataFrame, text: Column, numMerges: Int): Seq[Merge] =
+    trainBatched(docs, text, numMerges, maxBatch = 1)
 
   /** Apply a BATCH of symbol-disjoint merges in ONE fold pass: the
     * output's tail + current symbol probe the rule batch instead of a
     * single (a, b) literal. For pairs sharing no symbols this is
     * exactly sequential application (disjoint merges can't chain or
-    * overlap within a word), so one rewrite job replaces K of them.
-    * Same fused kernel as [[mergeOnce]]. */
+    * overlap within a word). Same fused kernel as [[mergeOnce]]. */
   def mergeBatch(syms: Column, pairs: Seq[(String, String)]): Column =
     graft.functions.GraftFunctions.mergeFold(syms,
       pairs.flatMap(p => Seq(p._1, p._2)).toArray)
 
-  /** Scalable trainer (r6 verdict item 6): per ROUND, one pair-count
-    * aggregate + one bounded top-candidate collect + one rewrite job
-    * applying up to `maxBatch` merges at once — 32k merges become
-    * ~32k/maxBatch sequential Spark jobs instead of 32k, the public
-    * SentencePiece/fastBPE batching trick.
+  /** Learn up to `numMerges` merges, accepting up to `maxBatch` per
+    * round. The word table is counted on the cluster and collected
+    * once; the rounds run on the driver over in-memory pair counts
+    * (see the object doc for the memory contract), so no Spark action
+    * runs after the collect.
     *
-    * Within a round, candidates are accepted in rank order (freq
-    * desc, a, b) only while provably independent of every
-    * already-accepted merge: symbol-disjoint (no chaining/overlap →
-    * one-pass apply is exactly sequential apply, and their counts on
-    * the pre-round table remain valid), and no accepted concatenation
-    * collides with a candidate's symbols (a fresh `ab` must not feed
-    * a same-round `(ab, x)` rule).
+    * Within a round the top `4 × budget` pairs (rank order: freq desc,
+    * a, b) are the candidates, accepted in rank order only while
+    * provably independent of every already-accepted merge:
+    * symbol-disjoint (no chaining/overlap → one-pass apply is exactly
+    * sequential apply, and their counts on the pre-round table remain
+    * valid), and no accepted concatenation collides with a candidate's
+    * symbols (a fresh `ab` must not feed a same-round `(ab, x)` rule).
     *
-    * Honesty contract: `maxBatch = 1` IS strict reference BPE
-    * (asserted against [[train]] in BpeSpec). For larger batches the
-    * training is the standard approximation — a merge created mid-
-    * round (e.g. `(ab, c)`) cannot outrank remaining candidates until
-    * the next round, so merge ORDER may deviate from strict BPE
-    * exactly where fastBPE's does; ranks stay deterministic. */
+    * Honesty contract: `maxBatch = 1` IS strict reference BPE (it is
+    * [[train]]). Batching used to save Spark jobs (one rewrite job per
+    * round instead of per merge); with the rounds in memory it saves
+    * nothing, and larger batches only keep the standard fastBPE-style
+    * approximation — a merge created mid-round (e.g. `(ab, c)`) cannot
+    * outrank remaining candidates until the next round, so merge ORDER
+    * may deviate from strict BPE; ranks stay deterministic. */
   def trainBatched(docs: DataFrame, text: Column, numMerges: Int,
       maxBatch: Int = 8): Seq[Merge] = {
-    var words = seedSymbols(wordCounts(docs, text)).localCheckpoint(true)
+    val state = new MergeState(seedSymbols(wordCounts(docs, text)).collect()
+      .map(r => (r.getSeq[String](0), r.getLong(1))))
     val out = ArrayBuffer.empty[Merge]
     var done = false
     while (out.size < numMerges && !done) {
+      val budget = math.min(maxBatch, numMerges - out.size)
       // over-collect 4x: disjointness filtering thins the prefix
-      val cand = pairCounts(words)
-        .orderBy(col("freq").desc, col("a"), col("b"))
-        .limit(math.min(maxBatch, numMerges - out.size) * 4).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val cand = state.top(budget * 4)
       if (cand.isEmpty) done = true
       else {
-        val used = scala.collection.mutable.Set.empty[String]
+        val used = mutable.Set.empty[String]
         val accepted = ArrayBuffer.empty[(String, String, Long)]
-        val budget = math.min(maxBatch, numMerges - out.size)
         for ((a, b, f) <- cand if accepted.size < budget) {
           val indep = !used(a) && !used(b) && !used(a + b) &&
             !accepted.exists { case (x, y, _) =>
@@ -156,16 +147,96 @@ object Bpe {
         accepted.foreach { case (a, b, f) =>
           out += Merge(out.size + 1, a, b, f)
         }
-        val next = words
-          .select(mergeBatch(col("syms"),
-            accepted.map(p => (p._1, p._2)).toSeq).as("syms"), col("wcount"))
-          .localCheckpoint(true)
-        words.unpersist()
-        words = next
+        state.merge(accepted.map(m => (m._1, m._2)).toSeq)
       }
     }
-    words.unpersist()
     out.toSeq
+  }
+
+  /** Rank order of a pair count: freq desc, then a, then b, each
+    * string compared as Spark orders strings (UTF-8 bytes, i.e. code
+    * points — not `String.compareTo`'s UTF-16 units). */
+  private val rankOrder: Ordering[(Long, UTF8String, UTF8String)] = {
+    val bytes: Ordering[UTF8String] = (x, y) => x.binaryCompare(y)
+    Ordering.Tuple3(Ordering.Long.reverse, bytes, bytes)
+  }
+
+  /** The driver-side state of a BPE fit over the collected word
+    * table: each distinct word's current symbols and count, the
+    * word-weighted count of every adjacent pair, those counts ranked
+    * by [[rankOrder]], and an inverted pair → words index. The index
+    * may keep a word under a pair it no longer holds, never the
+    * reverse, so a round re-scans only the words listed under its
+    * merged pairs (the incremental update of `learn_bpe.py`). Symbols
+    * stay Spark's `UTF8String`s and a merge is the same
+    * [[graft.functions.Kernels.mergeFold]] kernel the column API
+    * runs, so the merge rule and string order are Spark's own. */
+  private final class MergeState(table: Array[(Seq[String], Long)]) {
+    private type Pair = (UTF8String, UTF8String)
+    private val syms: Array[ArrayData] = table.map { case (s, _) =>
+      new GenericArrayData(s.map(UTF8String.fromString).toArray[Any])
+    }
+    private val wcount: Array[Long] = table.map(_._2)
+    private val freq = mutable.HashMap.empty[Pair, Long]
+    private val ranked = mutable.TreeSet.empty(rankOrder)
+    private val holders = mutable.HashMap.empty[Pair, mutable.Set[Int]]
+
+    locally {
+      val delta = mutable.HashMap.empty[Pair, Long]
+      syms.indices.foreach(w => addPairs(w, 1, delta))
+      applyDelta(delta)
+    }
+
+    /** The `k` highest-ranked pairs with their counts, in rank order. */
+    def top(k: Int): Seq[(String, String, Long)] =
+      ranked.iterator.take(k)
+        .map { case (f, a, b) => (a.toString, b.toString, f) }.toSeq
+
+    /** Apply one round's rules (one fold pass per word, as
+      * [[mergeBatch]]) to every word that may hold one of them, and
+      * move the pair counts by the difference. */
+    def merge(rules: Seq[(String, String)]): Unit = {
+      val flat = rules.flatMap(r => Seq(r._1, r._2)).map(UTF8String.fromString).toArray
+      val touched = rules.flatMap { case (a, b) =>
+        holders.remove((UTF8String.fromString(a), UTF8String.fromString(b)))
+          .getOrElse(Nil)
+      }.distinct
+      val delta = mutable.HashMap.empty[Pair, Long]
+      for (w <- touched) {
+        val next = graft.functions.Kernels.mergeFold(syms(w), flat)
+        if (next.numElements() != syms(w).numElements()) {
+          addPairs(w, -1, delta)
+          syms(w) = next
+          addPairs(w, 1, delta)
+        }
+      }
+      applyDelta(delta)
+    }
+
+    /** Add (`sign` = 1) or remove (-1) word `w`'s count at each of its
+      * adjacent pairs in `delta`; an added word is listed under them. */
+    private def addPairs(w: Int, sign: Int,
+        delta: mutable.HashMap[Pair, Long]): Unit = {
+      val s = syms(w)
+      var i = 0
+      while (i + 1 < s.numElements()) {
+        val p = (s.getUTF8String(i), s.getUTF8String(i + 1))
+        delta(p) = delta.getOrElse(p, 0L) + sign * wcount(w)
+        if (sign > 0) holders.getOrElseUpdate(p, mutable.Set.empty[Int]) += w
+        i += 1
+      }
+    }
+
+    private def applyDelta(delta: mutable.HashMap[Pair, Long]): Unit =
+      delta.foreach { case (p, d) =>
+        if (d != 0) {
+          val old = freq.getOrElse(p, 0L)
+          if (old > 0) ranked -= ((old, p._1, p._2))
+          val now = old + d
+          if (now > 0) { freq(p) = now; ranked += ((now, p._1, p._2)) }
+          else freq -= p
+        }
+      }
   }
 
   /** The learned merge ranks in rank order, applied to a text column:
@@ -192,10 +263,9 @@ object Bpe {
   /** Persist a trained merge table — the write-once half of the
     * fit-once/tokenize-every-increment crawl shape (the standing
     * store discipline of [[LangModel.buildBigramStats]]): fitting
-    * costs one Spark job per merge round over the whole corpus, while
-    * tokenizing an increment needs only the ~KB merge table, so the
-    * fit's durable artifact is the thing every later increment reads.
-    * `path/merges` = (rank, a, b, freq) parquet; `path/meta` = the
+    * costs a pass over the whole corpus, while tokenizing an increment
+    * needs only the ~KB merge table, so the fit's durable artifact is
+    * the thing every later increment reads. `path/merges` = (rank, a, b, freq) parquet; `path/meta` = the
     * merge count, written LAST as the commit marker (a crashed build
     * leaves no meta and [[mergesFromStore]] refuses the partial
     * store). Models are immutable fits — no append path. */

@@ -6,10 +6,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The distributed BPE trainer matched against an independent
-  * single-node reference implementation (plain Scala, no Spark) on
-  * the real sf0.001 corpus, plus planted fixtures for tie-breaking,
-  * merged-symbol reuse, and early stop. */
+/** The BPE trainer matched against an independent single-node
+  * reference implementation (plain Scala, no Spark) on the real
+  * sf0.001 corpus, plus planted fixtures for tie-breaking,
+  * merged-symbol reuse, overlapping runs, non-BMP symbols and early
+  * stop. */
 class BpeSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -23,11 +24,20 @@ class BpeSpec extends AnyFunSuite {
 
   // ---- reference BPE (independent of the engine code) ----
 
+  /** A word's seed symbols: one per code point, as Spark's
+    * `split(word, "")` gives them. */
+  private def refSymbols(w: String): Vector[String] =
+    w.codePoints.toArray.map(cp => new String(Character.toChars(cp))).toVector
+
+  /** Strings in Spark's order: by code point (UTF-8 bytes), where
+    * `String.compareTo` orders by UTF-16 unit. */
+  private val codePointOrder: Ordering[String] =
+    Ordering.by((s: String) => s.codePoints.toArray.toSeq)(
+      Ordering.Implicits.seqOrdering[Seq, Int])
+
   private def refWords(texts: Seq[String]): Map[Vector[String], Long] =
     texts.flatMap(_.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty)
-      .groupBy(identity).map { case (w, g) =>
-        w.map(_.toString).toVector -> g.size.toLong
-      }
+      .groupBy(identity).map { case (w, g) => refSymbols(w) -> g.size.toLong }
 
   private def refMergeOnce(syms: Vector[String], a: String,
       b: String): Vector[String] = {
@@ -58,7 +68,8 @@ class BpeSpec extends AnyFunSuite {
       }
       if (pc.isEmpty) stop = true
       else {
-        val ((a, b), f) = pc.minBy { case ((a, b), f) => (-f, a, b) }
+        val ((a, b), f) = pc.minBy { case ((a, b), f) => (-f, a, b) }(
+          Ordering.Tuple3(Ordering.Long, codePointOrder, codePointOrder))
         merges += ((r, a, b, f))
         words = words.toSeq
           .map { case (s, c) => refMergeOnce(s, a, b) -> c }
@@ -72,7 +83,7 @@ class BpeSpec extends AnyFunSuite {
   private def refTokenCount(text: String,
       merges: Seq[(String, String)]): Long =
     text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).map { w =>
-      merges.foldLeft(w.map(_.toString).toVector) { case (s, (a, b)) =>
+      merges.foldLeft(refSymbols(w)) { case (s, (a, b)) =>
         refMergeOnce(s, a, b)
       }.length.toLong
     }.sum
@@ -119,6 +130,68 @@ class BpeSpec extends AnyFunSuite {
   test("early stop when no adjacent pairs remain") {
     val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
     assert(Bpe.train(docs, col("text"), numMerges = 5).isEmpty)
+  }
+
+  private def sf0001Docs() =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+  test("train runs to the early stop like the reference on the real corpus") {
+    // enough merges to reduce every word to one symbol: the driver
+    // learner's incremental pair counts are checked over every round
+    val docs = sf0001Docs()
+    val texts = docs.select("text").as[String].collect().toSeq
+    val engine = Bpe.train(docs, col("text"), numMerges = 10000)
+      .map(m => (m.rank, m.a, m.b, m.freq))
+    val (ref, words) = refTrain(texts, 10000)
+    assert(engine.size < 10000 && words.keys.forall(_.length == 1))
+    assert(engine === ref)
+  }
+
+  test("overlapping runs merge greedily left to right, as the reference does") {
+    val text = "aaaa aaa banana abab"
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+    val engine = Bpe.train(docs, col("text"), numMerges = 20)
+      .map(m => (m.rank, m.a, m.b, m.freq))
+    // (a,a) counts every overlapping occurrence, but merges 2 + 1
+    assert(engine.head === ((1, "a", "a", 5L)))
+    assert(engine === refTrain(Seq(text), 20)._1)
+  }
+
+  test("frequency ties order symbols by code point, as Spark sorts strings") {
+    // U+FF61 sorts before U+1F600 by code point (and by UTF-8 bytes),
+    // but after it by UTF-16 unit (0xFF61 > the surrogate 0xD83D)
+    val text = "\uFF61a \uFF61a \uD83D\uDE00a \uD83D\uDE00a"
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+    val m = Bpe.train(docs, col("text"), numMerges = 3)
+      .map(m => (m.rank, m.a, m.b, m.freq))
+    // the merges a per-merge Spark argmax (orderBy freq desc, a, b) learns
+    assert(m === Seq((1, "\uFF61", "a", 2L), (2, "\uD83D\uDE00", "a", 2L)))
+    assert(m === refTrain(Seq(text), 3)._1)
+  }
+
+  test("bpe_count splits words by code point, as the trainer's seed does") {
+    val text = "x\uD83D\uDE00y x\uD83D\uDE00y \uD83D\uDE00"
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+    val seed = docs.select(Bpe.tokenCount(col("text"), Nil)).as[Long].head()
+    assert(seed === 7L)
+    val merges = Bpe.train(docs, col("text"), numMerges = 1).map(m => (m.a, m.b))
+    assert(merges === Seq(("x", "\uD83D\uDE00")))
+    val n = docs.select(Bpe.tokenCount(col("text"), merges)).as[Long].head()
+    assert(n === refTokenCount(text, merges) && n === 5L)
+  }
+
+  test("a fit runs the same number of Spark jobs whatever its merge count") {
+    val docs = sf0001Docs()
+    val listener = new graft.Harness.RunListener(spark)
+    try {
+      def jobs(numMerges: Int): Int = {
+        listener.drain()
+        Bpe.train(docs, col("text"), numMerges)
+        listener.drain()._1.size
+      }
+      val two = jobs(2)
+      assert(two > 0 && jobs(12) === two)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("trainBatched with maxBatch=1 IS strict BPE (corpus equality)") {
