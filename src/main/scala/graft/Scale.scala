@@ -126,7 +126,7 @@ object Scale {
   val BucketCap = 1000
   val DfCap = 2000
 
-  /** Per-funnel SPILL ceilings (bytes), asserted at every scale point.
+  /** Default SPILL ceiling (bytes), asserted at every scale point.
     * After r10's three shape fixes (SHUFFLE_HASH verify joins across
     * the LSH family, the containment bucketFrac scrub, span grams
     * hashed to longs), EVERY funnel measured ZERO spill at every mult
@@ -136,54 +136,40 @@ object Scale {
     * spill sources were eliminated by design. r8's sparse-cosine
     * cliff for comparison: 97 GB. */
   val DefaultSpillBudget: Long = 4L << 30
-  val SpillBudgets: Map[String, Long] = Map(
-    "dedup_contain_pairs" -> (1L << 30),
-    "dedup_minhash_pairs" -> (1L << 30),
-    "dedup_snm_pairs" -> (1L << 30))
 
-  /** Claimed scaling ceilings: the notes below assert each funnel is
-    * (sub)linear or answer-shaped; a fitted time exponent above its
-    * claim CONTRADICTS the note sitting next to it, so the harness
+  /** Default SHUFFLE-volume exponent ceiling (r13 verdict item 1): at
+    * 100 TB shuffle bytes are the bill, so the gate bounds the one
+    * scale dimension it previously only measured. Linear funnels get
+    * 1.2 (measurement wobble over a truly linear law); anything above
+    * carries its measured root cause in its note, with `rows_out` per
+    * point in the artifact so answer-shaped growth is checkable, and
+    * the ceiling set just above the explained shape — a regression
+    * past it (e.g. the MIH ball re-inflating, a cap stopping to
+    * engage) still trips. */
+  val DefaultShuffleExp: Double = 1.2
+
+  /** One measured funnel: its build over the inflated corpus and the
+    * claims the artifact is checked against.
+    *
+    * `maxTimeExp` is the claimed time-exponent ceiling: the note
+    * asserts the funnel is (sub)linear or answer-shaped, so a fitted
+    * time exponent above it CONTRADICTS the note and the harness
     * refuses to commit the artifact (written to `<out>.rejected`
     * instead, exit 2). The r8/r9 lesson made rule: the artifact a
     * round cites must agree with its own analysis — a cold-
     * contaminated warm_runs=1 run produced t_exp 1.07–1.28 next to
-    * notes claiming those quadratics were gone. */
-  val MaxTimeExp: Map[String, Double] = Map(
-    "dedup_exact" -> 0.6, "dedup_minhash_pairs" -> 1.0,
-    "dedup_ngram_pairs" -> 0.9, "dedup_simhash_pairs" -> 0.9,
-    "dedup_contain_pairs" -> 1.0, "dedup_snm_pairs" -> 1.0,
-    "text_sparse_cosine_pairs" -> 0.9, "span_dup_spans" -> 1.0,
-    "split_leakfree" -> 1.0, "split_balanced" -> 1.0,
-    "graph_pagerank" -> 0.6, "graph_pagerank_hub" -> 0.6,
-    "cms_token_freq" -> 0.9, "url_robots_gate" -> 0.9,
-    "url_frontier_pipeline" -> 0.9, "embed_covariance" -> 0.9,
-    "decon_suite_bloom" -> 1.0, "dedup_confusable_fold" -> 0.9)
-
-  /** SHUFFLE-volume exponent ceilings (r13 verdict item 1): at 100 TB
-    * shuffle bytes are the bill, so the gate now bounds the one scale
-    * dimension it previously only measured. Linear funnels get the
-    * default 1.2 (measurement wobble over a truly linear law);
-    * anything above carries its measured root cause in
-    * [[FunnelNotes]], with `rows_out` per point in the artifact so
-    * answer-shaped growth is checkable, and the ceiling set just
-    * above the explained shape — a regression past it (e.g. the MIH
-    * ball re-inflating, a cap stopping to engage) still trips. */
-  val DefaultShuffleExp: Double = 1.2
-  val MaxShuffleExp: Map[String, Double] = Map(
-    // one-time broadcast→shuffle strategy flip inside the fitted span
-    // plus quadratic-with-small-constant answers (see note)
-    "dedup_simhash_pairs" -> 2.3,
-    // answers themselves fit exp ~2.0 with a tiny constant (see note)
-    "dedup_minhash_pairs" -> 1.8,
-    // map-side-combine efficiency decays toward raw-edge volume
-    "graph_pagerank" -> 1.45, "graph_pagerank_hub" -> 1.45,
-    // verify/posting streams track answer + candidate volume
-    "dedup_contain_pairs" -> 1.45, "span_dup_spans" -> 1.45,
-    // small-scale window-replication ramp (see note)
-    "dedup_snm_pairs" -> 1.45,
-    "text_sparse_cosine_pairs" -> 1.35,
-    "split_leakfree" -> 1.35, "split_balanced" -> 1.35)
+    * notes claiming those quadratics were gone. `maxShuffleExp` and
+    * `spillBudget` are the shuffle-exponent and spill ceilings above.
+    * `note` is the root cause of the funnel's measured scaling shape,
+    * emitted into SCALING.json next to the fitted exponents: is a
+    * super-linear shuffle exponent a defect, or the true answer
+    * volume / a small-scale edge? Written against the round-8/9
+    * measurements (judge regime: sbt -Xmx8g, local[32], mults
+    * 4/16/64). */
+  final case class Funnel(name: String, build: DataFrame => DataFrame,
+      maxTimeExp: Double, note: String,
+      maxShuffleExp: Double = DefaultShuffleExp,
+      spillBudget: Long = DefaultSpillBudget)
 
   /** Text re-expressed in 3-word-shingle space ("a_b_c d_e_f …"):
     * the token stream [[TextOps.hashedTfIdf]] then sees is Zipf-ish
@@ -201,8 +187,11 @@ object Scale {
   /** The measured funnel set — the engine's heaviest shapes, called
     * with the same parameters as their SparkEntry registrations
     * except the caps above. */
-  def funnels(spark: SparkSession): Seq[(String, DataFrame => DataFrame)] = Seq(
-    "dedup_exact" -> (d => Dedup.exact(d, col("text"), col("doc_id"))),
+  val funnels: Seq[Funnel] = Seq(
+    Funnel("dedup_exact", d => Dedup.exact(d, col("text"), col("doc_id")),
+      maxTimeExp = 0.6,
+      note = "single hash-groupBy on md5(text); shuffle rows " +
+        "= distinct texts, exponent 1.0 by construction."),
     // hotElemFrac engages the corpus-scale-shingle defense. TWO
     // quadratic drivers exist here, and both are stopword-scale
     // shingles: (1) the planted 38-word boilerplate tail puts 10% of
@@ -220,31 +209,130 @@ object Scale {
     // this corpus's true near-dup set is empty by design. The
     // clone-flood probe below still calls the funnel scrub-OFF to
     // prove the bucket cap engages on its own.
-    "dedup_minhash_pairs" -> (d => Dedup.minhashLSH(d, col("text"),
+    Funnel("dedup_minhash_pairs", d => Dedup.minhashLSH(d, col("text"),
       col("doc_id"), shingleK = 2, numHashes = 16, bands = 8,
       jaccardThreshold = 0.3, bucketCap = BucketCap,
-      hotElemFrac = 0.025)),
+      hotElemFrac = 0.025),
+      maxTimeExp = 1.0, spillBudget = 1L << 30,
+      // answers themselves fit exp ~2.0 with a tiny constant (see note)
+      maxShuffleExp = 1.8,
+      note = "hotElemFrac=0.025 scrubs shingles with " +
+        "df > 2.5pct of the corpus before signatures AND the exact " +
+        "verify, removing the two quadratic drivers measured in r8 " +
+        "(100.8s at m=64): the planted 38-word boilerplate tail (10pct " +
+        "of docs at pairwise J~0.35, above threshold - a Theta(n^2) " +
+        "TRUTH SET no engine can beat; with the scrub those pairs " +
+        "correctly vanish because their only shared identity is " +
+        "corpus-scale) and the ~900 base-vocab 2-shingles at df~3.5pct " +
+        "that give every random pair J~0.01, which the 8-band S-curve " +
+        "turns into a 0.08pct candidate rate. The clone-flood probe " +
+        "re-runs the funnel scrub-OFF to prove bucketCap engages alone. " +
+        "Verify joins are SHUFFLE_HASH (r10): signature/element arrays " +
+        "ride the O(n) build side, candidates stream unsorted - zero " +
+        "spill at every mult (was 6.6 GB at m=64 sorting cands+arrays). " +
+        "the s_exp ~1.4-1.5 tracks ANSWER volume (rows_out in this " +
+        "artifact, answer_exp ~1.9): the quadratic-with-tiny-constant " +
+        "bulk is same-base replica pairs - about 1pct of replica pairs " +
+        "land ABOVE the 0.3 threshold (perturbation variance over short " +
+        "docs), and at J~0.19 the 8-band S-curve admits ~25pct of " +
+        "replica pairs as candidates besides (r14 root-cause, " +
+        "re-measured each sweep) - plus, from r15, the planted twin " +
+        "block's LINEAR 100 x mult component of genuine near-dup " +
+        "answers (J ~ 0.9), the first truth-set pairs here that are " +
+        "matches rather than pathologies. Signature/blocking work stays " +
+        "linear (t_exp well under 1), so shuffle = linear signatures + " +
+        "answer/candidate volume; ceiling 1.8."),
     // same stopword judgment as the minhash funnel: char-3-grams of
     // the ~30-word base vocabulary are ALL corpus-scale, so the
     // random-background candidate rate is quadratic-with-tiny-constant
     // without the scrub (83.5M shuffle rows at m=64, 128-long
     // signature arrays riding the prefilter join)
-    "dedup_ngram_pairs" -> (d => Dedup.ngramJaccardPairs(d, col("text"),
+    Funnel("dedup_ngram_pairs", d => Dedup.ngramJaccardPairs(d, col("text"),
       col("doc_id"), n = 3, threshold = 0.8, bucketCap = BucketCap,
-      hotElemFrac = 0.025)),
-    "dedup_simhash_pairs" -> (d => Dedup.simhashPairs(d, col("text"),
-      col("doc_id"), maxHamming = 7, bucketCap = BucketCap)),
+      hotElemFrac = 0.025),
+      maxTimeExp = 0.9,
+      note = "same scrub judgment as minhash: char-3-" +
+        "grams of the ~30-word base vocabulary are ALL corpus-scale, so " +
+        "scrub-off the random-background candidate rate is quadratic " +
+        "with a tiny constant (r8: 83.5M shuffle rows, s_exp 1.74, " +
+        "128-long signature arrays riding the prefilter join). " +
+        "hotElemFrac=0.025 drops them from blocking and verify; the " +
+        "0.8-threshold truth set on this corpus is then the clone set " +
+        "plus (r15) the planted twin pairs' linear 100 x mult component."),
+    Funnel("dedup_simhash_pairs", d => Dedup.simhashPairs(d, col("text"),
+      col("doc_id"), maxHamming = 7, bucketCap = BucketCap),
+      maxTimeExp = 0.9,
+      // one-time broadcast→shuffle strategy flip inside the fitted span
+      // plus quadratic-with-small-constant answers (see note)
+      maxShuffleExp = 2.3,
+      note = "r14 root-cause (measured, rows_out in " +
+        "this artifact): the fitted s_exp ~2.1 has two drivers, neither " +
+        "a defect. (1) ANSWERS are quadratic-with-small-constant: the " +
+        "25pct word perturbation sinks shingle Jaccard below every LSH " +
+        "threshold but only jiggles simhash TIE BITS (bits whose token " +
+        "vote sum is ~0), so same-base replica fingerprints stay within " +
+        "hamming 7 - measured pairs 2.7M/714k/6.7M at m=4/16/64 (m=4 is " +
+        "flood-dominated: the suffixed clone block's per-chunk buckets " +
+        "ride UNDER the 1000 cap at 6k clones and emit 2.6M hamming<=7 " +
+        "pairs, then blow past the cap and drop to 0 from m=16 on; the " +
+        "m16->64 same-base growth fits exp ~1.6). Any correct engine " +
+        "emits these pairs. (2) A one-time broadcast->shuffle strategy " +
+        "flip sits INSIDE the fitted span: at m<=16 the radius-1 ball " +
+        "side broadcasts and the pair distinct is SHUFFLE-FREE - pairs " +
+        "inherit the ingest's doc_id hash partitioning and id_a IS " +
+        "doc_id, so ClusteredDistribution is already satisfied - " +
+        "leaving only linear bookkeeping shuffles (86k/278k rows); at " +
+        "m=64 the ball side (17 x capped chunk rows = 68n, LINEAR, " +
+        "18.33M rows) crosses the broadcast ceiling, the MIH join " +
+        "becomes a shuffle join on (chunk, ck) and the distinct then " +
+        "pays its own exchange (~answer volume). The 100 TB regime is " +
+        "always post-flip: shuffle = 68n ball + 4n exact + O(answers), " +
+        "4.3 shuffle rows per answer at m=64. Verify stays xor-popcount " +
+        "(t_exp ~0.1-0.3). Ceiling 2.3 spans the one-time flip; a MIH " +
+        "ball re-inflation or cap regression still trips it."),
     // bucketFrac engages the proportional fp cap: mid-df vocab-
     // background fingerprints (df in the hundreds on this ~30-word
     // corpus) each mint df² candidate mentions, and the shared-fp
     // COUNT aggregation over that stream was the funnel's entire
     // spill (r10 stage-level measurement: 4→38.6 GB, one stage).
     // df > 0.1% of the corpus is template judgment at every mult.
-    "dedup_contain_pairs" -> (d => Dedup.containmentPairs(d, col("text"),
-      col("doc_id"), bucketCap = BucketCap, bucketFrac = 0.0005)),
-    "dedup_snm_pairs" -> (d => Dedup.sortedNeighborhoodPairs(d,
+    Funnel("dedup_contain_pairs", d => Dedup.containmentPairs(d, col("text"),
+      col("doc_id"), bucketCap = BucketCap, bucketFrac = 0.0005),
+      maxTimeExp = 1.0, spillBudget = 1L << 30,
+      // verify/posting streams track answer + candidate volume
+      maxShuffleExp = 1.45,
+      note = "winnowed fingerprints of exact clones " +
+        "are identical, so clone-flood buckets exceed every cap and " +
+        "drop whole (the documented skew contract). r10 stage-level " +
+        "measurement localized the r9 spill (3.9-38.7 GB) NOT in the " +
+        "verify join but in the shared-fp COUNT aggregation: mid-df " +
+        "vocab-background fp buckets each mint df^2 pair mentions and " +
+        "the absolute bucketCap=1000 stops binding once the corpus " +
+        "outgrows it. Two fixes landed: verify joins are SHUFFLE_HASH " +
+        "with the O(n) gram side as build (wide rows stream, never " +
+        "sort), and bucketFrac=0.0005 applies the proportional " +
+        "template judgment (fp in >0.05pct of corpus carries no " +
+        "containment identity; ledgered). Measured after: 3.2/3.0/6.0s " +
+        "at m=4/16/64 with ZERO spill at every point."),
+    Funnel("dedup_snm_pairs", d => Dedup.sortedNeighborhoodPairs(d,
       col("text"), col("doc_id"), sortKeyLen = 24, window = 10,
-      shingleK = 2, threshold = 0.3)),
+      shingleK = 2, threshold = 0.3),
+      maxTimeExp = 1.0, spillBudget = 1L << 30,
+      // small-scale window-replication ramp (see note)
+      maxShuffleExp = 1.45,
+      note = "sorted-neighborhood replication is w x n = " +
+        "linear with w=10; the fitted s_exp ~1.6-1.9 is a small-scale " +
+        "edge: at m=4 most range partitions hold fewer than w rows so " +
+        "the replication stage emits ~2x rows, ramping to its " +
+        "asymptotic ~9x by m=64 (stage rows 416000 -> 3744000). Past " +
+        "that ramp the per-hop exponent falls back toward 1. The " +
+        "window probe join is SHUFFLE_HASH on the O(n) ranked side " +
+        "(r10): the 9x array-bearing probe stream is never sorted - " +
+        "zero spill at every mult (was 6.1 GB at m=64 under SMJ). " +
+        "Rank buckets are sampled (key, id) range cuts (r12, one extra " +
+        "pruned key-scan): balanced under ANY key-prefix skew - the " +
+        "snm_prefix_skew pathology drives 90pct shared-prefix keys and " +
+        "records the max rank-bucket share."),
     // Honest-feature AllPairs at the near-unique-evidence posture
     // (r14 verdict item 2 closed): the old 1024-bucket hashing made
     // EVERY posting list stopword-scale (df 2.8-4.5% of the corpus),
@@ -260,27 +348,88 @@ object Scale {
     // m=4 sit in ≤3-doc posting lists, which bound candidate volume
     // at 3 rows per feature — LINEAR at every mult by construction,
     // answers = the 100·mult twins (cos ≈ 0.92).
-    "text_sparse_cosine_pairs" -> (d => Similarity.sparseCosinePairs(
+    Funnel("text_sparse_cosine_pairs", d => Similarity.sparseCosinePairs(
       TextOps.hashedTfIdf(d, shingleText(col("text")), col("doc_id"),
         buckets = 1 << 30),
-      threshold = 0.85, dfCap = 3)),
-    "span_dup_spans" -> (d => Spans.duplicatedSpans(d, col("text"),
-      col("doc_id"), n = 10)),
-    "split_leakfree" -> (d => Curate.leakSafeSplit(d, col("text"),
-      col("doc_id"), evalFrac = 0.2, seed = 7, bucketCap = BucketCap)),
-    "split_balanced" -> (d => Curate.leakSafeSplitBalanced(d, col("text"),
-      col("doc_id"), evalFrac = 0.2, seed = 7, bucketCap = BucketCap)),
-    "graph_pagerank" -> { d =>
+      threshold = 0.85, dfCap = 3),
+      maxTimeExp = 0.9,
+      maxShuffleExp = 1.35,
+      note = "honest-feature AllPairs with a " +
+        "real truth set (r14 verdict item 2: the old 1024-bucket " +
+        "hashing made every posting list stopword-scale, the dfFrac " +
+        "scrub dropped all of them, and rows_out measured [0,0,0] - " +
+        "shuffle-per-answer was undefined exactly where the gate needed " +
+        "it). Shingles now hash into 2^30 buckets (collision-free " +
+        "w.h.p.) and the absolute df <= 3 cap admits only near-unique " +
+        "evidence: posting lists are <= 3 docs long, so candidate " +
+        "volume is bounded at 3 rows per feature - linear at every " +
+        "mult BY CONSTRUCTION, immune to the corpus' replica-shared " +
+        "shingles (df ~ 0.42 x mult, a mult^2 candidate bomb if " +
+        "admitted; they cross the cap by m=16 and the m=4 stragglers " +
+        "sit in <= 3-doc lists). Answers = the planted twin pairs " +
+        "(100 x mult at cos ~ 0.92, constant df = 2 at every mult), " +
+        "so answer_exp is a measured ~1.0 rather than null. The r8 " +
+        "dfCap cliff (102.7s / 97 GB spill from just-under-cap lists) " +
+        "cannot recur: no list exceeds 3 rows."),
+    Funnel("span_dup_spans", d => Spans.duplicatedSpans(d, col("text"),
+      col("doc_id"), n = 10),
+      maxTimeExp = 1.0,
+      // verify/posting streams track answer + candidate volume
+      maxShuffleExp = 1.45,
+      note = "shuffle is the 10-gram posting groupBy - " +
+        "linear in total grams (s_exp ~1.26 tracks docs x doc length); " +
+        "the salted hot-gram pre-pass bounds the boilerplate key skew " +
+        "(probe: span found in 31999/32000 planted docs). Grams travel " +
+        "as xxhash64 longs through every shuffle (r10): the 70-byte " +
+        "gram string was the sort payload - zero spill at every mult " +
+        "(was 8.8 GB at m=64), shuffle bytes ~2.6x down."),
+    Funnel("split_leakfree", d => Curate.leakSafeSplit(d, col("text"),
+      col("doc_id"), evalFrac = 0.2, seed = 7, bucketCap = BucketCap),
+      maxTimeExp = 1.0,
+      maxShuffleExp = 1.35,
+      note = "near-dup edge generation + iterative CC; " +
+        "s_exp ~1.33 is edge volume growing slightly super-linearly " +
+        "with the flood (capped per bucket) times a log-n CC round " +
+        "count; each round is a linear shuffle."),
+    Funnel("split_balanced", d => Curate.leakSafeSplitBalanced(d, col("text"),
+      col("doc_id"), evalFrac = 0.2, seed = 7, bucketCap = BucketCap),
+      maxTimeExp = 1.0,
+      maxShuffleExp = 1.35,
+      note = "same funnel as split_leakfree plus the " +
+        "greedy bin-assignment pass over cluster summaries; inherits " +
+        "its s_exp ~1.31 for the same reasons."),
+    Funnel("graph_pagerank", { d =>
       val n = d.count()
       Graph.pageRank(Graph.linkGraph(d, col("doc_id"), nNodes = n),
         d.select(col("doc_id")), col("doc_id"), iters = 3)
     },
-    "graph_pagerank_hub" -> { d =>
+      maxTimeExp = 0.6,
+      // map-side-combine efficiency decays toward raw-edge volume
+      maxShuffleExp = 1.45,
+      note = "3 iterations x linear edge shuffle (edges = " +
+        "3n by construction, parallel edges collapsed). s_exp ~1.28 is " +
+        "map-side-combine efficiency decaying, not edge growth: the " +
+        "contribution aggregation's partial combine dedups per-partition " +
+        "(dst, sum) pairs, and at small n a partition's ~3n/32 " +
+        "contributions collide on few distinct dst keys (heavy " +
+        "reduction) while at large n dst collisions within a partition " +
+        "vanish and post-combine rows approach the raw edge count - " +
+        "bounded by edges, so the exponent decays toward 1.0 as the " +
+        "combine saturates; ceiling 1.45."),
+    Funnel("graph_pagerank_hub", { d =>
       val n = d.count()
       Graph.pageRank(hubEdges(d, n), d.select(col("doc_id")),
         col("doc_id"), iters = 3)
     },
-    "cms_token_freq" -> { d =>
+      maxTimeExp = 0.6,
+      // map-side-combine efficiency decays toward raw-edge volume
+      maxShuffleExp = 1.45,
+      note = "as graph_pagerank with a planted " +
+        "celebrity holding 25pct of in-edges; contribution aggregation " +
+        "is a partial-agg (map-side combine) so the hot key never " +
+        "concentrates on one reducer - t_exp ~0.2 and the hub ranks " +
+        "top (probe)."),
+    Funnel("cms_token_freq", { d =>
       val toks = d.select(explode(Dedup.tokens(col("text"))).as("token"))
       val sketch = Sketch.countMinFit(toks, col("token"), depth = 4,
         width = 2048L, seed = 2L)
@@ -289,6 +438,10 @@ object Scale {
       Sketch.countMinEstimate(top, col("token"), sketch, depth = 4,
         width = 2048L, seed = 2L)
     },
+      maxTimeExp = 0.9,
+      note = "sketch size is fixed (4x2048), so the " +
+        "merge shuffle is constant-width partial grids; s_exp ~0.78 " +
+        "sublinear, time is the linear token scan."),
     // the crawl-frontier gate at corpus scale: one URL per doc over
     // 100 hosts, each host's policy carrying a mid-rule wildcard, an
     // anchored wildcard Allow and a short literal Disallow, so every
@@ -297,7 +450,7 @@ object Scale {
     // cost is the scan projection (host/path parse + percent-
     // normalization kernel), the host-keyed rule probe, and one
     // max_by aggregation keyed by URL id.
-    "url_robots_gate" -> { d =>
+    Funnel("url_robots_gate", { d =>
       val urls = d.select(col("doc_id"),
         concat(lit("https://h"), pmod(col("doc_id"), lit(100)).cast("string"),
           lit(".example/p/"), pmod(col("doc_id"), lit(1000)).cast("string"),
@@ -310,6 +463,14 @@ object Scale {
       Urls.robotsVerdicts(urls, col("url"), col("doc_id"), robots,
         col("host"), col("robots_txt"), "graftbot")
     },
+      maxTimeExp = 0.9,
+      note = "per-URL projection work (host/path parse, " +
+        "percent normalization, LIKE probe against each host's 3 rules) " +
+        "plus one max_by agg keyed by URL id: shuffle rows = matched " +
+        "(url, rule) rows <= 3n, time linear in the URL scan. The rule " +
+        "table is O(hosts x rules) and broadcasts; no pathology is " +
+        "planted because the operator has no data-dependent blowup - " +
+        "every URL probes a BOUNDED per-host rule set."),
     // the FULL crawl loop at corpus scale (url_frontier_next's shape
     // on minted pages): per-doc HTML with 8 anchors — extraction +
     // RFC 3986 resolution are kernel calls in the scan projection —
@@ -319,7 +480,7 @@ object Scale {
     // or a shuffle on a key whose cardinality the pipeline itself
     // bounds; no pathology planted because nothing here has a
     // data-dependent blowup.
-    "url_frontier_pipeline" -> { d =>
+    Funnel("url_frontier_pipeline", { d =>
       def pm(n: Int): Column = pmod(col("doc_id"), lit(n)).cast("string")
       val pages = d.select(col("doc_id"),
         concat(lit("https://h"), pm(100), lit(".example/a/b/page"),
@@ -354,6 +515,14 @@ object Scale {
       Urls.crawlSchedule(gated, col("url"), robots,
         col("host"), col("robots_txt"), "graftbot")
     },
+      maxTimeExp = 0.9,
+      note = "extraction + RFC 3986 resolution are " +
+        "fused kernel calls in the scan projection (8 anchors/page); " +
+        "canonical dedup collapses 8n raw links to a bounded combo set " +
+        "with map-side partial aggregation, the crawled anti-join and " +
+        "robots probe are key-bounded, and the politeness window " +
+        "shuffles once on host (=the join key, reused). Time linear in " +
+        "the page scan; shuffle rows bounded by distinct URLs."),
     // the PCA moment aggregation at corpus scale: 64-dim vectors
     // minted by cheap deterministic arithmetic in the scan (no md5 in
     // the hot loop), folded by the ONE CovAccum aggregate whose
@@ -361,20 +530,32 @@ object Scale {
     // shuffle carries one buffer per partition regardless of corpus
     // size, so shuffle rows/bytes must stay ~constant while time
     // tracks the linear scan + 2080 multiply-adds per row
-    "embed_covariance" -> { d =>
+    Funnel("embed_covariance", { d =>
       val vecs = d.select(transform(sequence(lit(0), lit(63)), i =>
         (pmod(col("doc_id") * (i.cast("long") * lit(2654435761L) +
             lit(40503L)) + i.cast("long"), lit(1000003L))
           .cast("double") / lit(1000003.0)).cast("float")).as("embedding"))
       Pca.covariance(vecs, col("embedding"), dims = 64)
     },
+      maxTimeExp = 0.9,
+      note = "ONE CovAccum aggregation: each task folds " +
+        "its rows into a fixed d + d(d+1)/2-double moment buffer " +
+        "(~17 KB at d=64), so the shuffle is one buffer per partition " +
+        "- constant rows/bytes at every mult - and time is the linear " +
+        "scan (vector minting + 2080 multiply-adds per row). The " +
+        "explode-(i,j)-groupBy alternative this replaces ships d^2/2 " +
+        "rows per input row. The one-small-buffer claim is d-bounded, " +
+        "not free: at d=1024 a partial is ~4.2 MB (still fine), at " +
+        "d=4096 ~67 MB and the driver Jacobi is O(d^3) - which is why " +
+        "dims > 1024 is REFUSED with a named error (Pca.MaxDims, r14) " +
+        "rather than silently stalling."),
     // suite decontamination, bloom-gated, at corpus scale: the suite
     // is a FIXED base-doc slice (two eval sets over 2000 docs) while
     // the train side grows with mult — the 100 TB claim under test is
     // that the train gram stream's cost is one linear scan + a
     // map-side broadcast bit-test BEFORE its distinct shuffle, with
     // the bloom fit itself noise (suite-sized, constant)
-    "decon_suite_bloom" -> { d =>
+    Funnel("decon_suite_bloom", { d =>
       val evals = d.filter(col("doc_id") < 2000 &&
           pmod(col("doc_id"), lit(2)) === 0)
         .select(lit("holdout").as("eval_set"), col("doc_id"), col("text"))
@@ -385,14 +566,29 @@ object Scale {
         col("doc_id"), col("eval_set"), n = 3, mBits = 1L << 18, k = 4,
         seed = 11L)
     },
+      maxTimeExp = 1.0,
+      note = "the suite (eval sets) is FIXED while " +
+        "train grows: bloom fit is suite-sized (constant), and the " +
+        "train gram stream pays a linear scan + map-side broadcast " +
+        "bit-test BEFORE the distinct shuffle, so gated-gram shuffle " +
+        "rows track true suite-gram hits (~constant) plus the bloom " +
+        "fp rate, not train volume - the SURVEY 16.21 claim that the " +
+        "gate's payoff appears at scale, now measured."),
     // homoglyph-robust exact dedup at corpus scale: the confusable
     // fold is a per-codepoint codegen kernel in the scan projection
     // ahead of the same md5 hash-groupBy as dedup_exact — one linear
     // pass + one shuffle whose rows = distinct folded texts
-    "dedup_confusable_fold" -> (d => Dedup.exact(
+    Funnel("dedup_confusable_fold", d => Dedup.exact(
       d.select(col("doc_id"), graft.functions.GraftFunctions
         .confusableFold(col("text")).as("text")),
-      col("text"), col("doc_id"))))
+      col("text"), col("doc_id")),
+      maxTimeExp = 0.9,
+      note = "confusable fold is a per-codepoint " +
+        "kernel in the scan projection ahead of dedup_exact's " +
+        "md5 hash-groupBy: one linear pass, one shuffle with rows = " +
+        "distinct folded texts - same shape/exponent class as " +
+        "dedup_exact plus the fold's linear scan cost."),
+  )
 
   /** Link graph plus the planted celebrity: every 4th node also
     * links to node 0, so one reduce key in PageRank's contribution
@@ -403,187 +599,6 @@ object Scale {
           lit(0L).as("dst"))
         .filter(col("src") % 4 === 0 && col("src") =!= 0))
       .distinct()
-
-  /** Root-cause notes for each funnel's measured scaling shape,
-    * emitted into SCALING.json next to the fitted exponents. The
-    * question each answers: is a super-linear shuffle exponent a
-    * defect, or the true answer volume / a small-scale edge? Written
-    * against the round-8/9 measurements (judge regime: sbt -Xmx8g,
-    * local[32], mults 4/16/64). */
-  private val FunnelNotes: Map[String, String] = Map(
-    "dedup_exact" -> ("single hash-groupBy on md5(text); shuffle rows " +
-      "= distinct texts, exponent 1.0 by construction."),
-    "dedup_minhash_pairs" -> ("hotElemFrac=0.025 scrubs shingles with " +
-      "df > 2.5pct of the corpus before signatures AND the exact " +
-      "verify, removing the two quadratic drivers measured in r8 " +
-      "(100.8s at m=64): the planted 38-word boilerplate tail (10pct " +
-      "of docs at pairwise J~0.35, above threshold - a Theta(n^2) " +
-      "TRUTH SET no engine can beat; with the scrub those pairs " +
-      "correctly vanish because their only shared identity is " +
-      "corpus-scale) and the ~900 base-vocab 2-shingles at df~3.5pct " +
-      "that give every random pair J~0.01, which the 8-band S-curve " +
-      "turns into a 0.08pct candidate rate. The clone-flood probe " +
-      "re-runs the funnel scrub-OFF to prove bucketCap engages alone. " +
-      "Verify joins are SHUFFLE_HASH (r10): signature/element arrays " +
-      "ride the O(n) build side, candidates stream unsorted - zero " +
-      "spill at every mult (was 6.6 GB at m=64 sorting cands+arrays). " +
-      "the s_exp ~1.4-1.5 tracks ANSWER volume (rows_out in this " +
-      "artifact, answer_exp ~1.9): the quadratic-with-tiny-constant " +
-      "bulk is same-base replica pairs - about 1pct of replica pairs " +
-      "land ABOVE the 0.3 threshold (perturbation variance over short " +
-      "docs), and at J~0.19 the 8-band S-curve admits ~25pct of " +
-      "replica pairs as candidates besides (r14 root-cause, " +
-      "re-measured each sweep) - plus, from r15, the planted twin " +
-      "block's LINEAR 100 x mult component of genuine near-dup " +
-      "answers (J ~ 0.9), the first truth-set pairs here that are " +
-      "matches rather than pathologies. Signature/blocking work stays " +
-      "linear (t_exp well under 1), so shuffle = linear signatures + " +
-      "answer/candidate volume; ceiling 1.8."),
-    "dedup_ngram_pairs" -> ("same scrub judgment as minhash: char-3-" +
-      "grams of the ~30-word base vocabulary are ALL corpus-scale, so " +
-      "scrub-off the random-background candidate rate is quadratic " +
-      "with a tiny constant (r8: 83.5M shuffle rows, s_exp 1.74, " +
-      "128-long signature arrays riding the prefilter join). " +
-      "hotElemFrac=0.025 drops them from blocking and verify; the " +
-      "0.8-threshold truth set on this corpus is then the clone set " +
-      "plus (r15) the planted twin pairs' linear 100 x mult component."),
-    "dedup_simhash_pairs" -> ("r14 root-cause (measured, rows_out in " +
-      "this artifact): the fitted s_exp ~2.1 has two drivers, neither " +
-      "a defect. (1) ANSWERS are quadratic-with-small-constant: the " +
-      "25pct word perturbation sinks shingle Jaccard below every LSH " +
-      "threshold but only jiggles simhash TIE BITS (bits whose token " +
-      "vote sum is ~0), so same-base replica fingerprints stay within " +
-      "hamming 7 - measured pairs 2.7M/714k/6.7M at m=4/16/64 (m=4 is " +
-      "flood-dominated: the suffixed clone block's per-chunk buckets " +
-      "ride UNDER the 1000 cap at 6k clones and emit 2.6M hamming<=7 " +
-      "pairs, then blow past the cap and drop to 0 from m=16 on; the " +
-      "m16->64 same-base growth fits exp ~1.6). Any correct engine " +
-      "emits these pairs. (2) A one-time broadcast->shuffle strategy " +
-      "flip sits INSIDE the fitted span: at m<=16 the radius-1 ball " +
-      "side broadcasts and the pair distinct is SHUFFLE-FREE - pairs " +
-      "inherit the ingest's doc_id hash partitioning and id_a IS " +
-      "doc_id, so ClusteredDistribution is already satisfied - " +
-      "leaving only linear bookkeeping shuffles (86k/278k rows); at " +
-      "m=64 the ball side (17 x capped chunk rows = 68n, LINEAR, " +
-      "18.33M rows) crosses the broadcast ceiling, the MIH join " +
-      "becomes a shuffle join on (chunk, ck) and the distinct then " +
-      "pays its own exchange (~answer volume). The 100 TB regime is " +
-      "always post-flip: shuffle = 68n ball + 4n exact + O(answers), " +
-      "4.3 shuffle rows per answer at m=64. Verify stays xor-popcount " +
-      "(t_exp ~0.1-0.3). Ceiling 2.3 spans the one-time flip; a MIH " +
-      "ball re-inflation or cap regression still trips it."),
-    "dedup_contain_pairs" -> ("winnowed fingerprints of exact clones " +
-      "are identical, so clone-flood buckets exceed every cap and " +
-      "drop whole (the documented skew contract). r10 stage-level " +
-      "measurement localized the r9 spill (3.9-38.7 GB) NOT in the " +
-      "verify join but in the shared-fp COUNT aggregation: mid-df " +
-      "vocab-background fp buckets each mint df^2 pair mentions and " +
-      "the absolute bucketCap=1000 stops binding once the corpus " +
-      "outgrows it. Two fixes landed: verify joins are SHUFFLE_HASH " +
-      "with the O(n) gram side as build (wide rows stream, never " +
-      "sort), and bucketFrac=0.0005 applies the proportional " +
-      "template judgment (fp in >0.05pct of corpus carries no " +
-      "containment identity; ledgered). Measured after: 3.2/3.0/6.0s " +
-      "at m=4/16/64 with ZERO spill at every point."),
-    "dedup_snm_pairs" -> ("sorted-neighborhood replication is w x n = " +
-      "linear with w=10; the fitted s_exp ~1.6-1.9 is a small-scale " +
-      "edge: at m=4 most range partitions hold fewer than w rows so " +
-      "the replication stage emits ~2x rows, ramping to its " +
-      "asymptotic ~9x by m=64 (stage rows 416000 -> 3744000). Past " +
-      "that ramp the per-hop exponent falls back toward 1. The " +
-      "window probe join is SHUFFLE_HASH on the O(n) ranked side " +
-      "(r10): the 9x array-bearing probe stream is never sorted - " +
-      "zero spill at every mult (was 6.1 GB at m=64 under SMJ). " +
-      "Rank buckets are sampled (key, id) range cuts (r12, one extra " +
-      "pruned key-scan): balanced under ANY key-prefix skew - the " +
-      "snm_prefix_skew pathology drives 90pct shared-prefix keys and " +
-      "records the max rank-bucket share."),
-    "text_sparse_cosine_pairs" -> ("honest-feature AllPairs with a " +
-      "real truth set (r14 verdict item 2: the old 1024-bucket " +
-      "hashing made every posting list stopword-scale, the dfFrac " +
-      "scrub dropped all of them, and rows_out measured [0,0,0] - " +
-      "shuffle-per-answer was undefined exactly where the gate needed " +
-      "it). Shingles now hash into 2^30 buckets (collision-free " +
-      "w.h.p.) and the absolute df <= 3 cap admits only near-unique " +
-      "evidence: posting lists are <= 3 docs long, so candidate " +
-      "volume is bounded at 3 rows per feature - linear at every " +
-      "mult BY CONSTRUCTION, immune to the corpus' replica-shared " +
-      "shingles (df ~ 0.42 x mult, a mult^2 candidate bomb if " +
-      "admitted; they cross the cap by m=16 and the m=4 stragglers " +
-      "sit in <= 3-doc lists). Answers = the planted twin pairs " +
-      "(100 x mult at cos ~ 0.92, constant df = 2 at every mult), " +
-      "so answer_exp is a measured ~1.0 rather than null. The r8 " +
-      "dfCap cliff (102.7s / 97 GB spill from just-under-cap lists) " +
-      "cannot recur: no list exceeds 3 rows."),
-    "span_dup_spans" -> ("shuffle is the 10-gram posting groupBy - " +
-      "linear in total grams (s_exp ~1.26 tracks docs x doc length); " +
-      "the salted hot-gram pre-pass bounds the boilerplate key skew " +
-      "(probe: span found in 31999/32000 planted docs). Grams travel " +
-      "as xxhash64 longs through every shuffle (r10): the 70-byte " +
-      "gram string was the sort payload - zero spill at every mult " +
-      "(was 8.8 GB at m=64), shuffle bytes ~2.6x down."),
-    "split_leakfree" -> ("near-dup edge generation + iterative CC; " +
-      "s_exp ~1.33 is edge volume growing slightly super-linearly " +
-      "with the flood (capped per bucket) times a log-n CC round " +
-      "count; each round is a linear shuffle."),
-    "split_balanced" -> ("same funnel as split_leakfree plus the " +
-      "greedy bin-assignment pass over cluster summaries; inherits " +
-      "its s_exp ~1.31 for the same reasons."),
-    "graph_pagerank" -> ("3 iterations x linear edge shuffle (edges = " +
-      "3n by construction, parallel edges collapsed). s_exp ~1.28 is " +
-      "map-side-combine efficiency decaying, not edge growth: the " +
-      "contribution aggregation's partial combine dedups per-partition " +
-      "(dst, sum) pairs, and at small n a partition's ~3n/32 " +
-      "contributions collide on few distinct dst keys (heavy " +
-      "reduction) while at large n dst collisions within a partition " +
-      "vanish and post-combine rows approach the raw edge count - " +
-      "bounded by edges, so the exponent decays toward 1.0 as the " +
-      "combine saturates; ceiling 1.45."),
-    "graph_pagerank_hub" -> ("as graph_pagerank with a planted " +
-      "celebrity holding 25pct of in-edges; contribution aggregation " +
-      "is a partial-agg (map-side combine) so the hot key never " +
-      "concentrates on one reducer - t_exp ~0.2 and the hub ranks " +
-      "top (probe)."),
-    "cms_token_freq" -> ("sketch size is fixed (4x2048), so the " +
-      "merge shuffle is constant-width partial grids; s_exp ~0.78 " +
-      "sublinear, time is the linear token scan."),
-    "url_robots_gate" -> ("per-URL projection work (host/path parse, " +
-      "percent normalization, LIKE probe against each host's 3 rules) " +
-      "plus one max_by agg keyed by URL id: shuffle rows = matched " +
-      "(url, rule) rows <= 3n, time linear in the URL scan. The rule " +
-      "table is O(hosts x rules) and broadcasts; no pathology is " +
-      "planted because the operator has no data-dependent blowup - " +
-      "every URL probes a BOUNDED per-host rule set."),
-    "url_frontier_pipeline" -> ("extraction + RFC 3986 resolution are " +
-      "fused kernel calls in the scan projection (8 anchors/page); " +
-      "canonical dedup collapses 8n raw links to a bounded combo set " +
-      "with map-side partial aggregation, the crawled anti-join and " +
-      "robots probe are key-bounded, and the politeness window " +
-      "shuffles once on host (=the join key, reused). Time linear in " +
-      "the page scan; shuffle rows bounded by distinct URLs."),
-    "embed_covariance" -> ("ONE CovAccum aggregation: each task folds " +
-      "its rows into a fixed d + d(d+1)/2-double moment buffer " +
-      "(~17 KB at d=64), so the shuffle is one buffer per partition " +
-      "- constant rows/bytes at every mult - and time is the linear " +
-      "scan (vector minting + 2080 multiply-adds per row). The " +
-      "explode-(i,j)-groupBy alternative this replaces ships d^2/2 " +
-      "rows per input row. The one-small-buffer claim is d-bounded, " +
-      "not free: at d=1024 a partial is ~4.2 MB (still fine), at " +
-      "d=4096 ~67 MB and the driver Jacobi is O(d^3) - which is why " +
-      "dims > 1024 is REFUSED with a named error (Pca.MaxDims, r14) " +
-      "rather than silently stalling."),
-    "decon_suite_bloom" -> ("the suite (eval sets) is FIXED while " +
-      "train grows: bloom fit is suite-sized (constant), and the " +
-      "train gram stream pays a linear scan + map-side broadcast " +
-      "bit-test BEFORE the distinct shuffle, so gated-gram shuffle " +
-      "rows track true suite-gram hits (~constant) plus the bloom " +
-      "fp rate, not train volume - the SURVEY 16.21 claim that the " +
-      "gate's payoff appears at scale, now measured."),
-    "dedup_confusable_fold" -> ("confusable fold is a per-codepoint " +
-      "kernel in the scan projection ahead of dedup_exact's " +
-      "md5 hash-groupBy: one linear pass, one shuffle with rows = " +
-      "distinct folded texts - same shape/exponent class as " +
-      "dedup_exact plus the fold's linear scan cost."))
 
   /** One funnel at one mult: the fastest warm run's seconds and stages,
     * the ledger entries of all its runs, and its answer volume. */
@@ -608,7 +623,7 @@ object Scale {
 
   /** The root-cause note of each measured funnel that has one. */
   private[graft] def notesJson(names: Seq[String],
-      notes: Map[String, String] = FunnelNotes): JObject =
+      notes: Map[String, String] = funnels.map(f => f.name -> f.note).toMap): JObject =
     JObject(names.flatMap(n => notes.get(n).map(v => n -> JString(v))).toList)
 
   def main(args: Array[String]): Unit = {
@@ -635,16 +650,17 @@ object Scale {
       m -> dir
     }
 
-    val sel = funnels(spark).filter { case (n, _) => Harness.only.forall(_.contains(n)) }
+    val sel = funnels.filter(f => Harness.only.forall(_.contains(f.name)))
     // per mult: query -> its fastest warm run
     val points = dirs.map { case (m, dir) =>
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val nDocs = docs.count()
       System.err.println(s"[scale] ===== mult=$m docs=$nDocs =====")
-      val qres = sel.map { case (name, fn) =>
+      val qres = sel.map { funnel =>
+        val name = funnel.name
         def once(): (Double, Seq[StageRow]) = {
           listener.drain()
-          val (sec, _, _) = Harness.noopRun(spark)(fn(docs))
+          val (sec, _, _) = Harness.noopRun(spark)(funnel.build(docs))
           (sec, listener.drain()._2)
         }
         val ledgerMark = Ledger.mark()
@@ -658,7 +674,7 @@ object Scale {
         // item 1): it goes into the artifact so a super-linear
         // shuffle exponent is checkable against measured answer
         // growth instead of asserted in prose.
-        val rowsOut = { Harness.hygiene(spark); fn(docs).count() }
+        val rowsOut = { Harness.hygiene(spark); funnel.build(docs).count() }
         // warm = MIN of N runs (default 2): the same contamination
         // argument as Bench (SURVEY §13.1) — GC/JIT noise is strictly
         // additive, and a single warm sample measured up to 4× off on
@@ -737,7 +753,8 @@ object Scale {
       .getLong(0).toDouble / snmSkewN
 
     // log-log exponents between first and last scale point
-    val names = sel.map(_._1)
+    val names = sel.map(_.name)
+    val byName = sel.map(f => f.name -> f).toMap
     def series(name: String): Seq[Run] = points.map(_._3.find(_._1 == name).get._2)
     def exp(v1: Double, vN: Double): Double =
       if (v1 > 0 && vN > 0) math.log(vN / v1) / math.log(mults.last.toDouble / mults.head)
@@ -757,19 +774,18 @@ object Scale {
     // `<out>.rejected`) so the evidence of the violation survives.
     val spillViolations = points.flatMap { case (m, _, qr) =>
       qr.collect {
-        case (n, r) if r.spillBytes > SpillBudgets.getOrElse(n, DefaultSpillBudget) =>
+        case (n, r) if r.spillBytes > byName(n).spillBudget =>
           f"$n@m$m: spilled ${r.spillBytes / 1e9}%.1f GB > budget"
       }
     }
     val expViolations = fits.collect {
-      case (n, (te, _, _)) if !te.isNaN && te > MaxTimeExp.getOrElse(n, 1.5) =>
-        f"$n: time_exp $te%.2f > claimed ${MaxTimeExp.getOrElse(n, 1.5)}%.2f"
+      case (n, (te, _, _)) if !te.isNaN && te > byName(n).maxTimeExp =>
+        f"$n: time_exp $te%.2f > claimed ${byName(n).maxTimeExp}%.2f"
     }
     val shufViolations = fits.collect {
       case (n, (_, se, _))
-          if !se.isNaN && se > MaxShuffleExp.getOrElse(n, DefaultShuffleExp) =>
-        f"$n: shuffle_exp $se%.2f > ceiling " +
-          f"${MaxShuffleExp.getOrElse(n, DefaultShuffleExp)}%.2f"
+          if !se.isNaN && se > byName(n).maxShuffleExp =>
+        f"$n: shuffle_exp $se%.2f > ceiling ${byName(n).maxShuffleExp}%.2f"
     }
     val violations = spillViolations ++ expViolations ++ shufViolations
 
@@ -784,7 +800,7 @@ object Scale {
       }.toList),
       "fits" -> JObject(fits.map { case (n, (te, se, ae)) =>
         n -> JObject("time_exp" -> n4(te), "shuffle_exp" -> n4(se), "answer_exp" -> n4(ae),
-          "shuffle_ceiling" -> n4(MaxShuffleExp.getOrElse(n, DefaultShuffleExp)),
+          "shuffle_ceiling" -> n4(byName(n).maxShuffleExp),
           "rows_out" -> longs(series(n).map(_.rowsOut)),
           "secs" -> JArray(series(n).map(r => n4(r.sec)).toList))
       }.toList),
@@ -801,8 +817,7 @@ object Scale {
         "snm_prefix_skew" -> JObject("docs" -> JInt(snmSkewN), "skew_share" -> JDouble(0.9),
           "pairs" -> JInt(snmSkewPairs), "sec" -> n4(snmSkewSec), "rank_buckets" -> JInt(256),
           "max_rank_bucket_share" -> n4(snmMaxShare), "balanced" -> JBool(snmMaxShare < 0.05))),
-      "spill_budgets" -> JObject(sel.map { case (n, _) =>
-        n -> JInt(BigInt(SpillBudgets.getOrElse(n, DefaultSpillBudget))) }.toList),
+      "spill_budgets" -> JObject(sel.map(f => f.name -> JInt(BigInt(f.spillBudget))).toList),
       "violations" -> JArray(violations.map(JString(_)).toList),
       "ledger" -> Harness.ledgerSummaryJson(Ledger.summary())))
     val target =

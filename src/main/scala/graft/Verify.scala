@@ -14,16 +14,24 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(SparkEntry.oracleSql))
     spark.stop()
+    // the last stderr line says whether every query dumped, so a
+    // failure logged mid-run cannot pass unnoticed
+    System.err.println(
+      if (failed.isEmpty) s"[verify] dumped ${selected.size}/${selected.size}"
+      else s"[verify] FAILED: ${failed.mkString(", ")}")
   }
 
   /** The oracle map as one JSON object, query name -> DuckDB SQL. */

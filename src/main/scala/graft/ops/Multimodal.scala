@@ -511,12 +511,6 @@ object Multimodal {
     Dedup.buildFingerprintIndex(
       audioFingerprint(decodeAudioMixStage(media)), path)
 
-  /** Append an increment's audio fingerprints (idempotent on doc_id). */
-  def appendToAudioFpIndex(spark: SparkSession, indexPath: String,
-      media: DataFrame): Unit =
-    Dedup.appendToFingerprintIndex(spark, indexPath,
-      audioFingerprint(decodeAudioMixStage(media)))
-
   /** Near-dup audio pairs between an increment and the stored
     * fingerprint index — [[audioFingerprintPairs]]' incremental twin:
     * the increment decodes its own payloads; stored docs join at 16

@@ -209,17 +209,11 @@ object TextOps {
       (st.getField("n_hits") > 0).as("blocked"))
   }
 
-  /** Quality signals: length, alpha ratio, digit ratio, punctuation
-    * ratio, mean word length, stopword ratio. Returned as separate
-    * columns; `qualityScore` combines them. */
+  /** Quality signals: length, alpha ratio, mean word length, stopword
+    * ratio. Returned as separate columns; `qualityScore` combines
+    * them. */
   def alphaRatio(text: Column): Column =
     length(regexp_replace(text, "[^A-Za-z]", "")).cast(DoubleType) /
-      greatest(length(text), lit(1))
-  def digitRatio(text: Column): Column =
-    length(regexp_replace(text, "[^0-9]", "")).cast(DoubleType) /
-      greatest(length(text), lit(1))
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]{}-]", "")).cast(DoubleType) /
       greatest(length(text), lit(1))
   def meanWordLen(text: Column): Column =
     length(regexp_replace(text, "\\s+", "")).cast(DoubleType) /
@@ -557,11 +551,6 @@ object TextOps {
     * the cheap "same modulo formatting" key. */
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")).cast(BinaryType))
-
-  /** Rolling min-hash fingerprint over word shingles (engine-local,
-    * xxhash-based): robust to small edits, used for fuzzy clustering. */
-  def shingleFingerprint(text: Column, k: Int = 3): Column =
-    array_min(F.transform(Dedup.shingles(text, k), s => xxhash64(s)))
 
   /** Corpus vocabulary: one row per distinct token with document
     * frequency (`df` — documents containing it) and collection

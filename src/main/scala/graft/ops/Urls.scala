@@ -249,17 +249,6 @@ object Urls {
       .otherwise(when(two === "", host).otherwise(two))
   }
 
-  /** Path of a raw URL ("/" when empty; query and fragment excluded,
-    * no trailing-slash normalisation). Same parse chain as
-    * [[canonicalize]]. */
-  def pathOf(u: Column): Column = {
-    val noFrag = regexp_replace(trim(u), "#.*", "")
-    val rest = regexp_replace(noFrag, "^[A-Za-z][A-Za-z0-9+.\\-]*://", "")
-    val pathq = regexp_replace(rest, "^[^/?]*", "")
-    val p = regexp_extract(pathq, "^([^?]*)", 1)
-    when(p === "", "/").otherwise(p)
-  }
-
   /** Path PLUS query of a raw URL ("/" when both empty; fragment
     * excluded) — the string robots.txt rules match against: the
     * common `Disallow: /[star]?sid=` idiom targets query strings, so

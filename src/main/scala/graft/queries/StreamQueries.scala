@@ -1,4 +1,4 @@
-package graft.streaming
+package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -8,6 +8,8 @@ import org.apache.spark.sql.types._
 import graft.{SparkEntry, Timeseries}
 import graft.model._
 import graft.ops.{Classify, Dedup, Sketch}
+import graft.queries.Oracle.Sql
+import graft.streaming.StreamingIngest
 import graft.time._
 
 /** Driver-oracled streaming queries (r6 verdict item 4): each one
@@ -130,13 +132,13 @@ object StreamQueries {
     * TTL-drop semantics themselves are spec-verified in StreamingSpec. */
   private val WideHorizonSec = 10L * 365 * 86400
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val rows: Seq[Query] = Seq(
 
     // §2.9 shape 2 (live aggregate): watermarked streaming count fold
     // at minute buckets over 3 micro-batches, complete-mode memory
     // sink — the streaming twin of ts_count_minute on the 5000-event
     // prefix
-    "stream_ts_count_minute" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_ts_count_minute", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val rows = eventSubset(s, dir, SubsetN)
@@ -153,11 +155,16 @@ object StreamQueries {
           TimeColumns.fromBucket(col("i_time"), TimeStep(60L)).as("i_time"),
           round(col("value"), 6).as("value"))
         .orderBy("name", "i_time")
-    }),
+    }, Sql(
+      s"""WITH sub AS ($subsetSql)
+         SELECT event_type AS name,
+         CAST(floor(epoch(ts)/60) AS BIGINT)*60 AS i_time,
+         round(sum(value), 6) AS value
+         FROM sub GROUP BY 1,2 ORDER BY 1,2""")),
 
     // §2.9 + A5: streaming set fold — per-bucket distinct cardinality
     // maintained in stream state across micro-batches
-    "stream_ts_set_card_hour" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_ts_set_card_hour", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val rows = eventSubset(s, dir, SubsetN)
@@ -174,11 +181,16 @@ object StreamQueries {
           TimeColumns.fromBucket(col("i_time"), TimeStep(3600L)).as("i_time"),
           size(col("value")).cast(LongType).as("value"))
         .orderBy("name", "i_time")
-    }),
+    }, Sql(
+      s"""WITH sub AS ($subsetSql)
+         SELECT event_type AS name,
+         CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS i_time,
+         count(DISTINCT value) AS value
+         FROM sub GROUP BY 1,2 ORDER BY 1,2""")),
 
     // §2.9 + A2: streaming histogram fold, map state merged across
     // batches, exploded to rows for the engine-portable compare
-    "stream_ts_histogram_hour" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_ts_histogram_hour", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val rows = eventSubset(s, dir, SubsetN)
@@ -195,14 +207,19 @@ object StreamQueries {
           TimeColumns.fromBucket(col("i_time"), TimeStep(3600L)).as("i_time"),
           explode(col("value")).as(Seq("v", "cnt")))
         .orderBy("name", "i_time", "v")
-    }),
+    }, Sql(
+      s"""WITH sub AS ($subsetSql)
+         SELECT event_type AS name,
+         CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS i_time,
+         value AS v, count(*) AS cnt
+         FROM sub GROUP BY 1,2,3 ORDER BY 1,2,3""")),
 
     // §2.9 shape 1 (durable log append): bucketize each micro-batch
     // with the BATCH projection, append to a parquet bucket store
     // (checkpointed file sink), then read the store back through the
     // batch fold — proves the streamed log is byte-equivalent input to
     // the batch engine
-    "stream_store_append_count" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_store_append_count", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val rows = eventSubset(s, dir, SubsetN)
@@ -221,14 +238,19 @@ object StreamQueries {
           TimeColumns.fromBucket(col("i_time"), TimeStep(60L)).as("i_time"),
           round(col("value"), 6).as("value"))
         .orderBy("name", "i_time")
-    }),
+    }, Sql(
+      s"""WITH sub AS ($subsetSql)
+         SELECT event_type AS name,
+         CAST(floor(epoch(ts)/60) AS BIGINT)*60 AS i_time,
+         round(sum(value), 6) AS value
+         FROM sub GROUP BY 1,2 ORDER BY 1,2""")),
 
     // Watermarked streaming sessionization (session_window state,
     // append mode): sessions close only when the watermark passes
     // end+gap, so a far-future sentinel row advances the watermark and
     // flushes every real session after the data batches — the
     // streaming twin of events_sessionize on the subset
-    "stream_sessions_user" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_sessions_user", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val rows = eventSubset(s, dir, SubsetN)
@@ -255,14 +277,27 @@ object StreamQueries {
           unix_timestamp(col("session_end")).as("end_sec"),
           col("n_events"), round(col("total_value"), 6).as("total_value"))
         .orderBy("user_id", "start_sec")
-    }),
+    }, Sql(
+      s"""WITH sub AS ($subsetSql),
+           o AS (SELECT user_id, event_id, value,
+                   CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM sub),
+           l AS (SELECT *, lag(sec) OVER
+                   (PARTITION BY user_id ORDER BY sec, event_id) AS prev FROM o),
+           g AS (SELECT *, CAST(sum(CASE WHEN prev IS NULL OR sec - prev > 1800
+                                         THEN 1 ELSE 0 END) OVER
+                   (PARTITION BY user_id ORDER BY sec, event_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS BIGINT) AS sid FROM l)
+         SELECT user_id, min(sec) AS start_sec, max(sec) + 1800 AS end_sec,
+                count(*) AS n_events, round(sum(value), 6) AS total_value
+         FROM g GROUP BY user_id, sid ORDER BY user_id, start_sec""")),
 
     // Streaming count-min maintenance (foreachBatch per-batch grid
     // partitions, additive exactly-once store): stream the first 250
     // documents' tokens in 2 batches, sum the live grid, and pit its
     // estimates against true counts — cell-for-cell oracled like the
     // batch cms_token_freq
-    "stream_cms_token_freq" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_cms_token_freq", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val docs = docSubset(s, dir, "lt250", col("doc_id") < 250)
@@ -282,13 +317,29 @@ object StreamQueries {
       Sketch.countMinEstimate(top, col("token"), sketch, depth = 4,
           width = 2048L, seed = 2L)
         .orderBy(col("n_true").desc, col("token"))
-    }),
+    }, Sql(
+      s"""WITH tok AS (SELECT unnest(regexp_split_to_array(lower(trim(text)),
+             '\\s+')) AS token FROM documents WHERE doc_id < 250),
+         rows_ AS (SELECT unnest(range(4)) AS r),
+         cells AS (SELECT r,
+             (CAST(concat('0x', substr(md5(token || '#2:'
+                || CAST(r AS VARCHAR)), 1, 15)) AS BIGINT)) % 2048 AS c,
+             count(*) AS n
+           FROM tok CROSS JOIN rows_ GROUP BY 1, 2),
+         top AS (SELECT token, count(*) AS n_true FROM tok GROUP BY 1
+                 ORDER BY n_true DESC, token LIMIT 50)
+         SELECT t.token, t.n_true, min(coalesce(cl.n, 0)) AS est
+         FROM top t CROSS JOIN rows_ u
+         LEFT JOIN cells cl ON cl.r = u.r AND cl.c =
+           (CAST(concat('0x', substr(md5(t.token || '#2:'
+              || CAST(u.r AS VARCHAR)), 1, 15)) AS BIGINT)) % 2048
+         GROUP BY 1, 2 ORDER BY n_true DESC, token""")),
 
     // Watermarked streaming exact dedup (dropDuplicatesWithinWatermark
     // state): originals arrive in batch 1, verbatim copies of every
     // 7th doc in batch 2 — every copy must hit retained hash state and
     // be dropped, so each surviving content hash appears exactly once
-    "stream_dedup_exact" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_dedup_exact", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val originals = docSubset(s, dir, "lt400", col("doc_id") < 400)
@@ -309,7 +360,10 @@ object StreamQueries {
       drain(s, qn).groupBy("content_hash")
         .agg(count(lit(1)).as("n_rows"))
         .orderBy("content_hash")
-    }),
+    }, Sql(
+      """SELECT DISTINCT md5(text) AS content_hash,
+           CAST(1 AS BIGINT) AS n_rows
+         FROM documents WHERE doc_id < 400 ORDER BY 1""")),
 
     // Streaming snapshot delta: yesterday's fingerprint store built
     // ONCE batch-side (~24 bytes/doc); today's crawl STREAMS through
@@ -317,7 +371,7 @@ object StreamQueries {
     // micro-batch, added/changed/unchanged appended to parquet
     // ('removed' is the post-crawl batch reconciliation; absent ids
     // never arrive on a stream, and the oracle mirrors that)
-    "stream_snapshot_delta" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_snapshot_delta", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       val store = memo(s"snapfp|$dir") {
@@ -338,14 +392,24 @@ object StreamQueries {
         col("text"))
       runChunks(mem, q, crawl.toSeq, 2); q.stop()
       s.read.parquet(out).orderBy("id")
-    }),
+    }, Sql(
+      """WITH o AS (SELECT doc_id,
+           CASE WHEN doc_id % 7 = 0 THEN substr(text, 1, 40) ELSE text END AS text
+           FROM documents WHERE doc_id % 13 <> 5),
+         nw AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 3)
+         SELECT nw.doc_id AS id,
+           CASE WHEN o.doc_id IS NULL THEN 'added'
+                WHEN md5(o.text) <> md5(nw.text) THEN 'changed'
+                ELSE 'unchanged' END AS status,
+           md5(o.text) AS old_fp, md5(nw.text) AS new_fp
+         FROM nw LEFT JOIN o ON nw.doc_id = o.doc_id ORDER BY id""")),
 
     // Streaming model-based quality scoring: NB model fit ONCE batch-
     // side and persisted; the held-out docs stream through
     // scoreStreamAgainstNbModel (foreachBatch scoreIndexed + doc_id
     // anti-join append) — the stored-model path oracled against the
     // same closed-form training math as batch classify_nb_score
-    "stream_nb_score" -> ((s, dir) => withStreamPartitions(s, 8) {
+    Query("stream_nb_score", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
       import s.implicits._
       // model fit is write-once batch work (same contract as the
@@ -370,140 +434,9 @@ object StreamQueries {
         tmp("graft_stream_nbo_ck"), col("text"), col("doc_id"))
       runChunks(mem, q, held.toSeq, 2); q.stop()
       s.read.parquet(out).orderBy("doc_id")
-    }),
-
-    // Streaming robots-gated frontier: candidate URLs STREAM through
-    // the zero-aggregation map-side gate (per-host rule arrays
-    // broadcast, winner picked by an array fold in the projection) —
-    // a stream-static equi-join + projection, append mode, no
-    // watermark, no state store; the oracle states every verdict
-    // closed-form from the fixture policies (even hosts: graftbot
-    // group Disallow /private + Allow /private/ok; odd hosts: star
-    // Disallow /tmp + Allow /tmp/keep)
-    "stream_url_frontier_gate" -> ((s, dir) => withStreamPartitions(s, 8) {
-      implicit val sq = s.sqlContext
-      import s.implicits._
-      val ids = docSubset(s, dir, "lt400", col("doc_id") < 400)
-      val urlRows = ids.map { case (id, _) =>
-        val host = s"site${id % 5}.example"
-        val path = (id % 4) match {
-          case 0 => "/private"
-          case 1 => "/private/ok"
-          case 2 => "/tmp/x"
-          case _ => "/tmp/keep"
-        }
-        (id, s"https://$host$path")
-      }
-      val robots = SparkEntry.robotsFixture(
-        SparkEntry.table(s, dir, "documents"))
-      val mem = MemoryStream[(Long, String)]
-      val sdf = mem.toDF().select(col("_1").as("rid"), col("_2").as("u"))
-      val gated = StreamingIngest.frontierGateStream(sdf, col("u"),
-        col("rid"), robots, col("host"), col("robots_txt"), "graftbot")
-      val qn = s"graft_stream_q${qid.incrementAndGet()}"
-      val q = gated.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      runChunks(mem, q, urlRows.toSeq, 2); q.stop()
-      drain(s, qn).select(col("doc_id").as("rid"), col("host"),
-          col("path"), col("allowed").cast(IntegerType).as("allowed"))
-        .orderBy("rid")
-    }),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-
-    "stream_snapshot_delta" ->
-      """WITH o AS (SELECT doc_id,
-           CASE WHEN doc_id % 7 = 0 THEN substr(text, 1, 40) ELSE text END AS text
-           FROM documents WHERE doc_id % 13 <> 5),
-         nw AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 3)
-         SELECT nw.doc_id AS id,
-           CASE WHEN o.doc_id IS NULL THEN 'added'
-                WHEN md5(o.text) <> md5(nw.text) THEN 'changed'
-                ELSE 'unchanged' END AS status,
-           md5(o.text) AS old_fp, md5(nw.text) AS new_fp
-         FROM nw LEFT JOIN o ON nw.doc_id = o.doc_id ORDER BY id""",
-
-    "stream_url_frontier_gate" ->
-      """SELECT doc_id AS rid,
-           'site' || CAST(doc_id % 5 AS VARCHAR) || '.example' AS host,
-           CASE doc_id % 4 WHEN 0 THEN '/private' WHEN 1 THEN '/private/ok'
-             WHEN 2 THEN '/tmp/x' ELSE '/tmp/keep' END AS path,
-           CAST(CASE WHEN (doc_id % 5) % 2 = 0
-             THEN CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END
-             ELSE CASE WHEN doc_id % 4 = 2 THEN 0 ELSE 1 END
-           END AS INT) AS allowed
-         FROM documents WHERE doc_id < 400 ORDER BY rid""",
-
-    "stream_ts_count_minute" ->
-      s"""WITH sub AS ($subsetSql)
-         SELECT event_type AS name,
-         CAST(floor(epoch(ts)/60) AS BIGINT)*60 AS i_time,
-         round(sum(value), 6) AS value
-         FROM sub GROUP BY 1,2 ORDER BY 1,2""",
-
-    "stream_ts_set_card_hour" ->
-      s"""WITH sub AS ($subsetSql)
-         SELECT event_type AS name,
-         CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS i_time,
-         count(DISTINCT value) AS value
-         FROM sub GROUP BY 1,2 ORDER BY 1,2""",
-
-    "stream_ts_histogram_hour" ->
-      s"""WITH sub AS ($subsetSql)
-         SELECT event_type AS name,
-         CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS i_time,
-         value AS v, count(*) AS cnt
-         FROM sub GROUP BY 1,2,3 ORDER BY 1,2,3""",
-
-    "stream_store_append_count" ->
-      s"""WITH sub AS ($subsetSql)
-         SELECT event_type AS name,
-         CAST(floor(epoch(ts)/60) AS BIGINT)*60 AS i_time,
-         round(sum(value), 6) AS value
-         FROM sub GROUP BY 1,2 ORDER BY 1,2""",
-
-    "stream_sessions_user" ->
-      s"""WITH sub AS ($subsetSql),
-           o AS (SELECT user_id, event_id, value,
-                   CAST(floor(epoch(ts)) AS BIGINT) AS sec FROM sub),
-           l AS (SELECT *, lag(sec) OVER
-                   (PARTITION BY user_id ORDER BY sec, event_id) AS prev FROM o),
-           g AS (SELECT *, CAST(sum(CASE WHEN prev IS NULL OR sec - prev > 1800
-                                         THEN 1 ELSE 0 END) OVER
-                   (PARTITION BY user_id ORDER BY sec, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS sid FROM l)
-         SELECT user_id, min(sec) AS start_sec, max(sec) + 1800 AS end_sec,
-                count(*) AS n_events, round(sum(value), 6) AS total_value
-         FROM g GROUP BY user_id, sid ORDER BY user_id, start_sec""",
-
-    "stream_cms_token_freq" ->
-      s"""WITH tok AS (SELECT unnest(regexp_split_to_array(lower(trim(text)),
-             '\\s+')) AS token FROM documents WHERE doc_id < 250),
-         rows_ AS (SELECT unnest(range(4)) AS r),
-         cells AS (SELECT r,
-             (CAST(concat('0x', substr(md5(token || '#2:'
-                || CAST(r AS VARCHAR)), 1, 15)) AS BIGINT)) % 2048 AS c,
-             count(*) AS n
-           FROM tok CROSS JOIN rows_ GROUP BY 1, 2),
-         top AS (SELECT token, count(*) AS n_true FROM tok GROUP BY 1
-                 ORDER BY n_true DESC, token LIMIT 50)
-         SELECT t.token, t.n_true, min(coalesce(cl.n, 0)) AS est
-         FROM top t CROSS JOIN rows_ u
-         LEFT JOIN cells cl ON cl.r = u.r AND cl.c =
-           (CAST(concat('0x', substr(md5(t.token || '#2:'
-              || CAST(u.r AS VARCHAR)), 1, 15)) AS BIGINT)) % 2048
-         GROUP BY 1, 2 ORDER BY n_true DESC, token""",
-
-    "stream_dedup_exact" ->
-      """SELECT DISTINCT md5(text) AS content_hash,
-           CAST(1 AS BIGINT) AS n_rows
-         FROM documents WHERE doc_id < 400 ORDER BY 1""",
-
-    // identical math to the batch classify_nb_score oracle: the
-    // streamed stored-model path must reproduce the closed-form fit
-    "stream_nb_score" ->
+    }, Sql(
+      // identical math to the batch classify_nb_score oracle: the
+      // streamed stored-model path must reproduce the closed-form fit
       """WITH d AS (SELECT doc_id,
              CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
              regexp_split_to_array(lower(trim(text)), '\s+') AS toks
@@ -532,6 +465,52 @@ object StreamQueries {
            round(s, 6) AS score,
            round(1.0 / (1.0 + exp(-s)), 6) AS prob,
            CAST(CASE WHEN s >= 0 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         FROM sc ORDER BY doc_id""",
+         FROM sc ORDER BY doc_id""")),
+
+    // Streaming robots-gated frontier: candidate URLs STREAM through
+    // the zero-aggregation map-side gate (per-host rule arrays
+    // broadcast, winner picked by an array fold in the projection) —
+    // a stream-static equi-join + projection, append mode, no
+    // watermark, no state store; the oracle states every verdict
+    // closed-form from the fixture policies (even hosts: graftbot
+    // group Disallow /private + Allow /private/ok; odd hosts: star
+    // Disallow /tmp + Allow /tmp/keep)
+    Query("stream_url_frontier_gate", (s, dir) => withStreamPartitions(s, 8) {
+      implicit val sq = s.sqlContext
+      import s.implicits._
+      val ids = docSubset(s, dir, "lt400", col("doc_id") < 400)
+      val urlRows = ids.map { case (id, _) =>
+        val host = s"site${id % 5}.example"
+        val path = (id % 4) match {
+          case 0 => "/private"
+          case 1 => "/private/ok"
+          case 2 => "/tmp/x"
+          case _ => "/tmp/keep"
+        }
+        (id, s"https://$host$path")
+      }
+      val robots = SparkEntry.robotsFixture(
+        SparkEntry.table(s, dir, "documents"))
+      val mem = MemoryStream[(Long, String)]
+      val sdf = mem.toDF().select(col("_1").as("rid"), col("_2").as("u"))
+      val gated = StreamingIngest.frontierGateStream(sdf, col("u"),
+        col("rid"), robots, col("host"), col("robots_txt"), "graftbot")
+      val qn = s"graft_stream_q${qid.incrementAndGet()}"
+      val q = gated.writeStream.format("memory").queryName(qn)
+        .outputMode("append").start()
+      runChunks(mem, q, urlRows.toSeq, 2); q.stop()
+      drain(s, qn).select(col("doc_id").as("rid"), col("host"),
+          col("path"), col("allowed").cast(IntegerType).as("allowed"))
+        .orderBy("rid")
+    }, Sql(
+      """SELECT doc_id AS rid,
+           'site' || CAST(doc_id % 5 AS VARCHAR) || '.example' AS host,
+           CASE doc_id % 4 WHEN 0 THEN '/private' WHEN 1 THEN '/private/ok'
+             WHEN 2 THEN '/tmp/x' ELSE '/tmp/keep' END AS path,
+           CAST(CASE WHEN (doc_id % 5) % 2 = 0
+             THEN CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END
+             ELSE CASE WHEN doc_id % 4 = 2 THEN 0 ELSE 1 END
+           END AS INT) AS allowed
+         FROM documents WHERE doc_id < 400 ORDER BY rid""")),
   )
 }

@@ -171,22 +171,6 @@ object StreamingIngest {
       }
       .start()
 
-  /** Stream vectors into a persisted PQ index
-    * ([[graft.ops.Similarity.appendToPqIndex]] per micro-batch): each
-    * arrival encodes against the FROZEN stored codebook into m-byte
-    * code rows, so the compressed ADC-scannable corpus grows as the
-    * stream lands — no refit, no float-vector rescan; replays are
-    * idempotent on the store (vec_id anti-join). */
-  def appendStreamToPqIndex(vectors: DataFrame, indexPath: String,
-      checkpoint: String, id: Column, vec: Column) =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Similarity.appendToPqIndex(batch.sparkSession,
-          indexPath, batch, id, vec)
-      }
-      .start()
-
   /** Stream documents into a persisted greedy pack layout
     * ([[graft.ops.Pack.appendToGreedyLayout]] per micro-batch): each
     * arrival folds onto its shard's open sequence under the
@@ -225,22 +209,6 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.ops.LangModel.appendScoredAgainst(batch.sparkSession,
           statsPath, outPath, batch, text, id, k, roundTo)
-      }
-      .start()
-
-  /** Append a stream of keyed strings to a persisted edit-distance
-    * blocking index ([[graft.ops.EditDistance.buildIndex]] layout) —
-    * the fuzzy-match family's crawl-increment path: each arriving
-    * batch can be matched against everything before it with
-    * [[graft.ops.EditDistance.editPairsAgainstIndex]], no old-vs-old
-    * recompute. Replays are idempotent on the store (id anti-join). */
-  def appendStreamToEditIndex(rows: DataFrame, indexPath: String,
-      checkpoint: String, str: Column, id: Column, maxDist: Int) =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.EditDistance.appendToIndex(batch.sparkSession,
-          indexPath, batch, str, id, maxDist)
       }
       .start()
 
