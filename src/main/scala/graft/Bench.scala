@@ -15,7 +15,8 @@ object Bench {
   private[graft] type LedgerRow = (String, Long, String)
 
   def main(args: Array[String]): Unit = {
-    val fork = Harness.positive(sys.env.get("SPARK_GRAFT_BENCH_FORK"), 0)
+    val fork = Harness.positive("SPARK_GRAFT_BENCH_FORK",
+      sys.env.get("SPARK_GRAFT_BENCH_FORK"), 0)
     // SPARK_GRAFT_BENCH_FORK=K batches the bench across FRESH JVMs of
     // K queries each — the structural fix for position contamination:
     // the r10/r11 measurements showed per-query times inflating 2-4x
@@ -128,9 +129,11 @@ object Bench {
     * pre-flight check; the sampled ambient load is recorded in the
     * artifact (`ambient_load`) so a reviewer can see the conditions
     * the pair was measured under. */
-  private def loadMax: Double = scala.util.Try(
-    sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX", "4.0").trim.toDouble)
-    .getOrElse(4.0)
+  private[graft] def loadMax(v: Option[String]): Double =
+    v.flatMap(s => scala.util.Try(s.trim.toDouble).toOption).getOrElse {
+      v.foreach(Harness.ignored("SPARK_GRAFT_LOAD_MAX", _, 4.0))
+      4.0
+    }
 
   private def loadAvg(): Double =
     ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -183,7 +186,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmRuns = Harness.warmRuns
     val ambient = loadAvg()
-    val threshold = loadMax
+    val threshold = loadMax(sys.env.get("SPARK_GRAFT_LOAD_MAX"))
     if (threshold > 0 && ambient > threshold) {
       System.err.println(f"[bench] REFUSING to start committed-pair run: " +
         f"ambient 1-min load $ambient%.1f > ${threshold}%.1f " +

@@ -21,18 +21,28 @@ object Harness {
 
   /** `SPARK_GRAFT_CPUS`: local parallelism, and the shuffle partition
     * count (default: the machine's processor count). */
-  def cpus: Int = positive(sys.env.get("SPARK_GRAFT_CPUS"),
+  def cpus: Int = positive("SPARK_GRAFT_CPUS", sys.env.get("SPARK_GRAFT_CPUS"),
     Runtime.getRuntime.availableProcessors)
 
   /** `SPARK_GRAFT_WARM_RUNS`: timed warm runs per query, of which the
     * minimum is reported (default 2). */
-  def warmRuns: Int = positive(sys.env.get("SPARK_GRAFT_WARM_RUNS"), 2)
+  def warmRuns: Int = positive("SPARK_GRAFT_WARM_RUNS",
+    sys.env.get("SPARK_GRAFT_WARM_RUNS"), 2)
 
-  /** A positive integer setting; unset, malformed or non-positive
-    * values fall back to `default` instead of crashing a long run. */
-  private[graft] def positive(v: Option[String], default: Int): Int =
+  /** The positive integer setting `name`, set to `v`. Unset, malformed
+    * or non-positive values fall back to `default` instead of crashing
+    * a long run; a set value other than `default` that falls back says
+    * so on stderr. */
+  private[graft] def positive(name: String, v: Option[String], default: Int): Int =
     v.flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ > 0)
-      .getOrElse(default)
+      .getOrElse {
+        v.filter(_.trim != default.toString).foreach(ignored(name, _, default))
+        default
+      }
+
+  /** One stderr line for a set value a setting falls back from. */
+  private[graft] def ignored(name: String, value: String, default: Any): Unit =
+    Console.err.println(s"[graft] ignoring $name=\"$value\": using the default $default")
 
   /** Configs for runs timed back to back in one session (Bench, Scale). */
   private val HygieneConf: Map[String, String] = Map(

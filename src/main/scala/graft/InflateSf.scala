@@ -113,7 +113,8 @@ object InflateSf {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/root/repo/target/sf1")
-    val mult = Harness.positive(sys.env.get("SPARK_GRAFT_SF1_MULT"), 10)
+    val mult = Harness.positive("SPARK_GRAFT_SF1_MULT",
+      sys.env.get("SPARK_GRAFT_SF1_MULT"), 10)
     val spark = Harness.session()
     materialize(spark, baseDir, outDir, mult)
     System.err.println(s"[inflate] $outDir ready (mult=$mult)")

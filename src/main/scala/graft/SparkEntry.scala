@@ -122,18 +122,10 @@ object SparkEntry {
     t
   }
 
-  val minuteHour: Map[String, IntervalSpec] = Map(
-    "minute" -> IntervalSpec(TimeStep(60L)),
-    "hour"   -> IntervalSpec(TimeStep(3600L), None, Some(TimeStep(60L))))
   val minuteOnly: Map[String, IntervalSpec] = Map("minute" -> IntervalSpec(TimeStep(60L)))
   val minuteTtl: Map[String, IntervalSpec] = Map("minute" -> IntervalSpec(TimeStep(60L), Some(1440)))
   val hourFine: Map[String, IntervalSpec] = Map(
     "hour" -> IntervalSpec(TimeStep(3600L), None, Some(TimeStep(60L))))
-  val gregorian: Map[String, IntervalSpec] = Map(
-    "daily"   -> IntervalSpec(TimeStep("daily")),
-    "weekly"  -> IntervalSpec(TimeStep("weekly")),
-    "monthly" -> IntervalSpec(TimeStep("monthly")),
-    "yearly"  -> IntervalSpec(TimeStep("yearly")))
 
   /** 2024-01-01T00:00:00Z — the fixed series anchor for the events data. */
   val START: Long = 1704067200L

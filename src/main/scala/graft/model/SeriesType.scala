@@ -25,8 +25,11 @@ sealed trait SeriesType extends Serializable {
   def typeName: String
 
   /** Aggregate raw rows (columns: groupCols ++ value, ord) into one
-    * state row per group, output column `value`. */
-  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame
+    * state row per group, output column `value`: [[foldExpr]] per
+    * group. */
+  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame =
+    grouped(df, groupCols)(
+      foldExpr(col("value"), col("ord"), df.schema("value").dataType).as("value"))
 
   /** Value of an empty bucket (timeseries.py _type_no_value), cast to
     * the AGGREGATED value type (e.g. ArrayType(elem) for series) so the
@@ -41,11 +44,12 @@ sealed trait SeriesType extends Serializable {
     * entries may be null. Pure Column expression — stays in codegen. */
   def mergeExpr(states: Column): Column
 
-  /** Single-expression fold of raw values into a bucket state — the
-    * streaming-aggregation form of `aggregate` (streams allow exactly
-    * one aggregation, so the histogram's two-level groupBy is folded
-    * into one higher-order expression here). */
-  def foldExpr(value: Column, ord: Column): Column
+  /** Single-expression fold of raw values of type `valueType` into a
+    * bucket state: batch reads group the raw log by it ([[aggregate]])
+    * and streams keep it in state. Streams allow exactly one
+    * aggregation; the histogram's batch read keeps its own two-level
+    * groupBy. */
+  def foldExpr(value: Column, ord: Column, valueType: DataType): Column
 
   /** Built-in transform `t` over the aggregated `data`; None when the
     * type doesn't support it (the caller then returns data unaltered,
@@ -69,12 +73,13 @@ sealed trait SeriesType extends Serializable {
     * drops nulls). Feed the capped fold pre-validated values — the
     * aggregateStream path casts before folding, so a null there is
     * already a malformed datapoint, not data. */
-  def foldExprCapped(value: Column, ord: Column, cap: Int): Column =
-    foldExpr(value, ord)
+  def foldExprCapped(value: Column, ord: Column, valueType: DataType,
+      cap: Int): Column =
+    foldExpr(value, ord, valueType)
 
-  protected def grouped(df: DataFrame, groupCols: Seq[String])(aggs: Column*): DataFrame =
-    if (groupCols.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-    else df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  protected def grouped(df: DataFrame, groupCols: Seq[String])(agg: Column): DataFrame =
+    if (groupCols.isEmpty) df.agg(agg)
+    else df.groupBy(groupCols.map(col): _*).agg(agg)
 
   /** Fold non-null states left-to-right with `merge`, preserving the
     * state type without naming it (initial = first non-null element). */
@@ -90,16 +95,13 @@ sealed trait SeriesType extends Serializable {
 /** `series`: arrival-ordered list per bucket (timeseries.py:792-843). */
 case object SeriesT extends SeriesType {
   val typeName = "series"
-  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame =
-    grouped(df, groupCols)(
-      transform(array_sort(collect_list(struct(col("ord"), col("value")))),
-        e => e("value")).as("value"))
   def empty(aggType: DataType): Column = array().cast(aggType)
   def mergeExpr(states: Column): Column =
     flatten(filter(states, x => x.isNotNull))
-  def foldExpr(value: Column, ord: Column): Column =
+  def foldExpr(value: Column, ord: Column, valueType: DataType): Column =
     transform(array_sort(collect_list(struct(ord, value))), e => e("value"))
-  override def foldExprCapped(value: Column, ord: Column, cap: Int): Column = {
+  override def foldExprCapped(value: Column, ord: Column, valueType: DataType,
+      cap: Int): Column = {
     // the cap EARLIEST datapoints by (ord, value) — O(cap) state
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
@@ -127,7 +129,7 @@ case object SeriesT extends SeriesType {
   * (no map-merge aggregator needed on the batch path). */
 case object HistogramT extends SeriesType {
   val typeName = "histogram"
-  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame = {
+  override def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame = {
     val counted = df.groupBy((groupCols :+ "value").map(col): _*)
       .agg(count(lit(1)).as("cnt"))
     grouped(counted, groupCols)(
@@ -139,7 +141,7 @@ case object HistogramT extends SeriesType {
   def mergeExpr(states: Column): Column =
     foldStates(states, (a, b) =>
       map_zip_with(a, b, (_, x, y) => coalesce(x, lit(0L)) + coalesce(y, lit(0L))))
-  def foldExpr(value: Column, ord: Column): Column = {
+  def foldExpr(value: Column, ord: Column, valueType: DataType): Column = {
     // one streaming-legal aggregation: an incremental value→count map
     // ([[graft.functions.CountByValue]]) whose buffer — and therefore
     // the streaming state-store row per bucket — is O(distinct values),
@@ -171,23 +173,21 @@ case object HistogramT extends SeriesType {
 /** `count`: running sum of increments (timeseries.py:906-946). */
 case object CountT extends SeriesType {
   val typeName = "count"
-  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame = {
+  def foldExpr(value: Column, ord: Column, valueType: DataType): Column = {
     // DecimalType folds keep their exact type: a bare lit(0.0) would
     // win coalesce's type coercion and silently demote the sum to
     // double (§1.3 type map). Every other value type keeps the
     // reference's numeric contract — the double zero promotes
     // int-read counts to double, as the goldens expect.
-    val zero = df.schema("value").dataType match {
+    val zero = valueType match {
       case d: DecimalType => lit(0).cast(d)
       case _              => lit(0.0)
     }
-    grouped(df, groupCols)(coalesce(sum(col("value")), zero).as("value"))
+    coalesce(sum(value), zero)
   }
   def empty(aggType: DataType): Column = lit(0).cast(aggType)
   def mergeExpr(states: Column): Column =
     F.aggregate(states, lit(0.0), (a, x) => a + coalesce(x.cast(DoubleType), lit(0.0)))
-  def foldExpr(value: Column, ord: Column): Column =
-    coalesce(sum(value), lit(0.0))
   def transformExpr(t: String, data: Column, step: Column): Option[Column] = t match {
     case "rate" => Some(data / step)
     case _      => None
@@ -199,8 +199,6 @@ case object CountT extends SeriesType {
   * max_by over the composite ord (name_idx before seq). */
 case object GaugeT extends SeriesType {
   val typeName = "gauge"
-  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame =
-    grouped(df, groupCols)(max_by(col("value"), col("ord")).as("value"))
   // _type_no_value() = 0 (timeseries.py:953-955): every backend fills
   // empty coarse buckets with 0, not null (sql_backend.py:207,235).
   // The zero contract only makes sense where "0" exists — numeric and
@@ -216,7 +214,7 @@ case object GaugeT extends SeriesType {
     val present = filter(states, x => x.isNotNull)
     when(size(present) === 0, lit(null)).otherwise(try_element_at(present, lit(-1)))
   }
-  def foldExpr(value: Column, ord: Column): Column =
+  def foldExpr(value: Column, ord: Column, valueType: DataType): Column =
     max_by(value, ord)
   def transformExpr(t: String, data: Column, step: Column): Option[Column] = None
 }
@@ -225,14 +223,13 @@ case object GaugeT extends SeriesType {
   * array representation keeps results deterministic for comparison. */
 case object SetT extends SeriesType {
   val typeName = "set"
-  def aggregate(df: DataFrame, groupCols: Seq[String]): DataFrame =
-    grouped(df, groupCols)(array_sort(collect_set(col("value"))).as("value"))
   def empty(aggType: DataType): Column = array().cast(aggType)
   def mergeExpr(states: Column): Column =
     array_sort(array_distinct(flatten(filter(states, x => x.isNotNull))))
-  def foldExpr(value: Column, ord: Column): Column =
+  def foldExpr(value: Column, ord: Column, valueType: DataType): Column =
     array_sort(collect_set(value))
-  override def foldExprCapped(value: Column, ord: Column, cap: Int): Column = {
+  override def foldExprCapped(value: Column, ord: Column, valueType: DataType,
+      cap: Int): Column = {
     // the cap SMALLEST distinct values — O(cap) state
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
@@ -240,17 +237,9 @@ case object SetT extends SeriesType {
         GraftColumnBridge.expression(value), cap, distinct = true)
         .toAggregateExpression())
   }
-  def transformExpr(t: String, data: Column, step: Column): Option[Column] = t match {
-    case "mean" =>
-      Some(when(size(data) === 0, lit(0.0))
-        .otherwise(F.aggregate(data, lit(0.0), (a, x) => a + x) / size(data)))
-    case "count" => Some(size(data).cast(LongType))
-    case "min"   => Some(when(size(data) === 0, lit(0.0)).otherwise(array_min(data).cast(DoubleType)))
-    case "max"   => Some(when(size(data) === 0, lit(0.0)).otherwise(array_max(data).cast(DoubleType)))
-    case "sum"   => Some(F.aggregate(data, lit(0.0), (a, x) => a + x))
-    case "rate"  => Some(size(data) / step)
-    case _       => None
-  }
+  // a set state is an array like a series state: the same transforms
+  def transformExpr(t: String, data: Column, step: Column): Option[Column] =
+    SeriesT.transformExpr(t, data, step)
 }
 
 object SeriesType {

@@ -225,8 +225,7 @@ object Classify {
       outPath: String, docs: DataFrame, text: Column, id: Column,
       roundTo: Int = 6): Unit = {
     val scored = scoreIndexed(spark, modelPath, docs, text, id, roundTo)
-    val prev = Layout.readIfExists(spark, outPath)(scored)
-    scored.join(prev.select("doc_id"), Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(outPath)
+    Layout.appendAbsent(scored, Layout.readIfExists(spark, outPath)(scored),
+      outPath, "doc_id")
   }
 }

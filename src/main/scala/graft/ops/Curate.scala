@@ -148,10 +148,10 @@ object Curate {
     }
   }
 
-  /** Per-batch body of [[graft.streaming.StreamingIngest
-    * .curateStream]], callable directly so replay semantics are
-    * testable: run the curation funnel over one micro-batch with
-    * cross-batch exact-dedup state in a fingerprint store.
+  /** The curation funnel as a stream, one micro-batch at a time (the
+    * body of a [[graft.streaming.StreamingIngest.foreachBatch]]): run
+    * the funnel over one micro-batch with cross-batch exact-dedup
+    * state in a fingerprint store.
     *
     * Stages per batch: the scalar filters are stateless kernel
     * projections; exact dedup combines the batch-internal survivor

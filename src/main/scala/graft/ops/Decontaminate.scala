@@ -60,12 +60,12 @@ object Decontaminate {
     * that re-introduced an existing hash would double-count every
     * match of that gram (contamination > 1.0) — so new grams are
     * anti-joined against the store and only the genuinely new ones
-    * land as a new file. */
+    * land as a new file — which also makes a replayed stream batch
+    * append nothing. */
   def appendToTrainIndex(spark: SparkSession, indexPath: String,
       docs: DataFrame, text: Column, n: Int): Unit =
-    trainGrams(docs, text, n)
-      .join(spark.read.parquet(indexPath), Seq("gh"), "left_anti")
-      .write.mode("append").parquet(indexPath)
+    Layout.appendAbsent(trainGrams(docs, text, n),
+      spark.read.parquet(indexPath), indexPath, "gh")
 
   /** Per-test-document contamination against a stored gram index:
     * `test_id, n_grams, n_matched, contamination` where

@@ -412,12 +412,11 @@ object Dedup {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
     val (mode, k, numHashes) = (indexMode(meta),
       meta.getAs[Int]("shingle_k"), meta.getAs[Int]("num_hashes"))
-    signatureTable(indexElems(docs, text, id, mode, k), numHashes,
-        elemsDistinct = mode == "chargram")
-      .select("doc_id", "n", "sig", "elems")
-      .join(spark.read.parquet(s"$indexPath/docs").select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(s"$indexPath/docs")
+    Layout.appendAbsent(
+      signatureTable(indexElems(docs, text, id, mode, k), numHashes,
+          elemsDistinct = mode == "chargram")
+        .select("doc_id", "n", "sig", "elems"),
+      spark.read.parquet(s"$indexPath/docs"), s"$indexPath/docs", "doc_id")
   }
 
   /** Near-duplicate pairs between an increment and a stored minhash
@@ -678,10 +677,8 @@ object Dedup {
     * anti-joined away (idempotent under replay, one row per doc). */
   def appendToFingerprintIndex(spark: SparkSession, indexPath: String,
       fps: DataFrame): Unit =
-    fps.select("doc_id", "fp")
-      .join(spark.read.parquet(indexPath).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(indexPath)
+    Layout.appendAbsent(fps.select("doc_id", "fp"),
+      spark.read.parquet(indexPath), indexPath, "doc_id")
 
   /** Hamming near-dup pairs between an increment and a stored
     * fingerprint index (plus pairs within the increment) — the
@@ -863,13 +860,12 @@ object Dedup {
       docs: DataFrame, text: Column, id: Column): Unit = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
     val (k, w) = (meta.getAs[Int]("k"), meta.getAs[Int]("w"))
-    spreadById(docs, id, text)
-      .select(col("doc_id"),
-        winnow(col("__raw"), k, w).as("fps"),
-        graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("grams"))
-      .join(spark.read.parquet(s"$indexPath/docs").select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(s"$indexPath/docs")
+    Layout.appendAbsent(
+      spreadById(docs, id, text)
+        .select(col("doc_id"),
+          winnow(col("__raw"), k, w).as("fps"),
+          graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("grams")),
+      spark.read.parquet(s"$indexPath/docs"), s"$indexPath/docs", "doc_id")
   }
 
   /** Containment pairs between an increment and a stored containment

@@ -156,10 +156,11 @@ object Dsir {
         round(sum(col("c") * lratio), roundTo).as("logw"))
   }
 
-  /** Per-batch body of [[graft.streaming.StreamingIngest
-    * .scoreStreamAgainstDsirStats]], callable directly so replay
-    * semantics are testable: score `batch` against the stored bucket
-    * statistics and append (doc_id, n_grams, logw) rows to `outPath`.
+  /** Per-batch body of a streamed DSIR scorer (a
+    * [[graft.streaming.StreamingIngest.foreachBatch]] body): score
+    * `batch` against the stored bucket statistics and append
+    * (doc_id, n_grams, logw) rows to `outPath`. The stats store is the
+    * only state and the stream never changes it.
     * Idempotent under foreachBatch replay via the same doc_id
     * anti-join every incremental appender uses. */
   def appendScoredAgainst(spark: org.apache.spark.sql.SparkSession,
@@ -167,10 +168,8 @@ object Dsir {
       id: Column, alpha: Double = 0.25, roundTo: Int = 6): Unit = {
     val scored = logWeightsAgainst(spark, statsPath, batch, text, id,
       alpha, roundTo)
-    scored
-      .join(Layout.readIfExists(spark, outPath)(scored).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(outPath)
+    Layout.appendAbsent(scored, Layout.readIfExists(spark, outPath)(scored),
+      outPath, "doc_id")
   }
 
   /** Deterministic standard-Gumbel noise for `id`: u ∈ (0,1) from the

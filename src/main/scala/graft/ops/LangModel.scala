@@ -483,10 +483,12 @@ object LangModel {
           roundTo).as("nll"))
   }
 
-  /** Per-batch body of [[graft.streaming.StreamingIngest
-    * .scoreStreamAgainstBigramStats]], callable directly so replay
-    * semantics are testable: score `batch` against the stored bigram
-    * statistics and append (doc_id, n_bigrams, nll) rows to `outPath`.
+  /** Per-batch body of a streamed perplexity scorer (a
+    * [[graft.streaming.StreamingIngest.foreachBatch]] body), the CCNet
+    * fit-once/score-arrivals shape: score `batch` against the stored
+    * bigram statistics and append (doc_id, n_bigrams, nll) rows to
+    * `outPath`. The stats store is the only state and the stream never
+    * changes it.
     * Idempotent under foreachBatch replay (normal at-least-once
     * restart behavior) via the same doc_id anti-join the incremental
     * dedup indexes use — a replayed batch appends nothing, so the sink
@@ -495,10 +497,8 @@ object LangModel {
       statsPath: String, outPath: String, batch: DataFrame, text: Column,
       id: Column, k: Double = 0.5, roundTo: Int = 6): Unit = {
     val scored = scoreBigramAgainst(spark, statsPath, batch, text, id, k, roundTo)
-    scored
-      .join(Layout.readIfExists(spark, outPath)(scored).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .write.mode("append").parquet(outPath)
+    Layout.appendAbsent(scored, Layout.readIfExists(spark, outPath)(scored),
+      outPath, "doc_id")
   }
 
   /** Score every document against bigram statistics of the SAME

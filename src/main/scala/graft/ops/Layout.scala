@@ -101,6 +101,31 @@ object Layout {
       .drop("__z")
       .write.mode("overwrite").parquet(path)
 
+  /** Read a store if it exists, else an empty frame with `template`'s
+    * schema — THE shared probe of every incremental append body.
+    * Existence goes through the Hadoop FileSystem API: a
+    * `java.io.File` check would be silently false on HDFS/S3/ABFS and
+    * every downstream anti-join would treat a populated store as
+    * empty. `template` is only used for its schema (limit(0)). */
+  def readIfExists(spark: SparkSession, path: String)
+      (template: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) spark.read.parquet(path) else template.limit(0)
+  }
+
+  /** Append the `rows` whose `key` is not in `stored` to the parquet
+    * store at `path` — the replay-idempotent append of every
+    * incremental index and score sink: a replayed micro-batch finds
+    * its keys already stored and appends nothing. `stored` is the
+    * caller's read of the store: `spark.read.parquet` where the store
+    * must already exist (a missing index fails the append), or
+    * [[readIfExists]] for a sink the first batch creates. */
+  def appendAbsent(rows: DataFrame, stored: DataFrame, path: String,
+      key: String): Unit =
+    rows.join(stored.select(key), Seq(key), "left_anti")
+      .write.mode("append").parquet(path)
+
   /** Small-file compaction of a parquet directory tree — the
     * operational counterpart of every append path here (streaming
     * ingest, index appends): micro-batches and incremental appends
@@ -129,19 +154,6 @@ object Layout {
     * Ordering inside rewritten files is not preserved (coalesce-style
     * compaction never guarantees it); run [[writeZOrdered]] instead
     * where a sort-derived layout must survive. */
-  /** Read a store if it exists, else an empty frame with `template`'s
-    * schema — THE shared probe of every incremental append body.
-    * Existence goes through the Hadoop FileSystem API: a
-    * `java.io.File` check would be silently false on HDFS/S3/ABFS and
-    * every downstream anti-join would treat a populated store as
-    * empty. `template` is only used for its schema (limit(0)). */
-  def readIfExists(spark: SparkSession, path: String)
-      (template: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path) else template.limit(0)
-  }
-
   def compactFiles(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): (Int, Long, Long) = {
     import org.apache.hadoop.fs.Path

@@ -297,7 +297,10 @@ object Pack {
   }
 
   /** Compute [[packGreedyAppend]] and persist it into the layout
-    * (same shard partitioning as the build). */
+    * (same shard partitioning as the build). Streamed batch by batch,
+    * the layout grows as the corpus arrives: micro-batch size only
+    * moves sequence boundaries, never violates capacity, and replays
+    * are idempotent on the store (doc_id anti-join). */
   def appendToGreedyLayout(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, id: Column,
       nTokens: Column): Unit =

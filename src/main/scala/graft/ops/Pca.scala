@@ -112,8 +112,8 @@ object Pca {
   /** Persist the corpus' moment summary — the write-once batch half
     * of an INCREMENTAL PCA: the store is `batch=`-partitioned one-row
     * summaries (~17 KB each), increments append new partitions
-    * (batch: [[appendMoments]]; streaming:
-    * [[graft.streaming.StreamingIngest.momentStreamAppend]] with
+    * ([[appendMoments]], in batch or as the body of a
+    * [[graft.streaming.StreamingIngest.foreachBatch]] with
     * replay-overwrite exactly-once), and a fit folds them by plain
     * addition — the covariance of the GROWN corpus with no rescan of
     * old data. */

@@ -148,10 +148,8 @@ object Similarity {
   /** Append an increment's vectors (idempotent on vec_id). */
   def appendToCosineIndex(spark: SparkSession, indexPath: String,
       emb: DataFrame, id: Column, vec: Column): Unit =
-    emb.select(id.as("vec_id"), vec.as("v"))
-      .join(spark.read.parquet(s"$indexPath/docs").select("vec_id"),
-        Seq("vec_id"), "left_anti")
-      .write.mode("append").parquet(s"$indexPath/docs")
+    Layout.appendAbsent(emb.select(id.as("vec_id"), vec.as("v")),
+      spark.read.parquet(s"$indexPath/docs"), s"$indexPath/docs", "vec_id")
 
   /** Cosine near-dup pairs between an increment and a stored vector
     * index (plus pairs within the increment) — [[cosinePairs]]'
@@ -205,16 +203,17 @@ object Similarity {
     }
   }
 
-  /** Per-batch body of [[graft.streaming.StreamingIngest
-    * .vectorGateStream]] — the online vector-dedup admission gate:
+  /** The online vector-dedup admission gate, one micro-batch at a
+    * time (the body of a [[graft.streaming.StreamingIngest.foreachBatch]]):
     * verdict every batch vector against the stored corpus AND the
     * batch itself ([[cosinePairsAgainstIndex]]), admit only the fresh
     * ones to the index, and append one verdict row
     * (vec_id, dup_of, is_dup) per vector to `outPath`.
     *
-    * Duplicate rule (first-wins, the vector twin of the curateStream
-    * ledger): a batch vector is a duplicate iff it has a pair partner
-    * that is already STORED, or a batch partner with a SMALLER id —
+    * Duplicate rule (first-wins, the vector twin of the
+    * [[Curate.appendCuratedAgainst]] ledger): a batch vector is a
+    * duplicate iff it has a pair partner that is already STORED, or a
+    * batch partner with a SMALLER id —
     * so exactly one member of an all-new duplicate group (its
     * smallest id) is admitted. `dup_of` is the smallest such partner;
     * over a near-dup CHAIN it may itself be a duplicate (the chain
@@ -246,10 +245,8 @@ object Similarity {
         Seq("vec_id"), "left")
       .select(col("vec_id"), col("dup_of"),
         col("dup_of").isNotNull.cast(LongType).as("is_dup"))
-    verdicts
-      .join(Layout.readIfExists(spark, outPath)(verdicts).select("vec_id"),
-        Seq("vec_id"), "left_anti")
-      .write.mode("append").parquet(outPath)
+    Layout.appendAbsent(verdicts, Layout.readIfExists(spark, outPath)(verdicts),
+      outPath, "vec_id")
     val fresh = base.join(dupOf.select(col("x").as("vec_id")),
       Seq("vec_id"), "left_anti")
     appendToCosineIndex(spark, indexPath, fresh, col("vec_id"), col("v"))
@@ -418,7 +415,9 @@ object Similarity {
     * becomes write-once-append-many, the reference's insert contract
     * applied to ANN state; centroid drift under heavy appends is the
     * standard IVF trade — rebuild when recall decays. Detects and
-    * preserves the store's float vs int8 list layout. */
+    * preserves the store's float vs int8 list layout. Not idempotent:
+    * a replayed stream batch re-appends its rows (reconcile downstream
+    * with exact dedup on vec_id). */
   def appendToIvfIndex(spark: SparkSession, indexPath: String,
       vectors: DataFrame): Unit = {
     val centersDf = spark.read.parquet(s"$indexPath/centroids")

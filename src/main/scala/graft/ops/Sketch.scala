@@ -42,16 +42,26 @@ object Sketch {
       .select(col("p.r").as("r"), col("p.c").as("c"), col("__w"))
       .groupBy("r", "c").agg(sum("__w").as("n"))
 
-  /** Point-estimate the frequency of each row's `key`: the minimum
-    * over the grid's `depth` cells the key hashes to (absent cell →
-    * 0). Planned like [[Bloom.mightContain]]: `depth` broadcast hash
-    * joins, no shuffle — the estimate column streams alongside the
-    * input. Output = the input plus `est: BIGINT`. */
+  /** Fold one micro-batch of keys into its own counter grid and write
+    * it as the `batch=<batchId>` partition of the store at `path` —
+    * the per-batch body of a streamed count-min store
+    * (`StreamingIngest.foreachBatch(keys, cp)((b, id) =>
+    * countMinAppend(b, key, depth, width, path, id))`). A replayed
+    * batch OVERWRITES its own partition, so at-least-once delivery
+    * stays exactly-once on the sketch without any anti-join (additive
+    * state + deterministic batch ids is the cheapest idempotence in
+    * the repo). A batch is ≤ depth·width rows no matter how many keys
+    * it carried. Read the live grid with [[countMinLoad]]; collapse
+    * old batches with [[compactCountMin]]. */
+  def countMinAppend(batch: DataFrame, key: Column, depth: Int,
+      width: Long, path: String, batchId: Long, seed: Long = 0L): Unit =
+    countMinFit(batch, key, depth, width, seed)
+      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+
   /** Sum a directory of per-batch grids (written by
-    * [[graft.streaming.StreamingIngest.sketchStreamCountMin]]) into
-    * the live counter grid. Additivity makes this exact regardless of
-    * how many batch files exist; run [[compactCountMin]] when the
-    * directory grows. */
+    * [[countMinAppend]]) into the live counter grid. Additivity makes
+    * this exact regardless of how many batch files exist; run
+    * [[compactCountMin]] when the directory grows. */
   def countMinLoad(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
     spark.read.parquet(path).groupBy("r", "c").agg(sum("n").as("n"))
@@ -92,6 +102,29 @@ object Sketch {
       .filter(col("rank") <= k)
   }
 
+  /** Streaming approximate top-k, one micro-batch: fold the batch into
+    * the count-min grid at `<path>/sketch` ([[countMinAppend]]), then
+    * re-rank the batch's own keys plus the stored candidates against
+    * the LIVE grid and overwrite `<path>/topk` with the `k` best
+    * ([[countMinTopK]]). State is O(k + batch keys) rows; estimates
+    * are one-sided, so a frequent key can only be displaced by
+    * overcount (≤ εN), never undercount — the SpaceSaving-style trade,
+    * measured in SketchSpec. A replayed batch overwrites its own grid
+    * partition and re-ranks against the same live grid. */
+  def topKAppend(batch: DataFrame, key: Column, depth: Int, width: Long,
+      k: Int, path: String, batchId: Long, seed: Long = 0L): Unit = {
+    val spark = batch.sparkSession
+    countMinAppend(batch, key, depth, width, s"$path/sketch", batchId, seed)
+    val live = countMinLoad(spark, s"$path/sketch")
+    val batchKeys = batch.select(key.as("key")).distinct()
+    val prev = Layout.readIfExists(spark, s"$path/topk")(
+      countMinTopK(batchKeys, col("key"), live, depth, width, k, seed))
+    val cands = batchKeys.unionByName(prev.select("key")).distinct()
+    countMinTopK(cands, col("key"), live, depth, width, k, seed)
+      .localCheckpoint(true)
+      .write.mode("overwrite").parquet(s"$path/topk")
+  }
+
   // ---------------------------------------------------------------
   // Incremental cardinality: persisted HLL register stores
   // ---------------------------------------------------------------
@@ -122,16 +155,30 @@ object Sketch {
         hll_sketch_estimate(col("sketch")).cast(LongType)
           .as("n_distinct"): _*)
 
+  /** Fold one micro-batch into its own per-group sketches, written as
+    * the `batch=<batchId>` partition of the store at `path` — the
+    * per-batch body of a streamed HLL store. A replayed batch
+    * overwrites its own partition (the count-min store's
+    * exactly-once-without-anti-join trick; HLL registers are
+    * union-mergeable, so the per-batch sketches ARE the state). Read
+    * live estimates with [[hllLoad]] + [[hllEstimate]]. */
+  def hllAppend(batch: DataFrame, key: Column, groups: Seq[String],
+      path: String, batchId: Long, lgK: Int = 12): Unit =
+    hllFit(batch, key, groups, lgK)
+      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+
   /** Load the live per-group registers of a `batch=`-partitioned HLL
-    * store (written by
-    * [[graft.streaming.StreamingIngest.sketchStreamHll]], same
-    * exactly-once overwrite-by-batch-id discipline as the count-min
-    * store). */
+    * store (written by [[hllAppend]]). */
   def hllLoad(spark: org.apache.spark.sql.SparkSession, path: String,
       groups: Seq[String]): DataFrame =
     hllMerge(spark.read.parquet(path).select(
       (groups.map(col) :+ col("sketch")): _*), groups)
 
+  /** Point-estimate the frequency of each row's `key`: the minimum
+    * over the grid's `depth` cells the key hashes to (absent cell →
+    * 0). Planned like [[Bloom.mightContain]]: `depth` broadcast hash
+    * joins, no shuffle — the estimate column streams alongside the
+    * input. Output = the input plus `est: BIGINT`. */
   def countMinEstimate(df: DataFrame, key: Column, sketch: DataFrame,
       depth: Int, width: Long, seed: Long = 0L,
       broadcastSketch: Boolean = true): DataFrame = {

@@ -118,9 +118,7 @@ object Snapshot {
           .when(col("old_fp") =!= col("new_fp"), lit("changed"))
           .otherwise(lit("unchanged")).as("status"),
         col("old_fp"), col("new_fp"))
-    val prev = Layout.readIfExists(spark, outPath)(d)
-    d.join(prev.select("id"), Seq("id"), "left_anti")
-      .write.mode("append").parquet(outPath)
+    Layout.appendAbsent(d, Layout.readIfExists(spark, outPath)(d), outPath, "id")
   }
 
   /** Replace the stored fingerprints with the new snapshot's — write

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{SparkEntry, Timeseries}
 import graft.model._
-import graft.ops.{Classify, Dedup, Sketch}
+import graft.ops.{Classify, Dedup, Sketch, Snapshot, Urls}
 import graft.queries.Oracle.Sql
 import graft.streaming.StreamingIngest
 import graft.time._
@@ -304,9 +304,9 @@ object StreamQueries {
       val mem = MemoryStream[(Long, String)]
       val toks = mem.toDF().select(explode(Dedup.tokens(col("_2"))).as("token"))
       val out = tmp("graft_stream_cms")
-      val q = StreamingIngest.sketchStreamCountMin(toks, out,
-        tmp("graft_stream_cms_ck"), col("token"), depth = 4, width = 2048L,
-        seed = 2L)
+      val q = StreamingIngest.foreachBatch(toks, tmp("graft_stream_cms_ck"))(
+        (b, id) => Sketch.countMinAppend(b, col("token"), depth = 4,
+          width = 2048L, out, id, seed = 2L))
       runChunks(mem, q, docs.toSeq, 2); q.stop()
       val sketch = Sketch.countMinLoad(s, out)
       val allToks = SparkEntry.table(s, dir, "documents")
@@ -387,9 +387,9 @@ object StreamQueries {
       val sdf = mem.toDF().select(col("_1").as("doc_id"),
         col("_2").as("text"))
       val out = tmp("graft_stream_snapd") + "/out"
-      val q = StreamingIngest.deltaStreamAgainstFingerprintStore(sdf,
-        store, out, tmp("graft_stream_snapd_ck"), col("doc_id"),
-        col("text"))
+      val q = StreamingIngest.foreachBatch(sdf, tmp("graft_stream_snapd_ck"))(
+        (b, _) => Snapshot.appendDeltaAgainst(b.sparkSession, store, out, b,
+          col("doc_id"), col("text")))
       runChunks(mem, q, crawl.toSeq, 2); q.stop()
       s.read.parquet(out).orderBy("id")
     }, Sql(
@@ -406,8 +406,8 @@ object StreamQueries {
 
     // Streaming model-based quality scoring: NB model fit ONCE batch-
     // side and persisted; the held-out docs stream through
-    // scoreStreamAgainstNbModel (foreachBatch scoreIndexed + doc_id
-    // anti-join append) — the stored-model path oracled against the
+    // foreachBatch into Classify.appendScoredAgainst (scoreIndexed +
+    // doc_id anti-join append) — the stored-model path oracled against the
     // same closed-form training math as batch classify_nb_score
     Query("stream_nb_score", (s, dir) => withStreamPartitions(s, 8) {
       implicit val sq = s.sqlContext
@@ -430,8 +430,9 @@ object StreamQueries {
       // subpath of the fresh temp dir: must NOT pre-exist, so the
       // appender's readIfExists takes its empty-store branch
       val out = tmp("graft_stream_nbo") + "/out"
-      val q = StreamingIngest.scoreStreamAgainstNbModel(sdf, mp, out,
-        tmp("graft_stream_nbo_ck"), col("text"), col("doc_id"))
+      val q = StreamingIngest.foreachBatch(sdf, tmp("graft_stream_nbo_ck"))(
+        (b, _) => Classify.appendScoredAgainst(b.sparkSession, mp, out, b,
+          col("text"), col("doc_id")))
       runChunks(mem, q, held.toSeq, 2); q.stop()
       s.read.parquet(out).orderBy("doc_id")
     }, Sql(
@@ -493,7 +494,7 @@ object StreamQueries {
         SparkEntry.table(s, dir, "documents"))
       val mem = MemoryStream[(Long, String)]
       val sdf = mem.toDF().select(col("_1").as("rid"), col("_2").as("u"))
-      val gated = StreamingIngest.frontierGateStream(sdf, col("u"),
+      val gated = Urls.robotsVerdictsMapSide(sdf, col("u"),
         col("rid"), robots, col("host"), col("robots_txt"), "graftbot")
       val qn = s"graft_stream_q${qid.incrementAndGet()}"
       val q = gated.writeStream.format("memory").queryName(qn)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.Timeseries
@@ -25,24 +26,23 @@ import graft.time._
   *     redis_backend.py:146-148): data older than the retention horizon
   *     is dropped at ingest.
   *
+  * Every other store (the ANN and dedup indexes, score sinks, sketches,
+  * moment and count stores) takes a stream through [[foreachBatch]]:
+  * the caller passes the per-batch write of the op that owns the store,
+  * and that op states its own replay contract.
+  *
   * State note: count/gauge state is O(1) per bucket; series/set state
   * grows with bucket contents and is bounded only by the watermark TTL —
   * same caveat the reference carries implicitly.
   */
 object StreamingIngest {
 
-  /** Bucketize a (possibly streaming) events frame — identical
-    * projection to Timeseries.bucketize, reused verbatim. */
-  def bucketize(t: Timeseries, events: DataFrame, name: Column, ts: Column,
-      value: Column, seq: Column): DataFrame =
-    t.bucketize(events, name, ts, value, seq)
-
   /** Append each micro-batch to a parquet bucket store partitioned by
     * interval (idempotent-enough for at-least-once; exactly-once needs a
     * transactional table format underneath, same as any Spark sink). */
   def appendToStore(t: Timeseries, events: DataFrame, name: Column, ts: Column,
       value: Column, seq: Column, path: String, checkpoint: String) =
-    bucketize(t, events, name, ts, value, seq)
+    t.bucketize(events, name, ts, value, seq)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .partitionBy("interval")
@@ -50,347 +50,19 @@ object StreamingIngest {
       .outputMode("append")
       .start(path)
 
-  /** Streaming maintenance of a persisted IVF index: each micro-batch
-    * of (vec_id, embedding) rows is assigned to its nearest STORED
-    * centroid and appended to the probed list partitions
-    * ([[graft.ops.Similarity.appendToIvfIndex]] — no refit, no list
-    * reads) — the ANN-store twin of [[appendToStore]]: index build is
-    * a batch job, arrivals stream in, queries prune to probed
-    * partitions throughout. At-least-once like any file append; a
-    * replayed batch re-appends rows (reconcile downstream with exact
-    * dedup on vec_id, or rebuild on centroid drift). */
-  def appendStreamToIvfIndex(vectors: DataFrame, indexPath: String,
-      checkpoint: String) =
-    vectors.writeStream
+  /** Run `body(batch, batchId)` on every micro-batch of `df`,
+    * checkpointed at `checkpoint` — the one entry point for streams
+    * that land in a graft store. The store's per-batch write lives in
+    * the op that owns it (e.g.
+    * [[graft.ops.Curate.appendCuratedAgainst]],
+    * [[graft.ops.Sketch.countMinAppend]]), and so does its replay
+    * contract: foreachBatch is at-least-once, so a restarted query
+    * hands a batch to `body` again under the same id. */
+  def foreachBatch(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Similarity.appendToIvfIndex(batch.sparkSession, indexPath, batch)
-      }
-      .start()
-
-  /** Stream documents into a persisted BM25 search index
-    * ([[graft.ops.Search.appendToIndex]] per micro-batch): postings
-    * build is a batch job, arrivals stream in, queries stay pruned to
-    * their term slivers throughout. At-least-once like any file
-    * append — reconcile replays upstream with exact dedup on the doc
-    * id. */
-  def appendStreamToSearchIndex(docs: DataFrame, indexPath: String,
-      checkpoint: String, text: Column, id: Column) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Search.appendToIndex(batch.sparkSession, indexPath,
-          batch, text, id)
-      }
-      .start()
-
-  /** Stream documents into a persisted minhash near-dup index
-    * ([[graft.ops.Dedup.appendToMinhashIndex]] per micro-batch): the
-    * corpus signature store grows as documents arrive, and each
-    * increment can be near-dup-checked against everything before it
-    * ([[graft.ops.Dedup.nearDupAgainstIndex]]) without re-hashing
-    * stored text. The append's doc_id anti-join makes replayed
-    * micro-batches idempotent on the store. */
-  def appendStreamToMinhashIndex(docs: DataFrame, indexPath: String,
-      checkpoint: String, text: Column, id: Column) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Dedup.appendToMinhashIndex(batch.sparkSession, indexPath,
-          batch, text, id)
-      }
-      .start()
-
-  /** Stream media rows into a persisted perceptual-hash index
-    * ([[graft.ops.Multimodal.appendToPhashIndex]] per micro-batch):
-    * arrivals fingerprint once and the growing corpus stays
-    * incrementally dedupable via
-    * [[graft.ops.Multimodal.phashAgainstIndex]]. Replays are
-    * idempotent on the store (doc_id anti-join). */
-  def appendStreamToPhashIndex(media: DataFrame, indexPath: String,
-      checkpoint: String, id: Column, payload: Column) =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Multimodal.appendToPhashIndex(batch.sparkSession, indexPath,
-          batch, id, payload)
-      }
-      .start()
-
-  /** Stream training documents into a persisted decontamination gram
-    * index ([[graft.ops.Decontaminate.appendToTrainIndex]] per
-    * micro-batch): the train corpus' distinct-gram set grows as
-    * documents arrive, and eval sets can be contamination-checked
-    * against everything ingested so far
-    * ([[graft.ops.Decontaminate.contaminationIndexed]]) without a
-    * train-corpus rescan. The append's gram anti-join keeps the store
-    * DISTINCT — which also makes replayed micro-batches idempotent (a
-    * replayed gram is by definition already stored). */
-  def appendStreamToTrainIndex(docs: DataFrame, indexPath: String,
-      checkpoint: String, text: Column, n: Int) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Decontaminate.appendToTrainIndex(batch.sparkSession,
-          indexPath, batch, text, n)
-      }
-      .start()
-
-  /** Stream embeddings into a persisted cosine near-dup index
-    * ([[graft.ops.Similarity.appendToCosineIndex]] per micro-batch):
-    * arrivals are signed once against the meta-pinned hyperplanes and
-    * each increment can be near-dup-checked against the whole stored
-    * corpus ([[graft.ops.Similarity.cosinePairsAgainstIndex]]).
-    * Replays are idempotent on the store (vec_id anti-join). */
-  def appendStreamToCosineIndex(vectors: DataFrame, indexPath: String,
-      checkpoint: String, id: Column, vec: Column) =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Similarity.appendToCosineIndex(batch.sparkSession,
-          indexPath, batch, id, vec)
-      }
-      .start()
-
-  /** The online vector-dedup admission gate
-    * ([[graft.ops.Similarity.appendGatedToCosineIndex]] per
-    * micro-batch): every arriving vector is verdicted against the
-    * stored corpus and its own batch, duplicates are rejected with a
-    * (vec_id, dup_of, is_dup) ledger row, and only fresh vectors
-    * enter the index — the embedding-space twin of the curateStream
-    * fingerprint gate. Replays change neither the ledger nor the
-    * index (anti-joins both sides). */
-  def vectorGateStream(vectors: DataFrame, indexPath: String,
-      outPath: String, checkpoint: String, id: Column, vec: Column,
-      threshold: Double = 0.9) =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Similarity.appendGatedToCosineIndex(batch.sparkSession,
-          indexPath, outPath, batch, id, vec, threshold)
-      }
-      .start()
-
-  /** Stream documents into a persisted greedy pack layout
-    * ([[graft.ops.Pack.appendToGreedyLayout]] per micro-batch): each
-    * arrival folds onto its shard's open sequence under the
-    * meta-pinned geometry, so the training layout GROWS as the corpus
-    * streams in — no terminal repack job. Micro-batch size only moves
-    * sequence boundaries (each batch continues the previous state),
-    * never violates capacity; replays are idempotent on the store
-    * (doc_id anti-join). */
-  def appendStreamToPackLayout(docs: DataFrame, layoutPath: String,
-      checkpoint: String, id: Column, nTokens: Column) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Pack.appendToGreedyLayout(batch.sparkSession, layoutPath,
-          batch, id, nTokens)
-      }
-      .start()
-
-  /** Stream documents through perplexity scoring against STORED bigram
-    * statistics ([[graft.ops.LangModel.buildBigramStats]]) — the CCNet
-    * quality-filter shape made streaming: fit once on a trusted corpus
-    * (a batch job), score every arriving crawl increment against it as
-    * it lands. Scoring is stateless per micro-batch (two key-equality
-    * joins against the stored stats plus one broadcast vocabulary
-    * scalar — [[graft.ops.LangModel.scoreBigramAgainst]]), so there is
-    * NO stream state at all: the stats store is the state, and it
-    * never changes under the stream. Scored rows
-    * (doc_id, n_bigrams, nll) append to `outPath`; replayed
-    * micro-batches are idempotent on the sink (doc_id anti-join,
-    * [[graft.ops.LangModel.appendScoredAgainst]]). */
-  def scoreStreamAgainstBigramStats(docs: DataFrame, statsPath: String,
-      outPath: String, checkpoint: String, text: Column, id: Column,
-      k: Double = 0.5, roundTo: Int = 6) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.LangModel.appendScoredAgainst(batch.sparkSession,
-          statsPath, outPath, batch, text, id, k, roundTo)
-      }
-      .start()
-
-  /** Maintain a count-min sketch over a key stream: each micro-batch
-    * folds to its own counter grid and lands as the `batch=<id>`
-    * partition of the store — REPLAYS OVERWRITE THE SAME PARTITION,
-    * so at-least-once delivery stays exactly-once on the sketch
-    * without any anti-join (additive state + deterministic batch ids
-    * is the cheapest idempotence in the repo). Read the live grid
-    * with [[graft.ops.Sketch.countMinLoad]] (sums partitions);
-    * collapse old batches with [[graft.ops.Sketch.compactCountMin]].
-    * A batch is ≤ depth·width rows no matter how many keys it
-    * carried. */
-  def sketchStreamCountMin(keys: DataFrame, outPath: String,
-      checkpoint: String, key: Column, depth: Int, width: Long,
-      seed: Long = 0L) =
-    keys.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Sketch.countMinFit(batch, key, depth, width, seed)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$id")
-      }
-      .start()
-
-  /** Maintain a PCA moment store over a vector stream: each
-    * micro-batch folds to its ONE-ROW (n, Σx, Σxxᵀ) summary
-    * ([[graft.ops.Pca.appendMoments]]) landing as the `batch=<id>`
-    * partition — replays overwrite the same partition, so
-    * at-least-once delivery stays exactly-once on the moments
-    * (additive state + deterministic batch ids, the count-min
-    * trick). [[graft.ops.Pca.fitFromStore]] then yields the grown
-    * corpus' eigenbasis with no rescan of old vectors. */
-  def momentStreamAppend(vectors: DataFrame, outPath: String,
-      checkpoint: String, vec: Column, dims: Int) =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Pca.appendMoments(batch, vec, dims, outPath, id)
-      }
-      .start()
-
-  /** Streaming approximate top-k: maintain a count-min grid (per-batch
-    * `batch=<id>` partitions, replay-overwrite exactly-once) AND a
-    * top-k candidate store — each batch re-ranks its own keys plus the
-    * stored candidates against the LIVE grid and overwrites
-    * `<store>/topk`. State is O(k + batch keys) rows; estimates are
-    * one-sided, so a frequent key can only be displaced by overcount
-    * (≤ εN), never undercount — the SpaceSaving-style trade,
-    * measured in SketchSpec. */
-  def sketchStreamTopK(rows: DataFrame, storePath: String,
-      checkpoint: String, key: Column, depth: Int, width: Long, k: Int,
-      seed: Long = 0L) =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        graft.ops.Sketch.countMinFit(batch, key, depth, width, seed)
-          .write.mode("overwrite").parquet(s"$storePath/sketch/batch=$id")
-        val live = graft.ops.Sketch.countMinLoad(spark, s"$storePath/sketch")
-        val batchKeys = batch.select(key.as("key")).distinct()
-        val prev = graft.ops.Layout.readIfExists(spark, s"$storePath/topk")(
-          graft.ops.Sketch.countMinTopK(batchKeys, col("key"), live,
-            depth, width, k, seed))
-        val cands = batchKeys.unionByName(prev.select("key")).distinct()
-        val top = graft.ops.Sketch.countMinTopK(cands, col("key"), live,
-          depth, width, k, seed).localCheckpoint(true)
-        top.write.mode("overwrite").parquet(s"$storePath/topk")
-      }
-      .start()
-
-  /** Maintain per-group HLL cardinality registers over a stream:
-    * each micro-batch folds to its own per-group sketches in the
-    * `batch=<id>` store partition (replays overwrite — the same
-    * exactly-once-without-anti-join trick as the count-min store;
-    * HLL registers are union-mergeable, so per-batch sketches ARE the
-    * state). Read live estimates with [[graft.ops.Sketch.hllLoad]] +
-    * [[graft.ops.Sketch.hllEstimate]]. */
-  def sketchStreamHll(rows: DataFrame, outPath: String,
-      checkpoint: String, key: Column, groups: Seq[String],
-      lgK: Int = 12) =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.ops.Sketch.hllFit(batch, key, groups, lgK)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$id")
-      }
-      .start()
-
-  /** Stream documents through Naive-Bayes classifier scoring against
-    * a STORED model ([[graft.ops.Classify.saveModel]]) — the
-    * model-based quality filter made streaming, same shape as the
-    * perplexity scorer above: the model store IS the state (fit once
-    * on the labeled seed set, never touched by the stream), scoring
-    * is one token join per micro-batch. Scored rows
-    * (doc_id, n_tokens, score, prob, pred) append to `outPath`;
-    * replays are idempotent on the sink (doc_id anti-join,
-    * [[graft.ops.Classify.appendScoredAgainst]]). */
-  def scoreStreamAgainstNbModel(docs: DataFrame, modelPath: String,
-      outPath: String, checkpoint: String, text: Column, id: Column,
-      roundTo: Int = 6) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Classify.appendScoredAgainst(batch.sparkSession,
-          modelPath, outPath, batch, text, id, roundTo)
-      }
-      .start()
-
-  /** Stream crawl increments into the additive collocation-count
-    * store ([[graft.ops.Colloc.buildCountsStore]]): each micro-batch
-    * writes its pair counts as `batch=<epochId+1>` (the micro-batch
-    * id keys the partition, so a replayed batch OVERWRITES itself —
-    * exactly-once by layout, the count-min streaming contract applied
-    * to exact counts). Reads sum across batches; no re-tokenization
-    * of anything already counted. */
-  def appendStreamToCollocCounts(docs: DataFrame, path: String,
-      checkpoint: String, text: Column, window: Int) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        graft.ops.Colloc.appendCountsBatch(batch, text, window,
-          path, batchId = epochId + 1)
-      }
-      .start()
-
-  /** Stream crawled documents through snapshot-delta classification
-    * against the STORED fingerprint table
-    * ([[graft.ops.Snapshot.buildFingerprintStore]]): each micro-batch
-    * is one (id-keyed) left join against yesterday's ~24-byte/doc
-    * state, appending added/changed/unchanged rows; 'removed' is a
-    * batch reconciliation after the crawl closes (absent ids never
-    * arrive on a stream). Replay-idempotent on the sink. */
-  def deltaStreamAgainstFingerprintStore(docs: DataFrame, storePath: String,
-      outPath: String, checkpoint: String, id: Column, content: Column) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Snapshot.appendDeltaAgainst(batch.sparkSession,
-          storePath, outPath, batch, id, content)
-      }
-      .start()
-
-  /** Stream documents through DSIR importance scoring against STORED
-    * bucket statistics ([[graft.ops.Dsir.buildStats]]) — the
-    * domain-tilt filter made streaming, same shape as the perplexity
-    * scorer above: the stats store IS the state (fit once on the
-    * reference corpus, never touched by the stream), scoring is one
-    * key-equality join per micro-batch, and add-α smoothing absorbs
-    * buckets the reference never saw. Scored rows
-    * (doc_id, n_grams, logw) append to `outPath`; replays are
-    * idempotent on the sink (doc_id anti-join,
-    * [[graft.ops.Dsir.appendScoredAgainst]]). */
-  def scoreStreamAgainstDsirStats(docs: DataFrame, statsPath: String,
-      outPath: String, checkpoint: String, text: Column, id: Column,
-      alpha: Double = 0.25, roundTo: Int = 6) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Dsir.appendScoredAgainst(batch.sparkSession,
-          statsPath, outPath, batch, text, id, alpha, roundTo)
-      }
-      .start()
-
-  /** The curation funnel as a stream — the flagship batch operator's
-    * streaming twin ([[graft.ops.Curate.appendCuratedAgainst]] per
-    * micro-batch): scalar filters are stateless projections, exact
-    * dedup keeps first-arrival via a growing fingerprint store (the
-    * store IS the stream state, like every index stream here), and the
-    * optional perplexity ceiling scores against stored bigram stats.
-    * Near-dup clustering is deliberately absent — its streaming shape
-    * is [[appendStreamToMinhashIndex]] + reconciliation, not a
-    * per-batch CC. Ledger rows land append-only at `outPath`; replays
-    * are idempotent on both the store and the sink. */
-  def curateStream(docs: DataFrame, storePath: String, outPath: String,
-      checkpoint: String, text: Column, id: Column,
-      cfg: graft.ops.Curate.Config = graft.ops.Curate.Config()) =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Curate.appendCuratedAgainst(batch.sparkSession,
-          storePath, outPath, batch, text, id, cfg)
-      }
+      .foreachBatch(body)
       .start()
 
   /** Streaming rolling z-score anomaly detection — the streaming twin
@@ -667,8 +339,8 @@ object StreamingIngest {
         graft.ops.Ledger.note("stream_bucket_cap",
           s"${t.seriesType.typeName}/$interval stream state capped at " +
           s"$c elements per bucket (order-smallest kept)")
-        t.seriesType.foldExprCapped(col("value"), col("ord"), c)
-      case None => t.seriesType.foldExpr(col("value"), col("ord"))
+        t.seriesType.foldExprCapped(col("value"), col("ord"), t.valueType, c)
+      case None => t.seriesType.foldExpr(col("value"), col("ord"), t.valueType)
     }
     val agged = withWm
       .groupBy(col("name"), window(col("ts"), s"$windowSec seconds").as("w"))
@@ -680,19 +352,4 @@ object StreamingIngest {
        else TimeColumns.bucket(col("w.start"), sp.resolution.get)).as("r_time"),
       col("value"))
   }
-
-  /** Robots-gated crawl frontier on a STREAMING url frame — the
-    * zero-aggregation map-side gate
-    * ([[graft.ops.Urls.robotsVerdictsMapSide]]): the per-host rule
-    * arrays broadcast as a stream-static equi-join and the RFC winner
-    * is an array fold in the projection, so the query runs in append
-    * mode with no watermark and NO state store — candidate URLs gate
-    * at wire speed as they are discovered. Returns the gate's
-    * (doc_id, url, host, path, allowed) rows as a streaming frame the
-    * caller sinks. */
-  def frontierGateStream(urls: DataFrame, url: Column, id: Column,
-      robots: DataFrame, robotsHost: Column, robotsTxt: Column,
-      agent: String): DataFrame =
-    graft.ops.Urls.robotsVerdictsMapSide(urls, url, id, robots,
-      robotsHost, robotsTxt, agent)
 }

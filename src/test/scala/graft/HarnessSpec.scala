@@ -105,8 +105,28 @@ class HarnessSpec extends AnyFunSuite {
 
   test("a malformed warm-runs value falls back to 2") {
     for (v <- Seq(None, Some(""), Some("two"), Some("0"), Some("-1"), Some("2.5")))
-      assert(Harness.positive(v, 2) === 2, v)
-    assert(Harness.positive(Some(" 3 "), 2) === 3)
+      assert(Harness.positive("SPARK_GRAFT_WARM_RUNS", v, 2) === 2, v)
+    assert(Harness.positive("SPARK_GRAFT_WARM_RUNS", Some(" 3 "), 2) === 3)
+  }
+
+  test("a set value a setting falls back from is named on stderr, once") {
+    def stderr(f: => Any): String = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withErr(new java.io.PrintStream(buf, true, "UTF-8"))(f)
+      buf.toString("UTF-8")
+    }
+    assert(stderr(assert(Harness.positive("SPARK_GRAFT_WARM_RUNS", Some("two"), 2) === 2)) ===
+      "[graft] ignoring SPARK_GRAFT_WARM_RUNS=\"two\": using the default 2\n")
+    assert(stderr(assert(Harness.positive("SPARK_GRAFT_CPUS", Some("-1"), 4) === 4)) ===
+      "[graft] ignoring SPARK_GRAFT_CPUS=\"-1\": using the default 4\n")
+    assert(stderr(assert(Bench.loadMax(Some("busy")) === 4.0)) ===
+      "[graft] ignoring SPARK_GRAFT_LOAD_MAX=\"busy\": using the default 4.0\n")
+    // unset, valid, or the default itself (SPARK_GRAFT_BENCH_FORK=0): silent
+    assert(stderr(assert(Harness.positive("SPARK_GRAFT_BENCH_FORK", Some("0"), 0) === 0)) === "")
+    assert(stderr(assert(Harness.positive("SPARK_GRAFT_CPUS", Some("8"), 4) === 8)) === "")
+    assert(stderr(assert(Harness.positive("SPARK_GRAFT_CPUS", None, 4) === 4)) === "")
+    assert(stderr(assert(Bench.loadMax(Some("0")) === 0.0)) === "")
+    assert(stderr(assert(Bench.loadMax(None) === 4.0)) === "")
   }
 
   test("a noop run counts its codegen compiles: 0 for a repeated plan, 1+ for a new literal") {

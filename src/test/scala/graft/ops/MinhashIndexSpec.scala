@@ -172,9 +172,10 @@ class MinhashIndexSpec extends AnyFunSuite {
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingIngest.appendStreamToMinhashIndex(
-      mem.toDF().toDF("doc_id", "text"), path, tmp("mh_ckpt"),
-      col("text"), col("doc_id"))
+    val q = graft.streaming.StreamingIngest.foreachBatch(
+        mem.toDF().toDF("doc_id", "text"), tmp("mh_ckpt"))(
+      (b, _) => Dedup.appendToMinhashIndex(b.sparkSession, path, b,
+        col("text"), col("doc_id")))
     val rows = incrementDocs.collect().map(r => (r.getLong(0), r.getString(1)))
     mem.addData(rows.take(10): _*); q.processAllAvailable()
     mem.addData(rows.drop(10): _*); q.processAllAvailable()

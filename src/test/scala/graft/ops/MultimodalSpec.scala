@@ -122,9 +122,10 @@ class MultimodalSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Array[Byte])]
     val ckpt = java.nio.file.Files.createTempDirectory("ph_ck").toString
-    val q = graft.streaming.StreamingIngest.appendStreamToPhashIndex(
-      mem.toDF().toDF("doc_id", "media"), sPath, ckpt,
-      col("doc_id"), col("media"))
+    val q = graft.streaming.StreamingIngest.foreachBatch(
+        mem.toDF().toDF("doc_id", "media"), ckpt)(
+      (b, _) => Multimodal.appendToPhashIndex(b.sparkSession, sPath, b,
+        col("doc_id"), col("media")))
     val rows = increment.collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
     mem.addData(rows.take(7): _*); q.processAllAvailable()
     mem.addData(rows.drop(7): _*); q.processAllAvailable()

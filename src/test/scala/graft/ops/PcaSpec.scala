@@ -131,12 +131,14 @@ class PcaSpec extends AnyFunSuite {
     assert(Pca.fitFromStore(spark, s"$dir/m", d, d).n === whole.n)
 
     // streaming twin: the same slices as micro-batches through
-    // momentStreamAppend land as batch partitions of a fresh store
+    // foreachBatch into Pca.appendMoments land as batch partitions of a
+    // fresh store
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.StreamingIngest.momentStreamAppend(
-      mem.toDF().select(col("_1").as("vec_id"), col("_2").cast("array<float>").as("embedding")),
-      s"$dir/s", s"$dir/ck", col("embedding"), d)
+    val q = graft.streaming.StreamingIngest.foreachBatch(
+        mem.toDF().select(col("_1").as("vec_id"),
+          col("_2").cast("array<float>").as("embedding")), s"$dir/ck")(
+      (b, id) => Pca.appendMoments(b, col("embedding"), d, s"$dir/s", id))
     val rows = df.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     mem.addData(rows.filter(_._1 < 300).toSeq: _*); q.processAllAvailable()
     mem.addData(rows.filter(_._1 >= 300).toSeq: _*); q.processAllAvailable()

@@ -72,16 +72,16 @@ class SketchSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("cms").toString
     val store = s"$dir/sketch"
     val mem = MemoryStream[String]
-    val q = graft.streaming.StreamingIngest.sketchStreamCountMin(
-      mem.toDF().select(col("value").as("k")), store, s"$dir/ckpt",
-      col("k"), D, W, seed = 9L)
+    val q = graft.streaming.StreamingIngest.foreachBatch(
+        mem.toDF().select(col("value").as("k")), s"$dir/ckpt")(
+      (b, id) => Sketch.countMinAppend(b, col("k"), D, W, store, id, seed = 9L))
     val data = stream.collect().map(_.getString(0)).toSeq
     mem.addData(data.take(300): _*); q.processAllAvailable()
     mem.addData(data.drop(300): _*); q.processAllAvailable()
     q.stop()
-    // batch 0's partition re-written by hand = a replayed micro-batch
-    Sketch.countMinFit(data.take(300).toDF("k"), col("k"), D, W, seed = 9L)
-      .write.mode("overwrite").parquet(s"$store/batch=0")
+    // batch 0 appended again by hand = a replayed micro-batch
+    Sketch.countMinAppend(data.take(300).toDF("k"), col("k"), D, W, store, 0L,
+      seed = 9L)
     val live = Sketch.countMinLoad(spark, store)
       .orderBy("r", "c").collect().toSeq
     val batch = Sketch.countMinFit(stream, col("k"), D, W, seed = 9L)
@@ -101,9 +101,9 @@ class SketchSpec extends AnyFunSuite {
     val store = s"$dir/store"
     val data = stream.collect().map(_.getString(0)).toSeq
     val mem = MemoryStream[String]
-    val q = graft.streaming.StreamingIngest.sketchStreamTopK(
-      mem.toDF().select(col("value").as("k")), store, s"$dir/ckpt",
-      col("k"), D, W, k = 10, seed = 9L)
+    val q = graft.streaming.StreamingIngest.foreachBatch(
+        mem.toDF().select(col("value").as("k")), s"$dir/ckpt")(
+      (b, id) => Sketch.topKAppend(b, col("k"), D, W, k = 10, store, id, seed = 9L))
     mem.addData(data.take(400): _*); q.processAllAvailable()
     mem.addData(data.drop(400): _*); q.processAllAvailable()
     q.stop()
@@ -116,8 +116,8 @@ class SketchSpec extends AnyFunSuite {
       .sortBy { case (key, n) => (-n, key) }.take(10)
     assert(got.toSeq === exact.toSeq)
     // replaying batch 0's grid write changes nothing downstream
-    Sketch.countMinFit(data.take(400).toDF("k"), col("k"), D, W, seed = 9L)
-      .write.mode("overwrite").parquet(s"$store/sketch/batch=0")
+    Sketch.countMinAppend(data.take(400).toDF("k"), col("k"), D, W,
+      s"$store/sketch", 0L, seed = 9L)
     val rescored = Sketch.countMinTopK(
       spark.read.parquet(s"$store/topk").select("key"), col("key"),
       Sketch.countMinLoad(spark, s"$store/sketch"), D, W, 10, seed = 9L)
@@ -159,8 +159,9 @@ class SketchSpec extends AnyFunSuite {
     val store = s"$dir/sketch"
     val rows = (1 to 3000).map(i => (s"g${i % 2}", s"v${i % 800}"))
     val mem = MemoryStream[(String, String)]
-    val q = graft.streaming.StreamingIngest.sketchStreamHll(
-      mem.toDF().toDF("g", "k"), store, s"$dir/ckpt", col("k"), Seq("g"))
+    val q = graft.streaming.StreamingIngest.foreachBatch(
+        mem.toDF().toDF("g", "k"), s"$dir/ckpt")(
+      (b, id) => Sketch.hllAppend(b, col("k"), Seq("g"), store, id))
     mem.addData(rows.take(1500): _*); q.processAllAvailable()
     mem.addData(rows.drop(1500): _*); q.processAllAvailable()
     q.stop()
@@ -168,8 +169,8 @@ class SketchSpec extends AnyFunSuite {
       Seq("g")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val before = live()
     // replay batch 0 by hand — the overwrite must not change anything
-    Sketch.hllFit(rows.take(1500).toDF("g", "k"), col("k"), Seq("g"))
-      .write.mode("overwrite").parquet(s"$store/batch=0")
+    Sketch.hllAppend(rows.take(1500).toDF("g", "k"), col("k"), Seq("g"),
+      store, 0L)
     assert(live() === before)
     // and the streamed registers track the true cardinality
     val exact = rows.toDF("g", "k").distinct().groupBy("g").count()

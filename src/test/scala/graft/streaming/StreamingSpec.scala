@@ -161,6 +161,39 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("streamed decimal count keeps decimal(22,2) and equals the batch get") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dec = DecimalType(12, 2)
+    // the write-side cast rounds to scale 2 on both paths: 2.336 → 2.34
+    val fixture = Seq(("d", T0 + 5L, 0.10), ("d", T0 + 7L, 2.336),
+      ("d", T0 + 65L, 1.004), ("d", T0 + 70L, 0.10))
+    val mem = MemoryStream[(String, Long, Double)]
+    val events = mem.toDF().select(col("_1").as("name"),
+      timestamp_seconds(col("_2")).as("ts"), col("_3").as("value"))
+    val agg = new Timeseries(spark, CountT, minuteHour, valueType = dec)
+      .streamAggregate(events, "minute", col("name"), col("ts"), col("value"))
+    assert(agg.schema("value").dataType === DecimalType(22, 2))
+    val q = agg.writeStream.format("memory").queryName("stream_dec_count")
+      .outputMode("complete").start()
+    mem.addData(fixture.take(2): _*); q.processAllAvailable()
+    mem.addData(fixture.drop(2): _*); q.processAllAvailable()
+    val streamed = spark.table("stream_dec_count").collect()
+      .map(r => r.getAs[Long]("i_time") -> r.getAs[java.math.BigDecimal]("value")).toMap
+    q.stop()
+
+    val bt = new Timeseries(spark, CountT, minuteHour, valueType = dec)
+    for ((n, ts, v) <- fixture) bt.insert(n, v, ts.toDouble)
+    val batch = streamed.keys.map { i =>
+      val got = bt.get(Seq("d"), "minute", (i * 60).toDouble)
+      assert(got.schema("value").dataType === DecimalType(22, 2))
+      i -> got.collect().head.getDecimal(1)
+    }.toMap
+    assert(streamed.keySet === Set(T0 / 60, T0 / 60 + 1))
+    assert(streamed === batch)
+    assert(streamed(T0 / 60).compareTo(new java.math.BigDecimal("2.44")) === 0)
+  }
+
   test("streaming histogram state is O(distinct values), not O(rows)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -417,7 +450,8 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Array[Float])]
     val vectors = mem.toDF()
       .select(col("_1").as("vec_id"), col("_2").as("embedding"))
-    val q = StreamingIngest.appendStreamToIvfIndex(vectors, s"$dir/ivf", s"$dir/ckpt")
+    val q = StreamingIngest.foreachBatch(vectors, s"$dir/ckpt")(
+      (b, _) => graft.ops.Similarity.appendToIvfIndex(b.sparkSession, s"$dir/ivf", b))
     mem.addData(late.take(3).toSeq: _*); q.processAllAvailable()
     mem.addData(late.drop(3).toSeq: _*); q.processAllAvailable()
     q.stop()
@@ -466,8 +500,9 @@ class StreamingSpec extends AnyFunSuite {
 
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-    val q = StreamingIngest.appendStreamToSearchIndex(docs, s"$dir/idx",
-      s"$dir/ckpt", col("text"), col("doc_id"))
+    val q = StreamingIngest.foreachBatch(docs, s"$dir/ckpt")(
+      (b, _) => graft.ops.Search.appendToIndex(b.sparkSession, s"$dir/idx", b,
+        col("text"), col("doc_id")))
     mem.addData((100L, "zebra quokka alpha"), (101L, "zebra zebra"))
     q.processAllAvailable()
     q.stop()
@@ -631,7 +666,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed(("cpu", T0 + 600))._3, "spike must flag")
   }
 
-  test("appendStreamToPackLayout: streamed layout equals sequential batch appends") {
+  test("streamed pack layout equals sequential batch appends") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val L = 128
@@ -648,8 +683,9 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[Long]
     val stream = mem.toDF().select(col("value").as("doc_id"))
       .withColumn("n", (col("doc_id") % 97 + 1).cast("long"))
-    val q = StreamingIngest.appendStreamToPackLayout(stream, pathA, ckpt,
-      col("doc_id"), col("n"))
+    val q = StreamingIngest.foreachBatch(stream, ckpt)(
+      (b, _) => graft.ops.Pack.appendToGreedyLayout(b.sparkSession, pathA, b,
+        col("doc_id"), col("n")))
     mem.addData(0L until 250L: _*); q.processAllAvailable()
     mem.addData(250L until 500L: _*); q.processAllAvailable()
     q.stop()
@@ -681,15 +717,17 @@ class StreamingSpec extends AnyFunSuite {
     val data2 = (400L until 800L).map(i => s"tok${i % 5} alpha beta")
     def toks(df: org.apache.spark.sql.DataFrame) =
       df.select(explode(split(col("value"), " ")).as("token"))
+    def sketch(mem: MemoryStream[String], out: String, ck: String) =
+      StreamingIngest.foreachBatch(toks(mem.toDF()), ck)(
+        (b, id) => graft.ops.Sketch.countMinAppend(b, col("token"), depth = 4,
+          width = 256L, out, id, seed = 7L))
     def grid(out: String) = graft.ops.Sketch.countMinLoad(spark, out)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(x => (x._1, x._2))
 
     // run A: uninterrupted
     val memA = MemoryStream[String]
     val outA = tmpDir("cms_crash_a"); val ckA = tmpDir("cms_crash_a_ck")
-    val qA = graft.streaming.StreamingIngest.sketchStreamCountMin(
-      toks(memA.toDF()), outA, ckA, col("token"), depth = 4, width = 256L,
-      seed = 7L)
+    val qA = sketch(memA, outA, ckA)
     memA.addData(data1: _*); qA.processAllAvailable()
     memA.addData(data2: _*); qA.processAllAvailable()
     qA.stop()
@@ -697,15 +735,11 @@ class StreamingSpec extends AnyFunSuite {
     // run B: killed after batch 1, data arrives while down, restarted
     val memB = MemoryStream[String]
     val outB = tmpDir("cms_crash_b"); val ckB = tmpDir("cms_crash_b_ck")
-    val qB1 = graft.streaming.StreamingIngest.sketchStreamCountMin(
-      toks(memB.toDF()), outB, ckB, col("token"), depth = 4, width = 256L,
-      seed = 7L)
+    val qB1 = sketch(memB, outB, ckB)
     memB.addData(data1: _*); qB1.processAllAvailable()
     qB1.stop() // the "crash": no more micro-batches from this query
     memB.addData(data2: _*) // lands while the query is down
-    val qB2 = graft.streaming.StreamingIngest.sketchStreamCountMin(
-      toks(memB.toDF()), outB, ckB, col("token"), depth = 4, width = 256L,
-      seed = 7L)
+    val qB2 = sketch(memB, outB, ckB)
     qB2.processAllAvailable()
     qB2.stop()
 
@@ -731,11 +765,14 @@ class StreamingSpec extends AnyFunSuite {
         col("n_tokens"))
       .collect().map(_.toSeq).toSet
 
+    def pack(mem: MemoryStream[Long], path: String, ck: String) =
+      StreamingIngest.foreachBatch(withN(mem.toDF()), ck)(
+        (b, _) => graft.ops.Pack.appendToGreedyLayout(b.sparkSession, path, b,
+          col("doc_id"), col("n")))
+
     val pathA = tmpDir("pack_crash_a"); seed(pathA)
     val memA = MemoryStream[Long]
-    val qA = graft.streaming.StreamingIngest.appendStreamToPackLayout(
-      withN(memA.toDF()), pathA, tmpDir("pack_crash_a_ck"),
-      col("doc_id"), col("n"))
+    val qA = pack(memA, pathA, tmpDir("pack_crash_a_ck"))
     memA.addData(0L until 250L: _*); qA.processAllAvailable()
     memA.addData(250L until 500L: _*); qA.processAllAvailable()
     qA.stop()
@@ -743,13 +780,11 @@ class StreamingSpec extends AnyFunSuite {
     val pathB = tmpDir("pack_crash_b"); seed(pathB)
     val ckB = tmpDir("pack_crash_b_ck")
     val memB = MemoryStream[Long]
-    val qB1 = graft.streaming.StreamingIngest.appendStreamToPackLayout(
-      withN(memB.toDF()), pathB, ckB, col("doc_id"), col("n"))
+    val qB1 = pack(memB, pathB, ckB)
     memB.addData(0L until 250L: _*); qB1.processAllAvailable()
     qB1.stop() // crash between micro-batches
     memB.addData(250L until 500L: _*)
-    val qB2 = graft.streaming.StreamingIngest.appendStreamToPackLayout(
-      withN(memB.toDF()), pathB, ckB, col("doc_id"), col("n"))
+    val qB2 = pack(memB, pathB, ckB)
     qB2.processAllAvailable()
     qB2.stop()
 
@@ -797,7 +832,7 @@ class StreamingSpec extends AnyFunSuite {
       "replay must reproduce identical verdicts per bucket")
   }
 
-  test("curateStream: verdicts equal batch ledger; replay changes nothing") {
+  test("curation stream: verdicts equal batch ledger; replay changes nothing") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -827,8 +862,9 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_curstream").toString
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-    val q = StreamingIngest.curateStream(docs, s"$dir/fp", s"$dir/ledger",
-      s"$dir/ckpt", col("text"), col("doc_id"))
+    val q = StreamingIngest.foreachBatch(docs, s"$dir/ckpt")(
+      (b, _) => graft.ops.Curate.appendCuratedAgainst(b.sparkSession,
+        s"$dir/fp", s"$dir/ledger", b, col("text"), col("doc_id")))
     mem.addData(batch1: _*); q.processAllAvailable()
     mem.addData(batch2: _*); q.processAllAvailable()
     q.stop()
@@ -898,8 +934,9 @@ class StreamingSpec extends AnyFunSuite {
     val lateRows = late.collect().map(r => (r.getLong(0), r.getString(1)))
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-    val q = StreamingIngest.appendStreamToTrainIndex(docs, s"$dir/idx",
-      s"$dir/ckpt", col("text"), n = 3)
+    val q = StreamingIngest.foreachBatch(docs, s"$dir/ckpt")(
+      (b, _) => graft.ops.Decontaminate.appendToTrainIndex(b.sparkSession,
+        s"$dir/idx", b, col("text"), n = 3))
     mem.addData(lateRows.take(10).toSeq: _*); q.processAllAvailable()
     mem.addData(lateRows.drop(10).toSeq: _*); q.processAllAvailable()
     q.stop()
@@ -938,8 +975,9 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Array[Float])]
     val vectors = mem.toDF()
       .select(col("_1").as("vec_id"), col("_2").as("embedding"))
-    val q = StreamingIngest.appendStreamToCosineIndex(vectors, s"$dir/idx",
-      s"$dir/ckpt", col("vec_id"), col("embedding"))
+    val q = StreamingIngest.foreachBatch(vectors, s"$dir/ckpt")(
+      (b, _) => graft.ops.Similarity.appendToCosineIndex(b.sparkSession,
+        s"$dir/idx", b, col("vec_id"), col("embedding")))
     mem.addData(late.take(3).toSeq: _*); q.processAllAvailable()
     mem.addData(late.drop(3).toSeq: _*); q.processAllAvailable()
     q.stop()
@@ -949,7 +987,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(stored.select("vec_id").distinct().count() === n)
   }
 
-  test("vectorGateStream admits one representative per duplicate group") {
+  test("vector gate stream admits one representative per duplicate group") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
@@ -964,9 +1002,10 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Array[Float])]
     val vectors = mem.toDF()
       .select(col("_1").as("vec_id"), col("_2").as("embedding"))
-    val q = StreamingIngest.vectorGateStream(vectors, s"$dir/idx",
-      s"$dir/verdicts", s"$dir/ckpt", col("vec_id"), col("embedding"),
-      threshold = 0.95)
+    val q = StreamingIngest.foreachBatch(vectors, s"$dir/ckpt")(
+      (b, _) => graft.ops.Similarity.appendGatedToCosineIndex(b.sparkSession,
+        s"$dir/idx", s"$dir/verdicts", b, col("vec_id"), col("embedding"),
+        threshold = 0.95))
     // batch 1: a copy of stored 0 (dup) and a genuinely new direction
     mem.addData((100L, basis(0)), (101L, basis(3)))
     q.processAllAvailable()
@@ -1013,8 +1052,9 @@ class StreamingSpec extends AnyFunSuite {
       (102L, "totally unseen words"))
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-    val q = StreamingIngest.scoreStreamAgainstDsirStats(docs,
-      s"$dir/stats", s"$dir/scores", s"$dir/ckpt", col("text"), col("doc_id"))
+    val q = StreamingIngest.foreachBatch(docs, s"$dir/ckpt")(
+      (b, _) => graft.ops.Dsir.appendScoredAgainst(b.sparkSession,
+        s"$dir/stats", s"$dir/scores", b, col("text"), col("doc_id")))
     mem.addData(arrivals.take(1): _*); q.processAllAvailable()
     mem.addData(arrivals.drop(1): _*); q.processAllAvailable()
     q.stop()
@@ -1053,8 +1093,9 @@ class StreamingSpec extends AnyFunSuite {
       (102L, "the lazy dog"), (103L, "single"))
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-    val q = StreamingIngest.scoreStreamAgainstBigramStats(docs,
-      s"$dir/stats", s"$dir/scores", s"$dir/ckpt", col("text"), col("doc_id"))
+    val q = StreamingIngest.foreachBatch(docs, s"$dir/ckpt")(
+      (b, _) => graft.ops.LangModel.appendScoredAgainst(b.sparkSession,
+        s"$dir/stats", s"$dir/scores", b, col("text"), col("doc_id")))
     mem.addData(arrivals.take(2): _*); q.processAllAvailable()
     mem.addData(arrivals.drop(2): _*); q.processAllAvailable()
     q.stop()
@@ -1094,8 +1135,9 @@ class StreamingSpec extends AnyFunSuite {
     graft.ops.Colloc.buildCountsStore(base, col("text"), 2, store)
     val mem = MemoryStream[(Long, String)]
     val sdf = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
-    val q = StreamingIngest.appendStreamToCollocCounts(sdf, store,
-      dir + "/ck", col("text"), window = 2)
+    val q = StreamingIngest.foreachBatch(sdf, dir + "/ck")(
+      (b, epochId) => graft.ops.Colloc.appendCountsBatch(b, col("text"),
+        window = 2, store, batchId = epochId + 1))
     incs.foreach { r => mem.addData(r); q.processAllAvailable() }
     q.stop()
     val streamed = graft.ops.Colloc.readCounts(spark, store)
