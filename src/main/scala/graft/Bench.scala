@@ -39,10 +39,20 @@ object Bench {
   private def queryNames(): Seq[String] = {
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => Harness.only.forall(_.contains(n)))
-    sys.env.get("SPARK_GRAFT_BENCH_SEED").fold(names) { seed =>
-      new scala.util.Random(scala.util.Try(seed.trim.toLong).getOrElse(0L)).shuffle(names)
-    }
+    seed.fold(names)(new scala.util.Random(_).shuffle(names))
   }
+
+  /** The SPARK_GRAFT_BENCH_SEED the run uses, parsed once: a value
+    * that is not a number is named on stderr and the run keeps
+    * registration order, as if the variable were unset. */
+  private lazy val seed: Option[Long] = benchSeed(sys.env.get("SPARK_GRAFT_BENCH_SEED"))
+
+  private[graft] def benchSeed(v: Option[String]): Option[Long] =
+    v.flatMap { s =>
+      val n = s.trim.toLongOption
+      if (n.isEmpty) Harness.ignored("SPARK_GRAFT_BENCH_SEED", s, "registration order")
+      n
+    }
 
   // ------------------------------------------------------------- inline
 
@@ -302,7 +312,7 @@ object Bench {
         k -> sel(t).fold[JValue](JString("error"))(JDouble(_)) }.toList)
     def load(l: Option[Double]) = l.filter(_ >= 0).fold[JValue](JNull)(Harness.num(_, 2))
     JObject("summary" -> summaryLine(results, failed, sfDir, warmRuns),
-      "seed" -> sys.env.get("SPARK_GRAFT_BENCH_SEED").fold[JValue](JNull)(s => JString(s.trim)),
+      "seed" -> seed.fold[JValue](JNull)(JInt(_)),
       "fork" -> forked.fold[JValue](JNull)(JInt(_)),
       "ambient_load" -> load(ambientLoad), "ambient_load_end" -> load(ambientLoadEnd),
       "calibration" -> calibration.fold[JValue](JNull) { case (sc, sp) =>

@@ -119,7 +119,8 @@ object Harness {
   }
 
   /** A Spark job: wall time from its start and end events (NaN while
-    * no end has been seen), its stage and task counts, its call sites. */
+    * no end has been seen), its stage and task counts, and its job
+    * description when one was set, else its stages' call sites. */
   final case class JobRow(id: Int, startMs: Long, endMs: Option[Long],
       stages: Int, tasks: Int, desc: String) {
     def sec: Double = endMs.fold(Double.NaN)(e => (e - startMs) / 1e3)
@@ -136,9 +137,11 @@ object Harness {
     private val stages = mutable.ArrayBuffer[StageRow]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse(e.stageInfos.map(_.name).distinct.mkString(" | "))
       jobs(e.jobId) = JobRow(e.jobId, e.time, None, e.stageInfos.size,
-        e.stageInfos.map(_.numTasks).sum,
-        e.stageInfos.map(_.name).distinct.mkString(" | "))
+        e.stageInfos.map(_.numTasks).sum, desc)
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {

@@ -76,13 +76,6 @@ object SparkEntry {
       df.coalesce(1).sortWithinPartitions(c0, cs: _*)
   }
 
-  /** Pair queries eagerly checkpoint their verified pair sets so the
-    * LSH signature caches release immediately (session cache hygiene).
-    * SPARK_GRAFT_EAGER_PAIRS=0 keeps those plans lazy — used by
-    * graft.Explain to audit the full physical funnel. */
-  private[graft] def eagerPairs: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_EAGER_PAIRS", "1") != "0"
-
   /** Per-JVM memo of persisted side artifacts (IVF index, int8 corpus):
     * built ONCE per (kind, sf-dir) and reused by every later invocation
     * — the write-once-read-many semantic the store paths model (at

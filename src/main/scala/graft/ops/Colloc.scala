@@ -100,8 +100,8 @@ object Colloc {
     // unpinned, Catalyst rebuilds each branch from the raw corpus and
     // the heavy pair/unigram explodes run twice (plan-audited). The
     // aggregates are vocabulary-bounded — pin them once
-    val pc = pairCounts(docs, text, window).localCheckpoint(true)
-    val uc = unigramCounts(docs, text).localCheckpoint(true)
+    val pc = pairCounts(docs, text, window).transform(Layout.pin(_))
+    val uc = unigramCounts(docs, text).transform(Layout.pin(_))
     val totTok = uc.agg(sum(col("tok_n")).cast("double").as("__ntok"))
     val totPair = pc.agg(sum(col("pair_n")).cast("double").as("__npair"))
     val d = (c: Column) => c.cast("double")

@@ -86,7 +86,7 @@ object Curate {
     // pool AND each stage's verdict join AND the final projection —
     // persist it for the funnel's duration (kernel projections are
     // the scan-dominating cost; without this they re-run per
-    // consumer), releasing via the materialize convention below
+    // consumer), released by the pin below
     val multiConsumer = cfg.nearDupThreshold.isDefined || cfg.maxNll.isDefined
     val base = if (multiConsumer) base0.persist() else base0
 
@@ -101,7 +101,7 @@ object Curate {
         // near-dup chains are exactly the long-diameter case that
         // starves label propagation), and FAIL LOUDLY if unconverged:
         // an unconverged labeling silently keeps extra cluster members
-        val cc = Dedup.connectedComponentsResult(pairs, cfg.ccMaxIter, "star")
+        val cc = Dedup.connectedComponentsStar(pairs, cfg.ccMaxIter)
         require(cc.converged,
           s"near-dup clustering did not converge in ${cfg.ccMaxIter} rounds; " +
             "raise Config.ccMaxIter")
@@ -138,14 +138,9 @@ object Curate {
       .withColumn("stage", coalesce(col("stage"), lit("kept")))
       .withColumn("keep", col("stage") === "kept")
       .drop("__pre", "__text")
-    if (!multiConsumer) out
-    else {
-      // the ledger (text dropped) is compact; checkpoint it so the
-      // cached base can release NOW instead of leaking past return
-      val res = out.localCheckpoint(true)
-      base.unpersist()
-      res
-    }
+    // the ledger (text dropped) is compact; pin it so the cached base
+    // can release NOW instead of leaking past return
+    if (!multiConsumer) out else Layout.pin(out, base)
   }
 
   /** The curation funnel as a stream, one micro-batch at a time (the
@@ -244,9 +239,8 @@ object Curate {
     * CurateSpec. Engine-portable verbatim: cluster = recursive closure,
     * selection = md5 hex compare ([[Mix.hexThreshold]]). */
   def leakSafeSplitFromPairs(docs: DataFrame, id: Column, pairs: DataFrame,
-      evalFrac: Double, seed: Long = 42L, ccMaxIter: Int = 30,
-      algorithm: String = "star"): DataFrame = {
-    val cc = Dedup.connectedComponentsResult(pairs, ccMaxIter, algorithm)
+      evalFrac: Double, seed: Long = 42L, ccMaxIter: Int = 30): DataFrame = {
+    val cc = Dedup.connectedComponentsStar(pairs, ccMaxIter)
     require(cc.converged,
       s"near-dup clustering did not converge in $ccMaxIter rounds; raise ccMaxIter")
     leakSafeSplitFromLabels(docs, id, cc.labels, evalFrac, seed)
@@ -295,8 +289,8 @@ object Curate {
     * window ≡ global window because bucket = hash prefix). */
   def leakSafeSplitBalancedFromPairs(docs: DataFrame, id: Column,
       pairs: DataFrame, evalFrac: Double, seed: Long = 42L,
-      ccMaxIter: Int = 30, algorithm: String = "star"): DataFrame = {
-    val cc = Dedup.connectedComponentsResult(pairs, ccMaxIter, algorithm)
+      ccMaxIter: Int = 30): DataFrame = {
+    val cc = Dedup.connectedComponentsStar(pairs, ccMaxIter)
     require(cc.converged,
       s"near-dup clustering did not converge in $ccMaxIter rounds; raise ccMaxIter")
     leakSafeSplitBalancedFromLabels(docs, id, cc.labels, evalFrac, seed)
@@ -339,7 +333,7 @@ object Curate {
             lit(evalFrac) * col("__total").cast("double"),
             "eval").otherwise("train"))
         .select(col("cluster"), col("split"))
-        .localCheckpoint(true)
+        .transform(Layout.pin(_))
       labeled.join(sel, Seq("cluster"), "left")
         .select(col("doc_id"), col("cluster"), col("split"))
     } finally { mass.unpersist(); () }
@@ -399,7 +393,7 @@ object Curate {
     val pairs = Dedup.minhashLSH(base, col("__text"), col("doc_id"),
       shingleK = shingleK, numHashes = numHashes, bands = bands,
       jaccardThreshold = nearDupThreshold, bucketCap = bucketCap)
-    val cc = Dedup.connectedComponentsResult(pairs, ccMaxIter, "star")
+    val cc = Dedup.connectedComponentsStar(pairs, ccMaxIter)
     require(cc.converged,
       s"near-dup clustering did not converge in $ccMaxIter rounds; raise ccMaxIter")
     cc.labels.write.mode("overwrite").parquet(path)

@@ -119,7 +119,7 @@ object Decontaminate {
       .select(explode(
         graft.functions.GraftFunctions.wordGramHashes(col("__text"), n))
         .as("gh"))
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     val bloom = Bloom.fit(testGrams, col("gh"), mBits, k, seed)
     val gated = Bloom.mightContain(gramStream(train, text, n), col("gh"),
       bloom, mBits, k, seed).distinct()
@@ -182,7 +182,7 @@ object Decontaminate {
       .select(explode(
         graft.functions.GraftFunctions.wordGramHashes(col("__text"), n))
         .as("gh"))
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     val bloom = Bloom.fit(suiteGrams, col("gh"), mBits, k, seed)
     val gated = Bloom.mightContain(gramStream(train, text, n), col("gh"),
       bloom, mBits, k, seed).distinct()

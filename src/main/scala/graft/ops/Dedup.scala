@@ -251,18 +251,9 @@ object Dedup {
       kept
     }
 
-  /** CONTRACT NOTE — `materialize = false` keeps the returned PLAN
-    * lazy, but the opt-in `hotElemFrac` / `perDocCap` knobs run eager
-    * driver actions regardless (a count + collect / a count + persist):
-    * the scrub must SEE corpus-wide dfs and the budget must ledger what
-    * it kept before either can shape the plan. Under materialize=false
-    * their persisted intermediates are released only by the caller's
-    * `spark.catalog.clearCache()` — callers wanting a fully lazy,
-    * leak-free plan leave both knobs at their defaults (off). */
   private def lshPairs(docsKeyed0: DataFrame, numHashes: Int, bands: Int,
       bucketCap: Int, threshold: Double, elemsDistinct: Boolean,
-      materialize: Boolean = true, hotElemFrac: Double = 0.0,
-      perDocCap: Int = 0): DataFrame = {
+      hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame = {
     val (docsKeyed, scrubInput) =
       if (hotElemFrac <= 0) (docsKeyed0, None)
       else {
@@ -283,19 +274,10 @@ object Dedup {
       .distinct()
     val cands = capCandidatesPerDoc(cands0, perDocCap, "minhash")
     val verified = verifyCandidates(cands, base, numHashes, threshold)
-    // default: materialize the (tiny) verified pair set eagerly so the
-    // signature cache can be released NOW — without this, repeated
-    // pipeline calls accumulate cached tables for the session's life.
-    // materialize=false keeps the plan lazy/auditable; the caller owns
-    // releasing the cache (spark.catalog.clearCache()).
-    if (!materialize) verified
-    else {
-      val out = verified.localCheckpoint(true)
-      base.unpersist()
-      scrubInput.foreach(_.unpersist())
-      if (!(cands eq cands0)) cands.unpersist()
-      out
-    }
+    // pin the (tiny) verified pair set so the signature cache releases
+    // NOW — without this, repeated pipeline calls accumulate cached
+    // tables for the session's life
+    Layout.pin(verified, Seq(base, cands) ++ scrubInput: _*)
   }
 
   /** Skew insurance without a sort: per-bucket counts are a tiny
@@ -337,13 +319,11 @@ object Dedup {
   def minhashLSH(docs: DataFrame, text: Column, id: Column,
       shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
       jaccardThreshold: Double = 0.5, bucketCap: Int = 100000,
-      materialize: Boolean = true, hotElemFrac: Double = 0.0,
-      perDocCap: Int = 0): DataFrame =
+      hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame =
     lshPairs(shingleElems(docs, text, id, shingleK), numHashes, bands,
       bucketCap, jaccardThreshold,
       elemsDistinct = false, // shingles() keeps duplicates
-      materialize = materialize, hotElemFrac = hotElemFrac,
-      perDocCap = perDocCap)
+      hotElemFrac = hotElemFrac, perDocCap = perDocCap)
 
   // ---- persisted minhash index (incremental near-dup) -----------------
 
@@ -435,8 +415,7 @@ object Dedup {
     * never rides the band explosion. */
   def nearDupAgainstIndex(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, text: Column, id: Column,
-      jaccardThreshold: Double = 0.5, bucketCap: Int = -1,
-      materialize: Boolean = true): DataFrame = {
+      jaccardThreshold: Double = 0.5, bucketCap: Int = -1): DataFrame = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
     val (mode, k, numHashes, bands) = (indexMode(meta),
       meta.getAs[Int]("shingle_k"), meta.getAs[Int]("num_hashes"),
@@ -477,13 +456,8 @@ object Dedup {
       .distinct()
     val lookup = newBase.select("doc_id", "sig", "elems")
       .unionByName(stored.select("doc_id", "sig", "elems"))
-    val verified = verifyCandidates(cands, lookup, numHashes, jaccardThreshold)
-    if (!materialize) verified
-    else {
-      val out = verified.localCheckpoint(true)
-      newBase.unpersist()
-      out
-    }
+    Layout.pin(verifyCandidates(cands, lookup, numHashes, jaccardThreshold),
+      newBase)
   }
 
   /** Character n-gram Jaccard near-duplicate pairs, banded-MinHash
@@ -502,15 +476,13 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, text: Column, id: Column,
       n: Int = 3, threshold: Double = 0.8, numHashes: Int = 128,
       bands: Int = 16, bucketCap: Int = 1000,
-      materialize: Boolean = true, hotElemFrac: Double = 0.0,
-      perDocCap: Int = 0): DataFrame = {
+      hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame = {
     val base = spreadById(docs, id, text)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.charNgramHashes(col("__raw"), n).as("elems"))
     lshPairs(base, numHashes, bands, bucketCap, threshold,
       elemsDistinct = true, // charNgramHashes is already distinct
-      materialize = materialize, hotElemFrac = hotElemFrac,
-      perDocCap = perDocCap)
+      hotElemFrac = hotElemFrac, perDocCap = perDocCap)
   }
 
   /** Exact all-pairs n-gram Jaccard over a BOUNDED sample — the oracle
@@ -579,12 +551,12 @@ object Dedup {
     * r = 0 while keys stay ≥ 16 bits: c=2 (h ≤ 1), c=4 exact
     * (h ≤ 3), c=4 radius-1 (h ≤ 7), c=8 radius-1 (h ≤ 15), … */
   def simhashPairs(docs: DataFrame, text: Column, id: Column,
-      maxHamming: Int = 3, chunks: Int = 0, bucketCap: Int = 100000,
-      materialize: Boolean = true): DataFrame =
+      maxHamming: Int = 3, chunks: Int = 0,
+      bucketCap: Int = 100000): DataFrame =
     hammingPairs(
       spreadById(docs, id, text)
         .select(col("doc_id"), simhash(col("__raw")).as("fp")),
-      maxHamming, chunks, bucketCap, materialize)
+      maxHamming, chunks, bucketCap)
 
   /** Chunk count + chunk width for multi-index hamming blocking, with
     * the radius-≤1 guard (Norouzi et al.). */
@@ -632,7 +604,7 @@ object Dedup {
     * generation is EXACT for per-chunk radius ≤ 1 (Norouzi et al.:
     * h ≤ c·(r+1)−1 errors cannot exceed radius r in every chunk). */
   def hammingPairs(fps: DataFrame, maxHamming: Int = 3, chunks: Int = 0,
-      bucketCap: Int = 100000, materialize: Boolean = true): DataFrame = {
+      bucketCap: Int = 100000): DataFrame = {
     val (c, width) = mihConfig(maxHamming, chunks)
     val r = maxHamming / c
     // persist the (doc_id, fp) table: one row per doc, and it feeds the
@@ -654,14 +626,8 @@ object Dedup {
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    // see lshPairs: eager-materialize the tiny pair set, release cache
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint(true)
-      fp.unpersist()
-      if (r > 0) exactSide.unpersist()
-      out
-    }
+    // see lshPairs: pin the tiny pair set, release the caches
+    Layout.pin(pairs, fp, exactSide)
   }
 
   /** Persist a fingerprint corpus — the 16-bytes-per-doc store behind
@@ -689,7 +655,7 @@ object Dedup {
     * id_a < id_b; ids must be unique across store and increment. */
   def hammingAgainstIndex(spark: SparkSession, indexPath: String,
       newFps: DataFrame, maxHamming: Int = 3, chunks: Int = 0,
-      bucketCap: Int = 100000, materialize: Boolean = true): DataFrame = {
+      bucketCap: Int = 100000): DataFrame = {
     val (c, width) = mihConfig(maxHamming, chunks)
     val r = maxHamming / c
     val newFp = newFps.select(col("doc_id"), col("fp"))
@@ -712,13 +678,7 @@ object Dedup {
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint(true)
-      newFp.unpersist()
-      if (r > 0) capped.unpersist()
-      out
-    }
+    Layout.pin(pairs, newFp, capped)
   }
 
   /** Winnowing fingerprints of a text column — the MOSS scheme
@@ -771,8 +731,8 @@ object Dedup {
     * on the already-persisted base. */
   def containmentPairs(docs: DataFrame, text: Column, id: Column,
       k: Int = 8, w: Int = 24, threshold: Double = 0.5, minShared: Int = 3,
-      bucketCap: Int = 100000, materialize: Boolean = true,
-      perDocCap: Int = 0, bucketFrac: Double = 0.0): DataFrame = {
+      bucketCap: Int = 100000, perDocCap: Int = 0,
+      bucketFrac: Double = 0.0): DataFrame = {
     val base = spreadById(docs, id, text)
       .select(col("doc_id"),
         winnow(col("__raw"), k, w).as("fps"),
@@ -798,10 +758,6 @@ object Dedup {
       .agg(count(lit(1)).as("shared")) // fps are distinct per doc, so count = shared fps
       .filter(col("shared") >= minShared)
       .select("id_a", "id_b")
-    // NOTE: a non-zero perDocCap runs eager actions (count + persist)
-    // even under materialize=false — the budget must SEE the candidate
-    // volume to ledger it; callers wanting a fully lazy plan leave the
-    // cap off
     val cands = capCandidatesPerDoc(cands0, perDocCap, "contain")
     // Verify-join shape, chosen for its SPILL profile at scale: both
     // gram-array joins are SHUFFLE_HASH with the O(n) per-doc side as
@@ -825,13 +781,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         graft.functions.GraftFunctions.containmentSim(col("g_a"), col("g_b")).as("containment"))
       .filter(col("containment") >= threshold)
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint(true)
-      base.unpersist()
-      if (!(cands eq cands0)) cands.unpersist()
-      out
-    }
+    Layout.pin(pairs, base, cands)
   }
 
   /** Persist winnowing fingerprints + gram sets for incremental
@@ -880,7 +830,7 @@ object Dedup {
   def containmentAgainstIndex(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, text: Column, id: Column,
       threshold: Double = 0.5, minShared: Int = 3,
-      bucketCap: Int = 100000, materialize: Boolean = true): DataFrame = {
+      bucketCap: Int = 100000): DataFrame = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
     val (k, w) = (meta.getAs[Int]("k"), meta.getAs[Int]("w"))
     val stored = spark.read.parquet(s"$indexPath/docs")
@@ -917,12 +867,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         graft.functions.GraftFunctions.containmentSim(col("g_a"), col("g_b")).as("containment"))
       .filter(col("containment") >= threshold)
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint(true)
-      newBase.unpersist()
-      out
-    }
+    Layout.pin(pairs, newBase)
   }
 
   /** Exact all-pairs char-n-gram CONTAINMENT over a BOUNDED sample —
@@ -949,7 +894,7 @@ object Dedup {
     * One shuffle join + one aggregation per iteration, converging in
     * O(component diameter) rounds — near-dup components are
     * star/clique-shaped, so a handful of rounds in practice; labels are
-    * localCheckpoint'ed each round so lineage stays flat. Output:
+    * pinned ([[Layout.pin]]) each round so lineage stays flat. Output:
     * (id, cluster) with cluster = min member id — the canonical
     * "keep the smallest id, drop the rest" contract.
     */
@@ -960,21 +905,6 @@ object Dedup {
     * diameter exceeds maxIter would otherwise return WRONG (unconverged)
     * labels silently. */
   case class CCResult(labels: DataFrame, converged: Boolean, iterations: Int)
-
-  /** Algorithm-selectable variant: `"label"` = min-label propagation
-    * (O(component diameter) rounds — right for the star/clique
-    * components near-dup candidate sets produce), `"star"` =
-    * alternating large-star/small-star contraction
-    * ([[connectedComponentsStar]], O(log n) rounds on ANY shape —
-    * right when components can be long chains, e.g. transitive
-    * near-dup runs in crawl data). Identical output contract. */
-  def connectedComponentsResult(pairs: DataFrame, maxIter: Int,
-      algorithm: String): CCResult = algorithm match {
-    case "label" => connectedComponentsResult(pairs, maxIter)
-    case "star"  => connectedComponentsStar(pairs, maxIter)
-    case other => throw new IllegalArgumentException(
-      s"unknown connected-components algorithm '$other' (label|star)")
-  }
 
   /** Two-phase star contraction (Kiveris et al., "Connected Components
     * in MapReduce and Beyond", SoCC'14 — public): alternate
@@ -991,7 +921,7 @@ object Dedup {
     * degenerates to O(n) on chain components (transitively-linked
     * near-dups, common in crawl shingles). Each round is two
     * aggregate+join+distinct passes over the edge set — shuffles on
-    * edge keys only, edges localCheckpoint'ed per round so lineage
+    * edge keys only, edges pinned ([[Layout.pin]]) per round so lineage
     * stays flat.
     *
     * Convergence is detected by consecutive-round (count, hash-sum)
@@ -1016,20 +946,20 @@ object Dedup {
     // typically the unmaterialized tail of a full dedup funnel that
     // would otherwise run twice (measured: the whole split query paid
     // the minhash funnel 2x before this)
-    val p0 = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    val p0 = pairs.select(col("id_a"), col("id_b")).transform(Layout.pin(_))
     // nodes from the RAW pair set (a self-pair-only node is a
     // singleton component and must still get a label), edges as
     // canonical down-edges (src > dst) with self-loops dropped
     val nodes = p0.select(col("id_a").as("id"))
       .unionAll(p0.select(col("id_b").as("id")))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     var edges = p0
       .select(greatest(col("id_a"), col("id_b")).as("src"),
         least(col("id_a"), col("id_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
 
     def checksum(e: DataFrame): (Long, Long) = {
       // bit_xor, not sum: order-independent over the (distinct) edge
@@ -1103,7 +1033,7 @@ object Dedup {
     var it = 0
     var converged = false
     while (it < maxIter && !converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
+      val next = smallStar(largeStar(edges)).transform(Layout.pin(_))
       val nsig = checksum(next)
       converged = nsig == sig
       edges = next
@@ -1123,7 +1053,7 @@ object Dedup {
       .persist()
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id"))
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     var it = 0
     var converged = false
     while (it < maxIter && !converged) {
@@ -1136,7 +1066,7 @@ object Dedup {
       val updated = labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("cluster").as("old"),
           least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("cluster"))
-        .localCheckpoint(true)
+        .transform(Layout.pin(_))
       converged = updated.filter(col("cluster") =!= col("old")).limit(1).count() == 0
       labels = updated.select(col("id"), col("cluster"))
       it += 1

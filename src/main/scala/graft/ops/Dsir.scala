@@ -78,7 +78,7 @@ object Dsir {
     * comparison; higher = more target-like. */
   def logWeights(docs: DataFrame, text: Column, id: Column,
       targetPred: Column, buckets: Int = 4096, alpha: Double = 0.25,
-      roundTo: Int = 6, materialize: Boolean = true): DataFrame = {
+      roundTo: Int = 6): DataFrame = {
     require(alpha > 0, "add-alpha smoothing needs alpha > 0")
     // persisted: the per-doc table feeds BOTH the global-distribution
     // derivation and the scoring join — without persist the corpus
@@ -100,12 +100,7 @@ object Dsir {
       .groupBy("doc_id")
       .agg(sum("c").as("n_grams"),
         round(sum(col("c") * lratio), roundTo).as("logw"))
-    if (!materialize) out
-    else {
-      val o = out.localCheckpoint(true)
-      d.unpersist()
-      o
-    }
+    Layout.pin(out, d)
   }
 
   /** Persist DSIR bucket statistics — the write-once half of the

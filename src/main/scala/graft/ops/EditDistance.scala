@@ -149,7 +149,7 @@ object EditDistance {
     val fresh = normalized(df, str, id, maxDist)
       .join(spark.read.parquet(s"$path/strings").select("id"), Seq("id"),
         "left_anti")
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     fresh.write.mode("append").parquet(s"$path/strings")
     segmentsOf(fresh, maxDist).write.mode("append")
       .parquet(s"$path/segments")
@@ -169,7 +169,7 @@ object EditDistance {
       bucketCap: Int = 100000): DataFrame = {
     require(maxDist >= 1, "maxDist must be >= 1")
     val d = maxDist
-    val inc = normalized(increment, str, id, d).localCheckpoint(true)
+    val inc = normalized(increment, str, id, d).transform(Layout.pin(_))
     val stored = spark.read.parquet(s"$path/strings")
     val segs = Dedup.dropOversizedBuckets(
       spark.read.parquet(s"$path/segments"), Seq("tl", "k", "seg"),

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,44 +29,6 @@ import org.apache.spark.sql.functions._
   * (node, rank) table — |V| rows, not |E|.
   */
 object Graph {
-
-  /** Pin a loop-invariant or per-round frame for the iterative
-    * algorithms. Default = `localCheckpoint(eager)`: lineage-
-    * truncating and cheap, but NOT fault-tolerant — the pinned blocks
-    * live in executor storage (memory, spilling to local disk), so an
-    * executor loss mid-iteration FAILS the job instead of recomputing,
-    * and every pinned frame must fit in cluster storage. That is the
-    * standard trade for iterative graph algorithms (the alternative —
-    * re-deriving the edge projection per iteration — costs more than
-    * it insures), and the frames pinned here are projected to the
-    * minimal columns first (edges to 2, ranks to 2).
-    *
-    * Cluster escape hatch: set `spark.graft.checkpoint.dir` on the
-    * session and pins become RELIABLE checkpoints (written to that
-    * fault-tolerant dir, surviving executor loss) — same values, same
-    * downstream plan shape, strictly slower on a single box, which is
-    * why it is off by default and off in the bench. A SparkContext
-    * already checkpointing elsewhere fails the pin with both paths
-    * named: the context has one checkpoint dir, and silently writing
-    * to the other one would ignore the setting. */
-  private def pin(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.checkpoint.dir") match {
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        sc.getCheckpointDir match {
-          case None => sc.setCheckpointDir(d)
-          case Some(cur) =>
-            // the context checkpoints into a fresh subdir of the dir
-            // it was given
-            val want = new Path(d)
-            val wantQ = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
-            if (new Path(cur).getParent != wantQ) throw new IllegalStateException(
-              s"spark.graft.checkpoint.dir is $wantQ, but the SparkContext " +
-              s"already checkpoints to $cur")
-        }
-        df.checkpoint(true)
-      case None => df.localCheckpoint(true)
-    }
 
   /** Deterministic, engine-portable synthetic link graph: doc `i`
     * emits `fanout` out-links `j = 1..fanout` to
@@ -184,13 +145,13 @@ object Graph {
     // arithmetic (and so the result) is bit-identical. localCheckpoint
     // preserves the origin plan's statistics, so join-strategy choices
     // downstream are unchanged.
-    val e = edges.select(col("src"), col("dst")).transform(pin)
-    val n = nodes.select(node.cast("long").as("node")).transform(pin)
+    val e = edges.select(col("src"), col("dst")).transform(Layout.pin(_))
+    val n = nodes.select(node.cast("long").as("node")).transform(Layout.pin(_))
     val outDeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("double").as("__deg"))
-      .transform(pin)
+      .transform(Layout.pin(_))
     val nCount = n.agg(count(lit(1)).cast("double").as("__n"))
-      .transform(pin)
+      .transform(Layout.pin(_))
     var ranks = n.crossJoin(nCount)
       .select(col("node"), quant(lit(1.0) / col("__n")).as("rank"))
     for (i <- 1 to iters) {
@@ -208,7 +169,7 @@ object Graph {
           quant(lit(1.0 - damping) / col("__n") +
             lit(damping) * (coalesce(col("__c"), lit(0.0)) +
               col("__dangling") / col("__n"))).as("rank"))
-      if (i < iters) ranks = ranks.transform(pin)
+      if (i < iters) ranks = ranks.transform(Layout.pin(_))
     }
     ranks
   }
@@ -228,8 +189,8 @@ object Graph {
     // same loop-invariant pinning as [[pageRank]]: each half-step is
     // an eager checkpoint job, so unpinned edge/node subtrees would
     // re-derive once per half-step (4x per iteration here)
-    val e = edges.select(col("src"), col("dst")).transform(pin)
-    val n = nodes.select(node.cast("long").as("node")).transform(pin)
+    val e = edges.select(col("src"), col("dst")).transform(Layout.pin(_))
+    val n = nodes.select(node.cast("long").as("node")).transform(Layout.pin(_))
     var hubs = n.withColumn("hub", lit(1.0))
     var auths = n.withColumn("auth", lit(0.0))
     for (i <- 1 to iters) {
@@ -251,8 +212,8 @@ object Graph {
           when(col("__t") > 0,
             quant(coalesce(col("__h"), lit(0.0)) / col("__t")))
             .otherwise(lit(0.0)).as("hub"))
-      auths = auths.transform(pin)
-      if (i < iters) hubs = hubs.transform(pin)
+      auths = auths.transform(Layout.pin(_))
+      if (i < iters) hubs = hubs.transform(Layout.pin(_))
     }
     hubs.join(auths, Seq("node"))
   }
@@ -270,17 +231,17 @@ object Graph {
       node: Column, seeds: DataFrame, iters: Int,
       damping: Double = 0.85): DataFrame = {
     // same loop-invariant pinning as [[pageRank]]
-    val e = edges.select(col("src"), col("dst")).transform(pin)
+    val e = edges.select(col("src"), col("dst")).transform(Layout.pin(_))
     val n = nodes.select(node.cast("long").as("node"))
     val s = seeds.select(seeds.columns.head).toDF("node")
       .select(col("node").cast("long").as("node")).distinct()
     val sCount = s.agg(count(lit(1)).cast("double").as("__s"))
-      .transform(pin)
+      .transform(Layout.pin(_))
     val outDeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("double").as("__deg"))
-      .transform(pin)
+      .transform(Layout.pin(_))
     val flagged = n.join(s.withColumn("__seed", lit(1)), Seq("node"), "left")
-      .transform(pin)
+      .transform(Layout.pin(_))
     var ranks = flagged.crossJoin(sCount)
       .select(col("node"), col("__seed"),
         when(col("__seed").isNotNull, quant(lit(1.0) / col("__s")))
@@ -303,7 +264,7 @@ object Graph {
               (lit(1.0 - damping) + lit(damping) * col("__dangling")) /
                 col("__s")).otherwise(lit(0.0)) +
             lit(damping) * coalesce(col("__c"), lit(0.0))).as("rank"))
-      if (i < iters) ranks = ranks.transform(pin)
+      if (i < iters) ranks = ranks.transform(Layout.pin(_))
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -331,7 +292,7 @@ object Graph {
     * closed-form fixtures (cliques survive, trees peel to nothing). */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 1000): DataFrame = {
     require(k >= 1, "kCore needs k >= 1")
-    var und = undirected(edges).transform(pin)
+    var und = undirected(edges).transform(Layout.pin(_))
     var prev = und.count()
     var done = prev == 0
     var it = 0
@@ -343,7 +304,7 @@ object Graph {
       val pruned = und
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .transform(pin)
+        .transform(Layout.pin(_))
       val now = pruned.count()
       done = now == prev || now == 0
       prev = now
@@ -380,12 +341,12 @@ object Graph {
     * zero-fill, as in [[degrees]]. */
   def coreNumbers(edges: DataFrame, maxIter: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val und = undirected(edges).transform(pin)
+    val und = undirected(edges).transform(Layout.pin(_))
     val adj = und.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(und.select(col("b").as("node"), col("a").as("nbr")))
-      .transform(pin)
+      .transform(Layout.pin(_))
     var cur = adj.groupBy("node").agg(count(lit(1)).as("core"))
-      .transform(pin)
+      .transform(Layout.pin(_))
     var it = 0
     var done = adj.isEmpty
     while (!done && it < maxIter) {
@@ -401,7 +362,7 @@ object Graph {
       // of a second join job per round. H-update arithmetic untouched.
       val next = h
         .join(cur.withColumnRenamed("core", "__prev"), Seq("node"))
-        .transform(pin)
+        .transform(Layout.pin(_))
       // convergence = zero nodes moved; the H-sequence is monotone
       // non-increasing so "changed" is exactly "decreased"
       val changed = next.filter(col("core") =!= col("__prev")).count()
@@ -444,7 +405,7 @@ object Graph {
     // oriented table o is consumed THREE times (two wedge sides + the
     // closing probe) — pin both or the wedge join rebuilds the whole
     // orientation pipeline per consumer (the 2^k branch trap)
-    val und = undirected(edges).transform(pin)
+    val und = undirected(edges).transform(Layout.pin(_))
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -460,7 +421,7 @@ object Graph {
           .otherwise(struct(col("b").as("u"), col("a").as("v"),
             key(col("__da"), col("a")).as("kv"))).as("__e"))
       .select(col("__e.u").as("u"), col("__e.v").as("v"), col("__e.kv"))
-      .transform(pin)
+      .transform(Layout.pin(_))
     val wedges = o.select(col("u"), col("v"), col("kv"))
       .join(o.select(col("u"), col("v").as("w"), col("kv").as("kw")),
         Seq("u"))

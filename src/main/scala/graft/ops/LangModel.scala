@@ -144,8 +144,7 @@ object LangModel {
     * counts, five key-equality joins + one broadcast scalar row. */
   def scoreTrigram(docs: DataFrame, text: Column, id: Column,
       k: Double = 0.5, l3: Double = 0.6, l2: Double = 0.3,
-      l1: Double = 0.1, roundTo: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      l1: Double = 0.1, roundTo: Int = 6): DataFrame = {
     require(k > 0 && l3 >= 0 && l2 >= 0 && l1 > 0,
       "need k > 0 and a positive unigram floor weight")
     // ONE corpus explosion feeds every n-gram table (r16 verdict item
@@ -190,13 +189,7 @@ object LangModel {
       .agg(sum("c").as("n_trigrams"),
         round(sum(col("c") * -log(col("__p"))) / sum(col("c")),
           roundTo).as("nll"))
-    if (!materialize) scored
-    else {
-      val out = scored.localCheckpoint(true)
-      dAll.unpersist(); c123.unpersist()
-      c2all.unpersist(); c1.unpersist()
-      out
-    }
+    Layout.pin(scored, dAll, c123, c2all, c1)
   }
 
   /** Persist bigram statistics fit on a reference corpus — the
@@ -351,8 +344,8 @@ object LangModel {
     * scoring is five key-equality joins + one broadcast (T, V) row.
     * Output (doc_id, n_trigrams, nll); sub-3-token docs emit nothing. */
   def scoreKnTrigram(docs: DataFrame, text: Column, id: Column,
-      discount: Double = 0.75, k: Double = 0.5, roundTo: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      discount: Double = 0.75, k: Double = 0.5,
+      roundTo: Int = 6): DataFrame = {
     require(discount > 0 && discount < 1, "kneser-ney needs 0 < D < 1")
     require(k > 0, "continuation floor needs k > 0")
     // ONE corpus explosion + type-level p-table — see [[scoreTrigram]]
@@ -389,12 +382,7 @@ object LangModel {
       .agg(sum("c").as("n_trigrams"),
         round(sum(col("c") * -log(col("__p"))) / sum(col("c")),
           roundTo).as("nll"))
-    if (!materialize) scored
-    else {
-      val out = scored.localCheckpoint(true)
-      dAll.unpersist(); c123.unpersist(); c2.unpersist()
-      out
-    }
+    Layout.pin(scored, dAll, c123, c2)
   }
 
   /** The trigram-KN probability expression over joined count columns
@@ -506,8 +494,7 @@ object LangModel {
     * log-likelihood, rounded to `roundTo` for engine-portable
     * comparison. Higher = more atypical for the corpus. */
   def scoreBigram(docs: DataFrame, text: Column, id: Column,
-      k: Double = 0.5, roundTo: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      k: Double = 0.5, roundTo: Int = 6): DataFrame = {
     require(k > 0, "add-k smoothing needs k > 0")
     // ONE corpus explosion + type-level p-table — see [[scoreTrigram]]:
     // the per-position frame persists because it feeds the type-count
@@ -529,12 +516,7 @@ object LangModel {
       .agg(sum("c").as("n_bigrams"),
         round(sum(col("c") * -log(col("__p"))) / sum(col("c")),
           roundTo).as("nll"))
-    if (!materialize) scored
-    else {
-      val out = scored.localCheckpoint(true)
-      dAll.unpersist(); c2.unpersist()
-      out
-    }
+    Layout.pin(scored, dAll, c2)
   }
 
   /** Interpolated Kneser–Ney bigram scoring (public: Kneser & Ney
@@ -563,8 +545,8 @@ object LangModel {
     * plus one broadcast (T, V) scalar row. Output
     * (doc_id, n_bigrams, nll); sub-2-token docs emit nothing. */
   def scoreKnBigram(docs: DataFrame, text: Column, id: Column,
-      discount: Double = 0.75, k: Double = 0.5, roundTo: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      discount: Double = 0.75, k: Double = 0.5,
+      roundTo: Int = 6): DataFrame = {
     require(discount > 0 && discount < 1, "kneser-ney needs 0 < D < 1")
     require(k > 0, "continuation floor needs k > 0")
     // ONE corpus explosion + type-level p-table — see [[scoreTrigram]]
@@ -588,12 +570,7 @@ object LangModel {
       .agg(sum("c").as("n_bigrams"),
         round(sum(col("c") * -log(col("__p"))) / sum(col("c")),
           roundTo).as("nll"))
-    if (!materialize) scored
-    else {
-      val out = scored.localCheckpoint(true)
-      dAll.unpersist(); c2.unpersist()
-      out
-    }
+    Layout.pin(scored, dAll, c2)
   }
 
   /** The KN probability expression over joined count columns

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -125,6 +126,68 @@ object Layout {
       key: String): Unit =
     rows.join(stored.select(key), Seq(key), "left_anti")
       .write.mode("append").parquet(path)
+
+  /** Pin `df`: run it once, eagerly, and return a frame over the
+    * stored result with its lineage cut; then release `caches`, the
+    * persisted intermediates its plan read. graft's one checkpoint
+    * rule: every funnel exit (dedup, ANN, LM, multimodal), every
+    * iterative round ([[Graph]], connected components) and every
+    * intermediate an op reads more than once is pinned here. The
+    * funnels pin their small result so their signature and count
+    * caches release at once instead of accumulating for the session's
+    * life.
+    *
+    * Default = `localCheckpoint(eager)`: lineage-truncating and cheap,
+    * but NOT fault-tolerant — the pinned blocks live in executor
+    * storage (memory, spilling to local disk), so an executor loss
+    * FAILS a later job instead of recomputing, and every pinned frame
+    * must fit in cluster storage. That is the standard trade for
+    * iterative algorithms and small funnel results (re-deriving the
+    * input costs more than it insures).
+    *
+    * Cluster escape hatch: set `spark.graft.checkpoint.dir` on the
+    * session and pins become RELIABLE checkpoints (written to that
+    * fault-tolerant dir, surviving executor loss) — same values, same
+    * downstream plan shape, strictly slower on a single box, which is
+    * why it is off by default and off in the bench. A SparkContext
+    * already checkpointing elsewhere fails the pin with both paths
+    * named: the context has one checkpoint dir, and silently writing
+    * to the other one would ignore the setting.
+    *
+    * The pin's jobs run under a job description naming the calling
+    * graft source line, so job listings say which op pinned. */
+  def pin(df: DataFrame, caches: DataFrame*): DataFrame = {
+    val spark = df.sparkSession
+    val sc = spark.sparkContext
+    val reliable = spark.conf.getOption("spark.graft.checkpoint.dir")
+    reliable.foreach { d =>
+      sc.getCheckpointDir match {
+        case None => sc.setCheckpointDir(d)
+        case Some(cur) =>
+          // the context checkpoints into a fresh subdir of the dir it
+          // was given
+          val want = new Path(d)
+          val wantQ = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+          if (new Path(cur).getParent != wantQ) throw new IllegalStateException(
+            s"spark.graft.checkpoint.dir is $wantQ, but the SparkContext " +
+            s"already checkpoints to $cur")
+      }
+    }
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"pin ${callerLine()}")
+    val out =
+      try if (reliable.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+      finally sc.setJobDescription(prev)
+    caches.foreach(_.unpersist())
+    out
+  }
+
+  /** `File.scala:line` of the first graft frame outside this object. */
+  private def callerLine(): String =
+    Thread.currentThread.getStackTrace.iterator
+      .find(f => f.getClassName.startsWith("graft.") &&
+        f.getClassName.stripSuffix("$") != "graft.ops.Layout")
+      .fold("?")(f => s"${f.getFileName}:${f.getLineNumber}")
 
   /** Small-file compaction of a parquet directory tree — the
     * operational counterpart of every append path here (streaming

@@ -259,11 +259,11 @@ object Multimodal {
     * produce 8-byte fingerprints; every join and shuffle after that
     * carries (doc_id, fp) only — media bytes never ride a shuffle. */
   def phashPairs(media: DataFrame, id: Column, payload: Column,
-      maxHamming: Int = 3, chunks: Int = 0, bucketCap: Int = 100000,
-      materialize: Boolean = true): DataFrame =
+      maxHamming: Int = 3, chunks: Int = 0,
+      bucketCap: Int = 100000): DataFrame =
     Dedup.hammingPairs(
       media.select(id.as("doc_id"), phash64(payload).as("fp")),
-      maxHamming, chunks, bucketCap, materialize)
+      maxHamming, chunks, bucketCap)
 
   /** Persist the media corpus' perceptual hashes
     * ([[graft.ops.Dedup.buildFingerprintIndex]]): the one pass over
@@ -286,11 +286,10 @@ object Multimodal {
     * [[graft.ops.Dedup.hammingAgainstIndex]]. */
   def phashAgainstIndex(spark: SparkSession, indexPath: String,
       media: DataFrame, id: Column, payload: Column, maxHamming: Int = 3,
-      chunks: Int = 0, bucketCap: Int = 100000,
-      materialize: Boolean = true): DataFrame =
+      chunks: Int = 0, bucketCap: Int = 100000): DataFrame =
     Dedup.hammingAgainstIndex(spark, indexPath,
       media.select(id.as("doc_id"), phash64(payload).as("fp")),
-      maxHamming, chunks, bucketCap, materialize)
+      maxHamming, chunks, bucketCap)
 
   /** Deterministic BMP-variant fixture over the BI_RGB depth
     * envelope: id%4 cycles raw text (fallback), 8-bit PALETTE
@@ -500,9 +499,9 @@ object Multimodal {
     * bytes are read once by the decode stage and only (doc_id, fp)
     * ever shuffles. */
   def audioFingerprintPairs(media: DataFrame, maxHamming: Int = 3,
-      bucketCap: Int = 100000, materialize: Boolean = true): DataFrame =
+      bucketCap: Int = 100000): DataFrame =
     Dedup.hammingPairs(audioFingerprint(decodeAudioMixStage(media)),
-      maxHamming, 0, bucketCap, materialize)
+      maxHamming, 0, bucketCap)
 
   /** Persist the corpus' audio fingerprints (write-once, 16 B/doc) —
     * the audio family's incremental path, same store layout as
@@ -516,11 +515,11 @@ object Multimodal {
     * the increment decodes its own payloads; stored docs join at 16
     * bytes each with no payload rescan. */
   def audioFpAgainstIndex(spark: SparkSession, indexPath: String,
-      media: DataFrame, maxHamming: Int = 3, bucketCap: Int = 100000,
-      materialize: Boolean = true): DataFrame =
+      media: DataFrame, maxHamming: Int = 3,
+      bucketCap: Int = 100000): DataFrame =
     Dedup.hammingAgainstIndex(spark, indexPath,
       audioFingerprint(decodeAudioMixStage(media)),
-      maxHamming, 0, bucketCap, materialize)
+      maxHamming, 0, bucketCap)
 
   // ------------------------------------------------------------- video
 

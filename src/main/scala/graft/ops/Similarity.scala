@@ -160,8 +160,7 @@ object Similarity {
     * id_a < id_b; ids unique across store and increment. */
   def cosinePairsAgainstIndex(spark: SparkSession, indexPath: String,
       emb: DataFrame, id: Column, vec: Column, threshold: Double = 0.9,
-      roundTo: Int = 4, bucketCap: Int = 100000,
-      materialize: Boolean = true): DataFrame = {
+      roundTo: Int = 4, bucketCap: Int = 100000): DataFrame = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
     val (p, dims, tables) = (meta.getAs[Int]("planes"),
       meta.getAs[Int]("dims"), meta.getAs[Int]("tables"))
@@ -195,12 +194,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"),
         round(cosine(col("v_a"), col("v_b")), roundTo).as("cos"))
       .filter(col("cos") >= threshold)
-    if (!materialize) verified
-    else {
-      val out = verified.localCheckpoint(true)
-      newBase.unpersist()
-      out
-    }
+    Layout.pin(verified, newBase)
   }
 
   /** The online vector-dedup admission gate, one micro-batch at a
@@ -461,7 +455,7 @@ object Similarity {
     val centersDf = spark.read.parquet(s"$indexPath/centroids")
     // materialized once: it feeds both the driver-side partition filter
     // and the scoring join (a lazy plan would re-run probe selection)
-    val probeDf = probeLists(centersDf, queries, nprobe).localCheckpoint(true)
+    val probeDf = probeLists(centersDf, queries, nprobe).transform(Layout.pin(_))
     val probed = probeDf.select("__list").distinct().collect().map(_.getLong(0).toInt)
     // partition values are directory names; Spark infers the partition
     // column as INT, so the pruning literal set must be ints too
@@ -1390,7 +1384,7 @@ object Similarity {
     val cb = spark.read.parquet(s"$path/codebook").orderBy("idx")
       .collect().map(_.getAs[Double]("v"))
     val centersDf = spark.read.parquet(s"$path/centroids")
-    val probeDf = probeLists(centersDf, queries, nprobe).localCheckpoint(true)
+    val probeDf = probeLists(centersDf, queries, nprobe).transform(Layout.pin(_))
     val probed = probeDf.select("__list").distinct().collect()
       .map(_.getLong(0).toInt)
     val codes = spark.read.parquet(s"$path/codes")
@@ -1464,7 +1458,7 @@ object Similarity {
     * size aggressively at scale. */
   def sparseCosinePairs(sparse: DataFrame, threshold: Double,
       dfCap: Int = 100000, roundTo: Int = 4,
-      materialize: Boolean = true, dfFrac: Double = 0.0): DataFrame = {
+      dfFrac: Double = 0.0): DataFrame = {
     // Candidate generation is PREFIX-FILTERED (the Bayardo/AllPairs
     // bound): order each doc's features hottest-first (df desc) and
     // call a feature UNINDEXED while the running Σ w·maxw stays below
@@ -1502,8 +1496,7 @@ object Similarity {
           s"effective df cap $c (dfFrac=$dfFrac over $n docs, abs cap $dfCap)")
         c
       }
-    val capped0 = Dedup.dropOversizedBuckets(pruned, Seq("pos"), effCap)
-    val capped = if (materialize) capped0.persist() else capped0
+    val capped = Dedup.dropOversizedBuckets(pruned, Seq("pos"), effCap).persist()
     val posStats = capped.groupBy("pos")
       .agg(count(lit(1)).as("__df"), max(col("w")).as("__maxw"))
     val hotFirst = Window.partitionBy("doc_id")
@@ -1528,12 +1521,7 @@ object Similarity {
       .groupBy("id_a", "id_b")
       .agg(round(sum(col("w_a") * col("w_b")), roundTo).as("cos"))
       .filter(col("cos") >= threshold)
-    if (!materialize) out
-    else {
-      val o = out.localCheckpoint(true)
-      capped.unpersist()
-      o
-    }
+    Layout.pin(out, capped)
   }
 
   /** Hard-negative mining for contrastive/embedding training (public
@@ -1589,12 +1577,11 @@ object Similarity {
       nClusters: Int = 16, threshold: Double = 0.4,
       keepRule: String = "low_centroid_sim", clusterCap: Int = 100000,
       seed: Long = 42L, maxIter: Int = 10, fitSample: Int = 262144,
-      roundTo: Int = 4, ccMaxIter: Int = 50,
-      materialize: Boolean = true): DataFrame = {
+      roundTo: Int = 4, ccMaxIter: Int = 50): DataFrame = {
     val base = emb.select(id.as("vec_id"), vec.as("embedding"))
     val (centersDf, assigned) = fitIvf(base, nClusters, seed, maxIter, fitSample)
     semanticDedupAssigned(assigned, centersDf, threshold, keepRule,
-      clusterCap, roundTo, ccMaxIter, materialize)
+      clusterCap, roundTo, ccMaxIter)
   }
 
   /** [[semanticDedup]] with a caller-provided cluster column (a domain
@@ -1607,7 +1594,7 @@ object Similarity {
       cluster: Column, threshold: Double = 0.4,
       keepRule: String = "low_centroid_sim", clusterCap: Int = 100000,
       roundTo: Int = 4, centroidRoundTo: Int = 6,
-      ccMaxIter: Int = 50, materialize: Boolean = true): DataFrame = {
+      ccMaxIter: Int = 50): DataFrame = {
     val assigned = emb.select(id.as("vec_id"), vec.as("embedding"),
       cluster.cast(LongType).as("__list"))
     // per-cluster mean vector, assembled back into an array ordered by
@@ -1623,12 +1610,12 @@ object Similarity {
         array_sort(collect_list(struct(col("__p"), col("__m")))),
         s => s.getField("__m")).as("__centroid"))
     semanticDedupAssigned(assigned, centersDf, threshold, keepRule,
-      clusterCap, roundTo, ccMaxIter, materialize)
+      clusterCap, roundTo, ccMaxIter)
   }
 
   private def semanticDedupAssigned(assigned: DataFrame, centersDf: DataFrame,
       threshold: Double, keepRule: String, clusterCap: Int, roundTo: Int,
-      ccMaxIter: Int, materialize: Boolean): DataFrame = {
+      ccMaxIter: Int): DataFrame = {
     require(Seq("low_centroid_sim", "min_id").contains(keepRule),
       s"unknown keepRule '$keepRule' (low_centroid_sim|min_id)")
     import org.apache.spark.sql.expressions.Window
@@ -1671,12 +1658,7 @@ object Similarity {
     val sel = withCos.select(col("vec_id"),
       col("__list").cast(LongType).as("cluster"), col("component"),
       col("ccos"), keep.as("keep"))
-    if (!materialize) sel
-    else {
-      val out = sel.localCheckpoint(true)
-      a.unpersist()
-      out
-    }
+    Layout.pin(sel, a)
   }
   /** MMR diverse top-k selection (Carbonell & Goldstein 1998,
     * public): greedily pick `k` vectors maximizing
@@ -1702,14 +1684,14 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val e = emb.select(id.cast("long").as("id"),
-      vec.cast("array<double>").as("v")).localCheckpoint(true)
+      vec.cast("array<double>").as("v")).transform(Layout.pin(_))
     val cent = e.select(posexplode(col("v")).as(Seq("__p", "__x")))
       .groupBy("__p").agg(round(avg(col("__x")), centroidRoundTo).as("__m"))
       .orderBy("__p").collect().map(_.getDouble(1))
     val centCol = array(cent.map(lit(_)): _*)
     val scored = e
       .withColumn("__rel", round(cosine(col("v"), centCol), roundTo))
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     var selected = Vector.empty[(Long, Seq[Double], Double)]
     var exhausted = false
     for (_ <- 1 to k if !exhausted) {

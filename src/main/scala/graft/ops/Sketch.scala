@@ -121,7 +121,7 @@ object Sketch {
       countMinTopK(batchKeys, col("key"), live, depth, width, k, seed))
     val cands = batchKeys.unionByName(prev.select("key")).distinct()
     countMinTopK(cands, col("key"), live, depth, width, k, seed)
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
       .write.mode("overwrite").parquet(s"$path/topk")
   }
 

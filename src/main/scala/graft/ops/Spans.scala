@@ -118,12 +118,12 @@ object Spans {
     // human-facing ledger) keeps strings.
     val hits = gramHits(docs, text, id, n)
       .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("gram"))
-      .localCheckpoint(true)
+      .transform(Layout.pin(_))
     val dup0 = hits.groupBy("gram")
       .agg(countDistinct(col("doc_id")).as("__nd"),
         min(col("doc_id")).as("__owner"))
       .filter(col("__nd") > 1 && col("__nd") <= maxDocsPerGram)
-    val dup = dup0.localCheckpoint(true)
+    val dup = dup0.transform(Layout.pin(_))
     val occ = { (joined: DataFrame) =>
       joined.filter(col("doc_id") =!= col("__owner"))
         .select(col("doc_id"), col("pos"))

@@ -669,14 +669,12 @@ object TextOps {
       .crossJoin(broadcast(nAll))
     val p = (col("c") + k) / (col("n_g") + lit(k) * v)
     val q = (col("c_t") + k) / (col("n_all") + lit(k) * v)
-    // materialized (rows = #groups) so occ can release eagerly — the
-    // same localCheckpoint+unpersist convention as the dedup funnels
+    // pinned (rows = #groups) so occ can release eagerly — the same
+    // convention as the dedup funnels
     val out = grid.groupBy("group")
       .agg(first(col("n_g")).as("n_tokens"),
         round(sum(p * log(p / q)), 6).as("kl"))
-      .localCheckpoint(true)
-    occ.unpersist()
-    out
+    Layout.pin(out, occ)
   }
 
   /** Feature-hashed TF-IDF document vectors (public: the hashing
@@ -697,8 +695,7 @@ object TextOps {
     * combined); df and N derive from the counts table (no second
     * corpus pass); the N scalar broadcasts. */
   def hashedTfIdf(docs: DataFrame, text: Column, id: Column,
-      buckets: Int = 1024, roundTo: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      buckets: Int = 1024, roundTo: Int = 6): DataFrame = {
     // per-doc bucket counts — feeds df, N, AND the weights.
     // [[Dsir.bucketOf]]'s 16-bit md5 slice saturates at 65536 distinct
     // values; large feature spaces (collision-free-ish hashing for
@@ -729,12 +726,7 @@ object TextOps {
     val out = weighted.join(norm, Seq("doc_id"))
       .select(col("doc_id"), col("pos"),
         round(col("__w") / col("__n"), roundTo).as("w"))
-    if (!materialize) out
-    else {
-      val o = out.localCheckpoint(true)
-      d.unpersist()
-      o
-    }
+    Layout.pin(out, d)
   }
 
   /** [[hashedTfIdf]] assembled into dense ARRAY<FLOAT> vectors
@@ -744,9 +736,7 @@ object TextOps {
     * comparison format. */
   def hashedVectors(docs: DataFrame, text: Column, id: Column,
       buckets: Int = 256, roundTo: Int = 6): DataFrame = {
-    val sparse = hashedTfIdf(docs, text, id, buckets, roundTo,
-      materialize = false)
-    sparse.groupBy("doc_id")
+    hashedTfIdf(docs, text, id, buckets, roundTo).groupBy("doc_id")
       .agg(map_from_entries(collect_list(struct(col("pos"), col("w"))))
         .as("__m"))
       .select(col("doc_id").as("vec_id"),

@@ -253,8 +253,7 @@ object DedupQueries {
     // set — at scale that is a whole wasted stage over billions of rows)
     Query("dedup_minhash_pairs", (s, dir) =>
       Dedup.minhashLSH(table(s, dir, "documents"), col("text"), col("doc_id"),
-        shingleK = 2, numHashes = 16, bands = 8, jaccardThreshold = 0.3,
-        materialize = eagerPairs)
+        shingleK = 2, numHashes = 16, bands = 8, jaccardThreshold = 0.3)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")),
     RowsOnly("graft.ops.DedupSpec")),
 
@@ -270,8 +269,7 @@ object DedupQueries {
           col("text"), col("doc_id"), p,
           shingleK = 2, numHashes = 16, bands = 8))
       Dedup.nearDupAgainstIndex(s, store, docs.filter(col("doc_id") < 50),
-        col("text"), col("doc_id"), jaccardThreshold = 0.3,
-        materialize = eagerPairs)
+        col("text"), col("doc_id"), jaccardThreshold = 0.3)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
     }, RowsOnly("graft.ops.MinhashIndexSpec")),
 
@@ -281,7 +279,7 @@ object DedupQueries {
     // brute force. (rows-only, order-free)
     Query("dedup_simhash_pairs", (s, dir) =>
       Dedup.simhashPairs(table(s, dir, "documents"), col("text"), col("doc_id"),
-        maxHamming = 7, materialize = eagerPairs),
+        maxHamming = 7),
     RowsOnly("graft.ops.DedupSpec")),
 
     // char-3-gram Jaccard near-dup pairs at the standard 0.8 threshold
@@ -291,7 +289,7 @@ object DedupQueries {
     // (rows-only; recall vs exact measured in DedupSpec)
     Query("dedup_ngram_pairs", (s, dir) =>
       Dedup.ngramJaccardPairs(table(s, dir, "documents"), col("text"), col("doc_id"),
-        n = 3, threshold = 0.8, materialize = eagerPairs)
+        n = 3, threshold = 0.8)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")),
     RowsOnly("graft.ops.DedupSpec")),
 
@@ -416,8 +414,7 @@ object DedupQueries {
           col("text"), col("doc_id"), p,
           shingleK = 3, numHashes = 128, bands = 16, mode = "chargram"))
       Dedup.nearDupAgainstIndex(s, store, docs.filter(col("doc_id") < 50),
-        col("text"), col("doc_id"), jaccardThreshold = 0.8,
-        materialize = eagerPairs)
+        col("text"), col("doc_id"), jaccardThreshold = 0.8)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
     }, RowsOnly("graft.ops.MinhashIndexSpec")),
 
@@ -443,7 +440,7 @@ object DedupQueries {
           col("vec_id"), col("embedding"), p, planes = 8, tables = 16))
       Similarity.cosinePairsAgainstIndex(s, store,
         emb.filter(col("vec_id") < 50), col("vec_id"), col("embedding"),
-        threshold = 0.45, materialize = eagerPairs)
+        threshold = 0.45)
     }, RowsOnly("graft.ops.MinhashIndexSpec")),
 
     // exact all-pairs cosine over a bounded sample — DuckDB-oracled
@@ -541,7 +538,7 @@ object DedupQueries {
       // signal (a fingerprint shared by most docs is a stopword), and
       // uncapped they mint 15.6M candidate rows at sf0.1
       Dedup.containmentPairs(table(s, dir, "documents"), col("text"), col("doc_id"),
-        k = 8, w = 24, threshold = 0.5, bucketCap = 200, materialize = eagerPairs)
+        k = 8, w = 24, threshold = 0.5, bucketCap = 200)
         .select(col("id_a"), col("id_b"), round(col("containment"), 6).as("containment")),
     RowsOnly("graft.ops.DedupSpec")),
 
@@ -555,8 +552,7 @@ object DedupQueries {
         Dedup.buildContainmentIndex(docs.filter(col("doc_id") >= 50),
           col("text"), col("doc_id"), p))
       Dedup.containmentAgainstIndex(s, store, docs.filter(col("doc_id") < 50),
-        col("text"), col("doc_id"), threshold = 0.5, bucketCap = 200,
-        materialize = eagerPairs)
+        col("text"), col("doc_id"), threshold = 0.5, bucketCap = 200)
         .select(col("id_a"), col("id_b"), round(col("containment"), 6).as("containment"))
     }, RowsOnly("graft.ops.MinhashIndexSpec")),
 
@@ -666,7 +662,7 @@ object DedupQueries {
     Query("semdedup_kept", (s, dir) =>
       Similarity.semanticDedup(table(s, dir, "embeddings"),
           col("vec_id"), col("embedding"), nClusters = 16,
-          threshold = 0.4, materialize = eagerPairs)
+          threshold = 0.4)
         .orderBy("vec_id"),
     RowsOnly("graft.ops.SemDedupSpec")),
 
@@ -678,7 +674,7 @@ object DedupQueries {
       Similarity.semanticDedupByCluster(
           table(s, dir, "embeddings").filter(col("vec_id") < 300),
           col("vec_id"), col("embedding"), col("label"),
-          threshold = 0.35, materialize = eagerPairs)
+          threshold = 0.35)
         .orderBy("vec_id"),
     Sql(
       """WITH RECURSIVE e AS (SELECT vec_id, label, embedding

@@ -134,7 +134,7 @@ object GraphQueries {
     Query("graph_reciprocity", (s, dir) => {
       val docs = table(s, dir, "documents")
       val edges = Graph.linkGraph(docs, col("doc_id"), nNodes = docs.count())
-        .localCheckpoint(true) // both sides of the semi-join read it
+        .transform(Layout.pin(_)) // both sides of the semi-join read it
       val recip = edges.join(
         edges.select(col("dst").as("src"), col("src").as("dst")),
         Seq("src", "dst"), "left_semi")
@@ -326,9 +326,8 @@ object GraphQueries {
       val edges = Graph.linkGraph(docs, col("doc_id"), nNodes = docs.count())
         .filter(col("src") < 100 && col("dst") < 100)
       val und = Graph.undirected(edges)
-      val cc = Dedup.connectedComponentsResult(
-        und.select(col("a").as("id_a"), col("b").as("id_b")),
-        maxIter = 50, algorithm = "star")
+      val cc = Dedup.connectedComponentsStar(
+        und.select(col("a").as("id_a"), col("b").as("id_b")), maxIter = 50)
       require(cc.converged, "CC must converge before labels are usable")
       docs.filter(col("doc_id") < 100)
         .select(col("doc_id").cast("long").as("node"))

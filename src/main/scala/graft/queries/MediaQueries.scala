@@ -85,8 +85,7 @@ object MediaQueries {
       val media = Multimodal.asMediaTable(table(s, dir, "documents"))
       val reenc = reencodedMedia(media)
       Multimodal.phashPairs(media.unionByName(reenc),
-        col("doc_id"), col("media"), maxHamming = 3,
-        materialize = eagerPairs)
+        col("doc_id"), col("media"), maxHamming = 3)
     }, RowsOnly("graft.ops.MultimodalSpec")),
 
     // multimodal: INCREMENTAL phash dedup — fingerprint index built
@@ -100,7 +99,7 @@ object MediaQueries {
         Multimodal.buildPhashIndex(media, col("doc_id"), col("media"), p))
       val reenc = reencodedMedia(media)
       Multimodal.phashAgainstIndex(s, store, reenc, col("doc_id"),
-        col("media"), maxHamming = 3, materialize = eagerPairs)
+        col("media"), maxHamming = 3)
     }, RowsOnly("graft.ops.MultimodalSpec")),
 
     Query("mm_decode_real", (s, dir) => {
@@ -370,7 +369,7 @@ object MediaQueries {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           mkSwap(col("doc_id")).as("media"))
       Multimodal.audioFingerprintPairs(media.unionByName(swapped),
-        maxHamming = 3, materialize = eagerPairs)
+        maxHamming = 3)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast(IntegerType).as("hamming"))
         .orderBy("id_a", "id_b")
@@ -422,8 +421,7 @@ object MediaQueries {
           pmod(col("doc_id"), lit(7)) =!= 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           mkSwap(col("doc_id")).as("media"))
-      Multimodal.audioFpAgainstIndex(s, store, swapped, maxHamming = 3,
-        materialize = eagerPairs)
+      Multimodal.audioFpAgainstIndex(s, store, swapped, maxHamming = 3)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast(IntegerType).as("hamming"))
         .orderBy("id_a", "id_b")

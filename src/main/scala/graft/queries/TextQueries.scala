@@ -2038,7 +2038,7 @@ object TextQueries {
     // CCNet-style quality signal, fit+scored in one declarative plan
     Query("lm_bigram_score", (s, dir) =>
       LangModel.scoreBigram(table(s, dir, "documents"), col("text"),
-          col("doc_id"), materialize = eagerPairs)
+          col("doc_id"))
         .orderBy("doc_id"),
     Sql(
       """WITH toks AS (SELECT doc_id,
@@ -2061,7 +2061,7 @@ object TextQueries {
     // unigram floor) — the higher-order member of the LM family
     Query("lm_trigram_score", (s, dir) =>
       LangModel.scoreTrigram(table(s, dir, "documents"), col("text"),
-          col("doc_id"), materialize = eagerPairs)
+          col("doc_id"))
         .orderBy("doc_id"),
     Sql(
       """WITH toks AS (SELECT doc_id,
@@ -2109,7 +2109,7 @@ object TextQueries {
     // type table)
     Query("lm_kn_score", (s, dir) =>
       LangModel.scoreKnBigram(table(s, dir, "documents"), col("text"),
-          col("doc_id"), materialize = eagerPairs)
+          col("doc_id"))
         .orderBy("doc_id"),
     Sql(
       """WITH toks AS (SELECT doc_id,
@@ -2187,7 +2187,7 @@ object TextQueries {
     // statistic is an aggregation of the two type tables)
     Query("lm_kn3_score", (s, dir) =>
       LangModel.scoreKnTrigram(table(s, dir, "documents"), col("text"),
-          col("doc_id"), materialize = eagerPairs)
+          col("doc_id"))
         .orderBy("doc_id"),
     Sql(
       """WITH toks AS (SELECT doc_id,
@@ -2383,7 +2383,7 @@ object TextQueries {
     // 4-nibble bucket hash is engine-portable verbatim
     Query("dsir_logweights", (s, dir) =>
       Dsir.logWeights(table(s, dir, "documents"), col("text"),
-          col("doc_id"), col("lang") === "en", materialize = eagerPairs)
+          col("doc_id"), col("lang") === "en")
         .orderBy("doc_id"),
     Sql(
       s"""WITH $dsirWeightsCte
@@ -2395,7 +2395,7 @@ object TextQueries {
     Query("dsir_resample", (s, dir) =>
       Dsir.resampleTopN(
         Dsir.logWeights(table(s, dir, "documents"), col("text"),
-          col("doc_id"), col("lang") === "en", materialize = eagerPairs),
+          col("doc_id"), col("lang") === "en"),
         n = 150, temperature = 2.0, seed = 7L),
     Sql(
       s"""WITH $dsirWeightsCte,
@@ -2452,8 +2452,7 @@ object TextQueries {
     // bucketing + idf + L2 arithmetic verbatim in DuckDB)
     Query("text_hash_tfidf", (s, dir) =>
       TextOps.hashedTfIdf(table(s, dir, "documents")
-          .filter(col("doc_id") < 100), col("text"), col("doc_id"),
-          materialize = eagerPairs)
+          .filter(col("doc_id") < 100), col("text"), col("doc_id"))
         .orderBy("doc_id", "pos"),
     Sql(
       s"""WITH toks AS (SELECT doc_id, unnest(
@@ -2479,8 +2478,7 @@ object TextQueries {
     Query("text_sparse_cosine_pairs", (s, dir) =>
       Similarity.sparseCosinePairs(
           TextOps.hashedTfIdf(table(s, dir, "documents")
-            .filter(col("doc_id") < 100), col("text"), col("doc_id"),
-            materialize = eagerPairs),
+            .filter(col("doc_id") < 100), col("text"), col("doc_id")),
           threshold = 0.85)
         .orderBy("id_a", "id_b"),
     Sql(
@@ -2514,7 +2512,7 @@ object TextQueries {
       val docs = table(s, dir, "documents")
       val sel = Dsir.resampleTopN(
         Dsir.logWeights(docs, col("text"), col("doc_id"),
-          col("lang") === "en", materialize = eagerPairs),
+          col("lang") === "en"),
         n = 150, temperature = 2.0, seed = 7L)
       Pack.packGreedy(docs.join(sel.select("doc_id"), Seq("doc_id")),
           col("doc_id"), TextOps.tokenCount(col("text")), seqLen = 2048,

@@ -522,13 +522,13 @@ object UrlQueries {
       val docs = table(s, dir, "documents")
       val pages = linkPageFixture(docs)
       val g = Urls.domainLinkGraph(pages, col("doc_id"), col("base_url"),
-        col("html")).localCheckpoint(true)
+        col("html")).transform(Layout.pin(_))
       def mdId(c: Column): Column =
         conv(substring(md5(c), 1, 8), 16, 10).cast("long")
       val nodes = g.select(col("src_domain").as("domain"))
         .union(g.select(col("dst_domain").as("domain"))).distinct()
         .select(col("domain"), mdId(col("domain")).as("node"))
-        .localCheckpoint(true)
+        .transform(Layout.pin(_))
       val edges = g.select(mdId(col("src_domain")).as("src"),
         mdId(col("dst_domain")).as("dst"))
       val n = nodes.count()

@@ -129,6 +129,17 @@ class HarnessSpec extends AnyFunSuite {
     assert(stderr(assert(Bench.loadMax(None) === 4.0)) === "")
   }
 
+  test("a bench seed that is not a number is named on stderr and leaves the order alone") {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withErr(new java.io.PrintStream(buf, true, "UTF-8")) {
+      assert(Bench.benchSeed(Some("abc")) === None)
+      assert(Bench.benchSeed(Some(" 7 ")) === Some(7L))
+      assert(Bench.benchSeed(None) === None)
+    }
+    assert(buf.toString("UTF-8") ===
+      "[graft] ignoring SPARK_GRAFT_BENCH_SEED=\"abc\": using the default registration order\n")
+  }
+
   test("a noop run counts its codegen compiles: 0 for a repeated plan, 1+ for a new literal") {
     // a long literal is inlined into the generated Java source
     def plan(k: Long) = spark.range(0, 100, 1, 1).select((col("id") * lit(k)).as("v"))

@@ -488,8 +488,8 @@ class DedupSpec extends AnyFunSuite {
       n = 3, threshold = 0.5).localCheckpoint(true)
     def lbl(r: Dedup.CCResult) =
       r.labels.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(lbl(Dedup.connectedComponentsResult(pairs, 20, "label")) ===
-      lbl(Dedup.connectedComponentsResult(pairs, 50, "star")))
+    assert(lbl(Dedup.connectedComponentsResult(pairs, 20)) ===
+      lbl(Dedup.connectedComponentsStar(pairs, 50)))
   }
 
   test("persisted IVF index: same rows as inline, probed-partition-only reads") {
