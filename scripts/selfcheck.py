@@ -1,11 +1,71 @@
 #!/usr/bin/env python3
-"""Self-check harness (builder-side only): replicate the driver's
-correctness gate — run each oracle_sql in DuckDB over the same parquet
-tables and compare to the Verify.scala parquet dumps (schema, rows,
-values). Usage: selfcheck.py <sfDir> <verifyOutDir>."""
-import sys, os, json, glob
+"""Self-check harness: replicate the correctness gate — run each
+oracle_sql in DuckDB over the same parquet tables and compare to the
+graft.Verify parquet dumps (schema, rows, values).
+
+Usage:
+  selfcheck.py <sfDir> <verifyOutDir>
+      oracle mode: every query of oracle_sql.json against DuckDB.
+  selfcheck.py --compare <verifyOutA> <verifyOutB> [--digits D]
+      compare mode: two Verify dumps (e.g. two commits) query by query,
+      order-insensitively — schema, row count and a digest of the sorted
+      rows — so the rows-only queries, which have no oracle, are
+      covered too. `--digits D` rounds floats to D significant digits
+      before hashing (default: exact).
+"""
+import sys, os, json, glob, hashlib
 import duckdb
 import pyarrow.parquet as pq
+
+
+def _canon(v, digits):
+    if isinstance(v, float) and digits is not None:
+        return float(f"{v:.{digits}g}")
+    if isinstance(v, (list, tuple)):
+        return [_canon(x, digits) for x in v]
+    if isinstance(v, dict):
+        return {k: _canon(x, digits) for k, x in v.items()}
+    return v
+
+
+def dump_digest(con, res_dir, digits):
+    """(schema, rows, digest) of one query's dump, or None if absent:
+    columns sorted by name, rows serialized and sorted, then hashed."""
+    files = sorted(glob.glob(f"{res_dir}/*.parquet"))
+    if not files:
+        return None
+    t = con.execute(f"SELECT * FROM read_parquet({files!r})").fetch_arrow_table()
+    cols = sorted(t.column_names)
+    schema = [(c, str(t.schema.field(c).type)) for c in cols]
+    rows = sorted(repr([_canon(r[c], digits) for c in cols]) for r in t.select(cols).to_pylist())
+    h = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+    return schema, len(rows), h
+
+
+def compare(dir_a, dir_b, digits):
+    con = duckdb.connect()
+    names = sorted({os.path.basename(os.path.dirname(f))
+                    for d in (dir_a, dir_b) for f in glob.glob(f"{d}/*/*.parquet")})
+    diffs = 0
+    for name in names:
+        a = dump_digest(con, f"{dir_a}/{name}", digits)
+        b = dump_digest(con, f"{dir_b}/{name}", digits)
+        if a is None or b is None:
+            print(f"DIFF {name}: missing in {'A' if a is None else 'B'}"); diffs += 1
+        elif a[0] != b[0]:
+            print(f"DIFF {name}: schema {a[0]} vs {b[0]}"); diffs += 1
+        elif a[1:] != b[1:]:
+            print(f"DIFF {name}: rows {a[1]} digest {a[2]} vs rows {b[1]} digest {b[2]}")
+            diffs += 1
+        else:
+            print(f"SAME {name}: {a[1]} rows digest {a[2]}")
+    print(f"\n{len(names) - diffs}/{len(names)} queries identical")
+    sys.exit(1 if diffs else 0)
+
+
+if sys.argv[1] == "--compare":
+    digits = int(sys.argv[sys.argv.index("--digits") + 1]) if "--digits" in sys.argv else None
+    compare(sys.argv[2], sys.argv[3], digits)
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
 

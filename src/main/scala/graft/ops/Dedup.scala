@@ -67,8 +67,7 @@ object Dedup {
         sum(coalesce(col("__boiler"), lit(0))).as("n_pruned"))
   }
 
-  /** Word k-shingles of a text column (array of strings). */
-  /** Word k-shingles, duplicates kept — the fused codegen kernel
+  /** Word k-shingles of a text column, duplicates kept — the fused codegen kernel
     * ([[graft.functions.Kernels.wordShingles]]): the previous
     * transform(sequence, i => concat_ws(slice(tokens(text), …)))
     * Column tree re-evaluated the SPLIT per output gram when
@@ -103,40 +102,41 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.jaccardSim(a, b)
 
-  /** (doc_id, elems, sig, n) signature table — shared by the inline
-    * funnel and the persisted index. `n` is SET cardinality (the
-    * size-ratio guard's invariant j >= t ⟹ |A|/|B| ∈ [t, 1/t] only
-    * holds for distinct counts; shingles() keeps duplicates, so a
-    * repetitive doc would otherwise be silently dropped against its
-    * compact twin). */
-  private def signatureTable(docsKeyed: DataFrame, numHashes: Int,
-      elemsDistinct: Boolean): DataFrame = {
-    val card = if (elemsDistinct) size(col("elems"))
+  /** The per-doc (doc_id, n, sig, elems) table of the minhash family
+    * — the one builder behind the funnel, [[buildMinhashIndex]] and
+    * [[appendToMinhashIndex]]. `n` is SET cardinality (the size-ratio
+    * guard's invariant j >= t ⟹ |A|/|B| ∈ [t, 1/t] only holds for
+    * distinct counts; "shingle" elems keep duplicates, so a repetitive
+    * doc would otherwise be silently dropped against its compact twin;
+    * "chargram" elems are already distinct). */
+  private def signatureTable(elems: DataFrame, numHashes: Int,
+      mode: String): DataFrame = {
+    val card = if (mode == "chargram") size(col("elems"))
                else size(array_distinct(col("elems")))
-    docsKeyed
-      .withColumn("sig", minhashSignature(col("elems"), numHashes))
-      .withColumn("n", card)
+    elems.select(col("doc_id"), card.as("n"),
+      minhashSignature(col("elems"), numHashes).as("sig"), col("elems"))
   }
 
-  /** Band explosion of a signature table: one (doc_id, n, band, bh) row
-    * per band, bh = xxhash64 of the band's signature slice. Reading
-    * from a STORED signature table, upstream column pruning keeps the
-    * (wide) elems column out of this scan. */
+  /** Band explosion of a tagged signature table: one (doc_id, n,
+    * is_new, band, bh) row per band, bh = xxhash64 of the band's
+    * signature slice. Reading from a STORED signature table, upstream
+    * column pruning keeps the (wide) elems column out of this scan. */
   private def bandTable(sigTable: DataFrame, bands: Int, rows: Int): DataFrame =
-    sigTable.select(col("doc_id"), col("n"),
+    sigTable.select(col("doc_id"), col("n"), col("is_new"),
       posexplode(F.transform(sequence(lit(0), lit(bands - 1)),
         b => xxhash64(slice(col("sig"), b * rows + 1, lit(rows))))).as(Seq("band", "bh")))
 
   /** The shared verification funnel: signature-estimate prefilter
     * (skipped when the margin covers the whole range) then exact
     * Jaccard over element sets, both via key-equality joins against
-    * `lookup` (doc_id, sig, elems). */
-  /** Every array-carrying verify join is SHUFFLE_HASH with the O(n)
-    * per-doc side as the build: bare candidate pairs stream through
-    * the probes and collapse to scores inside the stage, so rows
-    * carrying signature/element arrays are never sorted or buffered
-    * (the sort-merge plan this replaces spilled 6.6 GB at the m=64
-    * scale point purely sorting candidates+array payload). */
+    * `lookup` (doc_id, sig, elems). Every array-carrying verify join
+    * is SHUFFLE_HASH with the O(n) per-doc side as the build: bare
+    * candidate pairs stream through the probes and collapse to scores
+    * inside the stage, so rows carrying signature/element arrays are
+    * never sorted or buffered (the sort-merge plan this replaces
+    * spilled 6.6 GB at the m=64 scale point purely sorting
+    * candidates+array payload). The pairs leave with
+    * [[canonicalIds]]. */
   private def verifyCandidates(cands: DataFrame, lookup: DataFrame,
       numHashes: Int, threshold: Double): DataFrame = {
     val margin = 4.0 * math.sqrt(threshold * (1 - threshold) / numHashes)
@@ -157,31 +157,59 @@ object Dedup {
         .hint("SHUFFLE_HASH"), Seq("id_a"))
       .join(lookup.select(col("doc_id").as("id_b"), col("elems").as("e_b"))
         .hint("SHUFFLE_HASH"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jaccard(col("e_a"), col("e_b")).as("jaccard"))
+      .select(canonicalIds :+ jaccard(col("e_a"), col("e_b")).as("jaccard"): _*)
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Banded-LSH near-duplicate pairs over an element-set column
-    * (`doc_id`, `elems`), exact-verified. The full scale funnel:
-    *
-    *  1. signature table (doc_id, elems, sig, |elems|), persisted —
-    *     it feeds candidate generation AND both verification joins;
-    *  2. band explosion → per-bucket count → drop buckets over
-    *     `bucketCap` (skew insurance: a pathological bucket of B docs
-    *     would mint B² pairs on one shuffle key);
-    *  3. self-join on (band, hash) with a SIZE-RATIO guard — j ≥ t
-    *     forces |A|/|B| ∈ [t, 1/t], so wildly different-sized docs
-    *     never materialize as pairs;
-    *  4. distinct (id_a, id_b) — each pair verified once, not once per
-    *     colliding band;
-    *  5. signature-estimate prefilter: est = (matching minhash
-    *     components)/H ≈ j with σ = √(j(1−j)/H); pairs below
-    *     t − 4σ are discarded after a 2·H-long join instead of paying
-    *     the full element-set join. Crucial when the corpus background
-    *     similarity sits near the band knee (candidate volume is
-    *     driven by the background, not the threshold);
-    *  6. exact Jaccard over the element sets for the survivors.
-    */
+  /** `fresh` ∪ `stored` with an `is_new` tag on the fresh rows — the
+    * input of every near-dup funnel's blocking. */
+  private[ops] def tagFresh(fresh: DataFrame, stored: DataFrame): DataFrame =
+    fresh.withColumn("is_new", lit(true))
+      .unionByName(stored.withColumn("is_new", lit(false)))
+
+  /** The store of an inline funnel: an empty table shaped like
+    * `fresh`. An empty LocalRelation, not `fresh.limit(0)`: the
+    * optimizer drops a union with it in its first batch, before it
+    * propagates constants, so the `is_new` tag folds away and the
+    * inline plan is the plain self-join (a `limit(0)` only turns empty
+    * in a late batch and leaves the tag riding through the join). */
+  private[ops] def noStore(fresh: DataFrame): DataFrame =
+    fresh.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), fresh.schema)
+
+  /** The pair rule of every near-dup funnel, over a blocked
+    * [[tagFresh]] table: `exact` and `probe` are the two join sides on
+    * `keys` (the same table except for MIH's radius-1 ball). Only fresh
+    * rows sit on the left, so stored-stored pairs never form; a
+    * fresh-fresh pair forms once (id_a < id_b) and a fresh-stored pair
+    * once (a stored id is never on the left). Output: (id_a, id_b) in
+    * join-side orientation — id_a is always fresh, and each pair has
+    * one orientation, so a distinct or group-by on them is per pair —
+    * plus each `carry` column as `<c>_a`/`<c>_b`. Over an empty store
+    * ([[noStore]], the inline funnels) the optimizer drops the union
+    * and folds the tag away, leaving the plain id_a < id_b self-join. */
+  private[ops] def freshPairs(exact: DataFrame, probe: DataFrame,
+      keys: Seq[String], id: String, carry: String*): DataFrame = {
+    def side(df: DataFrame, s: String): DataFrame = df.select(keys.map(col) ++
+      Seq(col(id).as(s"id_$s"), col("is_new").as(s"new_$s")) ++
+      carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side(exact.filter(col("is_new")), "a").join(side(probe, "b"), keys)
+      .filter((!col("new_b") || col("id_a") < col("id_b")) &&
+        col("id_a") =!= col("id_b"))
+      .select(Seq(col("id_a"), col("id_b")) ++
+        carry.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+  }
+
+  /** A [[freshPairs]] pair's ids as id_a < id_b — every funnel's exit
+    * projection. Not earlier: until the exit the ids keep the fresh
+    * table's doc-id partitioning, which lets adaptive execution drop
+    * the shuffles of the candidate distinct and the first verify join
+    * (canonical ids before the distinct cost `dedup_minhash_pairs` two
+    * shuffle stages). */
+  private[ops] def canonicalIds: Seq[Column] = Seq(
+    least(col("id_a"), col("id_b")).as("id_a"),
+    greatest(col("id_a"), col("id_b")).as("id_b"))
+
   /** Scrub corpus-scale elements before signatures: an element in
     * more than `frac` of the corpus (floor 16 docs) is boilerplate —
     * a cookie banner, a license footer, a shared template — and
@@ -193,8 +221,9 @@ object Dedup {
     * bounded by Σ|elems| / (frac·n) entries — independent of corpus
     * size — so it travels as an InSet literal. Docs whose elems are
     * ALL boilerplate drop out entirely (no identity left to match).
-    * Every engagement is recorded in [[Ledger]]. */
-  /** Returns the scrubbed (doc_id, elems) plan plus the persisted
+    * Every engagement is recorded in [[Ledger]].
+    *
+    * Returns the scrubbed (doc_id, elems) plan plus the persisted
     * input handle the CALLER must unpersist once its own downstream
     * cache has materialized — an eager checkpoint here would pin a
     * corpus-sized RDD in the block manager for the session's life
@@ -251,35 +280,6 @@ object Dedup {
       kept
     }
 
-  private def lshPairs(docsKeyed0: DataFrame, numHashes: Int, bands: Int,
-      bucketCap: Int, threshold: Double, elemsDistinct: Boolean,
-      hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame = {
-    val (docsKeyed, scrubInput) =
-      if (hotElemFrac <= 0) (docsKeyed0, None)
-      else {
-        val (out, keyed) = scrubHotElems(docsKeyed0, hotElemFrac)
-        (out, Some(keyed))
-      }
-    val rows = numHashes / bands
-    val base = signatureTable(docsKeyed, numHashes, elemsDistinct).persist()
-    val banded = bandTable(base, bands, rows)
-    val capped = dropOversizedBuckets(banded, Seq("band", "bh"), bucketCap)
-    val a = capped.select(col("band"), col("bh"), col("doc_id").as("id_a"), col("n").as("n_a"))
-    val b = capped.select(col("band"), col("bh"), col("doc_id").as("id_b"), col("n").as("n_b"))
-    val cands0 = a.join(b, Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b") &&
-        least(col("n_a"), col("n_b")).cast(DoubleType) /
-          greatest(col("n_a"), col("n_b")) >= threshold)
-      .select("id_a", "id_b")
-      .distinct()
-    val cands = capCandidatesPerDoc(cands0, perDocCap, "minhash")
-    val verified = verifyCandidates(cands, base, numHashes, threshold)
-    // pin the (tiny) verified pair set so the signature cache releases
-    // NOW — without this, repeated pipeline calls accumulate cached
-    // tables for the session's life
-    Layout.pin(verified, Seq(base, cands) ++ scrubInput: _*)
-  }
-
   /** Skew insurance without a sort: per-bucket counts are a tiny
     * aggregate (one row per bucket, and only buckets over the cap
     * survive the filter — few by construction), broadcast back as a
@@ -293,9 +293,53 @@ object Dedup {
     exploded.join(broadcast(over), keys, "left_anti")
   }
 
-  /** MinHash + LSH near-duplicate pairs over word shingles, verified
-    * with exact Jaccard. Recall at the threshold is governed by the
-    * (bands, rows) S-curve: P(candidate) = 1 − (1 − s^rows)^bands. */
+  /** Banded-LSH near-duplicate pairs between the `fresh` and `stored`
+    * (doc_id, n, sig, elems) signature tables ([[signatureTable]]),
+    * exact-verified — the one funnel behind [[minhashLSH]],
+    * [[ngramJaccardPairs]] (an empty store) and [[nearDupAgainstIndex]]:
+    *
+    *  1. the fresh table is persisted — it feeds candidate generation
+    *     AND both verification joins; stored scans prune columns
+    *     (banding reads (doc_id, n, sig), verification (doc_id, sig,
+    *     elems));
+    *  2. band explosion of fresh ∪ stored → per-bucket count → drop
+    *     buckets over `bucketCap` (skew insurance: a pathological
+    *     bucket of B docs would mint B² pairs on one shuffle key, no
+    *     matter which side fed it);
+    *  3. self-join on (band, hash) under the [[freshPairs]] rule with a
+    *     SIZE-RATIO guard — j ≥ t forces |A|/|B| ∈ [t, 1/t], so wildly
+    *     different-sized docs never materialize as pairs;
+    *  4. distinct (id_a, id_b) — each pair verified once, not once per
+    *     colliding band (then the optional per-doc budget,
+    *     [[capCandidatesPerDoc]]);
+    *  5. signature-estimate prefilter: est = (matching minhash
+    *     components)/H ≈ j with σ = √(j(1−j)/H); pairs below
+    *     t − 4σ are discarded after a 2·H-long join instead of paying
+    *     the full element-set join. Crucial when the corpus background
+    *     similarity sits near the band knee (candidate volume is
+    *     driven by the background, not the threshold);
+    *  6. exact Jaccard over the element sets for the survivors.
+    *
+    * The verified pair set is pinned so the signature cache (and
+    * `release`) frees NOW — without this, repeated pipeline calls
+    * accumulate cached tables for the session's life. */
+  private def lshFunnel(fresh: DataFrame, stored: DataFrame, numHashes: Int,
+      bands: Int, bucketCap: Int, threshold: Double, perDocCap: Int,
+      release: DataFrame*): DataFrame = {
+    val newBase = fresh.persist()
+    val all = tagFresh(newBase, stored)
+    val capped = dropOversizedBuckets(bandTable(all, bands, numHashes / bands),
+      Seq("band", "bh"), bucketCap)
+    val cands0 = freshPairs(capped, capped, Seq("band", "bh"), "doc_id", "n")
+      .filter(least(col("n_a"), col("n_b")).cast(DoubleType) /
+        greatest(col("n_a"), col("n_b")) >= threshold)
+      .select("id_a", "id_b")
+      .distinct()
+    val cands = capCandidatesPerDoc(cands0, perDocCap, "minhash")
+    Layout.pin(verifyCandidates(cands, all, numHashes, threshold),
+      Seq(newBase, cands) ++ release: _*)
+  }
+
   /** Spread docs across the cluster by id BEFORE the (interpreted,
     * CPU-heavy) shingle/minhash projections — a coarse upstream scan
     * otherwise serializes the whole signature computation into a
@@ -305,25 +349,70 @@ object Dedup {
   private def spreadById(docs: DataFrame, id: Column, payload: Column): DataFrame =
     docs.select(id.as("doc_id"), payload.as("__raw")).repartition(col("doc_id"))
 
-  /** (doc_id, elems) with elems = xxhash64'd word k-shingles — shingles
-    * travel as longs like the char-n-gram funnel: identical Jaccard up
-    * to 2^-64 collisions, ~1/3 the verify-join bytes of shingle
-    * strings, and the primitive (unboxed) set kernel on the verify
-    * path. */
-  private def shingleElems(docs: DataFrame, text: Column, id: Column,
-      shingleK: Int): DataFrame =
-    spreadById(docs, id, text)
+  /** (doc_id, elems) per minhash mode: "shingle" = xxhash64'd word
+    * k-shingles, duplicates kept ([[minhashLSH]]) — shingles travel as
+    * longs like the char-n-gram funnel: identical Jaccard up to 2^-64
+    * collisions, ~1/3 the verify-join bytes of shingle strings, and
+    * the primitive (unboxed) set kernel on the verify path; "chargram"
+    * = distinct hashed char n-grams ([[ngramJaccardPairs]]). */
+  private def indexElems(docs: DataFrame, text: Column, id: Column,
+      mode: String, k: Int): DataFrame = mode match {
+    case "shingle" => spreadById(docs, id, text)
       .select(col("doc_id"),
-        F.transform(shingles(col("__raw"), shingleK), s => xxhash64(s)).as("elems"))
+        F.transform(shingles(col("__raw"), k), s => xxhash64(s)).as("elems"))
+    case "chargram" => spreadById(docs, id, text)
+      .select(col("doc_id"),
+        graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("elems"))
+    case m => throw new IllegalArgumentException(
+      s"unknown minhash index mode: $m (shingle|chargram)")
+  }
 
+  /** The inline minhash funnel: [[lshFunnel]] over an empty store, with
+    * the inline-only hot-element scrub and per-doc candidate budget. */
+  private def lshPairs(docs: DataFrame, text: Column, id: Column, mode: String,
+      k: Int, numHashes: Int, bands: Int, bucketCap: Int, threshold: Double,
+      hotElemFrac: Double, perDocCap: Int): DataFrame = {
+    val elems = indexElems(docs, text, id, mode, k)
+    val (kept, scrubInput) =
+      if (hotElemFrac <= 0) (elems, None)
+      else {
+        val (out, keyed) = scrubHotElems(elems, hotElemFrac)
+        (out, Some(keyed))
+      }
+    val fresh = signatureTable(kept, numHashes, mode)
+    lshFunnel(fresh, noStore(fresh), numHashes, bands, bucketCap, threshold,
+      perDocCap, scrubInput.toSeq: _*)
+  }
+
+  /** MinHash + LSH near-duplicate pairs over word shingles, verified
+    * with exact Jaccard. Recall at the threshold is governed by the
+    * (bands, rows) S-curve: P(candidate) = 1 − (1 − s^rows)^bands. */
   def minhashLSH(docs: DataFrame, text: Column, id: Column,
       shingleK: Int = 3, numHashes: Int = 16, bands: Int = 4,
       jaccardThreshold: Double = 0.5, bucketCap: Int = 100000,
       hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame =
-    lshPairs(shingleElems(docs, text, id, shingleK), numHashes, bands,
-      bucketCap, jaccardThreshold,
-      elemsDistinct = false, // shingles() keeps duplicates
-      hotElemFrac = hotElemFrac, perDocCap = perDocCap)
+    lshPairs(docs, text, id, "shingle", shingleK, numHashes, bands,
+      bucketCap, jaccardThreshold, hotElemFrac, perDocCap)
+
+  /** Character n-gram Jaccard near-duplicate pairs, banded-MinHash
+    * blocked (NOT single-band min-hash blocking, which funnels most of
+    * a same-vocabulary corpus into one quadratic bucket), verified
+    * exactly over int-hashed grams (identical Jaccard up to 2^-64
+    * collisions, ~1/3 the verify-join bytes of string grams).
+    *
+    * The S-curve must be STEEP for char n-grams: unrelated documents in
+    * one language/domain commonly sit at j ≈ 0.4-0.6, so shallow bands
+    * would accept nearly every pair. Defaults (128 hashes × 16 bands of
+    * 8) give P(candidate) ≈ 0.95 at j=0.8 but ≈ 0.4% at j=0.55 — the
+    * knee sits between the background mode and the near-dup threshold.
+    * Run [[exact]] dedup first: clusters of >bucketCap IDENTICAL docs
+    * saturate every band bucket and are dropped by the skew cap. */
+  def ngramJaccardPairs(docs: DataFrame, text: Column, id: Column,
+      n: Int = 3, threshold: Double = 0.8, numHashes: Int = 128,
+      bands: Int = 16, bucketCap: Int = 1000,
+      hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame =
+    lshPairs(docs, text, id, "chargram", n, numHashes, bands, bucketCap,
+      threshold, hotElemFrac, perDocCap)
 
   // ---- persisted minhash index (incremental near-dup) -----------------
 
@@ -332,19 +421,6 @@ object Dedup {
   private def indexMode(meta: org.apache.spark.sql.Row): String =
     if (meta.schema.fieldNames.contains("mode")) meta.getAs[String]("mode")
     else "shingle"
-
-  /** Element derivation per index mode: "shingle" = word k-shingles
-    * (duplicates kept — [[minhashLSH]]'s funnel), "chargram" =
-    * distinct char n-grams ([[ngramJaccardPairs]]'s funnel). */
-  private def indexElems(docs: DataFrame, text: Column, id: Column,
-      mode: String, k: Int): DataFrame = mode match {
-    case "shingle" => shingleElems(docs, text, id, k)
-    case "chargram" => spreadById(docs, id, text)
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("elems"))
-    case m => throw new IllegalArgumentException(
-      s"unknown minhash index mode: $m (shingle|chargram)")
-  }
 
   /** Build the write-once half of incremental near-dup dedup: persist
     * each document's minhash signature, set cardinality, and hashed
@@ -373,9 +449,7 @@ object Dedup {
     // docs first, meta LAST: meta is the commit marker (readers resolve
     // it before touching docs), so a crash mid-build leaves no
     // readable half-store — just an orphan docs dir an overwrite heals
-    signatureTable(indexElems(docs, text, id, mode, shingleK), numHashes,
-        elemsDistinct = mode == "chargram")
-      .select("doc_id", "n", "sig", "elems")
+    signatureTable(indexElems(docs, text, id, mode, shingleK), numHashes, mode)
       .write.mode("overwrite").parquet(s"$path/docs")
     Seq((mode, shingleK, numHashes, bands))
       .toDF("mode", "shingle_k", "num_hashes", "bands")
@@ -393,26 +467,19 @@ object Dedup {
     val (mode, k, numHashes) = (indexMode(meta),
       meta.getAs[Int]("shingle_k"), meta.getAs[Int]("num_hashes"))
     Layout.appendAbsent(
-      signatureTable(indexElems(docs, text, id, mode, k), numHashes,
-          elemsDistinct = mode == "chargram")
-        .select("doc_id", "n", "sig", "elems"),
+      signatureTable(indexElems(docs, text, id, mode, k), numHashes, mode),
       spark.read.parquet(s"$indexPath/docs"), s"$indexPath/docs", "doc_id")
   }
 
   /** Near-duplicate pairs between an increment and a stored minhash
-    * index (plus pairs WITHIN the increment): the incremental twin of
-    * [[minhashLSH]], same funnel — band explosion, union bucket cap (a
-    * bucket hot across store+increment squares in the join no matter
-    * which side fed it), size-ratio guard, per-pair distinct,
-    * signature-estimate prefilter, exact Jaccard — with the corpus side
-    * read from the store. Stored-stored pairs are NOT re-derived.
+    * index (plus pairs WITHIN the increment): [[lshFunnel]] with the
+    * increment as the fresh side and the store as the stored side, so
+    * [[minhashLSH]] / [[ngramJaccardPairs]] are exactly this query
+    * against an empty store. Stored-stored pairs are NOT re-derived.
     *
     * Output (id_a, id_b, jaccard), id_a < id_b, at least one side from
     * the increment. Ids must be unique ACROSS store and increment (the
-    * [[appendToMinhashIndex]] anti-join maintains this for the store).
-    * Store scans prune columns: banding reads (doc_id, n, sig),
-    * verification reads (doc_id, sig, elems) — the wide elems column
-    * never rides the band explosion. */
+    * [[appendToMinhashIndex]] anti-join maintains this for the store). */
   def nearDupAgainstIndex(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, text: Column, id: Column,
       jaccardThreshold: Double = 0.5, bucketCap: Int = -1): DataFrame = {
@@ -429,60 +496,9 @@ object Dedup {
     // bucket) so the twins take the SAME explicit values.
     val cap = if (bucketCap >= 0) bucketCap
               else if (mode == "chargram") 1000 else 100000
-    val rows = numHashes / bands
-    val stored = spark.read.parquet(s"$indexPath/docs")
-    val newBase = signatureTable(indexElems(newDocs, text, id, mode, k),
-      numHashes, elemsDistinct = mode == "chargram").persist()
-
-    val banded = bandTable(newBase, bands, rows).withColumn("is_new", lit(true))
-      .unionByName(bandTable(stored, bands, rows).withColumn("is_new", lit(false)))
-    val capped = dropOversizedBuckets(banded, Seq("band", "bh"), cap)
-    // left side = increment only (stored-stored pairs never form);
-    // right side = both. New-new pairs orient id_a < id_b; new-old
-    // pairs form exactly once (old ids never appear on the left), then
-    // canonicalize to id_a < id_b.
-    val a = capped.filter(col("is_new"))
-      .select(col("band"), col("bh"), col("doc_id").as("id_a"), col("n").as("n_a"))
-    val b = capped
-      .select(col("band"), col("bh"), col("doc_id").as("id_b"), col("n").as("n_b"),
-        col("is_new").as("new_b"))
-    val cands = a.join(b, Seq("band", "bh"))
-      .filter((!col("new_b") || col("id_a") < col("id_b")) &&
-        col("id_a") =!= col("id_b") &&
-        least(col("n_a"), col("n_b")).cast(DoubleType) /
-          greatest(col("n_a"), col("n_b")) >= jaccardThreshold)
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct()
-    val lookup = newBase.select("doc_id", "sig", "elems")
-      .unionByName(stored.select("doc_id", "sig", "elems"))
-    Layout.pin(verifyCandidates(cands, lookup, numHashes, jaccardThreshold),
-      newBase)
-  }
-
-  /** Character n-gram Jaccard near-duplicate pairs, banded-MinHash
-    * blocked (NOT single-band min-hash blocking, which funnels most of
-    * a same-vocabulary corpus into one quadratic bucket), verified
-    * exactly over int-hashed grams (identical Jaccard up to 2^-64
-    * collisions, ~1/3 the verify-join bytes of string grams).
-    *
-    * The S-curve must be STEEP for char n-grams: unrelated documents in
-    * one language/domain commonly sit at j ≈ 0.4-0.6, so shallow bands
-    * would accept nearly every pair. Defaults (128 hashes × 16 bands of
-    * 8) give P(candidate) ≈ 0.95 at j=0.8 but ≈ 0.4% at j=0.55 — the
-    * knee sits between the background mode and the near-dup threshold.
-    * Run [[exact]] dedup first: clusters of >bucketCap IDENTICAL docs
-    * saturate every band bucket and are dropped by the skew cap. */
-  def ngramJaccardPairs(docs: DataFrame, text: Column, id: Column,
-      n: Int = 3, threshold: Double = 0.8, numHashes: Int = 128,
-      bands: Int = 16, bucketCap: Int = 1000,
-      hotElemFrac: Double = 0.0, perDocCap: Int = 0): DataFrame = {
-    val base = spreadById(docs, id, text)
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.charNgramHashes(col("__raw"), n).as("elems"))
-    lshPairs(base, numHashes, bands, bucketCap, threshold,
-      elemsDistinct = true, // charNgramHashes is already distinct
-      hotElemFrac = hotElemFrac, perDocCap = perDocCap)
+    lshFunnel(signatureTable(indexElems(newDocs, text, id, mode, k), numHashes, mode),
+      spark.read.parquet(s"$indexPath/docs"), numHashes, bands, cap,
+      jaccardThreshold, perDocCap = 0)
   }
 
   /** Exact all-pairs n-gram Jaccard over a BOUNDED sample — the oracle
@@ -597,6 +613,38 @@ object Dedup {
         i => when(i === 0, col("ck")).otherwise(
           col("ck").bitwiseXOR(call_function("shiftleft", lit(1L), i - 1))))).as("ck"): _*)
 
+  /** Multi-index-hashing hamming near-dup pairs between the `fresh`
+    * and `stored` (doc_id, fp) fingerprint tables — the one funnel
+    * behind [[hammingPairs]] (an empty store) and
+    * [[hammingAgainstIndex]]: chunk explosion of fresh ∪ stored, the
+    * bucket cap on the union, the exact-side ⋈ probe-side join under
+    * the [[freshPairs]] rule, popcount verify, the tiny pair set pinned
+    * and the caches released. */
+  private def hammingFunnel(fresh: DataFrame, stored: DataFrame,
+      maxHamming: Int, chunks: Int, bucketCap: Int): DataFrame = {
+    val (c, width) = mihConfig(maxHamming, chunks)
+    val r = maxHamming / c
+    // persist the fresh (doc_id, fp) table: one row per doc, and it
+    // feeds the bucket-count aggregates AND both join sides — without
+    // the cache the upstream fingerprint pipeline recomputes three times
+    val newFp = fresh.select(col("doc_id"), col("fp")).persist()
+    val chunked = chunkExplode(
+      tagFresh(newFp, stored.select(col("doc_id"), col("fp"))), c, width)
+    // persisted when it feeds two consumers (join side a AND the ball
+    // explosion): without the cache the bucket-count aggregate and
+    // anti-join replay once per consumer
+    val capped0 = dropOversizedBuckets(chunked, Seq("chunk", "ck"), bucketCap)
+    val capped = if (r == 0) capped0 else capped0.persist()
+    val probe = if (r == 0) capped else ballExplode(capped, width)
+    val pairs = freshPairs(capped, probe, Seq("chunk", "ck"), "doc_id", "fp")
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
+      .select(canonicalIds :+ col("hamming"): _*)
+    Layout.pin(pairs, newFp, capped)
+  }
+
   /** Multi-index-hashing hamming near-dup pairs over ANY precomputed
     * 64-bit fingerprint table (`doc_id`, `fp`) — the blocking layer
     * behind [[simhashPairs]] (text fingerprints) and
@@ -604,31 +652,8 @@ object Dedup {
     * generation is EXACT for per-chunk radius ≤ 1 (Norouzi et al.:
     * h ≤ c·(r+1)−1 errors cannot exceed radius r in every chunk). */
   def hammingPairs(fps: DataFrame, maxHamming: Int = 3, chunks: Int = 0,
-      bucketCap: Int = 100000): DataFrame = {
-    val (c, width) = mihConfig(maxHamming, chunks)
-    val r = maxHamming / c
-    // persist the (doc_id, fp) table: one row per doc, and it feeds the
-    // bucket-count aggregates AND both join sides — without the cache
-    // the upstream fingerprint pipeline recomputes three times
-    val fp = fps.select(col("doc_id"), col("fp")).persist()
-    val chunked = chunkExplode(fp, c, width)
-    // persisted when it feeds two consumers (join side a AND the ball
-    // explosion): without the cache the bucket-count aggregate and
-    // anti-join replay once per consumer
-    val exactSide0 = dropOversizedBuckets(chunked, Seq("chunk", "ck"), bucketCap)
-    val exactSide = if (r == 0) exactSide0 else exactSide0.persist()
-    val probeSide = if (r == 0) exactSide else ballExplode(exactSide, width)
-    val a = exactSide.select(col("chunk"), col("ck"), col("doc_id").as("id_a"), col("fp").as("fp_a"))
-    val b = probeSide.select(col("chunk"), col("ck"), col("doc_id").as("id_b"), col("fp").as("fp_b"))
-    val pairs = a.join(b, Seq("chunk", "ck"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    // see lshPairs: pin the tiny pair set, release the caches
-    Layout.pin(pairs, fp, exactSide)
-  }
+      bucketCap: Int = 100000): DataFrame =
+    hammingFunnel(fps, noStore(fps), maxHamming, chunks, bucketCap)
 
   /** Persist a fingerprint corpus — the 16-bytes-per-doc store behind
     * incremental hamming dedup ([[hammingAgainstIndex]]). The heavy
@@ -647,39 +672,17 @@ object Dedup {
       spark.read.parquet(indexPath), indexPath, "doc_id")
 
   /** Hamming near-dup pairs between an increment and a stored
-    * fingerprint index (plus pairs within the increment) — the
-    * incremental twin of [[hammingPairs]]: same multi-index blocking
-    * with the corpus side read from the store (16 bytes/doc — no
-    * payload or text rescan), union-side bucket cap, stored-stored
-    * pairs never re-derived. Output (id_a, id_b, hamming) with
+    * fingerprint index (plus pairs within the increment):
+    * [[hammingFunnel]] with the corpus side read from the store (16
+    * bytes/doc — no payload or text rescan), so [[hammingPairs]] is
+    * exactly this query against an empty store. Stored-stored pairs
+    * are never re-derived. Output (id_a, id_b, hamming) with
     * id_a < id_b; ids must be unique across store and increment. */
   def hammingAgainstIndex(spark: SparkSession, indexPath: String,
       newFps: DataFrame, maxHamming: Int = 3, chunks: Int = 0,
-      bucketCap: Int = 100000): DataFrame = {
-    val (c, width) = mihConfig(maxHamming, chunks)
-    val r = maxHamming / c
-    val newFp = newFps.select(col("doc_id"), col("fp"))
-      .withColumn("is_new", lit(true)).persist()
-    val stored = spark.read.parquet(indexPath)
-      .select(col("doc_id"), col("fp")).withColumn("is_new", lit(false))
-    val chunked = chunkExplode(newFp.unionByName(stored), c, width)
-    val capped0 = dropOversizedBuckets(chunked, Seq("chunk", "ck"), bucketCap)
-    val capped = if (r == 0) capped0 else capped0.persist()
-    val probe = if (r == 0) capped else ballExplode(capped, width)
-    val a = capped.filter(col("is_new"))
-      .select(col("chunk"), col("ck"), col("doc_id").as("id_a"), col("fp").as("fp_a"))
-    val b = probe.select(col("chunk"), col("ck"), col("doc_id").as("id_b"),
-      col("fp").as("fp_b"), col("is_new").as("new_b"))
-    val pairs = a.join(b, Seq("chunk", "ck"))
-      .filter((!col("new_b") || col("id_a") < col("id_b")) &&
-        col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    Layout.pin(pairs, newFp, capped)
-  }
+      bucketCap: Int = 100000): DataFrame =
+    hammingFunnel(newFps, spark.read.parquet(indexPath), maxHamming, chunks,
+      bucketCap)
 
   /** Winnowing fingerprints of a text column — the MOSS scheme
     * ([[graft.functions.Kernels.winnowFingerprints]]): any shared
@@ -687,62 +690,39 @@ object Dedup {
   def winnow(text: Column, k: Int = 8, w: Int = 8): Column =
     graft.functions.GraftFunctions.winnowFp(text, k, w)
 
-  /** CONTAINMENT near-duplicate pairs — the family member
-    * Jaccard-style set similarity structurally misses: a short
-    * document embedded verbatim in a much longer one has tiny Jaccard
-    * (|A∩B|/|A∪B| ≤ |A|/|B|), and the LSH funnels' size-ratio guard
-    * drops such pairs BY DESIGN. Containment |A∩B|/min(|A|,|B|) is
-    * the right score for subset/superset duplication (boilerplate,
-    * quotation, doc-in-corpus inclusion — a dominant duplication mode
-    * in web training data).
-    *
-    * Candidate generation is winnowing fingerprints (MOSS): two docs
-    * sharing any substring of ≥ w + k − 1 codepoints share a
-    * fingerprint, so real containment always produces candidates
-    * (recall is deterministic, not an S-curve). The fingerprints are
-    * NOT the score — window-minimum selection is biased toward
-    * globally small hashes, which inflates overlap between
-    * same-vocabulary documents — candidates are verified EXACTLY over
-    * the full k-gram hash sets, like every funnel here.
-    *
-    * Funnel: per doc, winnowed fps + distinct k-gram hashes
-    * (persisted) → fp explode → per-fp bucket cap (a boilerplate
-    * fingerprint shared by B docs would mint B² candidate rows) →
-    * fp-equality self-join → per-pair shared-fp count ≥ minShared
-    * (noise floor) → gram sets joined back by doc id → exact
-    * containment ([[graft.functions.Kernels.containmentLong]]) →
-    * threshold. Shuffles only on derived keys; never cartesian. */
-  /** Default `w = 24` (guarantee: any shared run of ≥ 31 codepoints
-    * produces a candidate): fingerprint density is ~2/(w+1) of all
-    * grams and candidate volume scales with its square, so the window
-    * should be as wide as the shortest shared passage worth detecting
-    * — not the near-dup-grade w=8. */
-  /** `bucketFrac` (opt-in, ledgered): PROPORTIONAL per-fingerprint
-    * bucket cap — fps shared by more than `bucketFrac` of the corpus
-    * (floor 16 docs) drop before pair minting, the containment twin of
-    * minhash's hotElemFrac and sparse-cosine's dfFrac. The judgment:
-    * a fingerprint in >0.1% of a corpus is template text, not
-    * containment identity — and WITHOUT it the candidate-count
-    * aggregation's input is Σ df² pair mentions over every mid-df
-    * vocab-background bucket the absolute cap leaves standing
-    * (measured r10: 4 GB spilled at 26k docs, 38.6 GB at 416k, ALL in
-    * that one aggregation stage — the absolute cap stops being the
-    * binding judgment as n grows past cap/frac). Forces one count()
-    * on the already-persisted base. */
-  def containmentPairs(docs: DataFrame, text: Column, id: Column,
-      k: Int = 8, w: Int = 24, threshold: Double = 0.5, minShared: Int = 3,
-      bucketCap: Int = 100000, perDocCap: Int = 0,
-      bucketFrac: Double = 0.0): DataFrame = {
-    val base = spreadById(docs, id, text)
+  /** The per-doc (doc_id, fps, grams) table of the containment family —
+    * winnowed fingerprints plus distinct k-gram hashes, the one builder
+    * behind the funnel, [[buildContainmentIndex]] and
+    * [[appendToContainmentIndex]]. */
+  private def containmentDocs(docs: DataFrame, text: Column, id: Column,
+      k: Int, w: Int): DataFrame =
+    spreadById(docs, id, text)
       .select(col("doc_id"),
         winnow(col("__raw"), k, w).as("fps"),
         graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("grams"))
-      .persist()
-    val exploded = base.select(col("doc_id"), explode(col("fps")).as("fp"))
+
+  /** Containment pairs between the `fresh` and `stored`
+    * [[containmentDocs]] tables — the one funnel behind
+    * [[containmentPairs]] (an empty store) and
+    * [[containmentAgainstIndex]]: fresh docs persisted → fp explode of
+    * fresh ∪ stored → per-fp bucket cap on the union (a boilerplate
+    * fingerprint shared by B docs would mint B² candidate rows, no
+    * matter which side fed it; `bucketFrac` makes it proportional) →
+    * fp-equality self-join under the [[freshPairs]] rule → per-pair
+    * shared-fp count ≥ minShared (noise floor) → optional per-doc
+    * budget → gram sets joined back by doc id → exact containment
+    * ([[graft.functions.Kernels.containmentLong]]) → threshold → pin.
+    * Shuffles only on derived keys; never cartesian. */
+  private def containmentFunnel(fresh: DataFrame, stored: DataFrame,
+      threshold: Double, minShared: Int, bucketCap: Int, perDocCap: Int,
+      bucketFrac: Double): DataFrame = {
+    val newBase = fresh.persist()
+    val all = tagFresh(newBase, stored)
+    val exploded = all.select(col("doc_id"), col("is_new"), explode(col("fps")).as("fp"))
     val effCap =
       if (bucketFrac <= 0) bucketCap
       else {
-        val n = base.count()
+        val n = all.count()
         val pc = math.max(16L, math.ceil(bucketFrac * n).toLong)
           .min(bucketCap.toLong).toInt
         Ledger.note("contain_bucket_frac",
@@ -750,10 +730,7 @@ object Dedup {
         pc
       }
     val capped = dropOversizedBuckets(exploded, Seq("fp"), effCap)
-    val a = capped.select(col("fp"), col("doc_id").as("id_a"))
-    val b = capped.select(col("fp"), col("doc_id").as("id_b"))
-    val cands0 = a.join(b, Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
+    val cands0 = freshPairs(capped, capped, Seq("fp"), "doc_id")
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("shared")) // fps are distinct per doc, so count = shared fps
       .filter(col("shared") >= minShared)
@@ -771,17 +748,63 @@ object Dedup {
     // Candidates enter bare (two longs), pick up g_b at id_b's
     // partition, and meet g_a at id_a's partition where the score is
     // computed and filtered before anything else sees the arrays.
-    val gB = base.select(col("doc_id").as("id_b"), col("grams").as("g_b"))
+    val gB = all.select(col("doc_id").as("id_b"), col("grams").as("g_b"))
       .hint("SHUFFLE_HASH")
-    val gA = base.select(col("doc_id").as("id_a"), col("grams").as("g_a"))
+    val gA = all.select(col("doc_id").as("id_a"), col("grams").as("g_a"))
       .hint("SHUFFLE_HASH")
     val pairs = cands
       .join(gB, Seq("id_b"))
       .join(gA, Seq("id_a"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.GraftFunctions.containmentSim(col("g_a"), col("g_b")).as("containment"))
+      .select(canonicalIds :+
+        graft.functions.GraftFunctions.containmentSim(col("g_a"), col("g_b")).as("containment"): _*)
       .filter(col("containment") >= threshold)
-    Layout.pin(pairs, base, cands)
+    Layout.pin(pairs, newBase, cands)
+  }
+
+  /** CONTAINMENT near-duplicate pairs — the family member
+    * Jaccard-style set similarity structurally misses: a short
+    * document embedded verbatim in a much longer one has tiny Jaccard
+    * (|A∩B|/|A∪B| ≤ |A|/|B|), and the LSH funnels' size-ratio guard
+    * drops such pairs BY DESIGN. Containment |A∩B|/min(|A|,|B|) is
+    * the right score for subset/superset duplication (boilerplate,
+    * quotation, doc-in-corpus inclusion — a dominant duplication mode
+    * in web training data).
+    *
+    * Candidate generation is winnowing fingerprints (MOSS): two docs
+    * sharing any substring of ≥ w + k − 1 codepoints share a
+    * fingerprint, so real containment always produces candidates
+    * (recall is deterministic, not an S-curve). The fingerprints are
+    * NOT the score — window-minimum selection is biased toward
+    * globally small hashes, which inflates overlap between
+    * same-vocabulary documents — candidates are verified EXACTLY over
+    * the full k-gram hash sets, like every funnel here
+    * ([[containmentFunnel]] over an empty store).
+    *
+    * Default `w = 24` (guarantee: any shared run of ≥ 31 codepoints
+    * produces a candidate): fingerprint density is ~2/(w+1) of all
+    * grams and candidate volume scales with its square, so the window
+    * should be as wide as the shortest shared passage worth detecting
+    * — not the near-dup-grade w=8.
+    *
+    * `bucketFrac` (opt-in, ledgered): PROPORTIONAL per-fingerprint
+    * bucket cap — fps shared by more than `bucketFrac` of the corpus
+    * (floor 16 docs) drop before pair minting, the containment twin of
+    * minhash's hotElemFrac and sparse-cosine's dfFrac. The judgment:
+    * a fingerprint in >0.1% of a corpus is template text, not
+    * containment identity — and WITHOUT it the candidate-count
+    * aggregation's input is Σ df² pair mentions over every mid-df
+    * vocab-background bucket the absolute cap leaves standing
+    * (measured r10: 4 GB spilled at 26k docs, 38.6 GB at 416k, ALL in
+    * that one aggregation stage — the absolute cap stops being the
+    * binding judgment as n grows past cap/frac). Forces one count()
+    * on the already-persisted base. */
+  def containmentPairs(docs: DataFrame, text: Column, id: Column,
+      k: Int = 8, w: Int = 24, threshold: Double = 0.5, minShared: Int = 3,
+      bucketCap: Int = 100000, perDocCap: Int = 0,
+      bucketFrac: Double = 0.0): DataFrame = {
+    val fresh = containmentDocs(docs, text, id, k, w)
+    containmentFunnel(fresh, noStore(fresh), threshold, minShared, bucketCap,
+      perDocCap, bucketFrac)
   }
 
   /** Persist winnowing fingerprints + gram sets for incremental
@@ -795,10 +818,7 @@ object Dedup {
       path: String, k: Int = 8, w: Int = 24): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    spreadById(docs, id, text)
-      .select(col("doc_id"),
-        winnow(col("__raw"), k, w).as("fps"),
-        graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("grams"))
+    containmentDocs(docs, text, id, k, w)
       .write.mode("overwrite").parquet(s"$path/docs")
     Seq((k, w)).toDF("k", "w")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -809,65 +829,27 @@ object Dedup {
   def appendToContainmentIndex(spark: SparkSession, indexPath: String,
       docs: DataFrame, text: Column, id: Column): Unit = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val (k, w) = (meta.getAs[Int]("k"), meta.getAs[Int]("w"))
     Layout.appendAbsent(
-      spreadById(docs, id, text)
-        .select(col("doc_id"),
-          winnow(col("__raw"), k, w).as("fps"),
-          graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("grams")),
+      containmentDocs(docs, text, id, meta.getAs[Int]("k"), meta.getAs[Int]("w")),
       spark.read.parquet(s"$indexPath/docs"), s"$indexPath/docs", "doc_id")
   }
 
   /** Containment pairs between an increment and a stored containment
-    * index (plus pairs within the increment) — [[containmentPairs]]'
-    * incremental twin: same fp-equality candidates with the per-fp
-    * cap on the store∪increment union (a boilerplate fingerprint is
-    * boilerplate no matter which side fed it), shared-fp floor on the
-    * canonical pair, exact containment over stored gram sets —
-    * stored text never re-read, stored-stored pairs never formed.
-    * Output (id_a, id_b, containment), id_a < id_b; ids unique
-    * across store and increment. */
+    * index (plus pairs within the increment): [[containmentFunnel]]
+    * with the store as the stored side, so [[containmentPairs]] is
+    * exactly this query against an empty store — stored text never
+    * re-read, stored-stored pairs never formed. Output (id_a, id_b,
+    * containment), id_a < id_b; ids unique across store and
+    * increment. */
   def containmentAgainstIndex(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, text: Column, id: Column,
       threshold: Double = 0.5, minShared: Int = 3,
       bucketCap: Int = 100000): DataFrame = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val (k, w) = (meta.getAs[Int]("k"), meta.getAs[Int]("w"))
-    val stored = spark.read.parquet(s"$indexPath/docs")
-    val newBase = spreadById(newDocs, id, text)
-      .select(col("doc_id"),
-        winnow(col("__raw"), k, w).as("fps"),
-        graft.functions.GraftFunctions.charNgramHashes(col("__raw"), k).as("grams"))
-      .persist()
-    val exploded = newBase
-      .select(col("doc_id"), lit(true).as("is_new"), explode(col("fps")).as("fp"))
-      .unionByName(stored
-        .select(col("doc_id"), lit(false).as("is_new"), explode(col("fps")).as("fp")))
-    val capped = dropOversizedBuckets(exploded, Seq("fp"), bucketCap)
-    val a = capped.filter(col("is_new")).select(col("fp"), col("doc_id").as("id_a"))
-    val b = capped.select(col("fp"), col("doc_id").as("id_b"), col("is_new").as("new_b"))
-    val cands = a.join(b, Seq("fp"))
-      .filter((!col("new_b") || col("id_a") < col("id_b")) &&
-        col("id_a") =!= col("id_b"))
-      .groupBy(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-      .select("id_a", "id_b")
-    val lookup = newBase.select("doc_id", "grams")
-      .unionByName(stored.select("doc_id", "grams"))
-    // same spill-shaped verify as containmentPairs: SHUFFLE_HASH with
-    // the O(n) gram side as build, bare candidates streamed, score
-    // computed and filtered before the arrays leave the stage
-    val pairs = cands
-      .join(lookup.select(col("doc_id").as("id_b"), col("grams").as("g_b"))
-        .hint("SHUFFLE_HASH"), Seq("id_b"))
-      .join(lookup.select(col("doc_id").as("id_a"), col("grams").as("g_a"))
-        .hint("SHUFFLE_HASH"), Seq("id_a"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.GraftFunctions.containmentSim(col("g_a"), col("g_b")).as("containment"))
-      .filter(col("containment") >= threshold)
-    Layout.pin(pairs, newBase)
+    containmentFunnel(
+      containmentDocs(newDocs, text, id, meta.getAs[Int]("k"), meta.getAs[Int]("w")),
+      spark.read.parquet(s"$indexPath/docs"), threshold, minShared, bucketCap,
+      perDocCap = 0, bucketFrac = 0.0)
   }
 
   /** Exact all-pairs char-n-gram CONTAINMENT over a BOUNDED sample —

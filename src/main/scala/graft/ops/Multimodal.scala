@@ -282,8 +282,8 @@ object Multimodal {
       media.select(id.as("doc_id"), phash64(payload).as("fp")))
 
   /** Near-dup media pairs between an increment and the stored phash
-    * index — [[phashPairs]]' incremental twin via
-    * [[graft.ops.Dedup.hammingAgainstIndex]]. */
+    * index via [[graft.ops.Dedup.hammingAgainstIndex]] — the funnel
+    * [[phashPairs]] runs over an empty store. */
   def phashAgainstIndex(spark: SparkSession, indexPath: String,
       media: DataFrame, id: Column, payload: Column, maxHamming: Int = 3,
       chunks: Int = 0, bucketCap: Int = 100000): DataFrame =
@@ -511,9 +511,9 @@ object Multimodal {
       audioFingerprint(decodeAudioMixStage(media)), path)
 
   /** Near-dup audio pairs between an increment and the stored
-    * fingerprint index — [[audioFingerprintPairs]]' incremental twin:
-    * the increment decodes its own payloads; stored docs join at 16
-    * bytes each with no payload rescan. */
+    * fingerprint index — the funnel [[audioFingerprintPairs]] runs over
+    * an empty store: the increment decodes its own payloads; stored
+    * docs join at 16 bytes each with no payload rescan. */
   def audioFpAgainstIndex(spark: SparkSession, indexPath: String,
       media: DataFrame, maxHamming: Int = 3,
       bucketCap: Int = 100000): DataFrame =

@@ -88,32 +88,60 @@ object Similarity {
     * to derive p = ceil(log2(N / 64)) (expected occupancy ~64, one
     * count job; clamped to [4, 24]) — each extra plane costs recall
     * per table (p(match) = (1 − θ/π)^p), so buy it back with `tables`
-    * when using high auto-p at scale. */
+    * when using high auto-p at scale.
+    *
+    * [[cosineFunnel]] over an empty store: the result is pinned and
+    * the vector cache released, like every pair funnel. */
   def cosinePairs(emb: DataFrame, id: Column, vec: Column, threshold: Double = 0.9,
       planes: Int = 8, dims: Int = 64, tables: Int = 8, roundTo: Int = 4,
       bucketCap: Int = 100000): DataFrame = {
-    val base = emb.select(id.as("vec_id"), vec.as("v")).repartition(col("vec_id"))
-    val p =
-      if (planes > 0) planes
-      else {
-        val n = math.max(1L, base.count())
-        math.min(24, math.max(4, (64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(1L, n / 64 - 1)))))
-      }
-    val banded = base.select(col("vec_id"),
-      posexplode(lshBuckets(col("v"), p, dims, tables)).as(Seq("t", "b")))
+    val base = vectors(emb, id, vec)
+    cosineFunnel(base, Dedup.noStore(base), resolvePlanes(base, planes), dims, tables,
+      threshold, roundTo, bucketCap)
+  }
+
+  /** The per-vector (vec_id, v) table of the cosine family — the one
+    * builder behind the funnel, [[buildCosineIndex]] and
+    * [[appendToCosineIndex]]. */
+  private def vectors(emb: DataFrame, id: Column, vec: Column): DataFrame =
+    emb.select(id.as("vec_id"), vec.as("v"))
+
+  /** `planes`, or for `planes <= 0` the auto count ceil(log2(N / 64))
+    * clamped to [4, 24] over the corpus `base` (one count job). */
+  private def resolvePlanes(base: DataFrame, planes: Int): Int =
+    if (planes > 0) planes
+    else {
+      val n = math.max(1L, base.count())
+      math.min(24, math.max(4, (64 - java.lang.Long.numberOfLeadingZeros(
+        math.max(1L, n / 64 - 1)))))
+    }
+
+  /** Hyperplane-LSH cosine pairs between the `fresh` and `stored`
+    * (vec_id, v) tables — the one funnel behind [[cosinePairs]] (an
+    * empty store) and [[cosinePairsAgainstIndex]]: the fresh vectors
+    * spread by id and persist (they feed the band explosion AND both
+    * sides of the verify lookup — unpersisted they would recompute
+    * ~4-5×), fresh ∪ stored buckets in every table, the bucket cap
+    * applies to the union, candidates form under the
+    * [[Dedup.freshPairs]] rule and dedupe across tables, and the exact
+    * cosine verify joins against fresh ∪ stored; the verified pairs
+    * are pinned and the fresh cache released. */
+  private def cosineFunnel(fresh: DataFrame, stored: DataFrame, planes: Int,
+      dims: Int, tables: Int, threshold: Double, roundTo: Int,
+      bucketCap: Int): DataFrame = {
+    val newBase = fresh.repartition(col("vec_id")).persist()
+    val all = Dedup.tagFresh(newBase, stored)
+    val banded = all.select(col("vec_id"), col("is_new"),
+      posexplode(lshBuckets(col("v"), planes, dims, tables)).as(Seq("t", "b")))
     val capped = Dedup.dropOversizedBuckets(banded, Seq("t", "b"), bucketCap)
-    val a = capped.select(col("t"), col("b"), col("vec_id").as("id_a"))
-    val b = capped.select(col("t"), col("b"), col("vec_id").as("id_b"))
-    val cands = a.join(b, Seq("t", "b"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    cands
-      .join(base.select(col("vec_id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(base.select(col("vec_id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("v_a"), col("v_b")), roundTo).as("cos"))
+    val cands = Dedup.freshPairs(capped, capped, Seq("t", "b"), "vec_id").distinct()
+    val verified = cands
+      .join(all.select(col("vec_id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
+      .join(all.select(col("vec_id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+      .select(Dedup.canonicalIds :+
+        round(cosine(col("v_a"), col("v_b")), roundTo).as("cos"): _*)
       .filter(col("cos") >= threshold)
+    Layout.pin(verified, newBase)
   }
 
   /** Persist the vector corpus for incremental cosine near-dup
@@ -132,14 +160,8 @@ object Similarity {
       tables: Int = 8): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val base = emb.select(id.as("vec_id"), vec.as("v"))
-    val p =
-      if (planes > 0) planes
-      else {
-        val n = math.max(1L, base.count())
-        math.min(24, math.max(4, (64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(1L, n / 64 - 1)))))
-      }
+    val base = vectors(emb, id, vec)
+    val p = resolvePlanes(base, planes)
     base.write.mode("overwrite").parquet(s"$path/docs")
     Seq((p, dims, tables)).toDF("planes", "dims", "tables")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -148,53 +170,23 @@ object Similarity {
   /** Append an increment's vectors (idempotent on vec_id). */
   def appendToCosineIndex(spark: SparkSession, indexPath: String,
       emb: DataFrame, id: Column, vec: Column): Unit =
-    Layout.appendAbsent(emb.select(id.as("vec_id"), vec.as("v")),
+    Layout.appendAbsent(vectors(emb, id, vec),
       spark.read.parquet(s"$indexPath/docs"), s"$indexPath/docs", "vec_id")
 
   /** Cosine near-dup pairs between an increment and a stored vector
-    * index (plus pairs within the increment) — [[cosinePairs]]'
-    * incremental twin: stored vectors re-bucket under the meta-pinned
-    * hyperplanes (a cheap fused kernel pass over 4·dims bytes/row),
-    * the bucket cap applies to the store∪increment union, and
-    * stored-stored pairs never form. Output (id_a, id_b, cos),
-    * id_a < id_b; ids unique across store and increment. */
+    * index (plus pairs within the increment): [[cosineFunnel]] with the
+    * stored vectors re-bucketed under the meta-pinned hyperplanes (a
+    * cheap fused kernel pass over 4·dims bytes/row), so [[cosinePairs]]
+    * is exactly this query against an empty store; stored-stored pairs
+    * never form. Output (id_a, id_b, cos), id_a < id_b; ids unique
+    * across store and increment. */
   def cosinePairsAgainstIndex(spark: SparkSession, indexPath: String,
       emb: DataFrame, id: Column, vec: Column, threshold: Double = 0.9,
       roundTo: Int = 4, bucketCap: Int = 100000): DataFrame = {
     val meta = spark.read.parquet(s"$indexPath/meta").head()
-    val (p, dims, tables) = (meta.getAs[Int]("planes"),
-      meta.getAs[Int]("dims"), meta.getAs[Int]("tables"))
-    val stored = spark.read.parquet(s"$indexPath/docs")
-      .withColumn("is_new", lit(false))
-    // persisted: the increment's embedding source feeds the band
-    // explosion AND both sides of the verify lookup — unpersisted it
-    // would recompute ~4-5× (same rationale as nearDupAgainstIndex /
-    // hammingAgainstIndex)
-    val newBase = emb.select(id.as("vec_id"), vec.as("v"))
-      .repartition(col("vec_id")).withColumn("is_new", lit(true))
-      .persist()
-    val all = newBase.unionByName(stored)
-    val banded = all.select(col("vec_id"), col("is_new"),
-      posexplode(lshBuckets(col("v"), p, dims, tables)).as(Seq("t", "b")))
-    val capped = Dedup.dropOversizedBuckets(banded, Seq("t", "b"), bucketCap)
-    val a = capped.filter(col("is_new"))
-      .select(col("t"), col("b"), col("vec_id").as("id_a"))
-    val b = capped.select(col("t"), col("b"), col("vec_id").as("id_b"),
-      col("is_new").as("new_b"))
-    val cands = a.join(b, Seq("t", "b"))
-      .filter((!col("new_b") || col("id_a") < col("id_b")) &&
-        col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct()
-    val lookup = all.select("vec_id", "v")
-    val verified = cands
-      .join(lookup.select(col("vec_id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(lookup.select(col("vec_id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(cosine(col("v_a"), col("v_b")), roundTo).as("cos"))
-      .filter(col("cos") >= threshold)
-    Layout.pin(verified, newBase)
+    cosineFunnel(vectors(emb, id, vec), spark.read.parquet(s"$indexPath/docs"),
+      meta.getAs[Int]("planes"), meta.getAs[Int]("dims"), meta.getAs[Int]("tables"),
+      threshold, roundTo, bucketCap)
   }
 
   /** The online vector-dedup admission gate, one micro-batch at a

@@ -197,7 +197,7 @@ class HooksSpec extends AnyFunSuite {
   test("saved bucket store prunes partitions and pushes filters at read (scale evidence)") {
     val t = new Timeseries(spark, CountT, minuteHour)
     t.insert("p", 1.0, Td(10)); t.insert("p", 2.0, Td(70)); t.insert("q", 3.0, Td(10))
-    val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
+    val dir = graft.TempDirs.create("graft_store").toString
     t.save(s"$dir/store")
     // interval partition directories exist
     val dirs = new java.io.File(s"$dir/store").listFiles().map(_.getName).filter(_.startsWith("interval="))
@@ -216,7 +216,7 @@ class HooksSpec extends AnyFunSuite {
     // six stats, one event each every 20 minutes over ~2.75 days: every
     // read below finds data, so adaptive execution keeps one plan shape
     val events = for (i <- 0 until 200; j <- 0 until 6) yield (s"s$j", i * 1200L + j * 60L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_compile_once").toString
+    val dir = graft.TempDirs.create("graft_compile_once").toString
     def store(intervals: Map[String, IntervalSpec], path: String, days: Boolean) = {
       val w = new Timeseries(spark, CountT, intervals)
       for ((n, t) <- events) w.insert(n, 1.0, Td(t))
@@ -278,7 +278,7 @@ class HooksSpec extends AnyFunSuite {
     // minute carries a TTL (steps=5 → 300s); hour has none
     t.insert("c", 1.0, Td(10))   // minute bucket past the horizon at `now`
     t.insert("c", 2.0, Td(1000)) // live minute bucket
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = graft.TempDirs.create("graft_compact").toString
     t.save(s"$dir/store")
     def hourFiles = new java.io.File(s"$dir/store/interval=hour").listFiles()
       .map(f => (f.getName, f.lastModified)).toSet
@@ -301,7 +301,7 @@ class HooksSpec extends AnyFunSuite {
     val feb2 = java.time.LocalDate.of(2024, 2, 2).atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
     t.insert("g", 1.0, jan31.toDouble) // inside the 5-day TTL at feb2
     t.insert("g", 1.0, jan20.toDouble) // far past it
-    val dir = java.nio.file.Files.createTempDirectory("graft_gcompact").toString
+    val dir = graft.TempDirs.create("graft_gcompact").toString
     t.save(s"$dir/store")
     t.compact(s"$dir/store", now = feb2.toDouble)
     val kept = new Timeseries(spark, CountT,
@@ -313,7 +313,7 @@ class HooksSpec extends AnyFunSuite {
   test("save is same-path safe: load -> delete -> save(same path) round-trips") {
     val t = new Timeseries(spark, CountT, minuteHour)
     t.insert("gone", 1.0, Td(10)); t.insert("kept", 2.0, Td(10))
-    val dir = java.nio.file.Files.createTempDirectory("graft_resave").toString
+    val dir = graft.TempDirs.create("graft_resave").toString
     t.save(s"$dir/store")
     // the kairos delete -> persist flow: the attached plan's lineage
     // reads the very directory save() is about to replace
@@ -332,7 +332,7 @@ class HooksSpec extends AnyFunSuite {
   test("insert after load unions by name (parquet attach has partition cols last)") {
     val t = new Timeseries(spark, CountT, minuteHour)
     t.insert("n", 1.0, Td(10))
-    val dir = java.nio.file.Files.createTempDirectory("graft_union").toString
+    val dir = graft.TempDirs.create("graft_union").toString
     t.save(s"$dir/store")
     val u = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
     u.insert("n", 2.0, Td(15))
@@ -352,7 +352,7 @@ class HooksSpec extends AnyFunSuite {
       "minute" -> IntervalSpec(TimeStep(60L), None, None),
       "hour"   -> IntervalSpec(TimeStep(3600L), None, Some(TimeStep(60L))))
     val t = new Timeseries(spark, CountT, minuteOnly).attach(rows)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdel").toString
+    val dir = graft.TempDirs.create("graft_sdel").toString
     t.save(s"$dir/store")
     def files(sub: String) = new java.io.File(s"$dir/store/interval=$sub").listFiles()
       .map(f => (f.getName, f.lastModified)).toSet
@@ -368,7 +368,7 @@ class HooksSpec extends AnyFunSuite {
   test("dedupStore reconciles a double-replayed append; clean partitions untouched") {
     val t = new Timeseries(spark, CountT, minuteHour)
     t.insert("r", 1.0, Td(10)); t.insert("r", 2.0, Td(70))
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedupstore").toString
+    val dir = graft.TempDirs.create("graft_dedupstore").toString
     t.save(s"$dir/store")
     val clean = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
     val expected = clean.get(Seq("r"), "minute", Td(10)).collect().head.getDouble(1)
@@ -399,7 +399,7 @@ class HooksSpec extends AnyFunSuite {
     t.insert("d", 1.0, Td(10))
     t.insert("d", 2.0, Td(86400 + 10))
     t.insert("d", 3.0, Td(2 * 86400 + 10))
-    val dir = java.nio.file.Files.createTempDirectory("graft_subpart").toString
+    val dir = graft.TempDirs.create("graft_subpart").toString
     t.save(s"$dir/store", subpartitionDays = Some(true))
     val dayDirs = new java.io.File(s"$dir/store/interval=minute").listFiles()
       .map(_.getName).filter(_.startsWith("__day=")).sorted
@@ -432,7 +432,7 @@ class HooksSpec extends AnyFunSuite {
     // minute TTL = 5 steps (300s); two rows a day apart
     t.insert("c", 1.0, Td(10))            // expired at now
     t.insert("c", 2.0, Td(86400 + 10))    // live at now
-    val dir = java.nio.file.Files.createTempDirectory("graft_subcompact").toString
+    val dir = graft.TempDirs.create("graft_subcompact").toString
     t.save(s"$dir/store", subpartitionDays = Some(true))
     t.compact(s"$dir/store", now = Td(86400 + 100))
     val dayDirs = new java.io.File(s"$dir/store/interval=minute").listFiles()

@@ -234,7 +234,7 @@ class BpeSpec extends AnyFunSuite {
   test("merge store round-trips: store-fit tokenization == inline-fit") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = java.nio.file.Files.createTempDirectory("bpestore").toString
+    val path = graft.TempDirs.create("bpestore").toString
     val fitted = Bpe.fitToStore(docs, col("text"), numMerges = 5, path)
     val loaded = Bpe.mergesFromStore(spark, path)
     assert(loaded === fitted, "stored merge table must round-trip exactly")

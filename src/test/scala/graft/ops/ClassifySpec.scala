@@ -44,7 +44,7 @@ class ClassifySpec extends AnyFunSuite {
     import spark.implicits._
     val docs = fixture
     val (w, m) = Classify.fitNaiveBayes(docs, $"text", $"y")
-    val dir = java.nio.file.Files.createTempDirectory("nbmodel").toString
+    val dir = graft.TempDirs.create("nbmodel").toString
     Classify.saveModel(w, m, dir)
     val direct = Classify.scoreNaiveBayes(docs, $"text", $"doc_id", w, m)
       .orderBy("doc_id").collect().toSeq
@@ -144,9 +144,9 @@ class ClassifySpec extends AnyFunSuite {
     import spark.implicits._
     val docs = fixture
     val (w, m) = Classify.fitNaiveBayes(docs, $"text", $"y")
-    val model = java.nio.file.Files.createTempDirectory("nbmodel2").toString
+    val model = graft.TempDirs.create("nbmodel2").toString
     Classify.saveModel(w, m, model)
-    val out = java.nio.file.Files.createTempDirectory("nbout").toString + "/scored"
+    val out = graft.TempDirs.create("nbout").toString + "/scored"
     val batch = docs.limit(40)
     Classify.appendScoredAgainst(spark, model, out, batch, $"text", $"doc_id")
     Classify.appendScoredAgainst(spark, model, out, batch, $"text", $"doc_id")

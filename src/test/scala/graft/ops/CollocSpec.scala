@@ -72,7 +72,7 @@ class CollocSpec extends AnyFunSuite {
     import spark.implicits._
     val base = Seq((1L, "a b c a b"), (2L, "b c d")).toDF("doc_id", "text")
     val inc = Seq((3L, "a b a b")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("colloc").toString
+    val dir = graft.TempDirs.create("colloc").toString
     Colloc.buildCountsStore(base, col("text"), window = 2, dir)
     Colloc.appendCountsBatch(inc, col("text"), window = 2, dir, batchId = 1L)
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()

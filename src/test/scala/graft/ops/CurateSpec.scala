@@ -184,7 +184,7 @@ class CurateSpec extends AnyFunSuite {
 
   test("cluster store: both split shapes from stored labels == inline funnel runs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_splitcc").toString
+    val dir = graft.TempDirs.create("graft_splitcc").toString
     Curate.buildClusterStore(docs, col("text"), col("doc_id"), dir)
     val labels = spark.read.parquet(dir)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, String)] =

@@ -60,7 +60,7 @@ class DecontaminateSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val test = (100L until 120L).map(i => i -> s"alpha beta gamma ${i - 100} x")
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("decon").toString
+    val dir = graft.TempDirs.create("decon").toString
     Decontaminate.buildTrainIndex(train, col("text"), 3, s"$dir/grams")
     val inline = Decontaminate.contamination(train, test, col("text"),
       col("doc_id"), 3).orderBy("test_id").collect().toSeq
@@ -75,12 +75,12 @@ class DecontaminateSpec extends AnyFunSuite {
     val all = (0L until 60L).map(i => i -> s"alpha beta gamma ${i % 7} tail")
       .toDF("doc_id", "text")
     val test = Seq(100L -> "alpha beta gamma 3 tail").toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("deconapp").toString
+    val dir = graft.TempDirs.create("deconapp").toString
     Decontaminate.buildTrainIndex(all.filter(col("doc_id") < 30),
       col("text"), 3, s"$dir/g")
     Decontaminate.appendToTrainIndex(spark, s"$dir/g",
       all.filter(col("doc_id") >= 30), col("text"), 3)
-    val full = java.nio.file.Files.createTempDirectory("deconfull").toString
+    val full = graft.TempDirs.create("deconfull").toString
     Decontaminate.buildTrainIndex(all, col("text"), 3, s"$full/g")
     // store stays a set …
     assert(spark.read.parquet(s"$dir/g").count() ===
@@ -204,7 +204,7 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(suite(("a", 11L))._3 === 0.0)
 
     // steady-state shape: persisted gram index, same rows
-    val dir = java.nio.file.Files.createTempDirectory("decon_suite").toString
+    val dir = graft.TempDirs.create("decon_suite").toString
     Decontaminate.buildTrainIndex(train, col("text"), 3, s"$dir/grams")
     val indexed = rows(Decontaminate.contaminationSuiteIndexed(spark,
       s"$dir/grams", evals, col("text"), col("doc_id"), col("s"), n = 3))

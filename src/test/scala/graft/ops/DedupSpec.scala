@@ -495,7 +495,7 @@ class DedupSpec extends AnyFunSuite {
   test("persisted IVF index: same rows as inline, probed-partition-only reads") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = graft.TempDirs.create("graft_ivf").toString
     Similarity.buildIvfIndex(emb, s"$dir/ivf", nlist = 16)
     // layout: one directory per inverted list
     val listDirs = new java.io.File(s"$dir/ivf/lists").listFiles()
@@ -535,7 +535,7 @@ class DedupSpec extends AnyFunSuite {
     val brute = top(Similarity.bruteForceTopK(emb, queries, k = 10))
     // quantized lists: same pruning machinery, byte-native scoring,
     // recall class preserved (inline IVF measures 0.90 on this corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfq8").toString
+    val dir = graft.TempDirs.create("graft_ivfq8").toString
     Similarity.buildIvfIndex(emb, s"$dir/ivf", nlist = 16, quantize = true)
     val stored = spark.read.parquet(s"$dir/ivf/lists")
     assert(stored.columns.contains("q8") && !stored.columns.contains("embedding"))
@@ -546,7 +546,7 @@ class DedupSpec extends AnyFunSuite {
     // appended vectors assign to their nearest STORED centroid, land in
     // existing list partitions, and are immediately queryable
     val n = emb.count()
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivfapp").toString
+    val dir2 = graft.TempDirs.create("graft_ivfapp").toString
     Similarity.buildIvfIndex(emb.filter(col("vec_id") < n / 2), s"$dir2/ivf", nlist = 16)
     Similarity.appendToIvfIndex(spark, s"$dir2/ivf", emb.filter(col("vec_id") >= n / 2))
     val lists = spark.read.parquet(s"$dir2/ivf/lists")
@@ -563,7 +563,7 @@ class DedupSpec extends AnyFunSuite {
   test("compactIvfIndex: append-fragmented lists shrink, query rows identical") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val n = emb.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfcmp").toString
+    val dir = graft.TempDirs.create("graft_ivfcmp").toString
     // fragment the store the way streaming ingest does: a base build
     // plus several small appends, each leaving its own files per list
     Similarity.buildIvfIndex(emb.filter(col("vec_id") < n / 2), s"$dir/ivf",
@@ -596,7 +596,7 @@ class DedupSpec extends AnyFunSuite {
   test("stored int8 corpus: byte-native scoring identical to on-the-fly SQ8") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q8").toString
+    val dir = graft.TempDirs.create("graft_q8").toString
     Similarity.buildQ8Corpus(emb, s"$dir/q8")
     val stored = spark.read.parquet(s"$dir/q8")
     stored.schema("q8").dataType match {

@@ -70,7 +70,7 @@ class DsirSpec extends AnyFunSuite {
   }
 
   test("stats fit on the scored corpus reproduce logWeights exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("dsirstats").toString
+    val dir = graft.TempDirs.create("dsirstats").toString
     Dsir.buildStats(corpus, col("text"), col("doc_id"),
       col("domain") === "t", dir)
     val against = Dsir.logWeightsAgainst(spark, dir, corpus, col("text"),
@@ -83,8 +83,8 @@ class DsirSpec extends AnyFunSuite {
   }
 
   test("appendScoredAgainst is idempotent under replay") {
-    val stats = java.nio.file.Files.createTempDirectory("dsirstats2").toString
-    val out = java.nio.file.Files.createTempDirectory("dsirout").toString + "/scored"
+    val stats = graft.TempDirs.create("dsirstats2").toString
+    val out = graft.TempDirs.create("dsirout").toString + "/scored"
     Dsir.buildStats(corpus, col("text"), col("doc_id"),
       col("domain") === "t", stats)
     val batch = corpus.filter(col("doc_id") < 30)

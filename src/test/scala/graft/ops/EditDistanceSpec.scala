@@ -85,7 +85,7 @@ class EditDistanceSpec extends AnyFunSuite {
       102L -> "planted-string-0ne", 103L -> "planted-string")
     val old = all.filter(_._1 % 2 == 0)
     val nw = all.filter(_._1 % 2 == 1)
-    val dir = java.nio.file.Files.createTempDirectory("fuzzyidx").toString
+    val dir = graft.TempDirs.create("fuzzyidx").toString
     EditDistance.buildIndex(old.toDF("id", "s"), $"s", $"id", 2, dir)
     val got = EditDistance.editPairsAgainstIndex(spark, dir,
         nw.toDF("id", "s"), $"s", $"id", 2)

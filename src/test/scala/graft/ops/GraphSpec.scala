@@ -225,7 +225,7 @@ class GraphSpec extends AnyFunSuite {
     import spark.implicits._
     val sc = spark.sparkContext
     assume(sc.getCheckpointDir.isEmpty, "another suite set a checkpoint dir")
-    val base = java.nio.file.Files.createTempDirectory("graft-pin")
+    val base = graft.TempDirs.create("graft-pin")
     val (ctxDir, confDir) = (base.resolve("ctx"), base.resolve("conf"))
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
     try {

@@ -15,7 +15,7 @@ class IngestSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def fixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl")
+    val dir = graft.TempDirs.create("jsonl")
     val lines = Seq(
       """{"id": 1, "text": "a good document", "source": "web", "lang": "en"}""",
       """{"text": "no id, gets a content hash", "source": "web", "lang": "en"}""",

@@ -34,7 +34,7 @@ class LangModelSpec extends AnyFunSuite {
 
   test("stored stats: self-fit score equals scoreBigram; OOV smoothing exact") {
     val docs = Seq((1L, "a b a b"), (2L, "a b b")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("lm_stats").toString
+    val path = graft.TempDirs.create("lm_stats").toString
     LangModel.buildBigramStats(docs, col("text"), col("doc_id"), path)
     // fit == scored corpus → identical to the inline self-score
     val inline = LangModel.scoreBigram(docs, col("text"), col("doc_id"))
@@ -90,7 +90,7 @@ class LangModelSpec extends AnyFunSuite {
 
   test("stored trigram stats: self-fit equals scoreTrigram; store-miss terms degrade per slot") {
     val docs = Seq((1L, "a b c a b c"), (2L, "a b c b")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("lm3_stats").toString
+    val path = graft.TempDirs.create("lm3_stats").toString
     LangModel.buildTrigramStats(docs, col("text"), col("doc_id"), path)
     val inline = LangModel.scoreTrigram(docs, col("text"), col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -141,7 +141,7 @@ class LangModelSpec extends AnyFunSuite {
     // contexts, so its continuation mass is higher
     val docs = Seq((1L, "a b a b a b"), (2L, "c b"), (3L, "x y"),
       (4L, "z y"), (5L, "w y")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("kn_stats").toString
+    val path = graft.TempDirs.create("kn_stats").toString
     LangModel.buildKnBigramStats(docs, col("text"), col("doc_id"), path)
     val inline = LangModel.scoreKnBigram(docs, col("text"), col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -205,7 +205,7 @@ class LangModelSpec extends AnyFunSuite {
     assert(math.abs(got(1L)._2 - nll1) < 1e-6, got(1L))
 
     // store fit on the same corpus must equal the inline self-score
-    val path = java.nio.file.Files.createTempDirectory("kn3_stats").toString
+    val path = graft.TempDirs.create("kn3_stats").toString
     LangModel.buildKnTrigramStats(docs, col("text"), col("doc_id"), path)
     val stored = LangModel.scoreKnTrigramAgainst(spark, path, docs,
         col("text"), col("doc_id"))
@@ -228,7 +228,7 @@ class LangModelSpec extends AnyFunSuite {
     assert(math.abs(pg(11L) - (-math.log(pabx))) < 1e-6, pg(11L))
 
     // an empty reference corpus is refused (V = 0 → every score ±Inf)
-    val emptyPath = java.nio.file.Files.createTempDirectory("kn3_empty").toString
+    val emptyPath = graft.TempDirs.create("kn3_empty").toString
     LangModel.buildKnTrigramStats(
       docs.filter(col("doc_id") < 0), col("text"), col("doc_id"), emptyPath)
     val err = intercept[IllegalArgumentException] {

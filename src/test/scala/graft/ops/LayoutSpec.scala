@@ -105,7 +105,7 @@ class LayoutSpec extends AnyFunSuite {
       (xxhash64(col("id")).bitwiseAND(lit(0x7FFFFFFFL)) % 1024).as("x"),
       (xxhash64(col("id"), lit(1)).bitwiseAND(lit(0x7FFFFFFFL)) % 1024).as("y"),
       col("id"))
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = graft.TempDirs.create("zorder").toString
     Layout.writeZOrdered(df, s"$dir/z", col("x"), col("y"), numFiles = 64)
     df.repartitionByRange(64, col("x")).sortWithinPartitions("x")
       .write.parquet(s"$dir/xsort")
@@ -124,7 +124,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("compactFiles: flat dir shrinks to the byte-target file count, data identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact_flat").toString
+    val dir = graft.TempDirs.create("compact_flat").toString
     spark.range(10000).select(col("id"), (col("id") * 7).as("v"))
       .repartition(64).write.mode("overwrite").parquet(dir)
     val fileCount0 = new java.io.File(dir).listFiles()
@@ -141,7 +141,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("compactFiles: partition layout preserved, compact partitions skipped byte-identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact_part").toString
+    val dir = graft.TempDirs.create("compact_part").toString
     // partition a: 32 tiny files; partition b: already 1 file
     spark.range(5000).select(col("id"), lit("a").as("p"))
       .repartition(32).write.partitionBy("p").mode("overwrite").parquet(dir)
@@ -166,7 +166,7 @@ class LayoutSpec extends AnyFunSuite {
   test("compactFiles refuses mixed file+subdir dirs and sink-logged dirs") {
     import spark.implicits._
     // mixed: data files at the root AND a data subdir below it
-    val mixed = java.nio.file.Files.createTempDirectory("compact_mixed").toString
+    val mixed = graft.TempDirs.create("compact_mixed").toString
     spark.range(100).repartition(8).write.mode("overwrite").parquet(mixed)
     spark.range(100).repartition(8).write.mode("overwrite")
       .parquet(s"$mixed/sub")
@@ -180,7 +180,7 @@ class LayoutSpec extends AnyFunSuite {
         && !f.getName.startsWith(".")) === 1)
 
     // sink-logged: a _spark_metadata entry pins the exact file set
-    val sink = java.nio.file.Files.createTempDirectory("compact_sink").toString
+    val sink = graft.TempDirs.create("compact_sink").toString
     spark.range(100).repartition(8).write.mode("overwrite").parquet(sink)
     new java.io.File(s"$sink/_spark_metadata").mkdir()
     val (rw2, b2, a2) = Layout.compactFiles(spark, sink, targetFileBytes = 1L << 30)

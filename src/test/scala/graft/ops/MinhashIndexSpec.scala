@@ -40,7 +40,31 @@ class MinhashIndexSpec extends AnyFunSuite {
   }
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.TempDirs.create(prefix).toString
+
+  private def hamPairs(df: DataFrame): Set[(Long, Long, Int)] =
+    df.select(col("id_a"), col("id_b"), col("hamming"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+  private def fingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Dedup.simhash(col("text")).as("fp"))
+
+  /** 120 unit vectors plus a perturbed near-dup (id 1000+i) of every
+    * third one. */
+  private lazy val (baseVecs: DataFrame, dupVecs: DataFrame) = {
+    import spark.implicits._
+    def unit(seed: Int): Array[Float] = {
+      val raw = Array.tabulate(32)(i =>
+        (((seed * 1297 + i * 31 + 7) * 2654435761L % 1000).toInt - 500) / 500.0f)
+      val n = math.sqrt(raw.map(x => x * x).sum).toFloat
+      raw.map(_ / n)
+    }
+    ((0 until 120).map(i => (i.toLong, unit(i))).toDF("vec_id", "embedding"),
+      (0 until 120 by 3).map { i =>
+        val v = unit(i).clone(); v(0) = v(0) + 0.15f
+        (1000L + i, v)
+      }.toDF("vec_id", "embedding"))
+  }
 
   private def pairs(df: DataFrame): Set[(Long, Long, Double)] =
     df.select(col("id_a"), col("id_b"), round(col("jaccard"), 9).as("j"))
@@ -126,19 +150,7 @@ class MinhashIndexSpec extends AnyFunSuite {
   }
 
   test("cosine index: indexed query == inline pairs touching the increment; append idempotent") {
-    import spark.implicits._
-    def unit(seed: Int): Array[Float] = {
-      val raw = Array.tabulate(32)(i =>
-        (((seed * 1297 + i * 31 + 7) * 2654435761L % 1000).toInt - 500) / 500.0f)
-      val n = math.sqrt(raw.map(x => x * x).sum).toFloat
-      raw.map(_ / n)
-    }
-    val base = (0 until 120).map(i => (i.toLong, unit(i))).toDF("vec_id", "embedding")
-    val dups = (0 until 120 by 3).map { i =>
-      val v = unit(i).clone(); v(0) = v(0) + 0.15f
-      (1000L + i, v)
-    }.toDF("vec_id", "embedding")
-
+    val (base, dups) = (baseVecs, dupVecs)
     val path = tmp("cos_idx")
     Similarity.buildCosineIndex(base, col("vec_id"), col("embedding"), path,
       planes = 8, dims = 32, tables = 8)
@@ -160,6 +172,72 @@ class MinhashIndexSpec extends AnyFunSuite {
     Similarity.appendToCosineIndex(spark, path, dups, col("vec_id"), col("embedding"))
     Similarity.appendToCosineIndex(spark, path, dups, col("vec_id"), col("embedding"))
     assert(spark.read.parquet(s"$path/docs").count() === before + newIds.size)
+  }
+
+  test("an index over zero docs, queried with the increment, == the inline funnel on the increment") {
+    // the identity the shared funnels rest on: an inline funnel is its
+    // against-index twin over an empty store
+    val none = storeDocs.filter(lit(false))
+    val incr = storeDocs.unionByName(incrementDocs)
+    val mh = tmp("mh_empty")
+    Dedup.buildMinhashIndex(none, col("text"), col("doc_id"), mh)
+    val mhInline = pairs(Dedup.minhashLSH(incr, col("text"), col("doc_id")))
+    assert(mhInline.nonEmpty)
+    assert(pairs(Dedup.nearDupAgainstIndex(spark, mh, incr, col("text"), col("doc_id")))
+      === mhInline)
+
+    val cg = tmp("cg_empty")
+    Dedup.buildMinhashIndex(none, col("text"), col("doc_id"), cg,
+      shingleK = 3, numHashes = 128, bands = 16, mode = "chargram")
+    val cgInline = pairs(Dedup.ngramJaccardPairs(incr, col("text"), col("doc_id"),
+      n = 3, threshold = 0.8, numHashes = 128, bands = 16))
+    assert(cgInline.nonEmpty)
+    assert(pairs(Dedup.nearDupAgainstIndex(spark, cg, incr, col("text"), col("doc_id"),
+      jaccardThreshold = 0.8)) === cgInline)
+
+    val fp = tmp("fp_empty")
+    Dedup.buildFingerprintIndex(fingerprints(none), fp)
+    for (h <- Seq(3, 7)) {
+      val fpInline = hamPairs(Dedup.hammingPairs(fingerprints(incr), maxHamming = h))
+      assert(fpInline.nonEmpty, s"maxHamming $h")
+      assert(hamPairs(Dedup.hammingAgainstIndex(spark, fp, fingerprints(incr),
+        maxHamming = h)) === fpInline, s"maxHamming $h")
+    }
+
+    val ct = tmp("ct_empty")
+    Dedup.buildContainmentIndex(none, col("text"), col("doc_id"), ct)
+    def containment(df: DataFrame) = pairs(df.withColumnRenamed("containment", "jaccard"))
+    val ctInline = containment(Dedup.containmentPairs(incr, col("text"), col("doc_id")))
+    assert(ctInline.nonEmpty)
+    assert(containment(Dedup.containmentAgainstIndex(spark, ct, incr,
+      col("text"), col("doc_id"))) === ctInline)
+
+    val cos = tmp("cos_empty")
+    val vecs = baseVecs.unionByName(dupVecs)
+    Similarity.buildCosineIndex(vecs.filter(lit(false)), col("vec_id"), col("embedding"),
+      cos, planes = 8, dims = 32, tables = 8)
+    def cosPairs(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val cosInline = cosPairs(Similarity.cosinePairs(vecs, col("vec_id"), col("embedding"),
+      threshold = 0.9, planes = 8, dims = 32, tables = 8))
+    assert(cosInline.nonEmpty)
+    assert(cosPairs(Similarity.cosinePairsAgainstIndex(spark, cos, vecs,
+      col("vec_id"), col("embedding"), threshold = 0.9)) === cosInline)
+  }
+
+  test("text simhash: indexed hamming query == inline simhashPairs on the union, restricted to increment pairs") {
+    val path = tmp("sh_idx")
+    Dedup.buildFingerprintIndex(fingerprints(storeDocs), path)
+    val newIds = incrementDocs.select("doc_id").collect().map(_.getLong(0)).toSet
+    for (h <- Seq(3, 7)) {
+      val indexed = hamPairs(Dedup.hammingAgainstIndex(spark, path,
+        fingerprints(incrementDocs), maxHamming = h))
+      val inline = hamPairs(Dedup.simhashPairs(storeDocs.unionByName(incrementDocs),
+          col("text"), col("doc_id"), maxHamming = h))
+        .filter { case (a, b, _) => newIds(a) || newIds(b) }
+      assert(inline.nonEmpty, s"fixture must produce simhash pairs at maxHamming $h")
+      assert(indexed === inline, s"maxHamming $h")
+    }
   }
 
   test("streaming append lands the same store as the batch append") {

@@ -188,7 +188,7 @@ class MixSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((1L, "a b a", "g1"), (2L, "a c", "g1"), (3L, "c c b", "g2"))
       .toDF("doc_id", "text", "source")
-    val path = java.nio.file.Files.createTempDirectory("vocab_idx").toString
+    val path = graft.TempDirs.create("vocab_idx").toString
     TextOps.buildVocabIndex(docs, col("text"), col("doc_id"), k = 2, path)
     // top-2 vocab = {a, c}; g1 tokens: a b a a c -> 1/5 oov; g2: c c b -> 1/3
     val got = TextOps.oovRate(spark, path, docs, col("text"), col("source"))

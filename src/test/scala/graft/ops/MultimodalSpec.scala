@@ -84,7 +84,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("phash index: indexed query == inline pairs touching the increment; append idempotent") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("ph_idx").toString
+    val path = graft.TempDirs.create("ph_idx").toString
     val store = media.filter(col("doc_id") < 1000L)      // originals
     val increment = media.filter(col("doc_id") >= 1000L) // re-encodes
     Multimodal.buildPhashIndex(store, col("doc_id"), col("media"), path)
@@ -111,8 +111,8 @@ class MultimodalSpec extends AnyFunSuite {
   test("phash index streaming append == batch append; streamed docs findable") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sPath = java.nio.file.Files.createTempDirectory("ph_s").toString
-    val bPath = java.nio.file.Files.createTempDirectory("ph_b").toString
+    val sPath = graft.TempDirs.create("ph_s").toString
+    val bPath = graft.TempDirs.create("ph_b").toString
     val store = media.filter(col("doc_id") < 1000L)
     val increment = media.filter(col("doc_id") >= 1000L)
     Multimodal.buildPhashIndex(store, col("doc_id"), col("media"), sPath)
@@ -121,7 +121,7 @@ class MultimodalSpec extends AnyFunSuite {
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Array[Byte])]
-    val ckpt = java.nio.file.Files.createTempDirectory("ph_ck").toString
+    val ckpt = graft.TempDirs.create("ph_ck").toString
     val q = graft.streaming.StreamingIngest.foreachBatch(
         mem.toDF().toDF("doc_id", "media"), ckpt)(
       (b, _) => Multimodal.appendToPhashIndex(b.sparkSession, sPath, b,

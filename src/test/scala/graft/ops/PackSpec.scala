@@ -79,13 +79,13 @@ class PackSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StringType)
     assert(packed.count() === 4)
 
-    val gPath = java.nio.file.Files.createTempDirectory("pack_sid").toString
+    val gPath = graft.TempDirs.create("pack_sid").toString
     Pack.buildGreedyLayout(sdocs, col("url"), col("n"), gPath, 128, shards = 4)
     val dup = Seq(("u/new", 50L), ("u/new", 50L)).toDF("url", "n")
     assert(Pack.packGreedyAppend(spark, gPath, dup, col("url"), col("n"))
       .count() === 1, "in-batch repeat must pack once")
 
-    val cPath = java.nio.file.Files.createTempDirectory("chop_sid").toString
+    val cPath = graft.TempDirs.create("chop_sid").toString
     Pack.buildChoppedLayout(sdocs, col("url"), col("n"), cPath, 128, shards = 4)
     assert(Pack.packChoppedAppend(spark, cPath, dup, col("url"), col("n"))
       .count() === 1, "in-batch repeat must chop once")
@@ -135,7 +135,7 @@ class PackSpec extends AnyFunSuite {
     val L = 128
     val storeDocs = docs.filter(col("doc_id") >= 500)
     val inc = docs.filter(col("doc_id") < 500)
-    val path = java.nio.file.Files.createTempDirectory("pack_layout").toString
+    val path = graft.TempDirs.create("pack_layout").toString
     Pack.buildGreedyLayout(storeDocs, col("doc_id"), col("n"), path, L, shards = 8)
     def readLayout() = spark.read.parquet(path + "/layout")
       .select(col("doc_id"), col("shard").cast("long"), col("bin"),
@@ -189,7 +189,7 @@ class PackSpec extends AnyFunSuite {
     val L = 128
     val storeDocs = docs.filter(col("doc_id") >= 500)
     val inc = docs.filter(col("doc_id") < 500)
-    val path = java.nio.file.Files.createTempDirectory("chop_layout").toString
+    val path = graft.TempDirs.create("chop_layout").toString
     Pack.buildChoppedLayout(storeDocs, col("doc_id"), col("n"), path, L, shards = 8)
     val appended = Pack.packChoppedAppend(spark, path, inc, col("doc_id"), col("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -112,7 +112,7 @@ class PcaSpec extends AnyFunSuite {
     val whole = Pca.fit(df, col("embedding"), dims = d, k = d)
 
     // batch-append path: three disjoint slices into one store
-    val dir = java.nio.file.Files.createTempDirectory("pca_store").toString
+    val dir = graft.TempDirs.create("pca_store").toString
     Pca.buildMomentStore(df.filter(col("vec_id") < 200), col("embedding"), d, s"$dir/m")
     Pca.appendMoments(df.filter(col("vec_id") >= 200 && col("vec_id") < 400),
       col("embedding"), d, s"$dir/m", batchId = 0)

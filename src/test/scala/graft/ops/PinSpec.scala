@@ -28,7 +28,7 @@ class PinSpec extends AnyFunSuite {
       .sharedState.cacheManager.isEmpty
 
   test("every funnel exit releases its caches; hashedVectors too") {
-    val dir = Files.createTempDirectory("graft-pin-funnels")
+    val dir = graft.TempDirs.create("graft-pin-funnels")
     val (mh, ct, fp, cos, ph, au) = (s"$dir/minhash", s"$dir/contain",
       s"$dir/fp", s"$dir/cos", s"$dir/phash", s"$dir/audio")
     val (old, fresh) = (docs.filter(col("doc_id") >= 50), docs.filter(col("doc_id") < 50))
@@ -60,6 +60,8 @@ class PinSpec extends AnyFunSuite {
         bucketCap = 200, perDocCap = 5, bucketFrac = 0.5)),
       "containmentAgainstIndex" -> (() => Dedup.containmentAgainstIndex(spark, ct,
         fresh, text, id, bucketCap = 200)),
+      "cosinePairs" -> (() => Similarity.cosinePairs(emb, col("vec_id"),
+        col("embedding"), threshold = 0.45, planes = 0)),
       "cosinePairsAgainstIndex" -> (() => Similarity.cosinePairsAgainstIndex(spark, cos,
         emb.filter(col("vec_id") < 50), col("vec_id"), col("embedding"), threshold = 0.45)),
       "sparseCosinePairs" -> (() => Similarity.sparseCosinePairs(
@@ -91,7 +93,7 @@ class PinSpec extends AnyFunSuite {
   test("spark.graft.checkpoint.dir makes a funnel's pin a reliable checkpoint there") {
     val sc = spark.sparkContext
     assume(sc.getCheckpointDir.isEmpty, "another suite set a checkpoint dir")
-    val dir = Files.createTempDirectory("graft-pin-reliable")
+    val dir = graft.TempDirs.create("graft-pin-reliable")
     def written: Long = Files.walk(dir).filter((p: Path) =>
       p.getFileName.toString.startsWith("part-")).count()
     def pairs = Dedup.simhashPairs(docs, col("text"), col("doc_id"), maxHamming = 7)

@@ -89,7 +89,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("appendToPqIndex codes against the frozen codebook; replay appends nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("pqidx2").toString
+    val dir = graft.TempDirs.create("pqidx2").toString
     Similarity.buildPqIndex(corpus.filter(col("vec_id") < 250), dir)
     val inc = corpus.filter(col("vec_id") >= 250)
     Similarity.appendToPqIndex(spark, dir, inc, col("vec_id"), col("embedding"))
@@ -110,7 +110,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("the ADC scan plan broadcasts queries and never shuffle-joins") {
-    val dir = java.nio.file.Files.createTempDirectory("pqidx3").toString
+    val dir = graft.TempDirs.create("pqidx3").toString
     Similarity.buildPqIndex(corpus, dir)
     val plan = Similarity.pqTopKStored(spark, dir, queries, 10)
       .queryExecution.executedPlan.toString
@@ -120,7 +120,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("stored PQ index reproduces the inline rows exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("pqidx").toString
+    val dir = graft.TempDirs.create("pqidx").toString
     Similarity.buildPqIndex(corpus, dir)
     val stored = Similarity.pqTopKStored(spark, dir, queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -130,7 +130,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("stored OPQ index reproduces inline opqPqTopK exactly; append rotates through the store") {
-    val dir = java.nio.file.Files.createTempDirectory("opqidx").toString
+    val dir = graft.TempDirs.create("opqidx").toString
     Similarity.buildOpqIndex(corpus, dir)
     // unrefined parity: same rotation + codebook => identical ADC rows
     val stored = Similarity.opqPqTopKStored(spark, dir, queries, 10)
@@ -148,7 +148,7 @@ class PqSpec extends AnyFunSuite {
     assert(storedR === inlineR)
     // append: increments rotate through the STORED rotation and code
     // against the frozen codebook; replay appends nothing
-    val dir2 = java.nio.file.Files.createTempDirectory("opqidx2").toString
+    val dir2 = graft.TempDirs.create("opqidx2").toString
     Similarity.buildOpqIndex(corpus.filter(col("vec_id") < 250), dir2)
     val inc = corpus.filter(col("vec_id") >= 250)
     Similarity.appendToOpqIndex(spark, dir2, inc, col("vec_id"), col("embedding"))
@@ -182,7 +182,7 @@ class PqSpec extends AnyFunSuite {
       nlist = 8, nprobe = 4, m = 16, ks = 16, refine = 4), want)
     assert(refined >= pure, s"refine lost recall: $refined < $pure")
     // persisted path reproduces the inline rows exactly (same seed)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val dir = graft.TempDirs.create("ivfpq").toString
     Similarity.buildIvfPqIndex(corpus, dir, nlist = 8, m = 16, ks = 16)
     val stored = Similarity.ivfPqTopKStored(spark, dir, queries, 10,
       nprobe = 4)

@@ -62,7 +62,7 @@ class SearchSpec extends AnyFunSuite {
     val docs = (0L until 200L)
       .map(i => (i, s"alpha beta w$i gamma " + ("alpha " * (i % 5).toInt)))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25").toString
+    val dir = graft.TempDirs.create("bm25").toString
     Search.buildIndex(docs, col("text"), col("doc_id"), s"$dir/idx")
     val inline = Search.bm25TopK(docs, col("text"), col("doc_id"),
       "alpha gamma w7", 25).collect().toSeq
@@ -88,12 +88,12 @@ class SearchSpec extends AnyFunSuite {
     val all = (0L until 120L)
       .map(i => (i, s"alpha beta w$i gamma " + ("alpha " * (i % 4).toInt)))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25app").toString
+    val dir = graft.TempDirs.create("bm25app").toString
     Search.buildIndex(all.filter(col("doc_id") < 60), col("text"),
       col("doc_id"), s"$dir/idx")
     Search.appendToIndex(spark, s"$dir/idx",
       all.filter(col("doc_id") >= 60), col("text"), col("doc_id"))
-    val full = java.nio.file.Files.createTempDirectory("bm25full").toString
+    val full = graft.TempDirs.create("bm25full").toString
     Search.buildIndex(all, col("text"), col("doc_id"), s"$full/idx")
     val q = "alpha gamma w77"
     val appended = Search.bm25TopKIndexed(spark, s"$dir/idx", q, 30)
@@ -106,7 +106,7 @@ class SearchSpec extends AnyFunSuite {
   test("plan: term filter pushed to the postings scan; top-k not a global sort") {
     import spark.implicits._
     val docs = corpus.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25plan").toString
+    val dir = graft.TempDirs.create("bm25plan").toString
     Search.buildIndex(docs, col("text"), col("doc_id"), s"$dir/idx")
     val plan = Search.bm25TopKIndexed(spark, s"$dir/idx", "cat fish", 5)
       .queryExecution.executedPlan.toString

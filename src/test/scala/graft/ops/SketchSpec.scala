@@ -69,7 +69,7 @@ class SketchSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("cms").toString
+    val dir = graft.TempDirs.create("cms").toString
     val store = s"$dir/sketch"
     val mem = MemoryStream[String]
     val q = graft.streaming.StreamingIngest.foreachBatch(
@@ -97,7 +97,7 @@ class SketchSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("cmstopk").toString
+    val dir = graft.TempDirs.create("cmstopk").toString
     val store = s"$dir/store"
     val data = stream.collect().map(_.getString(0)).toSeq
     val mem = MemoryStream[String]
@@ -155,7 +155,7 @@ class SketchSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("hll").toString
+    val dir = graft.TempDirs.create("hll").toString
     val store = s"$dir/sketch"
     val rows = (1 to 3000).map(i => (s"g${i % 2}", s"v${i % 800}"))
     val mem = MemoryStream[(String, String)]

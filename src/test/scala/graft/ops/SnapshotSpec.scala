@@ -72,7 +72,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
   test("indexed delta == inline delta; advanceStore settles the diff") {
     val (o, n) = fixture
-    val dir = java.nio.file.Files.createTempDirectory("snapfp").toString
+    val dir = graft.TempDirs.create("snapfp").toString
     val store = dir + "/fp"
     Snapshot.buildFingerprintStore(o, col("doc_id"), col("text"), store)
     val inline = Snapshot.delta(o, n, col("doc_id"), col("text"))
@@ -91,7 +91,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
   test("streaming appender is replay-idempotent on the sink") {
     val (o, n) = fixture
-    val dir = java.nio.file.Files.createTempDirectory("snapstream").toString
+    val dir = graft.TempDirs.create("snapstream").toString
     val store = dir + "/fp"; val out = dir + "/out"
     Snapshot.buildFingerprintStore(o, col("doc_id"), col("text"), store)
     Snapshot.appendDeltaAgainst(spark, store, out, n, col("doc_id"),
@@ -115,7 +115,7 @@ class SnapshotSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.md5
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val dir = java.nio.file.Files.createTempDirectory("snapbkt").toString
+    val dir = graft.TempDirs.create("snapbkt").toString
     val tag = System.nanoTime()
     try {
       import spark.implicits._
@@ -144,7 +144,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
   test("in-batch duplicate ids append once, deterministically") {
     val (o, _) = fixture
-    val dir = java.nio.file.Files.createTempDirectory("snapdup").toString
+    val dir = graft.TempDirs.create("snapdup").toString
     val store = dir + "/fp"; val out = dir + "/out"
     Snapshot.buildFingerprintStore(o, col("doc_id"), col("text"), store)
     import spark.implicits._

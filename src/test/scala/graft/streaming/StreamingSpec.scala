@@ -441,7 +441,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val n = emb.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfstream").toString
+    val dir = graft.TempDirs.create("graft_ivfstream").toString
     graft.ops.Similarity.buildIvfIndex(emb.filter(col("vec_id") < n / 2),
       s"$dir/ivf", nlist = 16)
 
@@ -470,7 +470,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = graft.TempDirs.create("graft_stream").toString
     val t = new Timeseries(spark, CountT, minuteHour)
     val mem = MemoryStream[(String, Long, Double)]
     val events = mem.toDF()
@@ -493,7 +493,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25stream").toString
+    val dir = graft.TempDirs.create("graft_bm25stream").toString
     val base = (0L until 40L).map(i => (i, s"alpha beta w$i"))
       .toDF("doc_id", "text")
     graft.ops.Search.buildIndex(base, col("text"), col("doc_id"), s"$dir/idx")
@@ -614,9 +614,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val store = java.nio.file.Files.createTempDirectory("an_store").toString + "/log"
-    val out = java.nio.file.Files.createTempDirectory("an_out").toString + "/scores"
-    val ckpt = java.nio.file.Files.createTempDirectory("an_ck").toString
+    val store = graft.TempDirs.create("an_store").toString + "/log"
+    val out = graft.TempDirs.create("an_out").toString + "/scores"
+    val ckpt = graft.TempDirs.create("an_ck").toString
 
     val mem = MemoryStream[(String, Long, Double)]
     val events = mem.toDF()
@@ -672,14 +672,14 @@ class StreamingSpec extends AnyFunSuite {
     val L = 128
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).toDF("doc_id")
       .withColumn("n", (col("doc_id") % 97 + 1).cast("long"))
-    val pathA = java.nio.file.Files.createTempDirectory("pack_stream").toString
-    val pathB = java.nio.file.Files.createTempDirectory("pack_batch").toString
+    val pathA = graft.TempDirs.create("pack_stream").toString
+    val pathB = graft.TempDirs.create("pack_batch").toString
     graft.ops.Pack.buildGreedyLayout(mk(1000, 1500), col("doc_id"), col("n"),
       pathA, L, shards = 8)
     graft.ops.Pack.buildGreedyLayout(mk(1000, 1500), col("doc_id"), col("n"),
       pathB, L, shards = 8)
 
-    val ckpt = java.nio.file.Files.createTempDirectory("pack_ck").toString
+    val ckpt = graft.TempDirs.create("pack_ck").toString
     val mem = MemoryStream[Long]
     val stream = mem.toDF().select(col("value").as("doc_id"))
       .withColumn("n", (col("doc_id") % 97 + 1).cast("long"))
@@ -712,7 +712,7 @@ class StreamingSpec extends AnyFunSuite {
     // exactly-once across the restart, not just within one query
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    def tmpDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmpDir(p: String) = graft.TempDirs.create(p).toString
     val data1 = (0L until 400L).map(i => s"tok${i % 7} tok${i % 3} x$i")
     val data2 = (400L until 800L).map(i => s"tok${i % 5} alpha beta")
     def toks(df: org.apache.spark.sql.DataFrame) =
@@ -751,7 +751,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val L = 128
-    def tmpDir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def tmpDir(p: String) = graft.TempDirs.create(p).toString
     def withN(df: org.apache.spark.sql.DataFrame) = df
       .select(col("value").as("doc_id"))
       .withColumn("n", (col("doc_id") % 97 + 1).cast("long"))
@@ -796,14 +796,14 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val store = java.nio.file.Files.createTempDirectory("an_rp_store").toString + "/log"
-    val out = java.nio.file.Files.createTempDirectory("an_rp_out").toString + "/scores"
+    val store = graft.TempDirs.create("an_rp_store").toString + "/log"
+    val out = graft.TempDirs.create("an_rp_out").toString + "/scores"
 
     // two stream incarnations over the SAME data sharing one store but
     // each with a FRESH checkpoint: the second replays every batch —
     // the worst-case at-least-once restart
     def runOnce(): Unit = {
-      val ckpt = java.nio.file.Files.createTempDirectory("an_rp_ck").toString
+      val ckpt = graft.TempDirs.create("an_rp_ck").toString
       val mem = MemoryStream[(String, Long, Double)]
       val events = mem.toDF()
         .select(col("_1").as("name"), timestamp_seconds(col("_2")).as("ts"),
@@ -859,7 +859,7 @@ class StreamingSpec extends AnyFunSuite {
       (7L, goodEn3),  // fresh → kept
       (8L, goodEn3))  // in-batch exact dup of 7
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_curstream").toString
+    val dir = graft.TempDirs.create("graft_curstream").toString
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
     val q = StreamingIngest.foreachBatch(docs, s"$dir/ckpt")(
@@ -923,7 +923,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontstream").toString
+    val dir = graft.TempDirs.create("graft_decontstream").toString
     val train = (0L until 40L).map(i =>
       (i, s"alpha beta gamma d$i delta epsilon zeta eta")).toDF("doc_id", "text")
     val (seed, late) = (train.filter(col("doc_id") < 20),
@@ -966,7 +966,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val n = emb.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft_cosstream").toString
+    val dir = graft.TempDirs.create("graft_cosstream").toString
     graft.ops.Similarity.buildCosineIndex(emb.filter(col("vec_id") < n / 2),
       col("vec_id"), col("embedding"), s"$dir/idx")
 
@@ -993,7 +993,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def basis(d: Int): Array[Float] =
       Array.tabulate(8)(i => if (i == d) 1.0f else 0.0f)
-    val dir = java.nio.file.Files.createTempDirectory("graft_vgate").toString
+    val dir = graft.TempDirs.create("graft_vgate").toString
     val stored = Seq((0L, basis(0)), (1L, basis(1)), (2L, basis(2)))
       .toDF("vec_id", "embedding")
     graft.ops.Similarity.buildCosineIndex(stored, col("vec_id"),
@@ -1040,7 +1040,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsirstream").toString
+    val dir = graft.TempDirs.create("graft_dsirstream").toString
     val ref = (0L until 24L).map { i =>
       val reg = if (i % 3 == 0) "alpha beta gamma delta" else "kappa sigma omega zeta"
       (i, i % 3 == 0, s"$reg doc w$i")
@@ -1078,7 +1078,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_lmstream").toString
+    val dir = graft.TempDirs.create("graft_lmstream").toString
     // trusted reference corpus: repeated common transitions plus a few
     // rare ones, so scores spread
     val ref = (0L until 30L).map(i =>
@@ -1130,7 +1130,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val base = Seq((1L, "a b c a b")).toDF("doc_id", "text")
     val incs = Seq((2L, "b c d"), (3L, "a b a b"))
-    val dir = java.nio.file.Files.createTempDirectory("collocStream").toString
+    val dir = graft.TempDirs.create("collocStream").toString
     val store = dir + "/counts"
     graft.ops.Colloc.buildCountsStore(base, col("text"), 2, store)
     val mem = MemoryStream[(Long, String)]
