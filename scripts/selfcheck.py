@@ -6,29 +6,18 @@ graft.Verify parquet dumps (schema, rows, values).
 Usage:
   selfcheck.py <sfDir> <verifyOutDir>
       oracle mode: every query of oracle_sql.json against DuckDB.
-  selfcheck.py --compare <verifyOutA> <verifyOutB> [--digits D]
+  selfcheck.py --compare <verifyOutA> <verifyOutB>
       compare mode: two Verify dumps (e.g. two commits) query by query,
       order-insensitively — schema, row count and a digest of the sorted
-      rows — so the rows-only queries, which have no oracle, are
-      covered too. `--digits D` rounds floats to D significant digits
-      before hashing (default: exact).
+      rows, floats exact — so the rows-only queries, which have no
+      oracle, are covered too.
 """
 import sys, os, json, glob, hashlib
 import duckdb
 import pyarrow.parquet as pq
 
 
-def _canon(v, digits):
-    if isinstance(v, float) and digits is not None:
-        return float(f"{v:.{digits}g}")
-    if isinstance(v, (list, tuple)):
-        return [_canon(x, digits) for x in v]
-    if isinstance(v, dict):
-        return {k: _canon(x, digits) for k, x in v.items()}
-    return v
-
-
-def dump_digest(con, res_dir, digits):
+def dump_digest(con, res_dir):
     """(schema, rows, digest) of one query's dump, or None if absent:
     columns sorted by name, rows serialized and sorted, then hashed."""
     files = sorted(glob.glob(f"{res_dir}/*.parquet"))
@@ -37,19 +26,19 @@ def dump_digest(con, res_dir, digits):
     t = con.execute(f"SELECT * FROM read_parquet({files!r})").fetch_arrow_table()
     cols = sorted(t.column_names)
     schema = [(c, str(t.schema.field(c).type)) for c in cols]
-    rows = sorted(repr([_canon(r[c], digits) for c in cols]) for r in t.select(cols).to_pylist())
+    rows = sorted(repr([r[c] for c in cols]) for r in t.select(cols).to_pylist())
     h = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
     return schema, len(rows), h
 
 
-def compare(dir_a, dir_b, digits):
+def compare(dir_a, dir_b):
     con = duckdb.connect()
     names = sorted({os.path.basename(os.path.dirname(f))
                     for d in (dir_a, dir_b) for f in glob.glob(f"{d}/*/*.parquet")})
     diffs = 0
     for name in names:
-        a = dump_digest(con, f"{dir_a}/{name}", digits)
-        b = dump_digest(con, f"{dir_b}/{name}", digits)
+        a = dump_digest(con, f"{dir_a}/{name}")
+        b = dump_digest(con, f"{dir_b}/{name}")
         if a is None or b is None:
             print(f"DIFF {name}: missing in {'A' if a is None else 'B'}"); diffs += 1
         elif a[0] != b[0]:
@@ -64,8 +53,7 @@ def compare(dir_a, dir_b, digits):
 
 
 if sys.argv[1] == "--compare":
-    digits = int(sys.argv[sys.argv.index("--digits") + 1]) if "--digits" in sys.argv else None
-    compare(sys.argv[2], sys.argv[3], digits)
+    compare(sys.argv[2], sys.argv[3])
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
 

@@ -185,7 +185,14 @@ object Dedup {
     * once (a stored id is never on the left). Output: (id_a, id_b) in
     * join-side orientation — id_a is always fresh, and each pair has
     * one orientation, so a distinct or group-by on them is per pair —
-    * plus each `carry` column as `<c>_a`/`<c>_b`. Over an empty store
+    * plus each `carry` column as `<c>_a`/`<c>_b`. One row per pair
+    * needs ids unique across fresh ∪ stored: an increment replayed
+    * against an index that already holds it forms a pair both
+    * fresh-fresh (x, y) and fresh-stored (y, x), and the fresh ∪
+    * stored verify lookups hold such an id twice, so the funnels may
+    * give a pair more than once (the admission gate
+    * [[Similarity.appendGatedToCosineIndex]] takes the smallest
+    * partner, so its verdicts are unaffected). Over an empty store
     * ([[noStore]], the inline funnels) the optimizer drops the union
     * and folds the tag away, leaving the plain id_a < id_b self-join. */
   private[ops] def freshPairs(exact: DataFrame, probe: DataFrame,
