@@ -318,8 +318,7 @@ object Metrics {
     // the registrations. Each against-index path returns
     // increment-vs-store plus within-increment pairs, so truth = the
     // exact pairs with at least one endpoint in the increment.
-    val idxRoot = java.nio.file.Files
-      .createTempDirectory("graft_metrics_idx").toString
+    val idxRoot = TempDirs.create("graft_metrics_idx").toString
     def touching(truth: Set[(Long, Long)],
         isInc: Long => Boolean): Set[(Long, Long)] =
       truth.filter { case (p, q) => isInc(p) || isInc(q) }

@@ -82,11 +82,12 @@ object SparkEntry {
     * scale the index build is a day-scale batch job; only the probe
     * side belongs in the query). In Bench the cold run pays the build,
     * the warm run measures the query alone — the scale-relevant
-    * number. */
+    * number. Each store is a [[TempDirs]] directory, deleted when the
+    * JVM exits. */
   private val storeMemo = new scala.collection.concurrent.TrieMap[String, String]()
   private[graft] def memoStore(kind: String, sfDir: String)(build: String => Unit): String =
     storeMemo.getOrElseUpdate(s"$kind|$sfDir", {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_$kind").toString
+      val dir = TempDirs.create(s"graft_$kind").toString
       build(dir)
       dir
     })

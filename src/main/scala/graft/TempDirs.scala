@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.ConcurrentLinkedQueue
 
-/** Temporary directories for the specs: each one is deleted, with
-  * everything written under it, when the test JVM exits. */
+/** Temporary directories for the specs and the mains: each one is
+  * deleted, with everything written under it, when the JVM exits. */
 object TempDirs {
   private val made = new ConcurrentLinkedQueue[Path]()
 

@@ -8,6 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import graft.functions.ReferenceConstant
 import graft.model._
+import graft.ops.Layout
 import graft.time._
 
 /** Transform argument: built-in names and/or custom `(data, stepSize) =>
@@ -72,10 +73,10 @@ object ReadHooks { val none: ReadHooks = ReadHooks() }
   * condense → collapse — still shuffle-keyed on bucket ids at every
   * stage (partial-agg friendly, no driver loops).
   *
-  * At scale the log is parquet partitioned by `interval` (optionally
-  * also by `__day`) — reads prune to one partition and push the name
-  * filter to the scan. The per-call bucket bounds are checked in a
-  * Filter that compiles once for every time range (see [[query]]).
+  * At scale the log is parquet partitioned by `interval` — reads prune
+  * to one partition and push the name filter to the scan. The per-call
+  * bucket bounds are checked in a Filter that compiles once for every
+  * time range (see [[query]]).
   */
 class Timeseries(
     val spark: SparkSession,
@@ -207,9 +208,8 @@ class Timeseries(
     }
 
   /** The full bucket log (in-memory buffer ∪ attached). The union is
-    * BY NAME: a parquet-loaded attach carries its partition columns
-    * last (and may carry the optional `__day` subpartition column), so
-    * positional union would mispair columns. */
+    * BY NAME: a parquet-loaded attach carries its partition column
+    * last, so positional union would mispair columns. */
   def log: DataFrame = {
     val fromBuffer = if (buffer.isEmpty) None else {
       import spark.implicits._
@@ -219,8 +219,7 @@ class Timeseries(
       Some(bucketize(ev, col("name"), col("ts"), col("value"), col("seq"), col("fanout")))
     }
     (fromBuffer, attached) match {
-      case (Some(a), Some(b)) =>
-        (if (b.columns.contains(DayCol)) withDay(a) else a).unionByName(b)
+      case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None)    => a
       case (None, Some(b))    => b
       case (None, None) =>
@@ -228,67 +227,32 @@ class Timeseries(
     }
   }
 
-  /** UTC epoch-day (floor(bucket-start-seconds / 86400)) of each row —
-    * a pure function of (interval, i_time), timezone-free and monotone
-    * in i_time, used as the optional coarse store subpartition. */
-  private def withDay(df: DataFrame): DataFrame =
-    if (df.columns.contains(DayCol)) df
-    else {
-      val specs = intervals.toSeq
-      val epoch = specs.tail.foldLeft(
-        when(col("interval") === specs.head._1,
-          TimeColumns.fromBucket(col("i_time"), specs.head._2.step))) {
-        case (acc, (n, sp)) =>
-          acc.when(col("interval") === n, TimeColumns.fromBucket(col("i_time"), sp.step))
-      }
-      df.withColumn(DayCol, floor(epoch / 86400))
-    }
-
-  private def dayOf(sp: IntervalSpec, bucket: Long): Long =
-    Math.floorDiv(sp.iCalc.fromBucket(bucket), 86400L)
-
-  /** Persist the bucket log partitioned by interval (and optionally by
-    * `__day`, the epoch-day of the bucket start) — at scale each read
-    * prunes to one interval directory, one day range inside it, and
-    * parquet min/max prunes i_time row groups within that.
+  /** Persist the bucket log as parquet partitioned by interval
+    * (`interval=…/` directories) — each read prunes to one interval
+    * directory and pushes its name filter to the scan. The reference's
+    * physical layouts are all keyed to the bucket (mongo_backend.py:
+    * 179-187 collection-per-interval + indexed bucket;
+    * cassandra_backend.py:330-337 PK (name, interval, i_time)).
     *
-    * SAME-PATH SAFE: the log is fully written to a dot-prefixed
-    * sibling temp directory first — materializing any lineage that
-    * reads `path` itself (e.g. after `load(path)` → `delete(name)`) —
-    * and only then swapped in, the same pattern as [[compact]]. A
-    * direct overwrite would have Spark deleting the files its own scan
-    * is reading. After the swap the instance re-attaches to the new
-    * store (the old file listing is gone) and the insert buffer, now
-    * part of the written log, is cleared.
-    *
-    * `subpartitionDays`: Some(true)/Some(false) forces the day
-    * subpartition on/off; None (default) preserves whatever layout the
-    * current log carries. The reference's physical layouts are all
-    * keyed to the bucket (mongo_backend.py:179-187 collection-per-
-    * interval + indexed bucket; cassandra_backend.py:330-337 PK
-    * (name, interval, i_time)); `__day` is the directory-level
-    * analogue that lets range reads prune whole directories. */
-  def save(path: String, subpartitionDays: Option[Boolean] = None): Unit = {
-    import org.apache.hadoop.fs.Path
-    val sub = subpartitionDays.getOrElse(log.columns.contains(DayCol))
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(target.getParent, s".${target.getName}-save-tmp")
-    fs.delete(tmp, true)
-    val out = if (sub) withDay(log) else log.drop(DayCol)
-    val partCols = if (sub) Seq("interval", DayCol) else Seq("interval")
-    out.write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp.toString)
-    fs.delete(target, true)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"save: rename $tmp -> $target failed")
-    val readSchema =
-      if (sub) StructType(logSchema(valueType) :+ StructField(DayCol, LongType))
-      else logSchema(valueType)
-    attach(spark.read.schema(readSchema).parquet(path))
+    * SAME-PATH SAFE: the store is replaced in one
+    * [[Layout.replaceDir]] swap, whose write into a
+    * dot-prefixed temp dir materializes any lineage that reads `path`
+    * itself (e.g. after `load(path)` → `delete(name)`) before the old
+    * files move. A direct overwrite would have Spark deleting the
+    * files its own scan is reading. After the swap the instance
+    * re-attaches to the new store (the old file listing is gone) and
+    * the insert buffer, now part of the written log, is cleared. */
+  def save(path: String): Unit = {
+    Layout.replaceDir(spark, path)(tmp =>
+      log.write.mode("overwrite").partitionBy("interval").parquet(tmp))
+    load(path)
     buffer.clear()
   }
 
-  def load(path: String): this.type = attach(spark.read.parquet(path))
+  /** Attach a saved store with the log schema the store was written
+    * with, so no Spark job infers it from parquet footers. */
+  def load(path: String): this.type =
+    attach(spark.read.schema(logSchema(valueType)).parquet(path))
 
   // ---- streaming ----------------------------------------------------
 
@@ -378,8 +342,8 @@ class Timeseries(
     * §3.2-3.3): filter → [fetch hook] → cast → agg-at-output-granularity
     * → dense-axis fill → transforms → time keys.
     *
-    * Plan shape at scale: one parquet scan pruned to the interval (and
-    * `__day`) partitions with the name filter pushed down, one shuffle
+    * Plan shape at scale: one parquet scan pruned to the interval
+    * partition with the name filter pushed down, one shuffle
     * for the agg (two or three bucket-keyed shuffles on the
     * staged/hook path), broadcast join against the tiny bucket axis,
     * and a sort in one partition. Every per-call bucket bound — the
@@ -473,8 +437,8 @@ class Timeseries(
     keyed.orderBy(groupColsOut(fine).map(col): _*).drop("__step")
   }
 
-  /** The log rows of one read — pruned to the interval (and `__day`)
-    * partitions, name filter pushed to the scan, i_time checked against
+  /** The log rows of one read — pruned to the interval partition,
+    * name filter pushed to the scan, i_time checked against
     * per-call bounds that compile once, then the fetch hook — aggregated
     * to the read's output granularity: (i_time [, r_time], value), or
     * the staged plan's shape for hook-bearing and collapsing reads. */
@@ -482,18 +446,9 @@ class Timeseries(
       b0: Long, b1: Long, condense: Boolean, collapse: Boolean,
       hooks: ReadHooks): DataFrame = {
     val multi = names.size > 1
-    val snapshot = log
-    val pred = col("interval") === interval &&
+    val filtered = hooks.fetch(log.filter(col("interval") === interval &&
       col("name").isin(names: _*) &&
-      col("i_time").between(ReferenceConstant.long(b0), ReferenceConstant.long(b1))
-    // on a day-subpartitioned store, derive the (exact, implied by the
-    // i_time range — fromBucket is monotone) __day bounds driver-side
-    // so directory-level partition pruning fires for range reads; as
-    // partition filters they never reach generated code
-    val filtered = hooks.fetch(
-      if (snapshot.columns.contains(DayCol))
-        snapshot.filter(pred && col(DayCol).between(dayOf(sp, b0), dayOf(sp, b1)))
-      else snapshot.filter(pred))
+      col("i_time").between(ReferenceConstant.long(b0), ReferenceConstant.long(b1))))
 
     // composite merge order (join-then-condense, _join_results
     // timeseries.py:727-745 running BEFORE the condense pass :599-606,
@@ -706,40 +661,27 @@ class Timeseries(
       transform = _.dropDuplicates(key))
   }
 
-  /** Shared partition-rewrite machinery behind [[compact]] and
-    * [[deleteFromStore]]: each selected `interval=` directory whose
-    * probe fires is filtered through `transform`, written to a
-    * dot-prefixed sibling temp dir (invisible to concurrent readers),
-    * and swapped in. Streams executor-side — no driver
-    * materialization, no self-overwrite lineage hazard — so it holds
-    * at any partition size. Preserves a `__day` sub-layout when the
-    * store has one. */
+  /** Shared partition-rewrite machinery behind [[compact]],
+    * [[deleteFromStore]] and [[dedupStore]]: each selected `interval=`
+    * directory whose probe fires is filtered through `transform` and
+    * replaced in one [[Layout.replaceDir]] swap. Streams
+    * executor-side — no driver materialization, no self-overwrite
+    * lineage hazard — so it holds at any partition size. */
   private def rewriteStorePartitions(path: String,
       select: String => Boolean,
       probe: DataFrame => Boolean,
       transform: DataFrame => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    val baseSchema = StructType(logSchema(valueType).filterNot(_.name == "interval"))
-    intervals.keys.foreach { iname =>
-      if (select(iname)) {
-        val part = new Path(s"$path/interval=$iname")
-        val fs = part.getFileSystem(conf)
-        if (fs.exists(part)) {
-          val hasDay = fs.listStatus(part)
-            .exists(_.getPath.getName.startsWith(DayCol + "="))
-          val schema = if (hasDay) baseSchema.add(DayCol, LongType) else baseSchema
-          val df = spark.read.schema(schema).parquet(part.toString)
-            .withColumn("interval", lit(iname))
-          if (probe(df)) {
-            val tmp = new Path(s"$path/.rewrite-tmp-interval=$iname")
-            val w = transform(df).drop("interval").write.mode("overwrite")
-            (if (hasDay) w.partitionBy(DayCol) else w).parquet(tmp.toString)
-            fs.delete(part, true)
-            if (!fs.rename(tmp, part))
-              throw new java.io.IOException(s"rewrite: rename $tmp -> $part failed")
-          }
-        }
+    val schema = StructType(logSchema(valueType).filterNot(_.name == "interval"))
+    intervals.keys.filter(select).foreach { iname =>
+      val part = s"$path/interval=$iname"
+      val p = new org.apache.hadoop.fs.Path(part)
+      if (p.getFileSystem(conf).exists(p)) {
+        val df = spark.read.schema(schema).parquet(part)
+          .withColumn("interval", lit(iname))
+        if (probe(df))
+          Layout.replaceDir(spark, part)(tmp =>
+            transform(df).drop("interval").write.mode("overwrite").parquet(tmp))
       }
     }
   }
@@ -802,10 +744,6 @@ class UnknownInterval(interval: String)
   extends IllegalArgumentException(s"unknown interval: $interval")
 
 object Timeseries {
-  /** Optional coarse store-subpartition column (epoch-day of the
-    * bucket start); never part of the logical schema. */
-  val DayCol = "__day"
-
   def logSchema(vt: DataType): StructType = StructType(Seq(
     StructField("name", StringType),
     StructField("interval", StringType),

@@ -115,6 +115,45 @@ object Layout {
     if (fs.exists(p)) spark.read.parquet(path) else template.limit(0)
   }
 
+  /** Replace the directory at `path` with what `write` puts into the
+    * temp path it is handed — THE directory swap behind every store
+    * rewrite (`Timeseries.save` and its partition rewrites,
+    * [[compactFiles]], `Snapshot.advanceStore`,
+    * `Sketch.compactCountMin`). The temp dir `.<name>-tmp` and the
+    * parked old copy `.<name>-old` are dot-prefixed siblings of
+    * `path`, so Spark's file listing never sees them. `write` may read
+    * `path` itself: it finishes before the swap starts.
+    *
+    * Three steps. (1) Recover: delete a stale temp dir (an interrupted
+    * write); a dot-old left behind means the last swap stopped between
+    * its two renames, so rename it back when `path` is missing, else
+    * drop it. (2) Write into the temp dir; a write that throws deletes
+    * it and rethrows, leaving `path` untouched. (3) Rename `path` →
+    * dot-old, temp → `path`, and drop dot-old.
+    *
+    * A reader racing the two renames can find no directory, but a
+    * crash at any point leaves the complete old content at `path` or
+    * in dot-old, where the next swap of the same path restores it. A
+    * failed rename throws an IOException naming both paths. */
+  def replaceDir(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(target.getParent, s".${target.getName}-tmp")
+    val old = new Path(target.getParent, s".${target.getName}-old")
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"replaceDir: rename $from -> $to failed")
+    fs.delete(tmp, true)
+    if (fs.exists(old)) {
+      if (fs.exists(target)) fs.delete(old, true) else rename(old, target)
+    }
+    try write(tmp.toString)
+    catch { case scala.util.control.NonFatal(e) => fs.delete(tmp, true); throw e }
+    if (fs.exists(target)) rename(target, old)
+    rename(tmp, target)
+    fs.delete(old, true)
+  }
+
   /** Append the `rows` whose `key` is not in `stored` to the parquet
     * store at `path` — the replay-idempotent append of every
     * incremental index and score sink: a replayed micro-batch finds
@@ -205,13 +244,8 @@ object Layout {
     * sink's exact files; rewriting them would corrupt every
     * log-driven read — skipped).
     *
-    * Swap: write to a dot-prefixed sibling, rename dir → dot-old,
-    * rename tmp → dir, carry non-data entries (e.g. _SUCCESS) over,
-    * drop dot-old. A reader can race the two renames into a
-    * missing-directory error, but the data is never only in an
-    * ignored location: a crash strands at worst a complete dot-old
-    * copy next to a complete new dir (or the untouched original plus
-    * a complete tmp), both recoverable by a rename.
+    * Each rewrite is one [[replaceDir]] swap of its leaf, so the new
+    * leaf carries the rewrite's own `_SUCCESS` marker.
     *
     * Returns (directories rewritten, files before, files after).
     * Ordering inside rewritten files is not preserved (coalesce-style
@@ -219,7 +253,6 @@ object Layout {
     * where a sort-derived layout must survive. */
   def compactFiles(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): (Int, Long, Long) = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // mirrors Spark's InMemoryFileIndex hidden-path rule: "." names are
@@ -255,18 +288,10 @@ object Layout {
       before += files.length
       if (files.length <= want) after += files.length
       else {
-        val tmp = new Path(dir.getParent, s".compact-tmp-${dir.getName}")
-        val old = new Path(dir.getParent, s".compact-old-${dir.getName}")
-        spark.read.parquet(dir.toString)
-          .repartition(want)
-          .write.mode("overwrite").parquet(tmp.toString)
-        if (!fs.rename(dir, old) || !fs.rename(tmp, dir))
-          throw new java.io.IOException(s"compact: swap failed for $dir")
-        // carry marker files (_SUCCESS etc.) from the old dir; data
-        // files stay behind in dot-old and are dropped with it
-        fs.listStatus(old).filter(s => s.isFile && !isData(s.getPath))
-          .foreach(s => fs.rename(s.getPath, new Path(dir, s.getPath.getName)))
-        fs.delete(old, true)
+        replaceDir(spark, dir.toString)(tmp =>
+          spark.read.parquet(dir.toString)
+            .repartition(want)
+            .write.mode("overwrite").parquet(tmp))
         rewritten += 1
         after += fs.listStatus(dir).count(s => s.isFile && isData(s.getPath))
       }

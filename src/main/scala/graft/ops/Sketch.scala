@@ -66,20 +66,15 @@ object Sketch {
       path: String): DataFrame =
     spark.read.parquet(path).groupBy("r", "c").agg(sum("n").as("n"))
 
-  /** Collapse all per-batch grids into one `batch=-1` partition
-    * (temp-dir + swap, same discipline as [[Layout.compactFiles]]) so
-    * the store stays uniformly `batch=`-partitioned for both the
-    * reader and future stream batches. */
+  /** Collapse all per-batch grids into one `batch=-1` partition, in
+    * one [[Layout.replaceDir]] swap (a fresh temp dir, so a leftover
+    * of an interrupted compaction is never swapped in), so the store
+    * stays uniformly `batch=`-partitioned for both the reader and
+    * future stream batches. */
   def compactCountMin(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    countMinLoad(spark, path)
-      .write.mode("overwrite").parquet(s"$path.tmp/batch=-1")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$path.tmp"),
-      new org.apache.hadoop.fs.Path(path))
-  }
+      path: String): Unit =
+    Layout.replaceDir(spark, path)(tmp =>
+      countMinLoad(spark, path).write.mode("overwrite").parquet(s"$tmp/batch=-1"))
 
   /** Streaming approximate top-k support: given the live counter grid
     * and a candidate key set (typically the keys seen in a batch plus

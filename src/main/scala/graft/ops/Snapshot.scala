@@ -121,29 +121,11 @@ object Snapshot {
     Layout.appendAbsent(d, Layout.readIfExists(spark, outPath)(d), outPath, "id")
   }
 
-  /** Replace the stored fingerprints with the new snapshot's — write
-    * to a dot-prefixed sibling temp dir, then swap via TWO renames
-    * (target → dot-old, tmp → target, drop dot-old), the same
-    * concurrent-reader-safe pattern as Layout.compactFiles: a reader
-    * racing the swap sees either the old or the new store, never an
-    * empty path, and a crash mid-swap strands at worst a complete
-    * dot-old copy that the next advance cleans up. */
+  /** Replace the stored fingerprints with the new snapshot's, in one
+    * [[Layout.replaceDir]] swap: a crash mid-swap leaves a complete
+    * copy that the next advance restores. */
   def advanceStore(snap: DataFrame, id: Column, content: Column,
-      path: String): Unit = {
-    val spark = snap.sparkSession
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-      s".${target.getName}-advance-tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent,
-      s".${target.getName}-advance-old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    buildFingerprintStore(snap, id, content, tmp.toString)
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new java.io.IOException(s"advanceStore: rename $target -> $old failed")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"advanceStore: rename $tmp -> $target failed")
-    fs.delete(old, true)
-  }
+      path: String): Unit =
+    Layout.replaceDir(snap.sparkSession, path)(
+      buildFingerprintStore(snap, id, content, _))
 }

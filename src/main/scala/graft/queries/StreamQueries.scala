@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{SparkEntry, Timeseries}
+import graft.{SparkEntry, TempDirs, Timeseries}
 import graft.model._
 import graft.ops.{Classify, Dedup, Sketch, Snapshot, Urls}
 import graft.queries.Oracle.Sql
@@ -36,8 +36,7 @@ import graft.time._
 object StreamQueries {
 
   private val qid = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = TempDirs.create(prefix).toString
 
   /** Per-JVM memo of the DETERMINISTIC driver-side stream fixtures
     * (event/document subsets, the once-fit NB model path). Same

@@ -217,16 +217,15 @@ class HooksSpec extends AnyFunSuite {
     // read below finds data, so adaptive execution keeps one plan shape
     val events = for (i <- 0 until 200; j <- 0 until 6) yield (s"s$j", i * 1200L + j * 60L)
     val dir = graft.TempDirs.create("graft_compile_once").toString
-    def store(intervals: Map[String, IntervalSpec], path: String, days: Boolean) = {
+    def store(intervals: Map[String, IntervalSpec], path: String) = {
       val w = new Timeseries(spark, CountT, intervals)
       for ((n, t) <- events) w.insert(n, 1.0, Td(t))
-      w.save(path, subpartitionDays = Some(days))
+      w.save(path)
       new Timeseries(spark, CountT, intervals).load(path)
     }
     val daily = Map("daily" -> IntervalSpec(TimeStep("daily")))
-    val flat = store(minuteHour, s"$dir/flat", days = false)
-    val byDay = store(minuteHour, s"$dir/day", days = true)
-    val greg = store(daily, s"$dir/daily", days = false)
+    val flat = store(minuteHour, s"$dir/flat")
+    val greg = store(daily, s"$dir/daily")
     // read k of each shape: new bounds and new names for every k
     def shapes(r: Timeseries): Seq[(String, Int => DataFrame)] = Seq(
       "coarse get" -> (k => r.get(Seq(s"s$k"), "minute", Td(k * 1260L))),
@@ -238,11 +237,10 @@ class HooksSpec extends AnyFunSuite {
       "collapse" -> (k => r.series(Seq(s"s$k"), "hour", start = Some(Td(k * 3600L)),
         steps = Some(5 + k), collapse = true)),
       "interpolate" -> (k => r.interpolate(s"s$k", "minute", Td(k * 600L), Td(k * 600L + 3600))))
-    val reads = shapes(flat).map { case (n, f) => (n, f, false) } ++
-      shapes(byDay).map { case (n, f) => (s"$n (__day store)", f, true) } :+
+    val reads = shapes(flat) :+
       (("gregorian series", (k: Int) => greg.series(Seq(s"s$k"), "daily",
-        start = Some(Td(k * 86400L)), steps = Some(2)), false))
-    for ((name, read, days) <- reads) {
+        start = Some(Td(k * 86400L)), steps = Some(2))))
+    for ((name, read) <- reads) {
       assert(read(0).collect().nonEmpty, name) // warm-up: compiles the shape
       for (k <- Seq(1, 2)) {
         val c0 = Harness.compiles()
@@ -254,7 +252,6 @@ class HooksSpec extends AnyFunSuite {
         val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
           .map(_.group(1)).mkString(" ")
         assert(partFilters.contains("interval"), s"$name: $plan")
-        if (days) assert(partFilters.contains("__day"), s"$name: $plan")
         val name0 = if (name.contains("multi-name")) "In(name," else "EqualTo(name,"
         assert(plan.contains("PushedFilters") && plan.contains(name0), s"$name: $plan")
       }
@@ -291,6 +288,7 @@ class HooksSpec extends AnyFunSuite {
     assert(minuteTimes === Set((500000L * 3600L + 1000) / 60),
       "expired minute bucket must be physically gone")
     assert(reader.log.filter(col("interval") === "hour").count() === 2L)
+    assert(reader.get(Seq("c"), "minute", Td(1000)).collect().head.getDouble(1) === 2.0)
   }
 
   test("compact honors the calendar-aware gregorian cutoff") {
@@ -325,8 +323,24 @@ class HooksSpec extends AnyFunSuite {
     val r = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
     assert(r.list().collect().map(_.getString(0)).toSeq === Seq("kept"))
     assert(r.get(Seq("kept"), "minute", Td(10)).collect().head.getDouble(1) === 2.0)
-    // no temp-dir residue
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.contains("save-tmp")))
+    // no dot-prefixed residue of the swap next to the store
+    assert(new java.io.File(dir).list().toSeq === Seq("store"))
+  }
+
+  test("load attaches the store with the log schema and runs no Spark job") {
+    val t = new Timeseries(spark, CountT, minuteHour)
+    t.insert("j", 1.0, Td(10)); t.insert("j", 2.0, Td(70))
+    val dir = graft.TempDirs.create("graft_load").toString
+    t.save(s"$dir/store")
+    val l = new Harness.RunListener(spark)
+    try {
+      l.drain()
+      val r = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
+      val (jobs, _) = l.drain()
+      assert(jobs.isEmpty, jobs.map(_.desc))
+      assert(r.log.schema.sortBy(_.name) === Timeseries.logSchema(DoubleType).sortBy(_.name))
+      assert(r.get(Seq("j"), "minute", Td(70)).collect().head.getDouble(1) === 2.0)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("insert after load unions by name (parquet attach has partition cols last)") {
@@ -359,6 +373,11 @@ class HooksSpec extends AnyFunSuite {
     val hourBefore = files("hour")
     t.deleteFromStore(s"$dir/store", "gone")
     assert(files("hour") === hourBefore, "interval without the name must survive byte-untouched")
+    // a name in no interval: every probe misses, nothing is rewritten
+    val minuteBefore = files("minute")
+    t.deleteFromStore(s"$dir/store", "no-such-name")
+    assert(files("minute") === minuteBefore && files("hour") === hourBefore,
+      "a probe that misses must leave the files byte-untouched")
     val r = new Timeseries(spark, CountT, minuteOnly).load(s"$dir/store")
     assert(r.list().collect().map(_.getString(0)).toSeq === Seq("keep"))
     assert(r.log.filter(col("interval") === "minute").count() === 1L)
@@ -391,60 +410,6 @@ class HooksSpec extends AnyFunSuite {
     val before = files
     t.dedupStore(s"$dir/store")
     assert(files === before, "clean partition must survive byte-untouched")
-  }
-
-  test("day-subpartitioned store prunes __day directories on range reads (scale evidence)") {
-    val t = new Timeseries(spark, CountT, minuteHour)
-    // three distinct days of minute data
-    t.insert("d", 1.0, Td(10))
-    t.insert("d", 2.0, Td(86400 + 10))
-    t.insert("d", 3.0, Td(2 * 86400 + 10))
-    val dir = graft.TempDirs.create("graft_subpart").toString
-    t.save(s"$dir/store", subpartitionDays = Some(true))
-    val dayDirs = new java.io.File(s"$dir/store/interval=minute").listFiles()
-      .map(_.getName).filter(_.startsWith("__day=")).sorted
-    assert(dayDirs.length === 3, dayDirs.mkString(","))
-    val reader = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
-    val oneDay = reader.get(Seq("d"), "minute", Td(86400 + 10))
-    val plan = oneDay.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__day"), plan.take(2000))
-    assert(oneDay.collect().head.getDouble(1) === 2.0)
-    // results identical to the flat layout on a multi-day range read
-    val sub = reader.series(Seq("d"), "minute", start = Some(Td(0)), end = Some(Td(3 * 86400)))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val flat = t.series(Seq("d"), "minute", start = Some(Td(0)), end = Some(Td(3 * 86400)))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(sub === flat)
-    // save() with no flag preserves the day layout; compact-machinery
-    // rewrites keep it too
-    reader.delete("nothing-here")
-    reader.save(s"$dir/store")
-    val stillDay = new java.io.File(s"$dir/store/interval=minute").listFiles()
-      .map(_.getName).count(_.startsWith("__day="))
-    assert(stillDay === 3, "default save must preserve the subpartition layout")
-    reader.deleteFromStore(s"$dir/store", "no-such-name") // probe misses: no-op
-    val r2 = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
-    assert(r2.get(Seq("d"), "minute", Td(10)).collect().head.getDouble(1) === 1.0)
-  }
-
-  test("compact on a day-subpartitioned store preserves the __day layout and drops expired days") {
-    val t = new Timeseries(spark, CountT, minuteHour)
-    // minute TTL = 5 steps (300s); two rows a day apart
-    t.insert("c", 1.0, Td(10))            // expired at now
-    t.insert("c", 2.0, Td(86400 + 10))    // live at now
-    val dir = graft.TempDirs.create("graft_subcompact").toString
-    t.save(s"$dir/store", subpartitionDays = Some(true))
-    t.compact(s"$dir/store", now = Td(86400 + 100))
-    val dayDirs = new java.io.File(s"$dir/store/interval=minute").listFiles()
-      .map(_.getName).filter(_.startsWith("__day="))
-    assert(dayDirs.length === 1, s"expired day dir must be gone: ${dayDirs.mkString(",")}")
-    val r = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
-    val minuteVals = r.log.filter(col("interval") === "minute")
-      .select("value").collect().map(_.getDouble(0)).toSet
-    assert(minuteVals === Set(2.0))
-    // hour interval (no TTL) kept both rows and its __day layout
-    assert(r.log.filter(col("interval") === "hour").count() === 2L)
-    assert(r.get(Seq("c"), "minute", Td(86400 + 10)).collect().head.getDouble(1) === 2.0)
   }
 
   test("gregorian step with RELATIVE resolution mixes calculators (README.rst:135-139)") {

@@ -186,4 +186,64 @@ class LayoutSpec extends AnyFunSuite {
     val (rw2, b2, a2) = Layout.compactFiles(spark, sink, targetFileBytes = 1L << 30)
     assert(rw2 === 0 && b2 === a2, "sink-logged dir must not be rewritten")
   }
+
+  /** Every regular file under `dir`, by relative path, with its bytes. */
+  private def tree(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString ->
+        java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  private def dotEntries(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith(".")).toSeq
+
+  private def ids(path: String): Seq[Long] =
+    spark.read.parquet(path).collect().map(_.getLong(0)).sorted.toSeq
+
+  test("replaceDir: a write that throws leaves the target byte-identical and no dot-prefixed sibling") {
+    val dir = graft.TempDirs.create("swap_fail").toString
+    val store = s"$dir/store"
+    spark.range(100).write.parquet(store)
+    val before = tree(store)
+    val e = intercept[IllegalStateException](Layout.replaceDir(spark, store) { tmp =>
+      spark.range(5).write.parquet(tmp) // a partial write lands first
+      throw new IllegalStateException("write failed")
+    })
+    assert(e.getMessage === "write failed")
+    assert(tree(store) === before)
+    assert(dotEntries(dir).isEmpty, dotEntries(dir))
+  }
+
+  test("replaceDir: a stale temp dir planted with extra files is not swapped in") {
+    val dir = graft.TempDirs.create("swap_stale").toString
+    val store = s"$dir/store"
+    spark.range(100).write.parquet(store)
+    // an interrupted write's leftover in the temp dir the swap uses
+    spark.range(1000, 1010).write.parquet(s"$dir/.store-tmp")
+    // an appending write keeps whatever the temp dir already holds
+    Layout.replaceDir(spark, store)(tmp =>
+      spark.read.parquet(store).filter(col("id") < 10).write.mode("append").parquet(tmp))
+    assert(ids(store) === (0L until 10L))
+    assert(dotEntries(dir).isEmpty, dotEntries(dir))
+  }
+
+  test("replaceDir: a dot-old next to a missing target is restored before the write") {
+    val dir = graft.TempDirs.create("swap_restore").toString
+    val store = s"$dir/store"
+    // a swap that stopped between its two renames: the old store is
+    // parked, the target is gone
+    spark.range(50).write.parquet(s"$dir/.store-old")
+    var seen = Seq.empty[Long]
+    Layout.replaceDir(spark, store) { tmp =>
+      seen = ids(store)
+      spark.read.parquet(store).filter(col("id") % 2 === 0).write.parquet(tmp)
+    }
+    assert(seen === (0L until 50L))
+    assert(ids(store) === (0L until 50L by 2))
+    assert(dotEntries(dir).isEmpty, dotEntries(dir))
+  }
 }

@@ -93,6 +93,24 @@ class SketchSpec extends AnyFunSuite {
       .orderBy("r", "c").collect().toSeq === batch)
   }
 
+  test("compaction over an interrupted compaction's leftover counts each batch once") {
+    import spark.implicits._
+    val dir = graft.TempDirs.create("cmsleft").toString
+    val store = s"$dir/sketch"
+    val data = stream.collect().map(_.getString(0)).toSeq
+    Sketch.countMinAppend(data.take(300).toDF("k"), col("k"), D, W, store, 0L, seed = 9L)
+    Sketch.countMinAppend(data.drop(300).toDF("k"), col("k"), D, W, store, 1L, seed = 9L)
+    // a compaction stopped mid-write left a batch grid in its temp dir
+    Sketch.countMinAppend(data.take(300).toDF("k"), col("k"), D, W,
+      s"$dir/.sketch-tmp", 7L, seed = 9L)
+    Sketch.compactCountMin(spark, store)
+    val batch = Sketch.countMinFit(stream, col("k"), D, W, seed = 9L)
+      .orderBy("r", "c").collect().toSeq
+    assert(Sketch.countMinLoad(spark, store).orderBy("r", "c").collect().toSeq === batch)
+    assert(new java.io.File(store).list().filter(_.startsWith("batch=")).toSeq
+      === Seq("batch=-1"))
+  }
+
   test("streaming top-k over the CMS store recovers the exact top set") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
