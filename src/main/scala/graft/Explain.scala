@@ -7,7 +7,9 @@ import java.util.concurrent.ConcurrentLinkedQueue
 /** Plan auditor: prints the formatted physical plan of selected
   * SparkEntry queries (all when no args), each headed by the Spark
   * jobs its construction ran (eager fits, persists, collects, pins)
-  * and the executed plan of every action behind those jobs. Usage:
+  * and the executed plan of every action behind those jobs, and
+  * followed by the jobs and the executed (final adaptive) plan of one
+  * run of the query into the noop sink. Usage:
   *   sbt "runMain graft.Explain q1_pricing_summary ts_count_minute"
   * Inspect for: PushedFilters reaching the parquet scan, pruned
   * ReadSchema, partial HashAggregate before the exchange, broadcast on
@@ -28,6 +30,18 @@ object Explain {
         actions.add(action -> qe)
       def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     })
+    // the jobs and the executed plan of every action since the last drain
+    def report(phase: String): Unit = {
+      val (jobs, _) = listener.drain()
+      println(s"[explain] $phase ran ${jobs.size} Spark jobs, " +
+        s"${jobs.map(_.stages).sum} stages, ${jobs.map(_.tasks).sum} tasks")
+      jobs.foreach(j => println(s"[explain]   job: ${j.stages} stages, ${j.tasks} tasks, ${j.desc}"))
+      while (!actions.isEmpty) {
+        val (action, qe) = actions.poll()
+        println(s"[explain] $phase action: $action")
+        println(qe.explainString(FormattedMode))
+      }
+    }
     val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     for (name <- wanted; fn <- SparkEntry.queries.get(name)) {
       println(s"\n================ $name ================")
@@ -35,17 +49,11 @@ object Explain {
         listener.drain() // also delivers every action event posted so far
         actions.clear()
         val df = fn(spark, sfDir)
-        val (jobs, _) = listener.drain()
-        println(s"[explain] construction ran ${jobs.size} Spark jobs, " +
-          s"${jobs.map(_.stages).sum} stages, ${jobs.map(_.tasks).sum} tasks")
-        jobs.foreach(j => println(s"[explain]   job: ${j.stages} stages, ${j.tasks} tasks, ${j.desc}"))
-        while (!actions.isEmpty) {
-          val (action, qe) = actions.poll()
-          println(s"[explain] construction action: $action")
-          println(qe.explainString(FormattedMode))
-        }
+        report("construction")
         println("[explain] query plan:")
         df.explain("formatted")
+        df.write.format("noop").mode("overwrite").save()
+        report("run")
       } catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
     }
     spark.stop()

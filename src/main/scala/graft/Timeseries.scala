@@ -70,13 +70,14 @@ object ReadHooks { val none: ReadHooks = ReadHooks() }
   * requested output granularity (see [[graft.model.SeriesType]] for why
   * that reproduces fold/condense/collapse/join exactly). When per-call
   * hooks are present the plan is staged — granule fold → join →
-  * condense → collapse — still shuffle-keyed on bucket ids at every
-  * stage (partial-agg friendly, no driver loops).
+  * condense → collapse — still grouped on bucket ids at every stage
+  * (no driver loops).
   *
   * At scale the log is parquet partitioned by `interval` — reads prune
-  * to one partition and push the name filter to the scan. The per-call
-  * bucket bounds are checked in a Filter that compiles once for every
-  * time range (see [[query]]).
+  * to one partition, push the name filter to the scan and run as one
+  * Spark job of one stage and one task. The per-call bucket bounds are
+  * checked in a Filter that compiles once for every time range (see
+  * [[query]]).
   */
 class Timeseries(
     val spark: SparkSession,
@@ -331,6 +332,7 @@ class Timeseries(
     val sp = spec(interval)
     val bounds = log
       .filter(col("interval") === interval && col("name").isin(names: _*))
+      .coalesce(1)
       .agg(min("i_time").as("b0"), max("i_time").as("b1")).head()
     require(!bounds.isNullAt(0), s"no data for $names/$interval")
     query(names, interval, sp, bounds.getLong(0), bounds.getLong(1),
@@ -342,19 +344,29 @@ class Timeseries(
     * §3.2-3.3): filter → [fetch hook] → cast → agg-at-output-granularity
     * → dense-axis fill → transforms → time keys.
     *
-    * Plan shape at scale: one parquet scan pruned to the interval
-    * partition with the name filter pushed down, one shuffle
-    * for the agg (two or three bucket-keyed shuffles on the
-    * staged/hook path), broadcast join against the tiny bucket axis,
-    * and a sort in one partition. Every per-call bucket bound — the
-    * i_time filter, the axis, the collapse key — is a
-    * [[ReferenceConstant]], so each read shape compiles once whatever
-    * its time range. The i_time check therefore runs in a Filter after
-    * the scan, not as a pushed filter; that costs nothing while store
-    * files are unsorted, since each file's i_time statistics span the
-    * whole file. `dense` controls empty-bucket fill of coarse-shaped
-    * output: get/iterate always fill; series fills only coarse
-    * intervals (fine+condense stays sparse, sql_backend.py:236-247). */
+    * Plan shape: one Spark job of one stage and one task. The parquet
+    * scan is pruned to the interval partition with the name filter
+    * pushed down, and [[aggregated]] puts the filtered rows in one
+    * partition. Every operator above it — the fold (all three stages
+    * on the staged/hook path), the collapse's global agg, the
+    * shuffle-hash join against the one-partition bucket axis, the
+    * sort — finds its input distribution met, so the plan has no
+    * exchange, no broadcast job and no adaptive re-plan, and a read
+    * whose scan finds no rows runs the same plan as one that finds
+    * some. The result is bounded by buckets × names. The price is a
+    * serial scan: the one task reads the whole interval partition,
+    * and while store files are unsorted the pushed name filter prunes
+    * few row groups.
+    *
+    * Every per-call bucket bound — the i_time filter, the axis, the
+    * collapse key — is a [[ReferenceConstant]], so each read shape
+    * compiles once whatever its time range. The i_time check therefore
+    * runs in a Filter after the scan, not as a pushed filter; that
+    * costs nothing while store files are unsorted, since each file's
+    * i_time statistics span the whole file. `dense` controls
+    * empty-bucket fill of coarse-shaped output: get/iterate always
+    * fill; series fills only coarse intervals (fine+condense stays
+    * sparse, sql_backend.py:236-247). */
   private def query(names: Seq[String], interval: String, sp: IntervalSpec,
       b0: Long, b1: Long, condense: Boolean, collapse: Boolean,
       transform: Transforms, hooks: ReadHooks, dense: Boolean): DataFrame = {
@@ -389,10 +401,6 @@ class Timeseries(
       } else if (fine) {
         (agged, TimeColumns.stepSize(col("r_time"), sp.resolution.getOrElse(sp.step)))
       } else if (dense) {
-        val axis = TimeColumns.axis(spark, sp.iCalc, b0, b1)
-        // axis is the preserved side, so the broadcast (build) side must
-        // be the aggregated result — bounded by #buckets × #names, small
-        // by construction for any per-stat read
         val fillValue =
           if (hooks.condense.isDefined || hooks.joinRows.isDefined || hooks.processRow.isDefined)
             lit(null)
@@ -402,7 +410,7 @@ class Timeseries(
             // "no matching interval" joined assert; timeseries.py:981-988)
             lit(null).cast(agged.schema("value").dataType)
           else seriesType.empty(agged.schema("value").dataType)
-        (axis.join(broadcast(agged), Seq("i_time"), "left")
+        (onAxis(sp, b0, b1, agged)
           .select(col("i_time"), coalesce(col("value"), fillValue).as("value")),
           TimeColumns.stepSize(col("i_time"), sp.step))
       } else {
@@ -424,11 +432,9 @@ class Timeseries(
         else filled.select((groupColsOut(fine).map(col) ++ outs): _*)
       }
 
-    // bucket ids → epoch-second keys, time-ordered in one partition:
-    // the result is bounded by the bucket axis × names (the bound the
-    // broadcast above relies on), too small to pay for a range
-    // exchange and the sampling job that plans it
-    val withTimes = transformed.coalesce(1)
+    // bucket ids → epoch-second keys, time-ordered within the read's
+    // one partition (no range exchange)
+    val withTimes = transformed
       .withColumn("i_time", TimeColumns.fromBucket(col("i_time"), sp.step))
     val keyed =
       if (fine) withTimes.withColumn("r_time",
@@ -439,9 +445,11 @@ class Timeseries(
 
   /** The log rows of one read — pruned to the interval partition,
     * name filter pushed to the scan, i_time checked against
-    * per-call bounds that compile once, then the fetch hook — aggregated
-    * to the read's output granularity: (i_time [, r_time], value), or
-    * the staged plan's shape for hook-bearing and collapsing reads. */
+    * per-call bounds that compile once, then the fetch hook, then put
+    * in one partition (the single task of [[query]]'s plan) —
+    * aggregated to the read's output granularity: (i_time [, r_time],
+    * value), or the staged plan's shape for hook-bearing and
+    * collapsing reads. */
   private def aggregated(names: Seq[String], interval: String, sp: IntervalSpec,
       b0: Long, b1: Long, condense: Boolean, collapse: Boolean,
       hooks: ReadHooks): DataFrame = {
@@ -449,6 +457,7 @@ class Timeseries(
     val filtered = hooks.fetch(log.filter(col("interval") === interval &&
       col("name").isin(names: _*) &&
       col("i_time").between(ReferenceConstant.long(b0), ReferenceConstant.long(b1))))
+      .coalesce(1)
 
     // composite merge order (join-then-condense, _join_results
     // timeseries.py:727-745 running BEFORE the condense pass :599-606,
@@ -475,7 +484,7 @@ class Timeseries(
 
   /** Staged aggregation for hook-bearing (or fine-collapse) reads:
     * granule fold → [processRow] → join across names → condense. Every
-    * stage shuffles on bucket keys and partial-aggregates map-side. */
+    * stage groups on bucket keys within the read's one partition. */
   private def stagedAgg(prepared: DataFrame, sp: IntervalSpec, names: Seq[String],
       condense: Boolean, hooks: ReadHooks): DataFrame = {
     val multi = names.size > 1
@@ -540,6 +549,14 @@ class Timeseries(
   private def sortByKey(entries: Column, key: String): Column =
     F.array_sort(entries, (l, r) =>
       when(l(key) < r(key), lit(-1)).when(l(key) > r(key), lit(1)).otherwise(lit(0)))
+
+  /** The bucket axis b0..b1 left-joined with `agged` (keyed by
+    * i_time). Both sides are one partition, so the shuffle-hash join
+    * (built on `agged`, bounded by buckets × names) needs no exchange;
+    * a broadcast would plan a job of its own. */
+  private def onAxis(sp: IntervalSpec, b0: Long, b1: Long, agged: DataFrame): DataFrame =
+    TimeColumns.axis(spark, sp.iCalc, b0, b1).coalesce(1)
+      .join(agged.hint("shuffle_hash"), Seq("i_time"), "left")
 
   private def groupColsOut(fine: Boolean): Seq[String] =
     if (fine) Seq("i_time", "r_time") else Seq("i_time")
@@ -666,16 +683,20 @@ class Timeseries(
     * directory whose probe fires is filtered through `transform` and
     * replaced in one [[Layout.replaceDir]] swap. Streams
     * executor-side — no driver materialization, no self-overwrite
-    * lineage hazard — so it holds at any partition size. */
+    * lineage hazard — so it holds at any partition size. A store or
+    * partition that an interrupted swap left parked is recovered
+    * before its existence check, so it is rewritten, not skipped. */
   private def rewriteStorePartitions(path: String,
       select: String => Boolean,
       probe: DataFrame => Boolean,
       transform: DataFrame => DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = StructType(logSchema(valueType).filterNot(_.name == "interval"))
+    Layout.recoverDir(spark, path)
     intervals.keys.filter(select).foreach { iname =>
       val part = s"$path/interval=$iname"
       val p = new org.apache.hadoop.fs.Path(part)
+      Layout.recoverDir(spark, part)
       if (p.getFileSystem(conf).exists(p)) {
         val df = spark.read.schema(schema).parquet(part)
           .withColumn("interval", lit(iname))
@@ -728,13 +749,12 @@ class Timeseries(
     // guard (values are already processed at insert, so readFunc must
     // NOT re-apply) and staged aggregation for hook-bearing reads — so
     // a hook-configured Timeseries sees the SAME values here as
-    // through series()/anomalies(); the result is bounded by the
-    // axis, so it is windowed and sorted in one partition
+    // through series()/anomalies(); the axis join keeps the read's one
+    // partition, so the window and the sort need no exchange either
     val agged = aggregated(Seq(name), interval, sp, b0, b1,
       condense = true, collapse = false, hooks = hooks)
-    val grid = TimeColumns.axis(spark, sp.iCalc, b0, b1)
-      .join(broadcast(agged), Seq("i_time"), "left").coalesce(1)
-    graft.ops.Features.interpolateLinear(grid, Seq.empty, "i_time", col("value"))
+    graft.ops.Features.interpolateLinear(onAxis(sp, b0, b1, agged), Seq.empty,
+      "i_time", col("value"))
       .withColumn("i_time", TimeColumns.fromBucket(col("i_time"), sp.step))
       .orderBy("i_time")
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -124,35 +124,53 @@ object Layout {
     * `path`, so Spark's file listing never sees them. `write` may read
     * `path` itself: it finishes before the swap starts.
     *
-    * Three steps. (1) Recover: delete a stale temp dir (an interrupted
-    * write); a dot-old left behind means the last swap stopped between
-    * its two renames, so rename it back when `path` is missing, else
-    * drop it. (2) Write into the temp dir; a write that throws deletes
-    * it and rethrows, leaving `path` untouched. (3) Rename `path` →
-    * dot-old, temp → `path`, and drop dot-old.
+    * Three steps. (1) [[recoverDir]]. (2) Write into the temp dir; a
+    * write that throws deletes it and rethrows, leaving `path`
+    * untouched. (3) Rename `path` → dot-old, temp → `path`, and drop
+    * dot-old.
     *
     * A reader racing the two renames can find no directory, but a
     * crash at any point leaves the complete old content at `path` or
-    * in dot-old, where the next swap of the same path restores it. A
-    * failed rename throws an IOException naming both paths. */
+    * in dot-old, where the next swap or [[recoverDir]] of the same
+    * path restores it. A failed rename throws an IOException naming
+    * both paths. */
   def replaceDir(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    recoverDir(spark, path)
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(target.getParent, s".${target.getName}-tmp")
-    val old = new Path(target.getParent, s".${target.getName}-old")
-    def rename(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"replaceDir: rename $from -> $to failed")
-    fs.delete(tmp, true)
-    if (fs.exists(old)) {
-      if (fs.exists(target)) fs.delete(old, true) else rename(old, target)
-    }
+    val (tmp, old) = swapSiblings(target)
     try write(tmp.toString)
     catch { case scala.util.control.NonFatal(e) => fs.delete(tmp, true); throw e }
-    if (fs.exists(target)) rename(target, old)
-    rename(tmp, target)
+    if (fs.exists(target)) rename(fs, target, old)
+    rename(fs, tmp, target)
     fs.delete(old, true)
   }
+
+  /** Undo what an interrupted [[replaceDir]] of `path` left: delete a
+    * stale temp dir (an interrupted write); a dot-old left behind
+    * means the swap stopped between its two renames, so rename it back
+    * when `path` is missing, else drop it. Every store rewrite that
+    * first checks or lists `path` calls this before it: a missing
+    * `path` with a dot-old beside it is a parked store, not an absent
+    * one. */
+  def recoverDir(spark: SparkSession, path: String): Unit = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (tmp, old) = swapSiblings(target)
+    fs.delete(tmp, true)
+    if (fs.exists(old)) {
+      if (fs.exists(target)) fs.delete(old, true) else rename(fs, old, target)
+    }
+  }
+
+  /** The dot-prefixed temp and parked-old siblings of a swapped dir. */
+  private def swapSiblings(target: Path): (Path, Path) =
+    (new Path(target.getParent, s".${target.getName}-tmp"),
+      new Path(target.getParent, s".${target.getName}-old"))
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"replaceDir: rename $from -> $to failed")
 
   /** Append the `rows` whose `key` is not in `stored` to the parquet
     * store at `path` — the replay-idempotent append of every
@@ -262,6 +280,9 @@ object Layout {
       val n = p.getName
       !(n.startsWith(".") || (n.startsWith("_") && !n.contains("=")))
     }
+    // a leaf whose swap stopped between its renames is parked as
+    // `.<leaf>-old`: restore it before the listing skips it as hidden
+    val Parked = """\.(.+)-old""".r
     // leaves = dirs whose data entries are exclusively files; mixed
     // file+subdir dirs are not valid partition trees and are left
     // alone. A `_spark_metadata` log ANYWHERE prunes its whole
@@ -270,15 +291,19 @@ object Layout {
     // and the log names the sink's exact files — every dir under a
     // logged root is off-limits, not just the dir holding the log.
     def leaves(dir: Path): Seq[Path] = {
-      val all = fs.listStatus(dir)
-      if (all.exists(_.getPath.getName == "_spark_metadata")) Nil
+      val first = fs.listStatus(dir)
+      if (first.exists(_.getPath.getName == "_spark_metadata")) Nil
       else {
+        val parked = first.map(_.getPath.getName).collect { case Parked(n) => n }
+        parked.foreach(n => recoverDir(spark, new Path(dir, n).toString))
+        val all = if (parked.isEmpty) first else fs.listStatus(dir)
         val entries = all.filter(s => isData(s.getPath))
         val (dirs, files) = entries.partition(_.isDirectory)
         val below = dirs.flatMap(d => leaves(d.getPath)).toSeq
         if (files.nonEmpty && dirs.isEmpty) dir +: below else below
       }
     }
+    recoverDir(spark, path)
     var rewritten = 0; var before = 0L; var after = 0L
     leaves(root).foreach { dir =>
       val all = fs.listStatus(dir)

@@ -213,8 +213,9 @@ class HooksSpec extends AnyFunSuite {
   }
 
   test("every kairos read shape compiles once and sorts without a range exchange") {
-    // six stats, one event each every 20 minutes over ~2.75 days: every
-    // read below finds data, so adaptive execution keeps one plan shape
+    // every shape also runs as one Spark job of one stage and one task,
+    // with no exchange of any kind. Six stats, one event each every 20
+    // minutes over ~2.75 days
     val events = for (i <- 0 until 200; j <- 0 until 6) yield (s"s$j", i * 1200L + j * 60L)
     val dir = graft.TempDirs.create("graft_compile_once").toString
     def store(intervals: Map[String, IntervalSpec], path: String) = {
@@ -226,6 +227,7 @@ class HooksSpec extends AnyFunSuite {
     val daily = Map("daily" -> IntervalSpec(TimeStep("daily")))
     val flat = store(minuteHour, s"$dir/flat")
     val greg = store(daily, s"$dir/daily")
+    val doubled = ReadHooks(processRow = Some(_ * 2))
     // read k of each shape: new bounds and new names for every k
     def shapes(r: Timeseries): Seq[(String, Int => DataFrame)] = Seq(
       "coarse get" -> (k => r.get(Seq(s"s$k"), "minute", Td(k * 1260L))),
@@ -234,28 +236,55 @@ class HooksSpec extends AnyFunSuite {
         steps = Some(3 + k))),
       "condensed multi-name series" -> (k => r.series(Seq(s"s$k", s"s${k + 3}"), "hour",
         start = Some(Td(k * 3600L)), steps = Some(4 + k), condense = true)),
+      "staged multi-name series (processRow hook)" -> (k => r.series(Seq(s"s$k", s"s${k + 3}"),
+        "hour", start = Some(Td(k * 3600L)), steps = Some(4 + k), condense = true,
+        hooks = doubled)),
       "collapse" -> (k => r.series(Seq(s"s$k"), "hour", start = Some(Td(k * 3600L)),
         steps = Some(5 + k), collapse = true)),
       "interpolate" -> (k => r.interpolate(s"s$k", "minute", Td(k * 600L), Td(k * 600L + 3600))))
     val reads = shapes(flat) :+
       (("gregorian series", (k: Int) => greg.series(Seq(s"s$k"), "daily",
         start = Some(Td(k * 86400L)), steps = Some(2))))
-    for ((name, read) <- reads) {
-      assert(read(0).collect().nonEmpty, name) // warm-up: compiles the shape
-      for (k <- Seq(1, 2)) {
-        val c0 = Harness.compiles()
-        val df = read(k)
-        assert(df.collect().nonEmpty, s"$name, read $k")
-        assert(Harness.compiles() - c0 === 0L, s"$name, read $k compiled new classes")
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("rangepartitioning"), s"$name: $plan")
-        val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
-          .map(_.group(1)).mkString(" ")
-        assert(partFilters.contains("interval"), s"$name: $plan")
-        val name0 = if (name.contains("multi-name")) "In(name," else "EqualTo(name,"
-        assert(plan.contains("PushedFilters") && plan.contains(name0), s"$name: $plan")
+    val l = new Harness.RunListener(spark)
+    try {
+      for ((name, read) <- reads) {
+        assert(read(0).collect().nonEmpty, name) // warm-up: compiles the shape
+        for (k <- Seq(1, 2)) {
+          val c0 = Harness.compiles()
+          val df = read(k)
+          l.drain()
+          assert(df.collect().nonEmpty, s"$name, read $k")
+          val (jobs, _) = l.drain()
+          assert(Harness.compiles() - c0 === 0L, s"$name, read $k compiled new classes")
+          // one job of one stage and one task: no shuffle, no broadcast
+          // job, no adaptive re-plan
+          assert(jobs.map(j => (j.stages, j.tasks)) === Seq((1, 1)), s"$name: $jobs")
+          val plan = df.queryExecution.executedPlan.toString
+          // no hash, range or broadcast exchange anywhere in the plan
+          assert(!plan.contains("Exchange"), s"$name: $plan")
+          val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(plan)
+            .map(_.group(1)).mkString(" ")
+          assert(partFilters.contains("interval"), s"$name: $plan")
+          val name0 = if (name.contains("multi-name")) "In(name," else "EqualTo(name,"
+          assert(plan.contains("PushedFilters") && plan.contains(name0), s"$name: $plan")
+        }
       }
-    }
+      // a stat absent from the store reads through the same plan as one
+      // that finds rows: no new classes after the shapes above warmed up
+      for ((name, read) <- Seq[(String, () => DataFrame)](
+          "absent get" -> (() => flat.get(Seq("absent"), "minute", Td(1260L))),
+          "absent series" -> (() => flat.series(Seq("absent"), "hour",
+            start = Some(Td(3600L)), steps = Some(4))))) {
+        val c0 = Harness.compiles()
+        read().collect()
+        assert(Harness.compiles() - c0 === 0L, s"$name compiled new classes")
+      }
+      // iterate's bounds probe and its read: two single-stage jobs
+      l.drain()
+      assert(flat.iterate(Seq("s1"), "hour").collect().nonEmpty)
+      val (jobs, _) = l.drain()
+      assert(jobs.map(j => (j.stages, j.tasks)) === Seq((1, 1), (1, 1)), jobs)
+    } finally spark.sparkContext.removeSparkListener(l)
     // an inverted range reads no buckets (the axis must not count down)
     assert(flat.interpolate("s0", "minute", Td(3600), Td(0)).collect().isEmpty)
   }
@@ -306,6 +335,23 @@ class HooksSpec extends AnyFunSuite {
       Map("daily" -> IntervalSpec(TimeStep("daily"), Some(5)))).load(s"$dir/store")
       .log.select("i_time").collect().map(_.getLong(0)).toSet
     assert(kept === Set(20240131L)) // linear bucket arithmetic would drop jan31 too
+  }
+
+  test("compact restores an interval partition parked by an interrupted swap, then compacts it") {
+    val t = new Timeseries(spark, CountT, minuteHour)
+    t.insert("c", 1.0, Td(10)); t.insert("c", 2.0, Td(1000))
+    val dir = graft.TempDirs.create("graft_parked").toString
+    t.save(s"$dir/store")
+    // the minute partition's swap stopped between its two renames
+    assert(new java.io.File(s"$dir/store/interval=minute")
+      .renameTo(new java.io.File(s"$dir/store/.interval=minute-old")))
+    t.compact(s"$dir/store", now = Td(1100))
+    val reader = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
+    val minuteTimes = reader.log.filter(col("interval") === "minute")
+      .select("i_time").collect().map(_.getLong(0)).toSet
+    assert(minuteTimes === Set((500000L * 3600L + 1000) / 60),
+      "the parked partition must be restored with its expired bucket gone")
+    assert(!new java.io.File(s"$dir/store").list().exists(_.endsWith("-old")))
   }
 
   test("save is same-path safe: load -> delete -> save(same path) round-trips") {
