@@ -74,10 +74,10 @@ object ReadHooks { val none: ReadHooks = ReadHooks() }
   * (no driver loops).
   *
   * At scale the log is parquet partitioned by `interval` — reads prune
-  * to one partition, push the name filter to the scan and run as one
-  * Spark job of one stage and one task. The per-call bucket bounds are
-  * checked in a Filter that compiles once for every time range (see
-  * [[query]]).
+  * to one partition, push the name filter to the scan and, on a store
+  * opened by [[load]], run as one Spark job of one stage and one task.
+  * The per-call bucket bounds are checked in a Filter that compiles
+  * once for every time range (see [[query]]).
   */
 class Timeseries(
     val spark: SparkSession,
@@ -104,6 +104,9 @@ class Timeseries(
     * round-trips exactly, so numeric series are bit-identical). */
   private val buffer = ArrayBuffer[(String, String, Double, Int)]()
   private var attached: Option[DataFrame] = None
+  // true while `attached` holds a caller's DataFrame (attach), false
+  // for a store opened by `load`: see [[onePartition]]
+  private var callerLog = false
 
   /** kairos insert(name, value, timestamp, intervals) — timeseries.py:
     * 439-472. Count-type default increment is 1 (:925-926). A
@@ -139,7 +142,7 @@ class Timeseries(
   }
 
   /** Attach an already-bucketized log (e.g. read back from parquet). */
-  def attach(log: DataFrame): this.type = { attached = Some(log); this }
+  def attach(log: DataFrame): this.type = { attached = Some(log); callerLog = true; this }
 
   /** Project an events-shaped DataFrame into the canonical bucket log:
     * one output row per (input row × configured interval × fan-out
@@ -252,8 +255,11 @@ class Timeseries(
 
   /** Attach a saved store with the log schema the store was written
     * with, so no Spark job infers it from parquet footers. */
-  def load(path: String): this.type =
+  def load(path: String): this.type = {
     attach(spark.read.schema(logSchema(valueType)).parquet(path))
+    callerLog = false
+    this
+  }
 
   // ---- streaming ----------------------------------------------------
 
@@ -330,9 +336,8 @@ class Timeseries(
       condense: Boolean = false, transform: Transforms = Transforms.none,
       hooks: ReadHooks = ReadHooks.none): DataFrame = {
     val sp = spec(interval)
-    val bounds = log
-      .filter(col("interval") === interval && col("name").isin(names: _*))
-      .coalesce(1)
+    val probe = log.filter(col("interval") === interval && col("name").isin(names: _*))
+    val bounds = onePartition(probe, folded = false)
       .agg(min("i_time").as("b0"), max("i_time").as("b1")).head()
     require(!bounds.isNullAt(0), s"no data for $names/$interval")
     query(names, interval, sp, bounds.getLong(0), bounds.getLong(1),
@@ -344,19 +349,29 @@ class Timeseries(
     * §3.2-3.3): filter → [fetch hook] → cast → agg-at-output-granularity
     * → dense-axis fill → transforms → time keys.
     *
-    * Plan shape: one Spark job of one stage and one task. The parquet
-    * scan is pruned to the interval partition with the name filter
-    * pushed down, and [[aggregated]] puts the filtered rows in one
-    * partition. Every operator above it — the fold (all three stages
-    * on the staged/hook path), the collapse's global agg, the
-    * shuffle-hash join against the one-partition bucket axis, the
-    * sort — finds its input distribution met, so the plan has no
-    * exchange, no broadcast job and no adaptive re-plan, and a read
-    * whose scan finds no rows runs the same plan as one that finds
-    * some. The result is bounded by buckets × names. The price is a
-    * serial scan: the one task reads the whole interval partition,
-    * and while store files are unsorted the pushed name filter prunes
-    * few row groups.
+    * Plan shape on a store opened by [[load]] (or the insert buffer):
+    * one Spark job of one stage and one task. The parquet scan is
+    * pruned to the interval partition with the name filter pushed
+    * down, and [[aggregated]] puts the filtered rows in one partition.
+    * Every operator above it — the fold (all three stages on the
+    * staged/hook path), the collapse's global agg, the shuffle-hash
+    * join against the one-partition bucket axis, the sort — finds its
+    * input distribution met, so the plan has no exchange, no broadcast
+    * job and no adaptive re-plan, and a read whose scan finds no rows
+    * runs the same plan as one that finds some. The result is bounded
+    * by buckets × names. The price is a serial scan: because the
+    * coalesce is a narrow dependency, the one task runs everything
+    * below it — here the scan of the whole interval partition, where
+    * unsorted store files let the pushed name filter prune few row
+    * groups.
+    *
+    * On a caller's [[attach]]ed DataFrame the one task would run the
+    * caller's whole lineage serially (a bucketize of an events table
+    * scans and projects that whole table), so there the lineage and
+    * the first fold keep their partitions, one hash exchange feeds the
+    * fold's final merge, and the rows go to one partition after it
+    * ([[onePartition]]): still no broadcast job, and the rest of the
+    * read runs in that one partition.
     *
     * Every per-call bucket bound — the i_time filter, the axis, the
     * collapse key — is a [[ReferenceConstant]], so each read shape
@@ -445,8 +460,8 @@ class Timeseries(
 
   /** The log rows of one read — pruned to the interval partition,
     * name filter pushed to the scan, i_time checked against
-    * per-call bounds that compile once, then the fetch hook, then put
-    * in one partition (the single task of [[query]]'s plan) —
+    * per-call bounds that compile once, then the fetch hook, put in
+    * one partition before or after the first fold ([[onePartition]]) —
     * aggregated to the read's output granularity: (i_time [, r_time],
     * value), or the staged plan's shape for hook-bearing and
     * collapsing reads. */
@@ -454,10 +469,10 @@ class Timeseries(
       b0: Long, b1: Long, condense: Boolean, collapse: Boolean,
       hooks: ReadHooks): DataFrame = {
     val multi = names.size > 1
-    val filtered = hooks.fetch(log.filter(col("interval") === interval &&
+    val filtered = onePartition(hooks.fetch(log.filter(col("interval") === interval &&
       col("name").isin(names: _*) &&
-      col("i_time").between(ReferenceConstant.long(b0), ReferenceConstant.long(b1))))
-      .coalesce(1)
+      col("i_time").between(ReferenceConstant.long(b0), ReferenceConstant.long(b1)))),
+      folded = false)
 
     // composite merge order (join-then-condense, _join_results
     // timeseries.py:727-745 running BEFORE the condense pass :599-606,
@@ -476,7 +491,7 @@ class Timeseries(
 
     if (!hooks.staged && !collapse) {
       val groupCols = if (!sp.coarse && !condense) Seq("i_time", "r_time") else Seq("i_time")
-      seriesType.aggregate(prepared, groupCols)
+      onePartition(seriesType.aggregate(prepared, groupCols), folded = true)
     } else {
       stagedAgg(prepared, sp, names, condense = condense, hooks = hooks)
     }
@@ -484,7 +499,8 @@ class Timeseries(
 
   /** Staged aggregation for hook-bearing (or fine-collapse) reads:
     * granule fold → [processRow] → join across names → condense. Every
-    * stage groups on bucket keys within the read's one partition. */
+    * stage after the first fold groups on bucket keys within the
+    * read's one partition. */
   private def stagedAgg(prepared: DataFrame, sp: IntervalSpec, names: Seq[String],
       condense: Boolean, hooks: ReadHooks): DataFrame = {
     val multi = names.size > 1
@@ -493,7 +509,7 @@ class Timeseries(
     // state). Granule = (i_time [, r_time] [, name]).
     val k1 = Seq("i_time") ++ (if (rKeyed) Seq("r_time") else Nil) ++
       (if (multi) Seq("name_idx") else Nil)
-    var cur = seriesType.aggregate(prepared, k1)
+    var cur = onePartition(seriesType.aggregate(prepared, k1), folded = true)
     for (f <- hooks.processRow) cur = cur.withColumn("value", f(col("value")))
 
     // stage 2: join across names at granule level (_join_results,
@@ -550,6 +566,19 @@ class Timeseries(
     F.array_sort(entries, (l, r) =>
       when(l(key) < r(key), lit(-1)).when(l(key) > r(key), lit(1)).otherwise(lit(0)))
 
+  /** Where a read's rows go to one partition. A read of a store opened
+    * by [[load]] (or of the insert buffer) puts them there right after
+    * the scan and the fetch hook, so the whole read is one task. A
+    * caller's [[attach]]ed DataFrame puts them there after the first
+    * fold instead: its lineage can be any computation (a whole events
+    * table bucketized on the fly), which one task would run serially,
+    * so it and the fold keep their partitions and the read pays one
+    * hash exchange. Everything after the fold — the later hook stages,
+    * the collapse, the axis join, the sort — runs in the one partition
+    * either way. */
+  private def onePartition(df: DataFrame, folded: Boolean): DataFrame =
+    if (folded == callerLog) df.coalesce(1) else df
+
   /** The bucket axis b0..b1 left-joined with `agged` (keyed by
     * i_time). Both sides are one partition, so the shuffle-hash join
     * (built on `agged`, bounded by buckets × names) needs no exchange;
@@ -594,6 +623,7 @@ class Timeseries(
   /** kairos delete_all (timeseries.py:512-519 / Cassandra TRUNCATE). */
   def deleteAll(): Unit = {
     attached = None
+    callerLog = false
     buffer.clear()
   }
 

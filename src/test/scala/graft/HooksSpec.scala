@@ -289,6 +289,55 @@ class HooksSpec extends AnyFunSuite {
     assert(flat.interpolate("s0", "minute", Td(3600), Td(0)).collect().isEmpty)
   }
 
+  test("a read of an attached DataFrame keeps its partitions through the fold, then runs in one") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    object Plans extends AdaptiveSparkPlanHelper // walks into adaptive query stages
+    // the caller's lineage: an events table of four files, bucketized
+    // on the fly
+    val evDir = s"${graft.TempDirs.create("graft_attached_events")}/events"
+    spark.range(0, 2400, 1, 4).select(
+      concat(lit("s"), (col("id") % 3).cast("string")).as("name"),
+      timestamp_seconds(lit(T0) + col("id") * 30).as("ts"),
+      (col("id") % 7).cast("double").as("value"), col("id").as("seq"))
+      .write.parquet(evDir)
+    val ev = spark.read.parquet(evDir)
+    def bucketized(t: Timeseries) =
+      t.bucketize(ev, col("name"), col("ts"), col("value"), col("seq"))
+    val attached = new Timeseries(spark, CountT, minuteHour)
+    attached.attach(bucketized(attached))
+    val stored = new Timeseries(spark, CountT, minuteHour)
+    stored.attach(bucketized(stored)).save(s"${graft.TempDirs.create("graft_attached")}/store")
+    val doubled = ReadHooks(processRow = Some(_ * 2))
+    val reads: Seq[(String, Timeseries => DataFrame)] = Seq(
+      "get" -> (_.get(Seq("s1"), "minute", Td(660))),
+      "staged multi-name series" -> (_.series(Seq("s1", "s2"), "hour", start = Some(Td(0)),
+        steps = Some(2), condense = true, hooks = doubled)),
+      "collapse" -> (_.series(Seq("s0"), "hour", start = Some(Td(0)), steps = Some(2),
+        collapse = true)),
+      "interpolate" -> (_.interpolate("s1", "minute", Td(0), Td(3600))))
+    val l = new Harness.RunListener(spark)
+    try {
+      for ((name, read) <- reads) {
+        val df = read(attached)
+        l.drain()
+        val got = df.collect()
+        val (jobs, _) = l.drain()
+        assert(got.nonEmpty && got.toSeq === read(stored).collect().toSeq,
+          s"$name: attached vs stored")
+        // the lineage and the first fold run in the caller's four tasks
+        assert(jobs.exists(_.tasks >= 4), s"$name: $jobs")
+        // the executed (final adaptive) plan: one hash exchange, for the
+        // fold, and no broadcast
+        val plan = df.queryExecution.executedPlan
+        assert(Plans.collect(plan) { case e: ShuffleExchangeExec => e }.size === 1,
+          s"$name: $plan")
+        assert(Plans.collect(plan) { case e: BroadcastExchangeExec => e }.isEmpty,
+          s"$name: $plan")
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("approx_count_distinct tracks exact set cardinality within its rsd") {
     val t = new Timeseries(spark, SetT, minuteHour)
     for (i <- 1 until 2000) t.insert("ac", (i % 700).toDouble, Td(i % 50))
@@ -337,21 +386,26 @@ class HooksSpec extends AnyFunSuite {
     assert(kept === Set(20240131L)) // linear bucket arithmetic would drop jan31 too
   }
 
-  test("compact restores an interval partition parked by an interrupted swap, then compacts it") {
-    val t = new Timeseries(spark, CountT, minuteHour)
-    t.insert("c", 1.0, Td(10)); t.insert("c", 2.0, Td(1000))
-    val dir = graft.TempDirs.create("graft_parked").toString
-    t.save(s"$dir/store")
-    // the minute partition's swap stopped between its two renames
-    assert(new java.io.File(s"$dir/store/interval=minute")
-      .renameTo(new java.io.File(s"$dir/store/.interval=minute-old")))
-    t.compact(s"$dir/store", now = Td(1100))
-    val reader = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
-    val minuteTimes = reader.log.filter(col("interval") === "minute")
-      .select("i_time").collect().map(_.getLong(0)).toSet
-    assert(minuteTimes === Set((500000L * 3600L + 1000) / 60),
-      "the parked partition must be restored with its expired bucket gone")
-    assert(!new java.io.File(s"$dir/store").list().exists(_.endsWith("-old")))
+  test("compact restores a store or interval partition parked by an interrupted swap, then compacts it") {
+    // (directory the swap stopped between its two renames, its parked name)
+    for ((parked, hidden) <- Seq("store/interval=minute" -> "store/.interval=minute-old",
+        "store" -> ".store-old")) {
+      val t = new Timeseries(spark, CountT, minuteHour)
+      t.insert("c", 1.0, Td(10)); t.insert("c", 2.0, Td(1000))
+      val dir = graft.TempDirs.create("graft_parked").toString
+      t.save(s"$dir/store")
+      assert(new java.io.File(s"$dir/$parked")
+        .renameTo(new java.io.File(s"$dir/$hidden")))
+      t.compact(s"$dir/store", now = Td(1100))
+      val reader = new Timeseries(spark, CountT, minuteHour).load(s"$dir/store")
+      val minuteTimes = reader.log.filter(col("interval") === "minute")
+        .select("i_time").collect().map(_.getLong(0)).toSet
+      assert(minuteTimes === Set((500000L * 3600L + 1000) / 60),
+        s"parked $parked must be restored with its expired bucket gone")
+      assert(reader.log.filter(col("interval") === "hour").count() === 2, parked)
+      assert(new java.io.File(dir).list().toSeq === Seq("store"), parked)
+      assert(!new java.io.File(s"$dir/store").list().exists(_.endsWith("-old")), parked)
+    }
   }
 
   test("save is same-path safe: load -> delete -> save(same path) round-trips") {

@@ -247,16 +247,20 @@ class LayoutSpec extends AnyFunSuite {
     assert(dotEntries(dir).isEmpty, dotEntries(dir))
   }
 
-  test("compactFiles restores a leaf parked by an interrupted swap, then compacts it") {
-    val dir = graft.TempDirs.create("compact_parked").toString
-    spark.range(3000).select(col("id"), lit("a").as("p"))
-      .repartition(16).write.partitionBy("p").mode("overwrite").parquet(dir)
-    // the leaf's swap stopped between its two renames
-    assert(new java.io.File(s"$dir/p=a").renameTo(new java.io.File(s"$dir/.p=a-old")))
-    val (rewritten, before, after) =
-      Layout.compactFiles(spark, dir, targetFileBytes = 1L << 30)
-    assert((rewritten, before, after) === ((1, 16L, 1L)))
-    assert(ids(s"$dir/p=a") === (0L until 3000L))
-    assert(!dotEntries(dir).exists(_.endsWith("-old")), dotEntries(dir))
+  test("compactFiles restores a root or leaf parked by an interrupted swap, then compacts it") {
+    // (directory the swap stopped between its two renames, its parked name)
+    for ((parked, hidden) <- Seq("t/p=a" -> "t/.p=a-old", "t" -> ".t-old")) {
+      val base = graft.TempDirs.create("compact_parked").toString
+      val dir = s"$base/t"
+      spark.range(3000).select(col("id"), lit("a").as("p"))
+        .repartition(16).write.partitionBy("p").mode("overwrite").parquet(dir)
+      assert(new java.io.File(s"$base/$parked").renameTo(new java.io.File(s"$base/$hidden")))
+      val (rewritten, before, after) =
+        Layout.compactFiles(spark, dir, targetFileBytes = 1L << 30)
+      assert((rewritten, before, after) === ((1, 16L, 1L)), parked)
+      assert(ids(s"$dir/p=a") === (0L until 3000L), parked)
+      assert(!dotEntries(dir).exists(_.endsWith("-old")), dotEntries(dir))
+      assert(!dotEntries(base).exists(_.endsWith("-old")), dotEntries(base))
+    }
   }
 }
